@@ -126,7 +126,7 @@ object BenchScale {
     // standing duplication reading. DuckDB anchors measured fresh on
     // /tmp/sf01x10 (tools/dup_audit_r18_duck10x.log, warm best-of-2,
     // idle window); Spark pins are the r18 honest-forced warm
-    // best-of-3 (R18Probe, same window, floor ~0.04). q117's >1×
+    // best-of-3 (BASELINE.md, same window, floor ~0.04). q117's >1×
     // recorded ratio is the q103/q114 convention: a 9-job floor-class
     // absolute (~1 s) against a 60 ms embedded-oracle bloom probe —
     // gated so constant-factor regression is visible, not because the
@@ -143,7 +143,7 @@ object BenchScale {
     // capacity 1<<16) deleted the recount scan, the eager driver pass,
     // and the witness machinery — the whole query is ONE lazy sketch
     // aggregation. Measured 0.43–0.51 / 0.49–0.54 s across gate and
-    // Profile runs (R14Probe decomposition: the fused sketch scan
+    // Profile runs (BASELINE.md decomposition: the fused sketch scan
     // itself is ~0.43 s of it); pinned at the band's midpoint — the
     // gate protects the new level
     Anchor("q103_heavy_hitters", "docs10x", 0.25, 0.47),
@@ -156,7 +156,7 @@ object BenchScale {
     // sorted, shuffle-hash join (broadcast when the dimension fits).
     // Gate band 1.03–1.05, probe best 0.78; same-JVM comparison has the
     // compact spelling 1.5× faster than the retired union+fill. The >2×
-    // ratio is formally ACCEPTED (BASELINE r15): the R15Probe
+    // ratio is formally ACCEPTED (BASELINE.md r15): its
     // decomposition shows single-split scans (orders 0.25 s + events
     // 0.12 s, the local one-file layout) plus ~5 job floors ≈ the whole
     // reading, while DuckDB multithreads the same 27 MB scan — there is

@@ -14,7 +14,8 @@ import org.apache.spark.sql.types._
   * DECIMAL(37,12), past `Decimal.MAX_LONG_DIGITS`, so the builtin path
   * pays a JavaBigDecimal multiply per row plus the non-compact sum
   * buffer's serialize/deserialize round-trip per update — measured as
-  * q86's entire 1.0 s single-task CPU at sf0.1 (~1.7 µs/row; R20Prof).
+  * q86's entire 1.0 s single-task CPU at sf0.1 (~1.7 µs/row;
+  * OPTIMIZATION_r20.md).
   *
   * Identical-value construction: both engines first round each input to
   * 6 decimals (the (18,6) cast), so a·b is a rational with ≤12 fractional

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * UnsafeRow mutable long field — every row update deserializes and
   * reserializes a JavaBigDecimal through the hash-aggregate buffer. At the
   * 100× temporal corpus that byte-array round-trip was ~55% of q01's wall
-  * (R17Probe8: full decimal 5.1–5.7 s vs 2.3–2.4 s with the identical cast
+  * (BASELINE.md: full decimal 5.1–5.7 s vs 2.3–2.4 s with the identical cast
   * but a primitive sum buffer, over the same 60M-row scan).
   *
   * This aggregate keeps the IDENTICAL input semantics (the caller supplies

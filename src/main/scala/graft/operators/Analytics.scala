@@ -66,14 +66,14 @@ object Analytics {
     // dedup + count — map-side dedup actually bites on the narrower keys
     // and the Expand never exists; the two ~|suppkey|-row branch results
     // join at the end. A/B same window at sf0.1: 1.14–1.15 → 0.70 s
-    // (R20Probe3, exceptAll = 0 both directions). Exactness precondition:
-    // lineitem's keys are non-null (TPC-H NOT NULL) — countDistinct
-    // skips nulls, so the isNotNull filters make the branch dedup
-    // null-identical; a supplier with rows appears in both branches.
+    // (OPTIMIZATION_r20.md, exceptAll = 0 both directions). Exactness
+    // precondition: lineitem's keys are non-null (TPC-H NOT NULL) —
+    // countDistinct skips nulls, so the isNotNull filters make the branch
+    // dedup null-identical; a supplier with rows appears in both branches.
     //
     // r21: ONE exchange on the shared group-key prefix instead of one per
     // branch (guide §2.4 "two operations keyed the same way can share one
-    // exchange"). R20Prof showed the two branches each re-scanning
+    // exchange"). The stage profile showed the two branches each re-scanning
     // lineitem serially (313 + 322 ms 3-task map stages) and each paying
     // its own 16.5/16.8 MB exchange on (suppkey, key). HashPartitioning
     // on l_suppkey alone satisfies the ClusteredDistribution of BOTH
@@ -84,14 +84,15 @@ object Analytics {
     // exchanges to one, and the scan parallelizes off the 1-split file
     // instead of fusing the distinct into 3 serial tasks. A/B same
     // window at sf0.1:
-    // 0.82/0.68 → 0.36/0.33 s (R21Probe, exceptAll = 0 both directions).
+    // 0.82/0.68 → 0.36/0.33 s (OPTIMIZATION_r21.md, exceptAll = 0 both
+    // directions).
     // Skew note: l_suppkey is the query's own GROUP key, so any key hot
     // enough to skew this exchange skews the aggregate itself regardless
     // of spelling. The trade: the exchange carries the raw 3-col rows
     // once (map-side partial dedup is lost) — measured cheaper than two
     // partial-deduped exchanges, since in-suppkey duplicate (key) pairs
     // are rare enough that partial dedup barely reduced them anyway
-    // (590 973/598 807 of 600 000 rows survived it, R20Prof).
+    // (590 973/598 807 of 600 000 rows survived it, OPTIMIZATION_r21.md).
     val base = t(s, dir, "lineitem")
       .select(col("l_suppkey"), col("l_partkey"), col("l_orderkey"))
       .repartition(col("l_suppkey"))
@@ -103,13 +104,6 @@ object Analytics {
       .groupBy(col("l_suppkey")).agg(count(lit(1)).as("n_orders"))
     np.join(no, Seq("l_suppkey"))
   }
-
-  /** The retired multi-distinct Expand q12 spelling — r20 A/B ledger. */
-  def qNuniquePerGroupExpand(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_suppkey"))
-      .agg(countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_orderkey")).as("n_orders"))
 
   val qNuniquePerGroupSql: String =
     """SELECT l_suppkey, COUNT(DISTINCT l_partkey) AS n_parts,
@@ -803,10 +797,10 @@ object Analytics {
   def qUnpivot(s: SparkSession, dir: String): DataFrame =
     // widenScan (r20, guide §2.5): the ×4 stack fan-out + 8 decimal-sum
     // partial aggregates fused into the 3-row-group scan stage, near-serial
-    // (R20Prof: 746 ms CPU in 3 tasks — the whole query). The group key is
+    // (746 ms CPU in 3 tasks — the whole query). The group key is
     // a 6-value enum, so spread on the row hash, not the key. A/B same
-    // window: 0.65–0.66 → 0.48 s (R20Probe3, exceptAll = 0). No-op at any
-    // real multi-row-group scale.
+    // window: 0.65–0.66 → 0.48 s (OPTIMIZATION_r20.md, exceptAll = 0).
+    // No-op at any real multi-row-group scale.
     graft.Tables.widenScan(t(s, dir, "lineitem")
         .select(col("l_returnflag"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"), col("l_tax")))
@@ -843,9 +837,9 @@ object Analytics {
     * (0/1/3). Exactness: decimal sums re-aggregate without rounding
     * ((18,6)→(28,6)→(38,6), exact at any corpus the type fits) and both
     * spellings cast the SAME exact decimal to double last — bit-identical
-    * to the Expand plan (R20Probe exceptAll = 0 at sf0.1, both
-    * directions) and to the untouched oracle. A/B same window at sf0.1:
-    * Expand 0.55–0.89 s vs this — see OPTIMIZATION_r20.md.
+    * to the Expand plan (exceptAll = 0 both directions, ScaleSpec) and
+    * to the untouched oracle. A/B same window at sf0.1: Expand
+    * 0.49–0.89 s vs this 0.45 s (OPTIMIZATION_r20.md).
     */
   def qRollup(s: SparkSession, dir: String): DataFrame = {
     // r21: dsumDec for the 600k-row finest-grain probe (all-long buffer,
@@ -869,15 +863,6 @@ object Analytics {
         col("sq2").cast("double").as("sum_qty"), lit(3).as("gid"))
     both.unionByName(byFlag).unionByName(total)
   }
-
-  /** The retired Expand ROLLUP spelling, kept for the r20 A/B ledger
-    * (never part of the gated surface).
-    */
-  def qRollupExpand(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n_rows"), dsum(col("l_quantity")).as("sum_qty"),
-        grouping_id().cast("int").as("gid"))
 
   val qRollupSql: String =
     s"""SELECT l_returnflag, l_linestatus,
@@ -906,21 +891,19 @@ object Analytics {
     *
     * r20 A/B run and REJECTED (the q12/q86 class): widenScan on both
     * passes read best 0.61 vs 0.65–0.69 s with WORSE medians (0.77 vs
-    * 0.66–0.72) — window noise, no adoption case; the certificate
-    * columns are merge-order-free so the variant stays runnable in
-    * R20Probe3 if a wider box changes the answer.
+    * 0.66–0.72) — window noise, no adoption case (OPTIMIZATION_r20.md).
     *
     * r21 split verdict: widening ONLY the certificate pass wins where the
-    * both-passes widen lost. R20Prof localized the cost: the re-rank is
-    * 273 ms of serial CPU (600k rows × 4 probe quantiles through a
+    * both-passes widen lost. The stage profile localized the cost: the
+    * re-rank is 273 ms of serial CPU (600k rows × 4 probe quantiles through a
     * 12-group aggregate, fused into the 1-row-group scan) vs the sketch
     * build's 179 ms; widening the sketch pass had paid a full-width
     * exchange to parallelize the smaller half AND re-ordered the sketch
     * merges for nothing. The certificate exchange is 2 narrow columns,
     * and the ×4 broadcast-join fan-out above it is exactly the row-dense
     * CPU widenScan exists for. A/B same window at sf0.1: 0.65/0.59 →
-    * 0.52/0.52 s (R21Probe, exceptAll = 0 — the certificate columns are
-    * partition-count-free: exact integer counts of a broadcast-fixed
+    * 0.52/0.52 s (OPTIMIZATION_r21.md, exceptAll = 0 — the certificate
+    * columns are partition-count-free: exact integer counts of a broadcast-fixed
     * estimate). No-op at real multi-split scan parallelism, like every
     * widenScan site.
     */
@@ -966,9 +949,9 @@ object Analytics {
     * the sets map-side.
     *
     * r20 A/B run and REJECTED for a measured reason (the q118
-    * convention): the q92/q76 partial-reuse decomposition was built
-    * (below, kept for the ledger) and measured SLOWER here — 0.358 s vs
-    * 0.328 s same-window at sf0.1 — because CUBE's four grains need
+    * convention): the q92/q76 partial-reuse decomposition measured
+    * SLOWER here — 0.358 s vs 0.328 s same-window at sf0.1
+    * (OPTIMIZATION_r20.md) — because CUBE's four grains need
     * THREE marginal re-aggregate jobs + a 4-way union against an Expand
     * whose ×4 rows are orders (150k), a quarter of lineitem; the
     * partial-agg shuffle stays tiny either way. q76/q92 won the same A/B
@@ -981,36 +964,6 @@ object Analytics {
       .agg(count(lit(1)).as("n_orders"),
         dsum(col("o_totalprice")).as("sum_price"),
         grouping_id().cast("int").as("gid"))
-
-  /** The REJECTED partial-reuse CUBE spelling — r20 A/B ledger only
-    * (row-identical to [[qCube]]; R20Probe exceptAll = 0).
-    */
-  def qCubePartialReuse(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "orders")
-      .groupBy(col("o_orderpriority"), col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("o_totalprice").cast("decimal(18,6)")).as("sp"))
-    def grain(keys: Seq[String], gid: Int) = {
-      val g = if (keys.isEmpty) base.agg(sum(col("n")).as("n_orders"),
-          sum(col("sp")).as("sp2"))
-        else base.groupBy(keys.map(col): _*)
-          .agg(sum(col("n")).as("n_orders"), sum(col("sp")).as("sp2"))
-      g.select(
-        (if (keys.contains("o_orderpriority")) col("o_orderpriority")
-         else lit(null).cast("string").as("o_orderpriority")) ::
-        (if (keys.contains("o_orderstatus")) col("o_orderstatus")
-         else lit(null).cast("string").as("o_orderstatus")) ::
-        col("n_orders") :: col("sp2").cast("double").as("sum_price") ::
-        lit(gid).as("gid") :: Nil: _*)
-    }
-    base.select(col("o_orderpriority"), col("o_orderstatus"),
-        col("n").as("n_orders"), col("sp").cast("double").as("sum_price"),
-        lit(0).as("gid"))
-      .unionByName(grain(Seq("o_orderpriority"), 1))
-      .unionByName(grain(Seq("o_orderstatus"), 2))
-      .unionByName(grain(Nil, 3))
-  }
-
 
   val qCubeSql: String =
     s"""SELECT o_orderpriority, o_orderstatus,
@@ -1069,7 +1022,7 @@ object Analytics {
     // r20: the whole moment pass ran as ~1.0 s of CPU in ONE scan task
     // (single row group) — and the CPU itself was the decimal(37,12)
     // product path: a JavaBigDecimal multiply per row plus the non-compact
-    // sum buffer's per-update reserialization (the R17Probe8 class). The
+    // sum buffer's per-update reserialization (the BASELINE.md r17 class). The
     // product sums now ride DecProdSum (long-limb split of the two
     // unscaled (18,6) values — exact same rational, bit-identical double,
     // DecProdSumSpec) and the plain sums ride dsum; all-primitive buffers,
@@ -1139,10 +1092,10 @@ object Analytics {
     * rounding (DECIMAL(18,6) → (28,6) → (38,6), all exact at any corpus
     * the type fits), and both spellings cast the SAME exact decimal to
     * double last, so results are bit-identical to the Expand plan and to
-    * the untouched oracle (R20Probe exceptAll = 0 at sf0.1, both
-    * directions). A/B same JVM/window at sf0.1, local[16], two windows
-    * (R20Probe): Expand 1.03–1.17 s warm vs this 0.70–0.77 s — ~35%
-    * off the suite's largest un-adjudicated multiple; adopted
+    * the untouched oracle (exceptAll = 0 both directions, ScaleSpec).
+    * A/B same JVM/window at sf0.1, local[16], two windows
+    * (OPTIMIZATION_r20.md): Expand 1.03–1.17 s warm vs this
+    * 0.70–0.77 s — ~35% off the suite's largest un-adjudicated multiple; adopted
     * (BASELINE r20).
     */
   def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
@@ -1164,22 +1117,6 @@ object Analytics {
       .select(lit(null).cast("string").as("l_returnflag"), col("l_linestatus"),
         lit(2).as("gid"), col("n_rows"), col("sq2").cast("double").as("sum_qty"))
     both.unionByName(byFlag).unionByName(byStatus)
-  }
-
-  /** The retired Expand spelling, kept for the r20 A/B ledger (Profile
-    * runs it side-by-side with the adopted partial-reuse plan; never part
-    * of the gated surface).
-    */
-  def qGroupingSetsExpand(s: SparkSession, dir: String): DataFrame = {
-    t(s, dir, "lineitem").createOrReplaceTempView("lineitem_gsets")
-    s.sql(
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(grouping_id(l_returnflag, l_linestatus) AS INT) AS gid,
-        |  COUNT(*) AS n_rows,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
-        |FROM lineitem_gsets
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
-        |                        (l_returnflag, l_linestatus))""".stripMargin)
   }
 
   val qGroupingSetsSql: String =

@@ -590,7 +590,8 @@ object Curation {
     // Persisted post-semi (r20, the q49 posting-cache rule): AQE's
     // exchange reuse misses the self-join's two canonically-identical
     // sides, so each run re-ran the blocked explode + bk exchange + semi
-    // TWICE (R20Prof: twin 8.0/4.7 s and 6.3/3.7 s runMs stage pairs).
+    // TWICE (twin 8.0/4.7 s and 6.3/3.7 s runMs stage pairs,
+    // OPTIMIZATION_r20.md).
     // Both sides now scan this cache, whose preserved hashpartitioning(bk)
     // also satisfies the shuffled-hash join — no exchange above the cache.
     // Bounded by 3·|distinct shingles| blocked rows (the semi build-side
@@ -886,9 +887,9 @@ object Curation {
     // r20 A/B note: widenScanOn(doc_id) before the explode (trading the
     // 21 MB gram exchange for a 0.6 MB text exchange with the explode
     // parallel) measured a WASH — 0.685 vs 0.658–0.697 s same-window
-    // (R20Probe3): the serial explode map is only ~250 ms and the first
-    // aggregate's exchange already carries deduped partials. Rejected;
-    // variant kept runnable in the probe.
+    // (OPTIMIZATION_r20.md): the serial explode map is only ~250 ms and
+    // the first aggregate's exchange already carries deduped partials.
+    // Rejected.
     // r21 (guide §2.4 "two operations keyed the same way share one
     // exchange"): the (gkey, doc_id) aggregate's own exchange carried the
     // FULL 21.1 MB gram stream right after the emission stage had already
@@ -900,7 +901,8 @@ object Curation {
     // clustering (gkey is a prefix of (gkey, doc_id)) and the window's
     // partitionBy(gkey) — the middle exchange disappears and the window
     // needs only a local sort. Two decreasing shuffles total. A/B same
-    // window at sf0.1: 0.51/0.55 → 0.39/0.38 s, exceptAll = 0 (R21Probe);
+    // window at sf0.1: 0.51/0.55 → 0.39/0.38 s, exceptAll = 0
+    // (OPTIMIZATION_r21.md);
     // the x180 twin rides the same body.
     val perDocGram = keyed.repartition(col("gkey"))
       .groupBy(col("gkey"), col("doc_id"))

@@ -76,8 +76,8 @@ object Privacy {
   def qPiiRedact(s: SparkSession, dir: String): DataFrame =
     // widenScan (r20, guide §2.5): six row-local regex passes ran fused
     // into the 1-split documents scan; spreading the texts first reads
-    // 0.52 vs 0.55–0.62 s same-window (R20Probe3, exceptAll = 0). No-op
-    // at real scan parallelism.
+    // 0.52 vs 0.55–0.62 s same-window (OPTIMIZATION_r20.md,
+    // exceptAll = 0). No-op at real scan parallelism.
     piiRedactOf(Tables.widenScan(t(s, dir, "documents"), col("doc_id")))
 
   /** Builder core of q120 over any documents frame (r20: split out so the

@@ -38,7 +38,7 @@ object Relational {
     * builtin `sum(decimal(18,6))` widens its buffer to decimal(28,6), which
     * exceeds the UnsafeRow mutable-long limit (18 digits) and pays a
     * JavaBigDecimal serialize/deserialize PER ROW in the hash aggregate
-    * (~55% of q01's wall at the 100× corpus, R17Probe8). DecSum6 keeps the
+    * (~55% of q01's wall at the 100× corpus, BASELINE.md). DecSum6 keeps the
     * identical per-row cast (so coercion semantics and the resulting
     * rational sum are unchanged — bit-identical doubles, DecimalSumSpec)
     * but accumulates the unscaled long in a carry-normalized pair of
@@ -101,7 +101,7 @@ object Relational {
   /** Bench-only q01 twin with plain DOUBLE sums (no decimal cast, no
     * exact accumulator) — the x-variant convention applied to the
     * determinism contract: its delta to q01 in every sweep IS the
-    * measured price of bit-reproducible sums (per R17Probe8: the
+    * measured price of bit-reproducible sums (per BASELINE.md r17: the
     * double→decimal cast after DecSum6 removed the buffer tax). NOT
     * oracle-gated — double summation is partition-order-dependent, which
     * is exactly what the gated spelling exists to prevent.
@@ -139,11 +139,11 @@ object Relational {
     val o = t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
     // widenScanOn (r20, guide §2.5): the 7-aggregate per-order partial agg
-    // fused into the 3-row-group scan stage and ran near-serial (R20Prof:
-    // 616 ms CPU in 3 tasks). Repartitioning on the GROUP key parallelizes
+    // fused into the 3-row-group scan stage and ran near-serial (616 ms
+    // CPU in 3 tasks). Repartitioning on the GROUP key parallelizes
     // it AND is the aggregate's required partitioning, so the agg's own
     // exchange disappears — one exchange total, now placed below the CPU.
-    // A/B same window: 0.81–0.88 → 0.76 s (R20Probe3, exceptAll = 0).
+    // A/B same window: 0.81–0.88 → 0.76 s (OPTIMIZATION_r20.md, exceptAll = 0).
     // No-op on any input whose scan already yields ≥ cores splits.
     val l = graft.Tables.widenScanOn(t(s, dir, "lineitem")
       // nullable "prize number": NULL when linenumber = 1 — exercises the
@@ -328,15 +328,17 @@ object Relational {
     * to the Expand plan and the untouched oracle). One 1× fact shuffle
     * (map-side-combined on a sorted-by-orderkey layout) replaces the 2×
     * Expand shuffle. A/B same JVM/window at sf0.1, local[16], two
-    * windows (R20Probe, exceptAll = 0 both directions): Expand
-    * 1.44–1.75 s warm vs this 1.09–1.31 s — adopted (BASELINE r20).
+    * windows (OPTIMIZATION_r20.md; exceptAll = 0 both directions,
+    * ScaleSpec): Expand 1.44–1.75 s warm vs this 1.09–1.31 s — adopted
+    * (BASELINE r20).
     */
   def qTimeSeries(s: SparkSession, dir: String): DataFrame = {
     // widenScanOn (r20, the q02 shape): the per-order pre-aggregate ran
-    // fused into the 3-task scan stage, near-serial (R20Prof: 562 ms CPU
+    // fused into the 3-task scan stage, near-serial (562 ms CPU
     // writing 147k partials). Repartitioning on the group key is also the
     // aggregate's required partitioning. A/B same window: 0.81–0.88 →
-    // 0.74 s (R20Probe3, exceptAll = 0). No-op at real scan parallelism.
+    // 0.74 s (OPTIMIZATION_r20.md, exceptAll = 0). No-op at real scan
+    // parallelism.
     val l = graft.Tables.widenScanOn(t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice")),
       col("l_orderkey"))
@@ -356,21 +358,6 @@ object Relational {
         count(lit(1)).as("num_sorteos"),
         sum(col("np")).as("num_premios"),
         sum(col("sm")).cast("double").as("total_monto"))
-  }
-
-  /** The retired Expand (mixed-distinct) q08 spelling — r20 A/B ledger
-    * only (R20Probe), never part of the gated surface.
-    */
-  def qTimeSeriesExpand(s: SparkSession, dir: String): DataFrame = {
-    val l = t(s, dir, "lineitem")
-    val o = t(s, dir, "orders")
-    l.join(o, l("l_orderkey") === o("o_orderkey"))
-      .where(col("o_orderdate").isNotNull)
-      .groupBy(year(col("o_orderdate")).as("year"), month(col("o_orderdate")).as("month"))
-      .agg(
-        countDistinct(col("o_orderkey")).as("num_sorteos"),
-        count(col("l_partkey")).as("num_premios"),
-        dsum(col("l_extendedprice")).as("total_monto"))
   }
 
   val qTimeSeriesSql: String =
@@ -501,7 +488,7 @@ object Relational {
     // them entirely, so the steady-state path is unchanged (the
     // sequential-collect alternative — marginals as literal maps — was
     // A/B-run and REJECTED: it serialized the warm cached reads the
-    // broadcast threads do in parallel; R21Probe q169SeqCollect).
+    // broadcast threads do in parallel; OPTIMIZATION_r21.md).
     val parts = top
       .select(explode(array(col("part_a"), col("part_b"))).as("l_partkey"))
       .distinct()

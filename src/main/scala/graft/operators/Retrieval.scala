@@ -222,7 +222,7 @@ object Retrieval {
     * because danglers still hold the base rank — is reconstituted once
     * at the end from the cached node set instead of once per round.
     * Measured vs the r11 agg+join spelling: 1.2→0.6 s steady-state at
-    * sf0.1 (tools/R12Probe, candidates B/C/D). At web scale |V| ranks
+    * sf0.1 (BASELINE.md, r12 candidates B/C/D). At web scale |V| ranks
     * are MBs (broadcastable); a doc-link-graph variant (ranks no longer
     * broadcastable) keeps the same dst-partitioned edge cache and swaps
     * the broadcast for a pre-partitioned shuffle join + the q85

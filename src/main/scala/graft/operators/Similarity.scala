@@ -588,7 +588,7 @@ object Similarity {
     // r21 row-local rewrite (guide §2.4 remove shuffles outright): the
     // crossJoin × broadcast-centroids → (vec_id, label) re-aggregate
     // existed only to pivot the nClusters sims back to one row per vector
-    // — R20Prof read 7 jobs for ~150 ms of summed stage time, pure
+    // — the stage profile read 7 jobs for ~150 ms of summed stage time, pure
     // exchange/job overhead. The centroid table is BOUNDED (one row per
     // cluster — the k-means contract, same class as the q49 ≤20-row
     // threshold collect), so collect it and evaluate own_cos/best_other
@@ -599,7 +599,7 @@ object Similarity {
     // max(when(clabel===label)) over the single own row IS the own sim,
     // and greatest(...) over the other nClusters−1 sims is the same
     // null-skipping double max as max(when(≠)). A/B same window at
-    // sf0.1: 0.39/0.43 → 0.36/0.33 s (R21Probe, exceptAll = 0).
+    // sf0.1: 0.39/0.43 → 0.36/0.33 s (OPTIMIZATION_r21.md, exceptAll = 0).
     val cents = centroidVectors(e)
       .select(col("label").as("clabel"), col("cvec")).collect()
     val sims = cents.map { r =>
@@ -695,8 +695,8 @@ object Similarity {
     import s.implicits._
     // r20: the posexplode ×64 → broadcast sign join ×8 → decimal partial
     // aggregate pipeline all planned into the 1-task scan stage (1.1 s CPU
-    // in ONE task — R20Prof). widenScan on the unique vec_id spreads it;
-    // decimal-exact sums keep the result partitioning-independent.
+    // in ONE task — OPTIMIZATION_r20.md). widenScan on the unique vec_id
+    // spreads it; decimal-exact sums keep the result partitioning-independent.
     val emb = graft.Tables.widenScan(
       t(s, dir, "embeddings").select(col("vec_id"), col("label"), col("embedding")),
       col("vec_id"))

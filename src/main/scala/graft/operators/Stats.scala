@@ -503,7 +503,7 @@ object Stats {
     // cheap, the dedup runs 32-way above it (user_id is a subset of the
     // distinct's clustering, so no second exchange appears), and the
     // cache keeps the user_id partitioning for the self-join. A/B same
-    // window at sf0.1: 0.57/0.55 → 0.38/0.40 s (R21Probe, exceptAll = 0
+    // window at sf0.1: 0.57/0.55 → 0.38/0.40 s (OPTIMIZATION_r21.md, exceptAll = 0
     // both directions).
     val ut = t(s, dir, "events")
       .select(col("user_id"), col("event_type"))

@@ -45,7 +45,7 @@ object Temporal {
     * `stack` unpivot. vs the r12 band-bucketed self-join this is ONE
     * shuffle of n rows (not 3n), no join build/probe, and no candidate
     * materialization at all: 2.12 → 0.76 s at 10× events
-    * (tools/Q57Probe.scala, row-set-identical cross-check). Spark's
+    * (BASELINE.md, row-set-identical cross-check). Spark's
     * sliding range frame moves both bounds monotonically — O(n) per
     * user partition, all type counters evaluated in the one frame
     * pass. At 100 TB: one shuffle on user_id (per-user window state
@@ -125,7 +125,7 @@ object Temporal {
     * per-type counter columns, so it is indifferent to type-domain
     * cardinality; the cost is a 3n-row shuffle and a real join
     * build/probe (measured 2.12 s vs the window spelling's 0.76 s at
-    * 10× events — tools/Q57Probe.scala, row-set-identical).
+    * 10× events — BASELINE.md; TemporalSpec pins it against brute force).
     */
   def rangeJoinBucketed(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.load(s, dir, "events").select("user_id", "ts", "event_type")
@@ -422,10 +422,11 @@ object Temporal {
       .persistTracked()
     // r21 (the q85 one-pass symmetrize move, guide §2.4): the old
     // two-branch union scanned the session cache twice (2 × 32 cached
-    // partitions per run, R20Prof); one row-local explode emits the same
+    // partitions per run); one row-local explode emits the same
     // (+1 at start, −1 at end) delta multiset in a single pass, and the
     // window's (ts, d DESC) sort makes input order irrelevant. A/B same
-    // window at sf0.1: 0.57/0.56 → 0.56/0.43 s, exceptAll = 0 (R21Probe).
+    // window at sf0.1: 0.57/0.56 → 0.56/0.43 s, exceptAll = 0
+    // (OPTIMIZATION_r21.md).
     val deltas = sess.select(explode(array(
         struct(col("s_us").as("ts"), lit(1L).as("d"), col("s_day").as("day_idx")),
         struct(col("e_us").as("ts"), lit(-1L).as("d"), col("e_day").as("day_idx"))))

@@ -394,8 +394,8 @@ object TextOps {
     * exchange collapses toward one partition and the downstream
     * 32-family/64-vote hashing runs serial — measured on q48 at sf0.1:
     * ~4.9 s with the coalesced exchange vs 0.3 s pinned, flat from 8 to
-    * 32 threads (R18Probe2: one 4.6 s task in the final stage). This is
-    * the R17Probe9 serialization re-entering through AQE instead of file
+    * 32 threads (one 4.6 s task in the final stage, BASELINE.md). This is
+    * the r17 scan-stage serialization re-entering through AQE instead of file
     * layout. An explicit numPartitions exempts the exchange from
     * coalescing; the session's shuffle parallelism is exactly the count
     * the aggregate's own exchange would have carried.
@@ -590,9 +590,6 @@ object TextOps {
     sig.select(col("doc_id") +: array((0 until MinhashK).map(i => col(s"m$i")): _*).as("signature") +: bandCols: _*)
   }
 
-  def qMinhash(s: SparkSession, dir: String): DataFrame =
-    minhashSignatures(t(s, dir, "documents"))
-
   /** Portable MinHash for the driver oracle: same banded-LSH shape as
     * [[minhashSignatures]] but each of the 32 hash families is the
     * lexicographic MIN over md5 hex strings (salted with the family index),
@@ -607,7 +604,7 @@ object TextOps {
   def qMinhashBands(s: SparkSession, dir: String): DataFrame = {
     // r18 content layer: the 32 md5 families run once per DISTINCT TEXT
     // (contentLayer's semi replaces the bare repartition — same full-text
-    // exchange, the R17Probe9 hoist property preserved) and the per-doc
+    // exchange, the r17 hoist property preserved) and the per-doc
     // rows re-emerge by a row-local explode over the id lists.
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
     val bandCols = (0 until MinhashBands).map(b => col(s"band$b"))
@@ -757,12 +754,12 @@ object TextOps {
     * frame in the query; at the 100× corpus the sizes side crossed the
     * broadcast threshold and both joins became sort-merge over the
     * 113M-pair frame (2 extra pair-frame exchanges + sorts, 6.5 GB of
-    * spill, ~60% of the query's wall — R16Probe2 stage ledger,
+    * spill, ~60% of the query's wall — BASELINE.md r16 stage ledger,
     * tools/probe100x_r16_spark.log). Row-local instead: the hot set is
     * BOUNDED (df > maxDfFrac·n_docs ⟹ at most avg_shingles/maxDfFrac
     * members), so it collapses to one collect_list row, broadcasts, and
     * array_except drops it from each unit's array in place; n_sh =
-    * size(ka) is free at the scan (R16Probe3 A/B/C: old 15.5 s, window
+    * size(ka) is free at the scan (BASELINE.md A/B/C: old 15.5 s, window
     * n_sh-carry 18.8 s, this 14.5 s; 100x full query 336 → ~107 s).
     * With `weightCol` (copy counts), df = sum(weight) — identical to the
     * per-doc COUNT(*) in exact integers, so the hot set is the same set.
@@ -782,7 +779,8 @@ object TextOps {
     // in postingPairAgg runs only after the collect returns — so the
     // sibling-AQE-stage race the minhashCandidates fill guards against
     // cannot occur, and the count job was one full cached re-scan per
-    // run for nothing (R20Prof: 32 tasks, ~1 s summed runMs, warm).
+    // run for nothing (32 tasks, ~1 s summed runMs, warm;
+    // OPTIMIZATION_r21.md).
     val arr = units.persistTracked()
     val dfAgg = weightCol match {
       case Some(w) => arr.select(explode(col("arr")).as("shingle"), col(w))
@@ -860,8 +858,8 @@ object TextOps {
     // (past ~34G pairs, raise the session parallelism with the cluster;
     // the cap only guards the driver against absurd task counts). At
     // bench SF the estimate reads ~1.3M pairs → cores partitions,
-    // retiring the 128-task deser-bound stages (R20Prof: ~68 ms/task
-    // deserialization, 10.9 s summed on a 21 MB stage).
+    // retiring the 128-task deser-bound stages (~68 ms/task
+    // deserialization, 10.9 s summed on a 21 MB stage; OPTIMIZATION_r20.md).
     val parts = math.min(math.max(
       kept.sparkSession.sparkContext.defaultParallelism.toLong,
       (pairRows + (1L << 20) - 1) / (1L << 20)), 1L << 15).toInt
@@ -1034,9 +1032,9 @@ object TextOps {
     * token count are EXACT derivations collected to the driver (≤5+1
     * rows, the q49 threshold-collect convention) and re-enter the smoothed
     * log-likelihoods as literals — same long+long arithmetic, same
-    * doubles. R20Prof before: 15 jobs, every stage ≤40 ms — pure job
+    * doubles. Before: 15 jobs, every stage ≤40 ms — pure job
     * overhead; A/B same window at sf0.1: 0.54/0.52 → 0.33/0.33 s
-    * (R21Probe, exceptAll = 0 both directions).
+    * (OPTIMIZATION_r21.md, exceptAll = 0 both directions).
     */
   def qLangId(s: SparkSession, dir: String): DataFrame = {
     import graft.CacheScope.PersistTracked
@@ -1224,8 +1222,8 @@ object TextOps {
       // Persisted (r20, the simhashRepPairs rule): bounded by the query's
       // own pair-output domain. q150 consumes the pair aggregate directly
       // (no fork-point cache above it), so without this every steady-state
-      // run re-ran the banded self-join's BOTH map sides (R20Prof: twin
-      // 8.0 s + 4.2 s runMs stages per run). Lazy — q56 rides its
+      // run re-ran the banded self-join's BOTH map sides (twin 8.0 s +
+      // 4.2 s runMs stages per run, OPTIMIZATION_r20.md). Lazy — q56 rides its
       // expandRepPairs fork cache and just pays one memory write.
       .persistTracked()
     (pairs, ids, bands.select(col("rep")))
@@ -1893,7 +1891,7 @@ object TextOps {
     val train = bg.where(col("doc_id") % 2 === 0)
     // r21 note: the one-pass variant (derive C(w1·)/V from a PERSISTED
     // bigram-model cache, the q46/q93 move) was A/B-run and REJECTED:
-    // 0.87 s vs this spelling's 0.55 warm (R21Probe q119OnePass,
+    // 0.87 s vs this spelling's 0.55 warm (OPTIMIZATION_r21.md,
     // exceptAll = 0). The three "extra" train explodes parallelize
     // across cores inside one action, while the bigram-model cache —
     // corpus-scaled, unlike q93's vocabulary-sized unigram model — costs
@@ -2197,7 +2195,7 @@ object TextOps {
     // widenScan (r20, guide §2.5): the per-shingle md5 transform — the
     // query's dominant term — is row-local and ran fused into the 1-split
     // documents scan. Spreading the texts first (0.6 MB exchange) halves
-    // the query: 0.57 → 0.29 s same-window (R20Probe3, exceptAll = 0).
+    // the query: 0.57 → 0.29 s same-window (OPTIMIZATION_r20.md, exceptAll = 0).
     // No-op at real scan parallelism.
     winnowFingerprintOf(Tables.widenScan(
       t(s, dir, "documents").select(col("doc_id"), col("text")),
@@ -2520,8 +2518,7 @@ object TextOps {
     * split the scan — is a ratio LOSS by arithmetic: both engines' scan
     * terms shrink ~P× but Spark's per-job scheduler floor doesn't, so
     * the quotient degrades. Deleting the second scan wins instead:
-    * measured 0.75 → ~0.45 s at 10×, R14Probe decomposition in
-    * BASELINE.md.)
+    * measured 0.75 → ~0.45 s at 10×, decomposition in BASELINE.md.)
     *
     * When the vocabulary overflows the capacity (`err > 0`) exactness
     * is unprovable from one pass and the plan REFUSES — deterministic
@@ -2800,7 +2797,7 @@ object TextOps {
     // persisted because each is read from two branches (top: wanted + the
     // final join; uniTop: both attach broadcasts); both are metadata-
     // sized (20 and ≤40 rows), so the caches cost nothing at any scale.
-    // Measured at the 100× independent corpus (R17Probe7): broadcast-uni
+    // Measured at the 100× independent corpus (BASELINE.md): broadcast-uni
     // 4.7 s warm / semi-above-agg pivot 6.3 s / this token-level semi ≈
     // the broadcast spelling, with the hard broadcast ceiling gone.
     val topC = top.persistTrackedFilled()
@@ -2814,7 +2811,7 @@ object TextOps {
     // token scan, which the two attach broadcasts would duplicate cold.
     // (The sequential-collect alternative — marginals as literal maps —
     // was A/B-run and REJECTED: it serialized the warm cached reads the
-    // broadcast threads do in parallel; R21Probe q139SeqCollect.)
+    // broadcast threads do in parallel; OPTIMIZATION_r21.md.)
     val wanted = topC.select(explode(array(col("a"), col("b"))).as("w")).distinct()
     val uniTop0 = docs.select(explode(toks(col("text"))).as("w"))
       .where(col("w") =!= "")
@@ -2915,7 +2912,7 @@ object TextOps {
     // needed this exchange anyway — hoisting it below the scan moves the
     // 32-family md5 evaluation from the SCAN stage (whose parallelism is
     // the input file layout: ONE task on a single-row-group fixture/scale
-    // file — 39 s of single-threaded hashing at 10×, R17Probe9) to the
+    // file — 39 s of single-threaded hashing at 10×, BASELINE.md) to the
     // post-shuffle side, exchanging raw text instead of shingles. Same
     // exchange count, fewer bytes, order-insensitive MIN → values
     // unchanged. See [[simhash]].
@@ -3611,7 +3608,7 @@ object TextOps {
     // steady-state path is unchanged. (The sequential-collect alternative
     // — driver-assembled sources×30 grid — was A/B-run and REJECTED at
     // 2.5× warm: it serialized the cached reads the broadcast threads do
-    // in parallel; R21Probe q167SeqCollect.)
+    // in parallel; OPTIMIZATION_r21.md.)
     val ns = cst.groupBy(col("source")).agg(sum(col("c")).as("n_s"))
     val top = cst.groupBy(col("token")).agg(sum(col("c")).as("c_tot"))
       .orderBy(col("c_tot").desc, col("token").asc).limit(30)

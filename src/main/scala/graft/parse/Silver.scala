@@ -26,15 +26,14 @@ object Silver {
       .as[(String, String)]
   }
 
-  /** S3: partition-key extraction from the path
-    * (reference transformer.py:110-115 `sorteo=(\d+)/`).
-    */
-  val SorteoFromPath = ".*sorteo=(\\d+)/.*".r
-
   /** S4: incremental scan — drop raw files whose `sorteo=` path key already
     * exists in silver. Distributed anti-join on the partition value, the
     * Spark shape of the reference's processed-set check
-    * (transformer.py:91-117); no driver-side set.
+    * (transformer.py:91-117); no driver-side set. A file with no
+    * `sorteo=N/` path segment is skipped as well (the reference
+    * logs-and-continues on a missing path key, transformer.py:110-115):
+    * its null key never matches the anti-join, so keeping it would
+    * re-append its rows to silver on every run.
     */
   def skipProcessed(
       raw: Dataset[(String, String)],
@@ -42,6 +41,7 @@ object Silver {
     import raw.sparkSession.implicits._
     raw.toDF("path", "content")
       .withColumn("sorteo", regexp_extract(col("path"), "sorteo=(\\d+)/", 1).cast("long"))
+      .where(col("sorteo").isNotNull)
       .join(processedSorteos.select(col("sorteo").cast("long").as("sorteo")),
         Seq("sorteo"), "left_anti")
       .select(col("path"), col("content"))

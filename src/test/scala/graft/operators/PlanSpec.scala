@@ -74,9 +74,10 @@ class PlanSpec extends AnyFunSuite {
     // grains derive from ONE finest-grain aggregate — lineitem is scanned
     // and shuffled once; the (flag) and grand-total branches re-aggregate
     // the ~|flags|·|statuses|-row base via the reused exchange. A/B at
-    // sf0.1: Expand 0.49–0.89 s vs 0.45 s (R20Probe; exceptAll = 0 both
-    // directions). q83's CUBE ran the same A/B and was REJECTED — its
-    // Expand spelling stays pinned by its own test below.
+    // sf0.1: Expand 0.49–0.89 s vs 0.45 s (OPTIMIZATION_r20.md;
+    // exceptAll = 0 both directions, ScaleSpec). q83's CUBE ran the same
+    // A/B and was REJECTED — its Expand spelling stays pinned by its own
+    // test below.
     val df = SparkEntry.queries("q76_rollup")(spark, dir)
     graft.Bench.force(df)
     val p = df.queryExecution.explainString(
@@ -217,8 +218,8 @@ class PlanSpec extends AnyFunSuite {
     // the shared repartition, splitting it into TWO narrow 2-column
     // exchanges (one per branch) — each branch still loses its second
     // (suppkey, key)-pair exchange, which carried the same rows again.
-    // A/B at sf0.1: 0.82/0.68 → 0.36/0.33 s (R21Probe; exceptAll = 0
-    // both directions).
+    // A/B at sf0.1: 0.82/0.68 → 0.36/0.33 s (OPTIMIZATION_r21.md;
+    // exceptAll = 0 both directions).
     // plan TREE string (not FormattedMode): AQE's final tree prints the
     // Exchange inline under its ShuffleQueryStage, so the count below
     // sees every distinct shuffle exactly once
@@ -241,7 +242,7 @@ class PlanSpec extends AnyFunSuite {
     // aggregate satisfies the aggregate AND the window's partitionBy
     // (subset clustering) — the middle 21 MB exchange of the r17
     // three-shuffle design is gone. A/B at sf0.1: 0.51/0.55 → 0.39/0.38 s
-    // (R21Probe; exceptAll = 0 both directions).
+    // (OPTIMIZATION_r21.md; exceptAll = 0 both directions).
     val df = SparkEntry.queries("q180_substring_dedup")(spark, dir)
     graft.Bench.force(df)
     val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Tables, TestSpark}
+import graft.{SparkEntry, Tables, TestSpark}
 
 class ScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -30,6 +30,44 @@ class ScaleSpec extends AnyFunSuite {
     val salted = Scale.saltedDistinctCount(l, "l_suppkey", "l_partkey")
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_distinct")).toMap
     assert(salted == plain)
+  }
+
+  test("q08/q12/q76/q92 are row-identical to Spark's built-in Expand spellings") {
+    // Each query re-spells a plan Spark would Expand (mixed distinct,
+    // multi-distinct, ROLLUP, GROUPING SETS); PlanSpec pins the plan shape,
+    // this pins the rows: exceptAll = 0 in both directions.
+    val l = Tables.load(spark, dir, "lineitem")
+    val o = Tables.load(spark, dir, "orders")
+    def dsum(c: String) = sum(col(c).cast("decimal(18,6)")).cast("double")
+    l.createOrReplaceTempView("lineitem_builtin")
+    val builtin = Map(
+      "q08_time_series" -> l.join(o, col("l_orderkey") === col("o_orderkey"))
+        .where(col("o_orderdate").isNotNull)
+        .groupBy(year(col("o_orderdate")).as("year"), month(col("o_orderdate")).as("month"))
+        .agg(countDistinct(col("o_orderkey")).as("num_sorteos"),
+          count(col("l_partkey")).as("num_premios"),
+          dsum("l_extendedprice").as("total_monto")),
+      "q12_nunique_per_group" -> l.groupBy(col("l_suppkey"))
+        .agg(countDistinct(col("l_partkey")).as("n_parts"),
+          countDistinct(col("l_orderkey")).as("n_orders")),
+      "q76_rollup" -> l.rollup(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("n_rows"), dsum("l_quantity").as("sum_qty"),
+          grouping_id().cast("int").as("gid")),
+      "q92_grouping_sets" -> spark.sql(
+        """SELECT l_returnflag, l_linestatus,
+          |  CAST(grouping_id(l_returnflag, l_linestatus) AS INT) AS gid,
+          |  COUNT(*) AS n_rows,
+          |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
+          |FROM lineitem_builtin
+          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus),
+          |                        (l_returnflag, l_linestatus))""".stripMargin))
+    builtin.foreach { case (name, ref) =>
+      val q = SparkEntry.queries(name)(spark, dir)
+      val b = ref.select(q.columns.toSeq.map(col): _*)
+      assert(q.count() > 0, name)
+      assert(q.exceptAll(b).count() == 0, s"$name has rows the built-in spelling lacks")
+      assert(b.exceptAll(q).count() == 0, s"the built-in spelling has rows $name lacks")
+    }
   }
 
   test("bucketed tables join without a shuffle exchange") {

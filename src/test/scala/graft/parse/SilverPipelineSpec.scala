@@ -19,6 +19,18 @@ class SilverPipelineSpec extends AnyFunSuite {
   private def freshDir(): String =
     Files.createTempDirectory("graft_silver_spec").toString
 
+  /** Copy fixture draw `name` into `raw`, under `dir` (default: the draw's
+    * own fixture year=/sorteo= directory).
+    */
+  private def stage(raw: String, name: String, dir: Option[String] = None): Unit = {
+    val src = java.nio.file.Paths.get(rawPath)
+    val p = Files.walk(src).filter(_.toString.endsWith(name)).findFirst().get()
+    val dst = java.nio.file.Paths.get(raw,
+      dir.getOrElse(src.relativize(p.getParent).toString), name)
+    Files.createDirectories(dst.getParent)
+    Files.copy(p, dst)
+  }
+
   test("bronze scan finds all fixture files; partition keys extract from paths") {
     val raw = Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt")
     assert(raw.count() == 3)
@@ -87,27 +99,33 @@ class SilverPipelineSpec extends AnyFunSuite {
   test("incremental arrival: a NEW draw file appends only its own rows") {
     val out = freshDir()
     val raw = freshDir()
-    def stage(name: String): Unit = {
-      val src = java.nio.file.Paths.get(rawPath)
-      java.nio.file.Files.walk(src).filter(_.toString.endsWith(s"$name")).forEach { p =>
-        val rel = src.relativize(p).toString
-        val dst = java.nio.file.Paths.get(raw, rel)
-        java.nio.file.Files.createDirectories(dst.getParent)
-        java.nio.file.Files.copy(p, dst)
-      }
-    }
     // first run: two 2024 draws (7 + 4 premios rows)
-    stage("results_raw_lottery_url_id_287_3046.txt")
-    stage("results_raw_lottery_url_id_288_3047.txt")
+    stage(raw, "results_raw_lottery_url_id_287_3046.txt")
+    stage(raw, "results_raw_lottery_url_id_288_3047.txt")
     Pipeline.run(spark, s"$raw/year=*/sorteo=*/*.txt", out)
     assert(spark.read.parquet(s"$out/silver/premios").count() == 11)
     // a NEW draw arrives: only its 3 rows append, nothing re-processed
-    stage("results_raw_lottery_url_id_310_3101.txt")
+    stage(raw, "results_raw_lottery_url_id_310_3101.txt")
     Pipeline.run(spark, s"$raw/year=*/sorteo=*/*.txt", out)
     val premios = spark.read.parquet(s"$out/silver/premios")
     assert(premios.count() == 14)
     assert(premios.where(col("sorteo") === 3046).count() == 7) // not duplicated
     assert(premios.where(col("sorteo") === 3101).count() == 3) // newly arrived
+  }
+
+  test("incremental rerun: a raw file with no sorteo= path key is never re-appended") {
+    val out = freshDir()
+    val raw = freshDir()
+    // one draw in the year=/sorteo= layout, one loose draw beside it
+    stage(raw, "results_raw_lottery_url_id_287_3046.txt")
+    stage(raw, "results_raw_lottery_url_id_288_3047.txt", Some("year=2024/incoming"))
+    val glob = s"$raw/year=*/*/*.txt"
+    assert(Silver.rawDraws(spark, glob).count() == 2)
+    Pipeline.run(spark, glob, out)
+    val first = spark.read.parquet(s"$out/silver/premios").count()
+    Pipeline.run(spark, glob, out)
+    assert(spark.read.parquet(s"$out/silver/premios").count() == first)
+    assert(first == 7) // only the keyed draw; the loose one is skipped
   }
 
   test("processedSorteos: empty on missing path, but corrupt silver PROPAGATES") {
