@@ -126,11 +126,7 @@ object Bench {
       force(fn(spark, sfDir))
 
     val errs = scala.collection.mutable.LinkedHashMap[String, String]()
-    // benchOnly: xxhash64 scale-default variants, measured but excluded
-    // from `total` (they re-run work the oracle-gated spellings already
-    // bill; anchors compare per-query, so extra keys are inert there).
-    val gated = SparkEntry.queries.keySet
-    val all = (SparkEntry.queries ++ SparkEntry.benchOnly).toSeq.sortBy(_._1)
+    val all = SparkEntry.queries.toSeq.sortBy(_._1)
 
     // Cache hygiene note (applies to every measure() call): query builders
     // persist query-local intermediates (banded signature tables, gram
@@ -138,7 +134,7 @@ object Bench {
     // they cannot unpersist before returning without defeating the cache.
     // The session-owner releases them instead: each query's cached frames
     // live exactly for its warmup + timed runs (steady-state reuse), then
-    // are dropped so a 186-query sweep never accumulates storage memory.
+    // are dropped so a 177-query sweep never accumulates storage memory.
     // recordErr=false on the deferred retry pass: a retry that throws must
     // not stamp an errs entry onto a query whose FIRST pass succeeded —
     // the line's contract is that errors and positive times are disjoint.
@@ -277,14 +273,14 @@ object Bench {
       // including the session-works-but-every-query-errors case, where
       // summing zero matches would report an impossible 0.0 s total
       val total16 = {
-        val valid = queries16.collect { case (k, v) if v >= 0 && gated(k) => v }
+        val valid = queries16.collect { case (_, v) if v >= 0 => v }
         if (valid.isEmpty) -1.0 else valid.sum
       }
       val qs = results.map { case (k, v) => s"${jq(k)}:${num(v)}" }.mkString("{", ",", "}")
       val es = errs.map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString("{", ",", "}")
       val sp = spreads.map { case (k, v) => s"${jq(k)}:${num(v)}" }.mkString("{", ",", "}")
       val rt = retriedNames.map(jq).mkString("[", ",", "]")
-      val total = results.collect { case (k, v) if v >= 0 && gated(k) => v }.sum
+      val total = results.collect { case (_, v) if v >= 0 => v }.sum
       val nErr = errs.size
       // window stamp: computed from the FOLDED record (retries included) —
       // the classification the ledger's numbers actually carry. The

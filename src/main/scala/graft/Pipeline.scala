@@ -24,9 +24,9 @@ object Pipeline {
   /** Full run. Returns the per-gold-table row counts (the reference's own
     * acceptance style: "paste row counts into the PR", roadmap.md:493).
     */
-  def run(spark: SparkSession, rawPath: String, outRoot: String,
-      incremental: Boolean = true): Map[String, Long] = {
-    // Bronze → Silver (skip already-processed draws when incremental)
+  def run(spark: SparkSession, rawPath: String, outRoot: String): Map[String, Long] = {
+    // Bronze → Silver. Draws already in silver are always skipped: the
+    // silver writes append, so re-parsing them would duplicate rows.
     val silverSorteos = s"$outRoot/silver/sorteos"
     val silverPremios = s"$outRoot/silver/premios"
     // A raw glob matching no files is "nothing new this run" (the weekly
@@ -39,9 +39,7 @@ object Pipeline {
           import spark.implicits._
           spark.emptyDataset[(String, String)]
       }
-    val raw = if (incremental)
-      Silver.skipProcessed(raw0, Silver.processedSorteos(spark, silverSorteos))
-    else raw0
+    val raw = Silver.skipProcessed(raw0, Silver.processedSorteos(spark, silverSorteos))
     // Materialize the increment ONCE and CUT its lineage (eager
     // localCheckpoint). persist() is not enough: isEmpty caches only the
     // first partition, so the premios write below could re-execute the

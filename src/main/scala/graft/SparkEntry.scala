@@ -258,49 +258,6 @@ object SparkEntry {
       Privacy.queries ++ Stats.queries ++ Retrieval.queries ++
       parseQueries ++ goldSqlQueries
 
-  /** Scale-default (xxhash64) spellings of queries whose ORACLE-GATED
-    * versions use md5-portable hashing (q47/q48/q53/q56 — DuckDB can't
-    * evaluate xxhash64, so the gated spellings trade one codegen'd hash for
-    * md5 + hex-digit arithmetic). Bench and Profile run these alongside the
-    * gated set so the timings the 100 TB design rests on are measured on
-    * the path production would run; recall/equivalence of the hash-family
-    * swap is spec-tested (SimilaritySpec, DedupSpec). NOT part of the
-    * correctness contract — never merged into [[queries]].
-    */
-  def benchOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // determinism-tax twin (not a hash-family swap): q01 with plain
-    // double sums — the per-sweep delta to q01 prices the exact-sum
-    // contract, the way the x-hash rows price md5 portability
-    "x01_agg_double" -> (Relational.q1AggDouble _),
-    "x47_simhash_xxhash" ->
-      ((s, dir) => TextOps.simhash(graft.Tables.load(s, dir, "documents"))),
-    "x48_minhash_xxhash" ->
-      ((s, dir) => TextOps.minhashSignatures(graft.Tables.load(s, dir, "documents"))),
-    "x53_ann_lsh_xxhash" -> (Similarity.qAnnLshXx _),
-    // r21 (the x49-r20 rule applied to the minhash twin): rides q56's
-    // content-layer core with xxhash64 band keys — prices exactly the
-    // hash-family swap on the SHIPPED plan, not the retired per-doc
-    // banded self-join. Pair-set parity with the per-doc xxhash64
-    // spelling is pinned in XxParitySpec; output now carries n_bands
-    // like its gated sibling (ADDITION to the twin's columns only).
-    "x56_minhash_candidates_xxhash" ->
-      ((s, dir) => TextOps.minhashCandidatePairs(s, dir, hashBands = true)),
-    "x111_chunk_dedup_xxhash" -> (Curation.chunkDedupXx _),
-    "x117_cross_corpus_xxhash" -> (CrossCorpus.qCrossCorpusDedupXx _),
-    "x154_source_overlap_xxhash" ->
-      ((s, dir) => TextOps.sourceOverlap(
-        graft.Tables.load(s, dir, "documents"), hashShingles = true)),
-    "x180_substring_dedup_xxhash" ->
-      ((s, dir) => Curation.substringDupStats(
-        graft.Tables.load(s, dir, "documents"), hashGrams = true)),
-    // r20 (VERDICT r19 #5): the twin now rides q49's content-layer
-    // weight-parameterized core — it prices exactly the xxhash64-for-raw-
-    // string shingle swap on the SHIPPED plan, not the retired per-doc
-    // posting join (which had made it the suite's slowest row at ~2.4×
-    // its sibling). Output parity with q49 is pinned in DedupSpec.
-    "x49_jaccard_xxhash" ->
-      ((s, dir) => TextOps.jaccardTopPairs(s, dir, hashShingles = true)))
-
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

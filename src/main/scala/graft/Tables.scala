@@ -40,6 +40,28 @@ object Tables {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
+  /** The (cache key, scratch dst) the normalization uses for the CURRENT
+    * drop of `sfDir`'s events file — pure path math, no side effects. The
+    * one derivation [[normalizedEventsPath]] publishes to; package-private
+    * so specs can drive publish/debris/race scenarios against the real dst.
+    */
+  private[graft] def normTarget(spark: SparkSession, sfDir: String): (String, org.apache.hadoop.fs.Path) = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sessionState.newHadoopConf()
+    val srcPath = new Path(s"$sfDir/events.parquet")
+    val srcFs = srcPath.getFileSystem(conf)
+    val st = srcFs.getFileStatus(srcPath)
+    val qualified = srcFs.makeQualified(srcPath).toString
+    val key = s"$qualified:${st.getLen}:${st.getModificationTime}"
+    val srcTag = md5(qualified).take(12)
+    (key, new Path(new Path(sys.props("java.io.tmpdir")),
+      s"graft_norm_events_${srcTag}_${md5(key).take(12)}"))
+  }
+
+  /** Forget memoized normalization results so a spec can force the
+    * publish path to re-run for a key this process has already seen. */
+  private[graft] def resetNormCacheForTests(): Unit = normCache.clear()
+
   /** One-time ingest normalization (the bronze→silver step of a real
     * lake): when the generator encodes `ts` as a physical parquet
     * timestamp, rewrite the events table ONCE per data drop into a
@@ -61,43 +83,18 @@ object Tables {
     * are purged, while copies of other sources (e.g. a concurrent run at
     * a different SF) are left alone.
     */
-  /** The (cache key, scratch dst) the normalization would use for the
-    * CURRENT drop of `sfDir`'s events file — pure path math, no side
-    * effects. Package-private so specs can drive publish/debris/race
-    * scenarios directly against the real dst.
-    */
-  private[graft] def normTarget(spark: SparkSession, sfDir: String): (String, org.apache.hadoop.fs.Path) = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sessionState.newHadoopConf()
-    val srcPath = new Path(s"$sfDir/events.parquet")
-    val srcFs = srcPath.getFileSystem(conf)
-    val st = srcFs.getFileStatus(srcPath)
-    val qualified = srcFs.makeQualified(srcPath).toString
-    val key = s"$qualified:${st.getLen}:${st.getModificationTime}"
-    val srcTag = md5(qualified).take(12)
-    (key, new Path(new Path(sys.props("java.io.tmpdir")),
-      s"graft_norm_events_${srcTag}_${md5(key).take(12)}"))
-  }
-
-  /** Forget memoized normalization results so a spec can force the
-    * publish path to re-run for a key this process has already seen. */
-  private[graft] def resetNormCacheForTests(): Unit = normCache.clear()
-
   private def normalizedEventsPath(spark: SparkSession, sfDir: String): Option[String] =
     try {
       import org.apache.hadoop.fs.Path
       val conf = spark.sessionState.newHadoopConf()
       val srcPath = new Path(s"$sfDir/events.parquet")
-      val srcFs = srcPath.getFileSystem(conf)
-      val st = srcFs.getFileStatus(srcPath)
-      val qualified = srcFs.makeQualified(srcPath).toString
-      val key = s"$qualified:${st.getLen}:${st.getModificationTime}"
+      val (key, dst) = normTarget(spark, sfDir)
       normCache.computeIfAbsent(key, _ =>
         try {
           val tmpRoot = new Path(sys.props("java.io.tmpdir"))
           val fs = tmpRoot.getFileSystem(conf)
-          val srcTag = md5(qualified).take(12)
-          val dst = new Path(tmpRoot, s"graft_norm_events_${srcTag}_${md5(key).take(12)}")
+          // dst is graft_norm_events_<srcTag>_<keyTag>, both 12 hex chars
+          val srcTag = dst.getName.stripPrefix("graft_norm_events_").take(12)
           // purge superseded drops of this source (same srcTag, other key).
           // globStatus returns scheme-QUALIFIED paths (file:/tmp/...) while
           // dst as constructed is not — compare qualified-to-qualified, or
@@ -190,10 +187,6 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame =
     load(spark, sfDir, "events")
       .withColumn("ts_utc", org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
-
-  /** Register every table as a temp view so `spark.sql` queries work. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 
   /** Adaptive scan widening (r20; optimization guide §2.5 "input skew: one
     * huge unsplittable file — repartition immediately after the read").

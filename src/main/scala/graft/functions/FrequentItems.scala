@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable Misra-Gries frequent-items summary (Misra & Gries '82;
@@ -405,7 +404,4 @@ object FrequentItems {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "mg_freq_text", mgFreqTextBuilder, "scala_udf")
   }
-
-  /** DataFrame-side helper: `mgFreq("token", 64)`. */
-  def mgFreq(colName: String, k: Int): Column = expr(s"mg_freq($colName, $k)")
 }

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.expr
 /** Mergeable streaming quantile sketch (KLL-style relative-compaction
   * hierarchy, Karnin/Lang/Liberty FOCS'16 shape) sized O(k log n) — the
   * scale path for percentiles over 100 TB where an exact sort
-  * ([[graft.operators.Analytics.exactQuantilesBySort]]) is a luxury and
+  * ([[graft.operators.Analytics.exactQuantilesByHistogram]]) is a luxury and
   * a single-buffer percentile_approx collapse is the bottleneck.
   *
   * Level i holds items of weight 2^i. Inserts land in level 0; a full

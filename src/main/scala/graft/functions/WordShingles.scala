@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle is a zero-copy `UTF8String` view over the text's byte array:
   * no token objects, no concatenation, no lambda interpretation. The
   * shingle scan is the linear-cost term of the whole banded dedup
-  * family (q90/q55/q56/q105/q143/q154 and the x-variants) at corpus
+  * family (q90/q55/q56/q105/q143/q154) at corpus
   * scale — a 10× rebuild measured extraction dominating those queries
   * once the banded joins bounded the quadratic term.
   *

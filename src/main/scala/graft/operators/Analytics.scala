@@ -230,83 +230,17 @@ object Analytics {
     vc.crossJoin(broadcast(n)).agg(aggs.head, aggs.tail: _*).select(qs: _*)
   }
 
-  /** Exact percentiles for HIGH-cardinality columns (near-unique values,
-    * where [[exactQuantiles]]'s distinct-value window degenerates to a
-    * single-partition sort): classic distributed selection. Range-partition
-    * + sort-within-partitions (fully parallel), count rows per partition
-    * (a #partitions-sized metadata collect, not data), convert the target
-    * global ranks to (partition, local offset), and extract just those
-    * rows. Interpolation applies the identical IEEE arithmetic as
-    * [[exactQuantiles]]/builtin percentile, so results stay bit-equal.
-    * Every pass is partition-parallel — this is the exact-quantile shape
-    * that holds at 100 TB.
-    */
-  def exactQuantilesBySort(df: DataFrame, valueCol: String, probs: Seq[Double],
-      partitions: Int = 32): DataFrame = {
-    val spark = df.sparkSession
-    val vals = df.select(col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull)
-      .repartitionByRange(partitions, col("v"))
-      .sortWithinPartitions("v")
-    val rdd = vals.queryExecution.toRdd.map(_.getDouble(0))
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val counts = rdd.mapPartitionsWithIndex((i, it) => Iterator(i -> {
-        var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c
-      })).collect().sortBy(_._1).map(_._2)
-      val n = counts.sum
-      val out =
-        if (n == 0) probs.indices.map(_ => lit(null).cast("double"))
-        else {
-          val offsets = counts.scanLeft(0L)(_ + _) // start rank per partition
-          val wanted = probs.flatMap { p =>
-            val pos = p * (n - 1)
-            Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
-          }.distinct
-          val byPart = wanted.groupBy { r =>
-            // last partition whose start rank is <= r
-            offsets.lastIndexWhere(_ <= r, offsets.length - 2)
-          }
-          val bc = spark.sparkContext.broadcast(byPart.map { case (p, rs) =>
-            p -> rs.map(_ - offsets(p)).sorted
-          })
-          val found = rdd.mapPartitionsWithIndex { (i, it) =>
-            val locals = bc.value.getOrElse(i, Nil)
-            val want = locals.iterator.buffered
-            var idx = 0L
-            val res = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-            while (it.hasNext && want.hasNext) {
-              val v = it.next()
-              while (want.hasNext && want.head == idx) res += ((want.next(), v))
-              idx += 1
-            }
-            res.iterator.map { case (local, v) => (local, v, i) }
-          }.collect().map { case (local, v, p) =>
-            (local + offsets(p), v)
-          }.toMap
-          probs.map { p =>
-            val pos = p * (n - 1)
-            val (lo, hi) = (found(math.floor(pos).toLong), found(math.ceil(pos).toLong))
-            val q = if (math.floor(pos) == math.ceil(pos)) lo
-              else (math.ceil(pos) - pos) * lo + (pos - math.floor(pos)) * hi
-            lit(q)
-          }
-        }
-      vals.sparkSession.range(1).select(
-        out.zipWithIndex.map { case (c, i) => c.as(s"q$i") }: _*)
-    } finally rdd.unpersist(blocking = false)
-  }
-
-  /** Exact percentiles via histogram-refinement selection — the
-    * shuffle-free alternative to [[exactQuantilesBySort]] for numeric
-    * columns. Pass 1 scans the pruned single-column input for
-    * count/min/max; pass 2 builds a fixed-width histogram as a hash
-    * aggregate over ≤ `bins` keys (map-side combine ⇒ the exchange carries
-    * `bins` rows per map task, never data). The driver maps each target
-    * rank to its bin (a `bins`-sized metadata collect, same class as the
-    * per-partition counts in [[exactQuantilesBySort]]) and only the
-    * rank-carrying bins — expected n/bins rows — are collected and refined,
-    * ALL in one batched job per level (r14: rows carry their region
+  /** Exact percentiles via histogram-refinement selection — for
+    * HIGH-cardinality numeric columns (near-unique values, where
+    * [[exactQuantiles]]'s distinct-value window degenerates to a
+    * single-partition sort), with no range shuffle or sort. Pass 1 scans
+    * the pruned single-column input for count/min/max; pass 2 builds a
+    * fixed-width histogram as a hash aggregate over ≤ `bins` keys
+    * (map-side combine ⇒ the exchange carries `bins` rows per map task,
+    * never data). The driver maps each target rank to its bin (a
+    * `bins`-sized metadata collect) and only the rank-carrying bins —
+    * expected n/bins rows — are collected and refined, ALL in one
+    * batched job per level (r14: rows carry their region
     * ordinal via a disjoint when-chain, so nine decile boundaries cost
     * the same two jobs a single median does, not a job per bin).
     * A bin still over `collectBudget` rows (mass piled on a narrow range)
@@ -316,7 +250,7 @@ object Analytics {
     * min == max is constant and resolves immediately, which also bounds
     * duplicate-heavy distributions. Rank extraction is exact order
     * statistics and the interpolation applies the identical IEEE
-    * arithmetic as [[exactQuantilesBySort]]/builtin percentile, so results
+    * arithmetic as [[exactQuantiles]]/builtin percentile, so results
     * stay bit-equal.
     */
   def exactQuantilesByHistogram(df: DataFrame, valueCol: String, probs: Seq[Double],

@@ -59,21 +59,18 @@ object CrossCorpus {
   }
 
   /** q117: incremental crawl dedup report. Even doc_ids play the role of
-    * the already-ingested corpus, odd doc_ids the new crawl. The GATED
-    * spelling keys content identity on md5(text) so it is hash-identical
-    * to the DuckDB oracle (the bloom still probes an xxhash64 of that
-    * key internally, which cannot change results); the scale-default
-    * xxhash64 content key lives in the bench-only x117 variant, matching
-    * the q47/q48/q53/q56 convention. Output: per-source counts of the
+    * the already-ingested corpus, odd doc_ids the new crawl. Content
+    * identity is keyed on md5(text) so it is hash-identical to the DuckDB
+    * oracle (the bloom still probes an xxhash64 of that key internally,
+    * which cannot change results). Output: per-source counts of the
     * new batch vs its novel survivors. The oracle is the exact anti-join
     * semantics — the bloom stage is invisible to results by construction
     * (no false negatives).
     */
-  private def crossCorpusDedup(s: SparkSession, dir: String,
-      contentKey: org.apache.spark.sql.Column): DataFrame = {
+  def qCrossCorpusDedup(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val docs = t(s, dir, "documents")
-      .select(col("doc_id"), col("source"), contentKey.as("content_key"))
+      .select(col("doc_id"), col("source"), md5(col("text")).as("content_key"))
     val seen = docs.where(col("doc_id") % 2 === 0)
     val fresh = docs.where(col("doc_id") % 2 === 1)
     val novel = novelRows(fresh, seen.select(col("content_key")), "content_key")
@@ -83,16 +80,6 @@ object CrossCorpus {
       .select(col("source"), col("n_new"),
         coalesce(col("n_novel"), lit(0L)).as("n_novel"))
   }
-
-  def qCrossCorpusDedup(s: SparkSession, dir: String): DataFrame =
-    crossCorpusDedup(s, dir, md5(col("text")))
-
-  /** Bench-only scale spelling: 8-byte xxhash64 content key (collision
-    * odds ~n²/2⁶⁵) instead of the 32-hex-char md5 string — less shuffle
-    * weight per row, one codegen'd hash instead of a cryptographic one.
-    */
-  def qCrossCorpusDedupXx(s: SparkSession, dir: String): DataFrame =
-    crossCorpusDedup(s, dir, xxhash64(col("text")))
 
   /** DuckDB mirror of the EXACT semantics (hash(text) membership); DuckDB
     * has no xxhash64, but membership is hash-agnostic — same text sets,

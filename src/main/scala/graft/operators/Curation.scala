@@ -59,35 +59,6 @@ object Curation {
         coalesce(col("n_kept"), lit(0L)).as("n_kept"))
   }
 
-  /** Scale-default spelling of [[qChunkDedup]]: groups on
-    * `xxhash64(chunk)` so the first-occurrence shuffle moves 8-byte keys
-    * instead of ~60-byte chunk strings (the oracle-gated q111 groups on
-    * the raw string because DuckDB can't evaluate xxhash64). A 64-bit
-    * collision conflates two chunk contents — at 10^12 chunks the
-    * expected collision count is ~0.03, acceptable for dedup accounting;
-    * use the string spelling when exactness must be unconditional. Bench
-    * runs this alongside the gated q111 (SparkEntry.benchOnly).
-    */
-  def chunkDedupXx(s: SparkSession, dir: String): DataFrame = {
-    val chunks = t(s, dir, "documents")
-      .withColumn("toks", toks(col("text")))
-      .select(col("doc_id"), col("source"),
-        posexplode(expr(
-          "transform(sequence(0, cast(ceil(size(toks) / 10.0) as int) - 1), " +
-            "i -> concat_ws(' ', slice(toks, i * 10 + 1, 10)))"))
-          .as(Seq("idx", "chunk")))
-      .withColumn("chunk_key", xxhash64(col("chunk")))
-    val totals = chunks.groupBy(col("source")).agg(count(lit(1)).as("n_chunks"))
-    val kept = chunks
-      .groupBy(col("chunk_key"))
-      .agg(min(struct(col("doc_id"), col("idx"), col("source"))).as("first"))
-      .groupBy(col("first.source").as("source"))
-      .agg(count(lit(1)).as("n_kept"))
-    totals.join(broadcast(kept), Seq("source"), "left")
-      .select(col("source"), col("n_chunks"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-  }
-
   val qChunkDedupSql: String =
     """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
       |           FROM documents),
@@ -858,22 +829,16 @@ object Curation {
     * back onto the raw persisted stream, which re-shuffled the whole
     * corpus and cached ~9 GB at the 100× corpus (191.9 s vs 24.4 s oracle
     * once honest forcing exposed it; BASELINE r17) — then (2) one doc_id
-    * rollup sums instance counts under the nd≥2 flag. With `hashGrams`
-    * the shuffled key is xxhash64's 8 bytes instead of a ~60-byte string
-    * (bench-only x180, same convention as x49/x154; 2^-64 collisions
-    * conflate two gram contents).
+    * rollup sums instance counts under the nd≥2 flag.
     */
-  def substringDupStats(docs: DataFrame, k: Int = 10,
-      hashGrams: Boolean = false): DataFrame = {
+  def substringDupStats(docs: DataFrame, k: Int = 10): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // r12: k-gram emission via the fused zero-copy expression (sub-k-token
     // docs emit an empty array — same rows as the old ≥k gate)
-    val grams = docs
+    val keyed = docs
       .select(col("doc_id"), explode(call_function("word_shingles",
         col("text"), lit(k), lit(false))).as("gram"))
-    val keyed = if (hashGrams)
-        grams.select(col("doc_id"), xxhash64(col("gram")).as("gkey"))
-      else grams.select(col("doc_id"), col("gram").as("gkey"))
+      .select(col("doc_id"), col("gram").as("gkey"))
     // r17 rewrite (found by the honest-forcing 100× re-measure: the old
     // persist + countDistinct + dup-set join spelling read 191.9 s at the
     // 100× corpus, 8× the oracle — the r16/r17 benches never saw it
@@ -902,8 +867,7 @@ object Curation {
     // partitionBy(gkey) — the middle exchange disappears and the window
     // needs only a local sort. Two decreasing shuffles total. A/B same
     // window at sf0.1: 0.51/0.55 → 0.39/0.38 s, exceptAll = 0
-    // (OPTIMIZATION_r21.md);
-    // the x180 twin rides the same body.
+    // (OPTIMIZATION_r21.md).
     val perDocGram = keyed.repartition(col("gkey"))
       .groupBy(col("gkey"), col("doc_id"))
       .agg(count(lit(1)).as("cnt"))

@@ -98,25 +98,6 @@ object Relational {
         max(col("l_quantity")).as("max_qty"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
 
-  /** Bench-only q01 twin with plain DOUBLE sums (no decimal cast, no
-    * exact accumulator) — the x-variant convention applied to the
-    * determinism contract: its delta to q01 in every sweep IS the
-    * measured price of bit-reproducible sums (per BASELINE.md r17: the
-    * double→decimal cast after DecSum6 removed the buffer tax). NOT
-    * oracle-gated — double summation is partition-order-dependent, which
-    * is exactly what the gated spelling exists to prevent.
-    */
-  def q1AggDouble(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity")).as("sum_qty"),
-        sum(col("l_extendedprice")).as("sum_price"),
-        sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
-        count(lit(1)).as("n_rows"),
-        max(col("l_quantity")).as("max_qty"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
   val q1Sql: String =
     """SELECT l_returnflag, l_linestatus,
       |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,

@@ -182,14 +182,6 @@ object Similarity {
          |                        1, 12), 16, 10) AS BIGINT) % 1000001 - 500000))"""
         .stripMargin).as("pw"))
 
-  /** Sign buckets over integer-quantized projections: vector components
-    * round to millionths (exact in both engines), plane weights are
-    * integers, so each projection is an exact int64 sum — its SIGN (the
-    * LSH bit) is engine-independent, making the whole bucketing
-    * oracle-checkable with zero float-order sensitivity. Same round-6
-    * row-local shape as [[signBuckets]]: zero shuffles before the
-    * candidate join.
-    */
   /** Per-vector sign bits against the 16 portable hyperplanes — the raw
     * material both band layouts ([[portableSignBuckets]]'s 2×8 for
     * near-dup mining, [[qRecallAudit]]'s 4×4 for neighbor candidates)
@@ -207,6 +199,14 @@ object Similarity {
           |  THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin))
       .select(col("vec_id"), col("bits"))
 
+  /** Sign buckets over integer-quantized projections: vector components
+    * round to millionths (exact in both engines), plane weights are
+    * integers, so each projection is an exact int64 sum — its SIGN (the
+    * LSH bit) is engine-independent, making the whole bucketing
+    * oracle-checkable with zero float-order sensitivity. Same round-6
+    * row-local shape as [[signBuckets]]: zero shuffles before the
+    * candidate join.
+    */
   def portableSignBuckets(s: SparkSession, e: DataFrame, dim: Int): DataFrame =
     portableSignBits(s, e, dim)
       .select(col("vec_id"),
@@ -216,38 +216,19 @@ object Similarity {
   /** LSH-bucketed near-neighbor mining: top-20 candidate pairs by exact
     * cosine (embedding-cosine near-dup surface). Uses the portable
     * bucketing so the full pipeline — planes, quantized projections, band
-    * keys, candidate join, cosine re-rank — is DuckDB-oracle-gated; recall
-    * of the xxhash64 scale variant is validated in SimilaritySpec.
+    * keys, candidate join, cosine re-rank — is DuckDB-oracle-gated.
     */
   def qAnnLsh(s: SparkSession, dir: String): DataFrame = {
     val e = t(s, dir, "embeddings")
-    rerankTopPairs(s, e, bandedPairs(portableSignBuckets(s, e, 64)))
-  }
-
-  /** Exact-cosine re-rank of candidate pairs → global top-20 with full
-    * tiebreak (shared by the portable and xxhash64 LSH spellings).
-    */
-  private def rerankTopPairs(s: SparkSession, e: DataFrame, pairs: DataFrame): DataFrame = {
     val vecs = e.select(col("vec_id"), col("embedding"))
-    pairs
+    // exact-cosine re-rank of the candidates → global top-20, full tiebreak
+    bandedPairs(portableSignBuckets(s, e, 64))
       .join(vecs.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
       .join(vecs.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
       .withColumn("cosine", cosineCol(s, "va", "vb"))
       .orderBy(col("cosine").desc, col("id_a").asc, col("id_b").asc)
       .limit(20)
       .select(col("id_a"), col("id_b"), col("cosine"))
-  }
-
-  /** Scale-default spelling of [[qAnnLsh]]: xxhash64 hyperplanes +
-    * double-precision projections ([[signBuckets]]) instead of the
-    * md5-portable integer-quantized ones. Not oracle-expressible (DuckDB
-    * has no xxhash64); recall vs brute force is asserted in SimilaritySpec,
-    * and Bench measures it as `x53_ann_lsh_xxhash` so the number the 100 TB
-    * design argument rests on is observed, not inferred from the md5 run.
-    */
-  def qAnnLshXx(s: SparkSession, dir: String): DataFrame = {
-    val e = t(s, dir, "embeddings")
-    rerankTopPairs(s, e, lshCandidatePairs(s, e))
   }
 
   /** DuckDB re-derivation of [[qAnnLsh]]: same md5-derived integer planes,

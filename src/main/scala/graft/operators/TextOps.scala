@@ -252,9 +252,9 @@ object TextOps {
     * (md5 is the one hash both Spark and DuckDB compute identically), and
     * the output is the four 16-bit sub-bands as scalar ints — the exact
     * blocking keys the near-dup join uses, in an oracle-comparable shape.
-    * The xxhash64 variant stays the scale default (one codegen'd hash per
-    * token vs an md5 + string ops); the hash family is interchangeable by
-    * construction — simhash only needs uniform independent bits.
+    * [[simhash]] is the xxhash64 spelling; the hash family is
+    * interchangeable by construction — simhash only needs uniform
+    * independent bits.
     */
   def qSimhashBands(s: SparkSession, dir: String): DataFrame =
     // repartition(doc_id): layout-independent parallelism for the
@@ -332,7 +332,7 @@ object TextOps {
       struct(lit(b).as("band"),
         shiftrightunsigned(col("simhash"), lo).bitwiseAND(mask).as("key"))
     }
-    // persisted before the self-join (q56/x56 convention): otherwise the
+    // persisted before the self-join (q56 convention): otherwise the
     // caller's sims subtree — typically a corpus-sized 64-vote aggregate —
     // evaluates once per join side. Session owner clearCache releases it.
     val banded = sims
@@ -572,9 +572,8 @@ object TextOps {
     * minhash only needs exchangeable uniform families, not independent
     * string hashes). 32 variable-length string hashes per posting become
     * one string hash + 32 fixed-width long hashes; the map-side partial
-    * aggregate and the doc_id exchange are unchanged. Decision parity
-    * with the md5-portable oracled spelling is pinned by XxParitySpec
-    * (identical content collides, planted near-dups recovered).
+    * aggregate and the doc_id exchange are unchanged. DedupSpec pins its
+    * decisions (identical content collides, planted near-dups recovered).
     */
   def minhashSignatures(docs: DataFrame): DataFrame = {
     // repartition(doc_id) at the text level: the 32 min-hash families
@@ -597,9 +596,9 @@ object TextOps {
     * mins) — scalar string columns only, no array in the result, and every
     * step is evaluable identically by DuckDB. Hex strings compare bytewise
     * identically under Spark's UTF8 ordering and DuckDB's default VARCHAR
-    * collation, so the MINs agree bit-for-bit. The xxhash64 variant stays
-    * the scale default (one codegen'd 64-bit hash per token vs md5 + string
-    * ops); minhash only needs exchangeable uniform hash families.
+    * collation, so the MINs agree bit-for-bit. [[minhashSignatures]] is
+    * the xxhash64 spelling; minhash only needs exchangeable uniform hash
+    * families.
     */
   def qMinhashBands(s: SparkSession, dir: String): DataFrame = {
     // r18 content layer: the 32 md5 families run once per DISTINCT TEXT
@@ -617,27 +616,6 @@ object TextOps {
     * (doc_id, text) frame — per-row keyed by whatever granularity the
     * caller feeds it (docs, or contentLayer representatives).
     */
-  /** xxhash64 twin of [[minhashBandsOf]] — the same band derivation as
-    * [[minhashSignatures]] (identical band VALUES per doc: min over
-    * xxhash64(i, xxhash64(shingle)) families, band = xxhash64 of 4 mins)
-    * minus the byDoc repartition (callers pass an already-keyed frame)
-    * and the signature array (band consumers don't read it). Feeds the
-    * content-layer x56 twin (r21, the x49-r20 precedent): the twin now
-    * prices exactly the hash-family swap on the SHIPPED q56 plan, not
-    * the retired per-doc banded self-join.
-    */
-  private def minhashXxBandsOf(docs: DataFrame): DataFrame = {
-    val sh = shinglesDistinct(docs)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-    val mins = (0 until MinhashK).map(i =>
-      min(xxhash64(lit(i), col("h"))).as(s"m$i"))
-    val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val bands = (0 until MinhashBands).map { b =>
-      xxhash64((b * 4 until b * 4 + 4).map(i => col(s"m$i")): _*).as(s"band$b")
-    }
-    sig.select(col("doc_id") +: bands: _*)
-  }
-
   private def minhashBandsOf(docs: DataFrame): DataFrame = {
     val sh = shinglesDistinct(docs)
     val mins = (0 until MinhashK).map(i =>
@@ -716,8 +694,7 @@ object TextOps {
     * no sizes table ever joins back onto the pair frame (r16; see the
     * in-body note for the measured 100x failure of the join spelling).
     */
-  def jaccardPairs(docs: DataFrame, maxDfFrac: Double = 0.5,
-      hashShingles: Boolean = false): DataFrame = {
+  def jaccardPairs(docs: DataFrame, maxDfFrac: Double = 0.5): DataFrame = {
     // The row-local hot-set spelling is safe BECAUSE the hot set is
     // bounded by ≤ avg_shingles_per_doc/maxDfFrac members: it collapses
     // to one collect_list row and broadcasts. A tiny maxDfFrac (say
@@ -729,17 +706,9 @@ object TextOps {
     require(maxDfFrac >= 0.1 && maxDfFrac <= 1.0,
       s"maxDfFrac=$maxDfFrac outside [0.1, 1]: the broadcast hot set is " +
         "only bounded for df caps ≥ 0.1 of the corpus")
-    // hashShingles is the scale default (bench x49): the posting list and
-    // its self-join shuffle carry an 8-byte xxhash64 instead of the raw
-    // shingle string; per-doc shingle sets stay distinct modulo ~1/2⁶⁴
-    // collisions, so counts (and Jaccard) are unchanged in practice. The
-    // gated q49 keeps raw strings so it is spelling-identical to DuckDB.
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val arrRaw = docs.select(col("doc_id"),
+    val units = docs.select(col("doc_id"),
       call_function("word_shingles", col("text"), lit(3), lit(true)).as("arr"))
-    val units = if (hashShingles)
-        arrRaw.select(col("doc_id"), expr("transform(arr, s -> xxhash64(s))").as("arr"))
-      else arrRaw
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val (kept, pairRows) = keptShingleArrays(units, "doc_id", None, nDocs, maxDfFrac)
     postingPairAgg(kept, pairRows, "doc_id", None, "doc_a", "doc_b")
@@ -922,22 +891,7 @@ object TextOps {
     * the collect; the final (jaccard DESC, doc_a, doc_b) sort is the
     * deterministic oracle ordering. The oracle SQL is untouched.
     */
-  def qJaccardTopPairs(s: SparkSession, dir: String): DataFrame =
-    jaccardTopPairs(s, dir, hashShingles = false)
-
-  /** Parameterized core of q49 / its bench twin x49 (r20, VERDICT r19
-    * #5): `hashShingles = true` is the SCALE DEFAULT — the posting list
-    * and its self-join shuffle carry an 8-byte xxhash64 of each shingle
-    * instead of the raw string (counts, and so Jaccard, unchanged modulo
-    * ~1/2⁶⁴ collisions; decision parity pinned in DedupSpec). The gated
-    * q49 keeps raw strings so it is spelling-identical to DuckDB. Until
-    * r19 the twin still ran the retired PER-DOC posting plan (the
-    * suite's slowest row, ~2.4× its q49 sibling); it now rides the same
-    * content-layer weight-parameterized core, so the twin prices exactly
-    * the hash-family swap and nothing else.
-    */
-  def jaccardTopPairs(s: SparkSession, dir: String,
-      hashShingles: Boolean): DataFrame = {
+  def qJaccardTopPairs(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
     // per-content kept-shingle arrays + copy counts through the SHARED
@@ -949,12 +903,9 @@ object TextOps {
     // COUNT(*) in exact integers, mult = max(copies_a·copies_b) — at the
     // library-default 0.5 df cap (inside jaccardPairs' [0.1, 1] bound).
     val sizes = ids.select(col("rep"), size(col("ids")).cast("long").as("copies"))
-    val arrRaw = reps.select(col("doc_id").as("rep"),
+    val units = reps.select(col("doc_id").as("rep"),
       call_function("word_shingles", col("text"), lit(3), lit(true)).as("arr"))
-    val shingled = if (hashShingles)
-        arrRaw.select(col("rep"), expr("transform(arr, s -> xxhash64(s))").as("arr"))
-      else arrRaw
-    val units = shingled.join(sizes, Seq("rep"))
+      .join(sizes, Seq("rep"))
     val nDocs = ids.select(sum(size(col("ids"))).as("n_docs"))
     val (ka, pairRows) = keptShingleArrays(units, "rep", Some("copies"), nDocs, 0.5)
     val cross = postingPairAgg(ka, pairRows, "rep", Some("copies"), "ra", "rb")
@@ -1184,10 +1135,6 @@ object TextOps {
        |WHERE $ham <= 3""".stripMargin
   }
 
-  /** MinHash LSH candidate PAIRS over the portable md5 bands: docs agreeing
-    * on ≥1 of the 8 band keys, with the agreeing-band count (an estimate of
-    * signature similarity). Bucket-equality join only — never all-pairs.
-    */
   /** Shared rep-level core of q56/q150 (r18 content layer): the banded
     * self-join and the band-agreement pair aggregate run on the
     * distinct-content universe. Returns (pairs, ids, sigReps):
@@ -1199,15 +1146,12 @@ object TextOps {
     * (q150) never join anything above the pair aggregate. sigReps = the
     * reps that HAVE a signature, for the same-content branch.
     */
-  private def minhashRepPairs(s: SparkSession, dir: String,
-      hashBands: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
+  private def minhashRepPairs(s: SparkSession,
+      dir: String): (DataFrame, DataFrame, DataFrame) = {
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
     // persisted: both self-join sides read it — without it the 32-MIN
     // signature aggregation over all distinct-text shingles runs twice.
-    // hashBands (bench x56, r21): band keys from the xxhash64 family
-    // (8-byte join keys) instead of the md5-portable oracled spelling.
-    val bandsOf = if (hashBands) minhashXxBandsOf(reps) else minhashBandsOf(reps)
-    val bands = bandsOf.withColumnRenamed("doc_id", "rep")
+    val bands = minhashBandsOf(reps).withColumnRenamed("doc_id", "rep")
       .join(ids.select(col("rep"), size(col("ids")).cast("long").as("n")), Seq("rep"))
       .persistTrackedFilled() // warm-gated eager fill — see minhashCandidates
     val banded = bands.select(col("rep"), col("n"),
@@ -1229,25 +1173,12 @@ object TextOps {
     (pairs, ids, bands.select(col("rep")))
   }
 
-  def qMinhashCandidatePairs(s: SparkSession, dir: String): DataFrame =
-    minhashCandidatePairs(s, dir, hashBands = false)
-
-  /** Parameterized core of q56 / its bench twin x56 (r21, the r20 x49
-    * precedent — VERDICT r19 #5's rule applied to the minhash family):
-    * `hashBands = true` is the SCALE DEFAULT — band keys from the
-    * xxhash64 family (one codegen'd 64-bit hash per token, 8-byte join
-    * keys) instead of the md5-portable oracled spelling. Until r21 the
-    * twin still ran the retired PER-DOC banded self-join (0.59 s vs the
-    * gated sibling's 0.37–0.43 — it priced the retired plan, not the
-    * hash swap); it now rides the same content-layer core, and
-    * XxParitySpec pins its pair set EQUAL to the per-doc xxhash64
-    * spelling (band keys are content functions: identical texts have
-    * identical bands, so the content-expand emits exactly the per-doc
-    * candidate set — the same argument that carried q56's r19 rewrite).
+  /** MinHash LSH candidate PAIRS over the portable md5 bands: docs agreeing
+    * on ≥1 of the 8 band keys, with the agreeing-band count (an estimate of
+    * signature similarity). Bucket-equality join only — never all-pairs.
     */
-  def minhashCandidatePairs(s: SparkSession, dir: String,
-      hashBands: Boolean): DataFrame = {
-    val (pairs, ids, sigReps) = minhashRepPairs(s, dir, hashBands)
+  def qMinhashCandidatePairs(s: SparkSession, dir: String): DataFrame = {
+    val (pairs, ids, sigReps) = minhashRepPairs(s, dir)
     // cross-content pairs inherit the content pair's n_bands verbatim
     // (band keys are content functions); same-content pairs agree on all
     // 8 bands by construction — both exactly what the per-doc banded
@@ -3189,13 +3120,10 @@ object TextOps {
     * pattern — and source pairs, like per-source sizes, are Σcount over
     * set bits generated ROW-LOCALLY; no self-join, no second
     * corpus-scale shuffle, everything downstream |sources|²-bounded.
-    * The gated q154 groups on the raw shingle string
-    * (spelling-identical to the DuckDB oracle, the q49/x49 convention);
-    * the scale default (bench x154) xxhash64's the key so the exchange
-    * carries 8 bytes — collisions merge two shingles' source sets at
-    * odds ~|shingles|²/2⁶⁵, like q47/q48.
+    * Shingles are grouped on the raw string, spelling-identical to the
+    * DuckDB oracle.
     */
-  def sourceOverlap(docs: DataFrame, hashShingles: Boolean = false): DataFrame = {
+  def sourceOverlap(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // r21 bitmask spelling (guide §4 + §2.3): the source DOMAIN is bounded
     // (docstring), so a shingle's source SET is one long of bits. The
@@ -3211,13 +3139,13 @@ object TextOps {
     // dictionary-encoded column; sorted, so bit index order IS
     // lexicographic order and the (source_a < source_b) pair orientation
     // is unchanged. >64 sources falls back to the set spelling below —
-    // same rows, spec-pinned (SourceOverlapParitySpec).
+    // same rows, spec-pinned (TextStatsSpec).
     // the distinct-domain frame persists so WARM builds read a ≤64-row
     // cache instead of re-scanning the source column per run
     val srcArr = docs.select(col("source")).where(col("source").isNotNull)
       .distinct().persistTracked().collect().map(_.getString(0)).sorted
     if (srcArr.isEmpty || srcArr.length > 64)
-      return sourceOverlapSets(docs, hashShingles)
+      return sourceOverlapSets(docs)
     val maskMap = srcArr.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
     // mask attached per DOC row (one ≤64-key map probe per doc, not per
     // shingle); the exploded stream carries (long, shingle)
@@ -3236,8 +3164,7 @@ object TextOps {
     // bytes — unlike the retired per-shingle srcs cache, whose
     // corpus-sized re-reads were the old spelling's warm cost.
     val masks = grams
-      .groupBy((if (hashShingles) xxhash64(col("shingle"))
-                else col("shingle")).as("sh"))
+      .groupBy(col("shingle").as("sh"))
       .agg(expr("bit_or(mask)").as("m"))
       .groupBy(col("m")).agg(count(lit(1)).as("c"))
       .persistTrackedFilled()
@@ -3270,18 +3197,16 @@ object TextOps {
 
   /** The pre-r21 per-shingle source-SET spelling — the >64-source
     * fallback of [[sourceOverlap]] (a long can't carry the domain) and
-    * its equivalence witness (SourceOverlapParitySpec pins the two
-    * row-identical; the r21 A/B ledger timed them).
+    * its equivalence witness (TextStatsSpec pins the two row-identical;
+    * the r21 A/B ledger timed them).
     */
-  private[graft] def sourceOverlapSets(
-      docs: DataFrame, hashShingles: Boolean = false): DataFrame = {
+  private[graft] def sourceOverlapSets(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val bySh = docs
       .select(col("source"),
         explode(call_function("word_shingles",
           col("text"), lit(3), lit(true))).as("shingle"))
-      .groupBy((if (hashShingles) xxhash64(col("shingle"))
-                else col("shingle")).as("sh"))
+      .groupBy(col("shingle").as("sh"))
       .agg(array_sort(collect_set(col("source"))).as("srcs"))
       .persistTracked()
     val sizes = bySh.select(explode(col("srcs")).as("source"))

@@ -18,12 +18,6 @@ object Writers {
   def writeSilverPartitioned(df: DataFrame, path: String): Unit =
     df.write.mode("append").partitionBy("year", "sorteo").parquet(path)
 
-  /** S6: flat parquet sink (notebook convenience copies,
-    * transformer.py:244-248).
-    */
-  def writeFlat(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   /** S13/S14: gold sink — full idempotent rebuild. `mode("overwrite")`
     * replaces the reference's DROP TABLE + empty-the-prefix + CTAS
     * choreography in one atomic writer call.

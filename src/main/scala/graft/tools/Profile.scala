@@ -17,7 +17,7 @@ object Profile {
     val spark = Session.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
-      val fn = (SparkEntry.queries ++ SparkEntry.benchOnly)(name)
+      val fn = SparkEntry.queries(name)
       graft.Bench.force(fn(spark, sfDir)) // warmup
       System.gc() // same convention as Bench: don't bill prior garbage
       val runs = (1 to 3).map { _ =>

@@ -64,19 +64,6 @@ class CurationSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("xxhash64 substring-dedup spelling matches the string-keyed gated spelling") {
-    val dir = docsDir(Seq(
-      (1L, (1 to 30).map(i => s"t$i").mkString(" "), "s1", 1L),
-      (2L, (5 to 40).map(i => s"t$i").mkString(" "), "s1", 1L),
-      (3L, (1 to 25).map(i => s"u$i").mkString(" "), "s2", 1L)))
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val str = Curation.substringDupStats(docs).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val hsh = Curation.substringDupStats(docs, hashGrams = true).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(str == hsh)
-  }
-
   test("url filter stack: blocklist precedes quality; 200-char floor is strict") {
     val dir = docsDir(Seq(
       (0L, "x", "src3", 500L),  // doc_id%4=0 -> .com; blocklisted domain wins over length
@@ -143,14 +130,6 @@ class CurationSpec extends AnyFunSuite {
     val got = Curation.qChunkDedup(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set(("first", 2L, 2L), ("second", 2L, 0L)))
-  }
-
-  test("xxhash64 chunk-dedup spelling matches the string-keyed oracle spelling") {
-    val dir = "/root/testdata/sf0.001"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows(Curation.chunkDedupXx(spark, dir)) ==
-      rows(Curation.qChunkDedup(spark, dir)))
   }
 
   test("q114's three spellings agree on a guard-passing corpus") {

@@ -49,32 +49,6 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs((21L, 201L)) == 1.0)
   }
 
-  test("x49 parity: xxhash64-shingle jaccard matches the raw-string spelling exactly") {
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_a", "doc_b", "common", "jaccard").collect()
-        .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3)))).toMap
-    val raw = key(TextOps.jaccardPairs(docs))
-    val hashed = key(TextOps.jaccardPairs(docs, hashShingles = true))
-    assert(hashed == raw) // same pairs, same common counts, same jaccard
-  }
-
-  test("x49 end-to-end parity: the hashed-shingle top-pairs twin matches gated q49") {
-    // r20 (VERDICT r19 #5): x49 rides q49's content-layer core with
-    // xxhash64 shingles — the swap changes shingle VALUES but not
-    // per-content distinct counts, document frequencies, the hot set, or
-    // any pair count (modulo ~1/2⁶⁴ collisions), so the full query —
-    // threshold collect, expansion, deterministic (jaccard, doc_a,
-    // doc_b) top-20 — must be row-identical on the real sf0.001 corpus.
-    val dir = "/root/testdata/sf0.001"
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSeq
-    val gated = rows(TextOps.jaccardTopPairs(spark, dir, hashShingles = false))
-    val twin = rows(TextOps.jaccardTopPairs(spark, dir, hashShingles = true))
-    try assert(twin == gated)
-    finally spark.catalog.clearCache() // contentLayer persists per call
-  }
-
   test("jaccard df cap drops planted hot shingles; denominators use the filtered universe") {
     import spark.implicits._
     // Every doc opens with the same 5 tokens → 3 shingles with df = 10
@@ -111,9 +85,30 @@ class DedupSpec extends AnyFunSuite {
 
   test("MinHash signature agreement estimates Jaccard for exact dups") {
     val sigs = TextOps.minhashSignatures(docs)
-    val s20 = sigs.where(col("doc_id") === 20).select("signature").collect().head.getSeq[Long](0)
-    val s200 = sigs.where(col("doc_id") === 200).select("signature").collect().head.getSeq[Long](0)
-    assert(s20 == s200) // identical text → identical minhash signature
+    // identical text → identical minhash signature AND band keys
+    def sigAndBands(id: Long) = sigs.where(col("doc_id") === id)
+      .drop("doc_id").collect().head.toSeq
+    assert(sigAndBands(20L) == sigAndBands(200L))
+    assert(sigAndBands(21L) == sigAndBands(201L))
+  }
+
+  test("q56 content-layer candidates equal the per-doc md5 banded self-join") {
+    // band keys are content functions, so expanding the content-level
+    // pairs must emit exactly the per-doc candidate set
+    val dir = java.nio.file.Files.createTempDirectory("graft_q56").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      val shipped = pairs(TextOps.qMinhashCandidatePairs(spark, dir))
+      val perDoc = pairs(TextOps.minhashCandidates(TextOps.qMinhashBands(spark, dir)))
+      assert(shipped == perDoc,
+        s"only-shipped=${(shipped -- perDoc).take(5)} only-perdoc=${(perDoc -- shipped).take(5)}")
+      assert(plantedPairs.count(shipped.contains) >= 8,
+        s"q56 recalled only ${plantedPairs.count(shipped.contains)}/10 planted pairs")
+      // exact dups share every band in any hash family
+      assert(shipped.contains((20L, 200L)) && shipped.contains((21L, 201L)))
+    } finally spark.catalog.clearCache()
   }
 
   test("SimHash: identical text → identical hash; near-dup → small hamming; pairs mined via bands") {

@@ -29,35 +29,6 @@ class QuantileSpec extends AnyFunSuite {
     }
   }
 
-  test("exactQuantilesBySort bit-matches builtin percentile on lineitem") {
-    val l = Tables.load(spark, dir, "lineitem")
-    val probs = Seq(0.01, 0.25, 0.5, 0.75, 0.99)
-    val got = Analytics.exactQuantilesBySort(l, "l_extendedprice", probs)
-      .collect().head.toSeq.map(_.asInstanceOf[Double])
-    val want = l.agg(expr(
-      s"percentile(l_extendedprice, array(${probs.mkString(", ")}))").as("qs"))
-      .select(expr("qs")).collect().head.getSeq[Double](0)
-    probs.indices.foreach { i =>
-      assert(java.lang.Double.doubleToLongBits(got(i)) ==
-        java.lang.Double.doubleToLongBits(want(i)),
-        s"p=${probs(i)}: got ${got(i)}, want ${want(i)}")
-    }
-  }
-
-  test("exactQuantilesBySort: duplicates, nulls, empty input") {
-    import spark.implicits._
-    val df = Seq(Some(1.0), Some(1.0), Some(2.0), None, Some(10.0), Some(100.0))
-      .toDF("x")
-    val q = Analytics.exactQuantilesBySort(df, "x", Seq(0.25, 0.5, 1.0))
-      .collect().head
-    assert(q.getDouble(0) == 1.0)
-    assert(q.getDouble(1) == 2.0)
-    assert(q.getDouble(2) == 100.0)
-    val empty = Analytics.exactQuantilesBySort(
-      df.where(col("x") > 1000), "x", Seq(0.5)).collect().head
-    assert(empty.isNullAt(0))
-  }
-
   test("exactQuantiles handles duplicates, nulls, and exact-rank positions") {
     import spark.implicits._
     // 5 non-null values: p=0.5 lands exactly on a rank (no interpolation);

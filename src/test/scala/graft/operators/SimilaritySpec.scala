@@ -44,6 +44,15 @@ class SimilaritySpec extends AnyFunSuite {
     assert(cands.size < allPairs / 2, s"LSH pruned nothing: ${cands.size} candidates")
   }
 
+  test("q53 portable LSH banding recovers planted near-identical vectors") {
+    val cands = Similarity.bandedPairs(Similarity.portableSignBuckets(spark, vecs, dim))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val recalled = plantedPairs.count(cands.contains)
+    assert(recalled >= 6, s"portable LSH recalled only $recalled/10 planted near-dup pairs")
+    val allPairs = 110L * 109 / 2
+    assert(cands.size < allPairs / 2, s"portable LSH pruned nothing: ${cands.size} candidates")
+  }
+
   test("brute-force cosine on the real table ranks self-cluster neighbors sanely") {
     val top = Similarity.qAnnBruteForce(spark, "/root/testdata/sf0.001")
     val rows = top.collect()

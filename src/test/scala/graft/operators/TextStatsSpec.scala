@@ -136,10 +136,10 @@ class TextStatsSpec extends AnyFunSuite {
     assert((row.getDouble(5), row.getDouble(6)) == ((0.5, 0.5)))
   }
 
-  test("q154 parity: bitmask spelling == set spelling (incl. null source), both hash families") {
+  test("q154 parity: bitmask spelling == set spelling (incl. null source)") {
     import spark.implicits._
-    // SourceOverlapParitySpec (r21): the shipped bitmask spelling and the
-    // >64-source set-spelling fallback must stay row-identical. Corpus
+    // The shipped bitmask spelling and the >64-source set-spelling
+    // fallback must stay row-identical. Corpus
     // plants: a 3-source-shared shingle (pair expansion from one mask), a
     // 2-source shingle, single-source shingles (sizes only), and a
     // null-source doc (dropped from sets by collect_set's null skip, from
@@ -149,13 +149,11 @@ class TextStatsSpec extends AnyFunSuite {
       (3L, "a b c x y z", Option("s3")), (4L, "b c d e", Option("s2")),
       (5L, "q r s t", Option("s1")), (6L, "a b c", Option.empty[String]))
       .toDF("doc_id", "text", "source")
-    for (hash <- Seq(false, true)) {
-      val bitm = TextOps.sourceOverlap(df, hash)
-      val sets = TextOps.sourceOverlapSets(df, hash)
-      assert(bitm.exceptAll(sets).count() == 0 && sets.exceptAll(bitm).count() == 0,
-        s"bitmask vs set spelling diverge (hashShingles=$hash)")
-      assert(bitm.count() == 3) // (s1,s2), (s1,s3), (s2,s3) via "a b c"/"b c d"
-    }
+    val bitm = TextOps.sourceOverlap(df)
+    val sets = TextOps.sourceOverlapSets(df)
+    assert(bitm.exceptAll(sets).count() == 0 && sets.exceptAll(bitm).count() == 0,
+      "bitmask vs set spelling diverge")
+    assert(bitm.count() == 3) // (s1,s2), (s1,s3), (s2,s3) via "a b c"/"b c d"
   }
 
   test("q157 JSD: decomposed form matches the definitional formula; disjoint = ln 2") {
