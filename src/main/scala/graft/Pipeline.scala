@@ -25,8 +25,8 @@ object Pipeline {
     * acceptance style: "paste row counts into the PR", roadmap.md:493).
     */
   def run(spark: SparkSession, rawPath: String, outRoot: String): Map[String, Long] = {
-    // Bronze → Silver. Draws already in silver are always skipped: the
-    // silver writes append, so re-parsing them would duplicate rows.
+    // Bronze → Silver. Draws already in silver sorteos are skipped: sorteos
+    // is written last, so a draw present there has both of its tables.
     val silverSorteos = s"$outRoot/silver/sorteos"
     val silverPremios = s"$outRoot/silver/premios"
     // A raw glob matching no files is "nothing new this run" (the weekly
@@ -41,18 +41,21 @@ object Pipeline {
       }
     val raw = Silver.skipProcessed(raw0, Silver.processedSorteos(spark, silverSorteos))
     // Materialize the increment ONCE and CUT its lineage (eager
-    // localCheckpoint). persist() is not enough: isEmpty caches only the
-    // first partition, so the premios write below could re-execute the
-    // skip-processed anti-join AFTER the sorteos write — which would see
-    // its own output as "already processed" and silently drop the new
-    // draws' premios (write skew). The increment is bounded by arrival
-    // rate, so checkpoint size is small at any corpus scale.
+    // localCheckpoint): the emptiness probe and both silver writes read
+    // the same parsed draws, instead of each rerunning the bronze scan,
+    // the skip-processed anti-join and the parse. persist() is not
+    // enough: isEmpty caches only the first partition. The increment is
+    // bounded by arrival rate, so checkpoint size is small at any corpus
+    // scale.
     val draws = Silver.parseDraws(raw).localCheckpoint()
     try {
       if (!draws.isEmpty) {
+        // premios first, sorteos last: sorteos is the commit marker the
+        // skip reads, and both sinks overwrite per (year, sorteo), so a
+        // crash between the writes is repaired by the next run.
         Log.timed("silver_write", "path" -> silverSorteos) {
-          Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), silverSorteos)
           Writers.writeSilverPartitioned(Silver.premios(draws).toDF(), silverPremios)
+          Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), silverSorteos)
         }
       } else Log.event("silver_write_skipped", "reason" -> "no new draws")
     } finally draws.unpersist()
@@ -63,11 +66,10 @@ object Pipeline {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(silverSorteos))) return Map.empty
 
-    // Gold: read silver back (the canonical source), register the catalog,
-    // rebuild all seven tables with bounded parallelism.
+    // Gold: read silver back (the canonical source) and rebuild all seven
+    // tables with bounded parallelism.
     val sorteos = spark.read.parquet(silverSorteos)
     val premios = spark.read.parquet(silverPremios)
-    Writers.registerSilver(sorteos, premios)
 
     val pool = Executors.newFixedThreadPool(GoldConcurrency)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -75,10 +77,7 @@ object Pipeline {
       val futures = Gold.builders.toSeq.map { case (name, build) =>
         Future {
           Log.timed("gold_build", "table" -> name) {
-            val df = build(sorteos, premios)
-            val partitioned = Set("gold_geo_winnings", "gold_vendor_leaderboard",
-              "gold_time_series").contains(name)
-            Writers.writeGold(df, s"$outRoot/gold/$name", partitioned)
+            Writers.writeGold(build(sorteos, premios), s"$outRoot/gold/$name")
             val rows = spark.read.parquet(s"$outRoot/gold/$name").count()
             Log.event("gold_rows", "table" -> name, "rows" -> rows)
             name -> rows

@@ -49,18 +49,19 @@ object Silver {
   }
 
   /** Already-present silver partition keys (empty frame if silver doesn't
-    * exist yet).
+    * exist yet, or holds no committed file: a write that failed before
+    * its commit leaves the directory behind with no data in it).
     */
   def processedSorteos(spark: SparkSession, silverSorteosPath: String): DataFrame = {
     import spark.implicits._
-    // Only path-not-found means "first run, nothing processed". Any OTHER
-    // read failure (corrupt footer, transient IO) must propagate: silently
-    // returning the empty set would reprocess EVERYTHING into the
-    // append-mode silver writer and duplicate every row.
+    // Only a missing or data-less path means "nothing processed". Any
+    // OTHER read failure (corrupt footer, transient IO) must propagate:
+    // silently returning the empty set would hide the damage and reparse
+    // and rewrite every draw in the raw history.
     try spark.read.parquet(silverSorteosPath).select(col("sorteo")).distinct()
     catch {
       case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" =>
+          if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")(e.getCondition) =>
         Seq.empty[Long].toDF("sorteo")
     }
   }

@@ -11,21 +11,29 @@ object Writers {
 
   /** S5: silver sink, Hive-partitioned by (year, sorteo)
     * (reference transformer.py:253-258 layout
-    * `silver/{ds}/year=Y/sorteo=N/`). Append: each weekly run adds new
-    * partitions; idempotency comes from the incremental scan upstream
-    * ([[graft.parse.Silver.skipProcessed]]).
+    * `silver/{ds}/year=Y/sorteo=N/`). Each weekly run adds new
+    * partitions; idempotent per draw: a rewrite of a draw replaces its
+    * (year, sorteo) directory (the [[overwritePartitions]] body), so
+    * rerunning after a crash between the sorteos and premios writes
+    * cannot duplicate rows.
     */
   def writeSilverPartitioned(df: DataFrame, path: String): Unit =
-    df.write.mode("append").partitionBy("year", "sorteo").parquet(path)
+    overwritePartitions(df, path)
 
   /** S13/S14: gold sink — full idempotent rebuild. `mode("overwrite")`
     * replaces the reference's DROP TABLE + empty-the-prefix + CTAS
-    * choreography in one atomic writer call.
+    * choreography in one atomic writer call. Partitioned by `year` iff
+    * the frame has a `year` column ([[goldPartitioning]]).
     */
-  def writeGold(df: DataFrame, path: String, partitionByYear: Boolean = false): Unit = {
-    val w = df.write.mode("overwrite")
-    (if (partitionByYear) w.partitionBy("year") else w).parquet(path)
-  }
+  def writeGold(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").partitionBy(goldPartitioning(df): _*).parquet(path)
+
+  /** Gold layout follows the frame: the builders that aggregate per year
+    * end with a `year` column (reference CTAS rule, partition column
+    * last) and are partitioned by it; the others are flat.
+    */
+  private def goldPartitioning(df: DataFrame): Seq[String] =
+    if (df.columns.contains("year")) Seq("year") else Nil
 
   /** S14 (incremental): DYNAMIC partition overwrite — replaces only the
     * partitions present in `df`, leaving every other partition untouched.
@@ -90,9 +98,8 @@ object Writers {
     * semantics, sql/gold/README.md:20-29) while keeping the same
     * overwrite-idempotent parquet layout at `path`.
     */
-  def writeGoldTable(df: DataFrame, name: String, path: String,
-      partitionByYear: Boolean = false): Unit =
-    saveAsExternalTable(df, name, path, if (partitionByYear) Seq("year") else Nil)
+  def writeGoldTable(df: DataFrame, name: String, path: String): Unit =
+    saveAsExternalTable(df, name, path, goldPartitioning(df))
 
   /** Small-file compaction: rewrite a parquet directory into
     * ceil(bytes/targetBytes) files. Incremental appends (weekly silver

@@ -426,17 +426,6 @@ class PlanSpec extends AnyFunSuite {
         consuming.map(_.nodeName).mkString(","))
   }
 
-  test("events ts range predicate pushes to the parquet scan (normalized ingest)") {
-    // the one-time ingest normalization must leave `ts` a physical BIGINT
-    // so row-group pruning survives — the property that keeps a 100 TB
-    // event lake time-sliceable (Tables.normalizedEventsPath)
-    val df = graft.Tables.load(spark, dir, "events")
-      .where(org.apache.spark.sql.functions.col("ts") >= 0L)
-    df.count()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("PushedFilters") && p.contains("GreaterThanOrEqual(ts,0)"), p)
-  }
-
   test("no registered query plans a UDF or python-eval node") {
     // Structural codegen guard over the WHOLE surface: Scala UDFs plan as
     // ScalaUDF (opaque to codegen), python paths as BatchEvalPython /

@@ -2,6 +2,9 @@ package graft.parse
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+import org.apache.parquet.hadoop.ParquetOutputCommitter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -81,6 +84,34 @@ class SilverPipelineSpec extends AnyFunSuite {
     assert(counts2 == counts)
   }
 
+  test("a crash between the two silver writes is repaired by the next run") {
+    val glob = s"$rawPath/year=*/sorteo=*/*.txt"
+    val clean = freshDir()
+    Pipeline.run(spark, glob, clean)
+
+    val out = freshDir()
+    val committer = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(committer, classOf[SecondSilverCommitFails].getName)
+    SecondSilverCommitFails.arm(out)
+    try intercept[Exception](Pipeline.run(spark, glob, out))
+    finally {
+      SecondSilverCommitFails.disarm()
+      spark.conf.unset(committer)
+    }
+    def hasRows(t: String): Boolean =
+      scala.util.Try(spark.read.parquet(s"$out/silver/$t").count() > 0).getOrElse(false)
+    assert(Seq("sorteos", "premios").count(hasRows) == 1,
+      "the injected failure must strike between the two silver writes")
+
+    Pipeline.run(spark, glob, out)
+    for (t <- Seq("sorteos", "premios")) {
+      val want = spark.read.parquet(s"$clean/silver/$t")
+      val got = spark.read.parquet(s"$out/silver/$t")
+      assert(got.exceptAll(want).isEmpty, s"silver $t has rows a clean run does not")
+      assert(want.exceptAll(got).isEmpty, s"silver $t lacks rows a clean run has")
+    }
+  }
+
   test("SQL form of every gold query matches the DataFrame builders") {
     val draws = Silver.parseDraws(Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt"))
     val sorteos = Silver.sorteos(draws).toDF()
@@ -132,8 +163,11 @@ class SilverPipelineSpec extends AnyFunSuite {
     val out = freshDir()
     // missing path → first run → empty processed set
     assert(Silver.processedSorteos(spark, s"$out/nope").count() == 0)
+    // a directory an aborted write left without data → nothing processed
+    Files.createDirectory(java.nio.file.Paths.get(s"$out/aborted"))
+    assert(Silver.processedSorteos(spark, s"$out/aborted").count() == 0)
     // corrupt silver (present path, unreadable footer) must throw, never
-    // silently reprocess-everything into the append-mode writer
+    // silently reparse and rewrite every draw
     Files.write(java.nio.file.Paths.get(s"$out/corrupt.parquet"),
       "not a parquet file".getBytes)
     assertThrows[Exception] {
@@ -173,5 +207,36 @@ class SilverPipelineSpec extends AnyFunSuite {
     Writers.writeGold(df1, s"$out/g")
     Writers.writeGold(spark.range(3).toDF("id"), s"$out/g")
     assert(spark.read.parquet(s"$out/g").count() == 3) // replaced, not appended
+  }
+}
+
+/** Parquet committer that fails the job commit of whichever silver table
+  * is written second under the armed output root: the first table
+  * commits, the second's files never reach its directory, as when the
+  * process dies between the two writes. Selected for a session through
+  * `spark.sql.parquet.output.committer.class`; outside the armed root it
+  * is the stock committer.
+  */
+class SecondSilverCommitFails(out: Path, ctx: TaskAttemptContext)
+    extends ParquetOutputCommitter(out, ctx) {
+  override def commitJob(job: JobContext): Unit = {
+    SecondSilverCommitFails.check(out.toString)
+    super.commitJob(job)
+  }
+}
+
+object SecondSilverCommitFails {
+  private var root: Option[String] = None
+  private var first: Option[String] = None
+
+  def arm(outRoot: String): Unit = synchronized { root = Some(outRoot); first = None }
+  def disarm(): Unit = synchronized { root = None }
+
+  private def check(path: String): Unit = synchronized {
+    for (r <- root; t <- Seq("sorteos", "premios").find(t => s"$path/".contains(s"$r/silver/$t/"))) {
+      if (first.exists(_ != t))
+        throw new java.io.IOException(s"injected failure before the silver $t commit")
+      first = Some(t)
+    }
   }
 }

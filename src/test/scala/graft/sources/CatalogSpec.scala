@@ -38,8 +38,7 @@ class CatalogSpec extends AnyFunSuite {
       import s1.implicits._
       val gold = Seq((3046L, "ORDINARIO", 14L, 2024), (3101L, "ORDINARIO", 3L, 2025))
         .toDF("numero_sorteo", "tipo_sorteo", "total_premios", "year")
-      Writers.writeGoldTable(gold, "gold_draw_summary", s"$wh/gold/draw_summary",
-        partitionByYear = true)
+      Writers.writeGoldTable(gold, "gold_draw_summary", s"$wh/gold/draw_summary")
       val silver = Seq((3046L, "A"), (3047L, "B")).toDF("numero_sorteo", "x")
       Writers.registerSilverPersistent(silver, silver, wh)
 
@@ -61,8 +60,7 @@ class CatalogSpec extends AnyFunSuite {
         Seq((3101L, "ORDINARIO", 3L, 2025))
           .toDF("numero_sorteo", "tipo_sorteo", "total_premios", "year")
       }
-      Writers.writeGoldTable(rebuilt, "gold_draw_summary", s"$wh/gold/draw_summary",
-        partitionByYear = true)
+      Writers.writeGoldTable(rebuilt, "gold_draw_summary", s"$wh/gold/draw_summary")
       assert(s2.sql("SELECT COUNT(*) FROM gold_draw_summary").head().getLong(0) == 1L)
     } finally {
       // hand the shared suite session back to later specs

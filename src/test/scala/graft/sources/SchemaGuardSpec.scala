@@ -15,8 +15,9 @@ import graft.{Tables, TestSpark}
   * encoding or column drift fails HERE with the table named, not in
   * whatever operator happens to consume the changed column first.
   * `Tables.load` is the asserted surface because that is the contract
-  * every operator programs against (events arrives ts-normalized to
-  * BIGINT nanos regardless of the on-disk encoding).
+  * every operator programs against: events arrives with `ts` as BIGINT
+  * nanos whatever the on-disk encoding, through `Tables.eventsNanos`,
+  * the one projection batch loads and `Tables.loadStream` share.
   */
 class SchemaGuardSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
