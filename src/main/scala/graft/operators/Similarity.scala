@@ -104,46 +104,9 @@ object Similarity {
 
   private val Planes = 16 // 2 bands x 8 hyperplanes
 
-  /** Deterministic pseudo-random hyperplanes as ONE nested array —
-    * `pw[p][d]` = weight of plane p, dimension d, derived from xxhash64
-    * (reproducible across runs and cluster sizes with no driver-side RNG
-    * state). Built in a 1-row frame so the Planes×dim hash evaluations
-    * happen once, then broadcast: the planes are constants, and constants
-    * ride along rows instead of forcing a (vec, plane, dim) explode-join.
+  /** LSH candidate pairs: vectors that share ≥1 sign-band bucket
+    * (`band0`/`band1` of [[portableSignBuckets]]), each pair once.
     */
-  def hyperplanesNested(s: SparkSession, dim: Int): DataFrame =
-    s.range(1).select(expr(
-      s"""transform(sequence(0, ${Planes - 1}), p ->
-         |  transform(sequence(0, ${dim - 1}), d ->
-         |    CAST(xxhash64('plane', p, d) % 1000001 AS DOUBLE) / 1000000.0))"""
-        .stripMargin).as("pw"))
-
-  /** Random-hyperplane sign buckets: 2 band keys of 8 sign bits per vector.
-    * Rewritten round 6 to be fully ROW-LOCAL: each vector zip_with-dots
-    * the broadcast nested plane weights, takes signs, and folds its own
-    * band keys — no explode, no join fan-out, ZERO shuffles (the former
-    * shape shuffled a (vec × plane × dim) exploded frame through two
-    * aggregates). Work is the same Planes×dim multiplies per vector;
-    * the data never leaves its row.
-    */
-  def signBuckets(s: SparkSession, e: DataFrame, dim: Int): DataFrame =
-    e.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(hyperplanesNested(s, dim)))
-      .withColumn("bits", expr(
-        """transform(pw, warr -> CASE WHEN
-          |  aggregate(zip_with(embedding, warr, (v, w) -> CAST(v AS DOUBLE) * w),
-          |    CAST(0 AS DOUBLE), (acc, x) -> acc + x) > 0
-          |  THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin))
-      .select(col("vec_id"),
-        expr("aggregate(sequence(0, 7), CAST(0 AS BIGINT), (acc, i) -> acc + shiftleft(bits[i], i))").as("band0"),
-        expr("aggregate(sequence(8, 15), CAST(0 AS BIGINT), (acc, i) -> acc + shiftleft(bits[i], i - 8))").as("band1"))
-
-  /** LSH ANN: candidates share ≥1 sign-band bucket; exact cosine re-rank of
-    * candidates only. Returns the top-k most similar candidate pairs.
-    */
-  def lshCandidatePairs(s: SparkSession, e: DataFrame): DataFrame =
-    bandedPairs(signBuckets(s, e, 64))
-
   private[operators] def bandedPairs(buckets: DataFrame): DataFrame = {
     // persisted: both self-join sides read it — without it each side
     // re-runs the full signature computation (the 16×dim interpreted-HOF
@@ -157,7 +120,8 @@ object Similarity {
     val a = banded.as("a")
     // shuffle_hash, never broadcast: bucket self-joins partition by the
     // bucket key — a size-based broadcast would pin the quadratic pair
-    // expansion to the probe side's partitioning (TextOps r15 note)
+    // expansion to the probe side's partitioning (see
+    // TextOps.minhashCandidates)
     val b = banded.as("b").hint("shuffle_hash")
     a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.vec_id") < col("b.vec_id"))
@@ -165,14 +129,15 @@ object Similarity {
       .distinct()
   }
 
-  /** Oracle-portable hyperplanes as the same nested-array shape: w(p, d)
-    * is an integer in [−500000, 500000] derived from the first 12 hex
-    * digits of md5("plane:p:d") — arithmetic DuckDB evaluates identically,
-    * unlike xxhash64 ([[hyperplanesNested]], which stays the scale
-    * default: one codegen'd hash vs an md5 + hex parse). `conv(hex, 16,
-    * 10)` computes the identical value the q53 oracle SQL spells as a
-    * 12-digit positional sum. LSH only needs fixed pseudo-random planes;
-    * the hash family is interchangeable by construction.
+  /** Deterministic pseudo-random hyperplanes as ONE nested array:
+    * `pw[p][d]` = weight of plane p, dimension d, an integer in
+    * [−500000, 500000] derived from the first 12 hex digits of
+    * md5("plane:p:d") — arithmetic DuckDB evaluates identically. `conv(hex,
+    * 16, 10)` computes the identical value the q53 oracle SQL spells as a
+    * 12-digit positional sum. Built in a 1-row frame so the Planes×dim
+    * hash evaluations happen once, then broadcast: the planes are
+    * constants, and constants ride along rows instead of forcing a
+    * (vec, plane, dim) explode-join.
     */
   def portablePlanesNested(s: SparkSession, dim: Int): DataFrame =
     s.range(1).select(expr(
@@ -199,13 +164,15 @@ object Similarity {
           |  THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END)""".stripMargin))
       .select(col("vec_id"), col("bits"))
 
-  /** Sign buckets over integer-quantized projections: vector components
-    * round to millionths (exact in both engines), plane weights are
-    * integers, so each projection is an exact int64 sum — its SIGN (the
-    * LSH bit) is engine-independent, making the whole bucketing
-    * oracle-checkable with zero float-order sensitivity. Same round-6
-    * row-local shape as [[signBuckets]]: zero shuffles before the
-    * candidate join.
+  /** Random-hyperplane sign buckets, 2 band keys of 8 sign bits per
+    * vector, over integer-quantized projections: vector components round
+    * to millionths (exact in both engines), plane weights are integers, so
+    * each projection is an exact int64 sum — its SIGN (the LSH bit) is
+    * engine-independent, making the whole bucketing oracle-checkable with
+    * zero float-order sensitivity. Fully ROW-LOCAL: each vector
+    * zip_with-dots the broadcast nested plane weights, takes signs, and
+    * folds its own band keys — no explode, no join fan-out, zero shuffles
+    * before the candidate join.
     */
   def portableSignBuckets(s: SparkSession, e: DataFrame, dim: Int): DataFrame =
     portableSignBits(s, e, dim)

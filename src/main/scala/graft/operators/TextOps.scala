@@ -219,46 +219,19 @@ object TextOps {
   // Non-SQL-expressible ops (rows-only driver check + ScalaTest oracles)
   // --------------------------------------------------------------------
 
-  /** 64-bit simhash per document: per-token xxhash64, each bit votes ±1,
-    * sign of the vote sum becomes the bit. Entirely explode + one
-    * hash-aggregate of 64 codegen'd SUMs — shuffle key is doc_id only.
-    */
-  def simhash(docs: DataFrame): DataFrame = {
-    // repartition(doc_id) at the TEXT level (r17b, the q143 lesson): the
-    // per-token hash + 64 vote partials otherwise run in the scan stage,
-    // whose parallelism is the input file layout (one task on a
-    // single-row-group file). Hoisting the doc_id exchange below the scan
-    // keeps total exchanges at ONE — project/generate preserve the
-    // hash partitioning, so the groupBy adds none — while the exchange
-    // carries raw text (comparable bytes to the per-doc partials it
-    // replaces) and the hash work runs at cluster parallelism on any
-    // layout.
-    val tok = byDoc(docs)
-      .select(col("doc_id"), explode(toks(col("text"))).as("token"))
-      .where(col("token") =!= "")
-      .withColumn("h", xxhash64(col("token")))
-    val votes = (0 until 64).map { b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"v$b")
-    }
-    val assembled = (0 until 64).map { b =>
-      when(col(s"v$b") > 0, lit(1L << b)).otherwise(0L)
-    }.reduce(_ + _) // distinct powers of two: addition == bitwise OR
-    tok.groupBy(col("doc_id")).agg(votes.head, votes.tail: _*)
-      .select(col("doc_id"), assembled.as("simhash"))
-  }
-
-  /** Portable simhash for the driver oracle: identical semantics to
-    * [[simhash]] but the per-token 64 bits come from the md5 hex digits
-    * (md5 is the one hash both Spark and DuckDB compute identically), and
-    * the output is the four 16-bit sub-bands as scalar ints — the exact
-    * blocking keys the near-dup join uses, in an oracle-comparable shape.
-    * [[simhash]] is the xxhash64 spelling; the hash family is
-    * interchangeable by construction — simhash only needs uniform
-    * independent bits.
+  /** 64-bit simhash per document as four 16-bit band keys: each token's
+    * 64 bits come from its md5 hex digits (md5 is the one hash Spark and
+    * DuckDB compute identically), each bit votes ±1, and the sign of the
+    * vote sum becomes the bit. The output is the four sub-bands as scalar
+    * ints, the exact blocking keys the near-dup join uses, in an
+    * oracle-comparable shape.
     */
   def qSimhashBands(s: SparkSession, dir: String): DataFrame =
-    // repartition(doc_id): layout-independent parallelism for the
-    // 64-bit-vote build, one exchange total — see [[simhash]]
+    // repartition(doc_id) at the TEXT level: the per-token hash and the 64
+    // vote partials run after the one doc_id exchange, at cluster
+    // parallelism, not in the scan stage whose parallelism is the input
+    // file layout; project and generate keep the hash partitioning, so the
+    // groupBy adds no second exchange
     simhashBandsOf(byDoc(t(s, dir, "documents")))
 
   /** Portable simhash band build over a caller-partitioned frame (r19):
@@ -308,50 +281,6 @@ object TextOps {
        |SELECT doc_id,
        |  $bands
        |FROM v""".stripMargin
-  }
-
-  /** SimHash near-dup pairs: block on maxHamming+1 contiguous sub-bands of
-    * the 64-bit hash — by pigeonhole, a pair within hamming ≤ maxHamming
-    * differs in at most maxHamming bands and therefore agrees exactly on at
-    * least one of the maxHamming+1 band keys. (With k bands the guarantee
-    * is only hamming ≤ k−1: a hamming-k pair can differ once per band.)
-    * Candidates are then verified with bit_count(xor). Banded blocking,
-    * never all-pairs.
-    */
-  def simhashNearDups(sims: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 64), got $maxHamming")
-    val nBands = maxHamming + 1
-    val bounds = (0 to nBands).map(b => b * 64 / nBands)
-    val bandKeys = (0 until nBands).map { b =>
-      val lo = bounds(b)
-      // JVM shift count is mod 64: width 64 (maxHamming=0) needs -1L, not
-      // (1L << 64) - 1 == 0, which would degenerate to an all-pairs join.
-      val width = bounds(b + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("simhash"), lo).bitwiseAND(mask).as("key"))
-    }
-    // persisted before the self-join (q56 convention): otherwise the
-    // caller's sims subtree — typically a corpus-sized 64-vote aggregate —
-    // evaluates once per join side. Session owner clearCache releases it.
-    val banded = sims
-      .select(col("doc_id"), col("simhash"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"), col("bk.band"), col("bk.key"))
-      .persistTrackedFilled() // warm-gated eager fill — see minhashCandidates
-    val a = banded.as("a")
-    // shuffle_hash, never broadcast (r15): a banded self-join's OUTPUT is
-    // quadratic in bucket df, so the plan must partition by the bucket key
-    // — a size-based broadcast (the banded frame can look tiny to the
-    // planner) would glue the pair expansion AND its aggregate to the
-    // probe side's partitioning: one task on a single-split corpus
-    val b = banded.as("b").hint("shuffle_hash")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
   }
 
   private val MinhashK = 32
@@ -563,42 +492,14 @@ object TextOps {
         .select(col("ids")),
       Nil)
 
-  /** MinHash signatures (k=32) over word-3-gram shingles, plus the 8 banded
-    * LSH keys. One explode + one hash-aggregate of 32 codegen'd MINs.
-    *
-    * r12: the shingle string is hashed ONCE (xxhash64) and the 32
-    * exchangeable families are derived from that 64-bit value by
-    * re-hashing it with the family index (Broder's construction —
-    * minhash only needs exchangeable uniform families, not independent
-    * string hashes). 32 variable-length string hashes per posting become
-    * one string hash + 32 fixed-width long hashes; the map-side partial
-    * aggregate and the doc_id exchange are unchanged. DedupSpec pins its
-    * decisions (identical content collides, planted near-dups recovered).
-    */
-  def minhashSignatures(docs: DataFrame): DataFrame = {
-    // repartition(doc_id) at the text level: the 32 min-hash families
-    // otherwise evaluate in the scan stage (file-layout parallelism);
-    // one exchange total — see [[simhash]]
-    val sh = shinglesDistinct(byDoc(docs))
-      .select(col("doc_id"), xxhash64(col("shingle")).as("h"))
-    val mins = (0 until MinhashK).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i"))
-    val sig = sh.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-    val bandCols = (0 until MinhashBands).map { b =>
-      xxhash64((b * 4 until b * 4 + 4).map(i => col(s"m$i")): _*).as(s"band$b")
-    }
-    sig.select(col("doc_id") +: array((0 until MinhashK).map(i => col(s"m$i")): _*).as("signature") +: bandCols: _*)
-  }
-
-  /** Portable MinHash for the driver oracle: same banded-LSH shape as
-    * [[minhashSignatures]] but each of the 32 hash families is the
-    * lexicographic MIN over md5 hex strings (salted with the family index),
-    * and the output is doc_id + the 8 band keys (md5 of 4 concatenated
-    * mins) — scalar string columns only, no array in the result, and every
-    * step is evaluable identically by DuckDB. Hex strings compare bytewise
-    * identically under Spark's UTF8 ordering and DuckDB's default VARCHAR
-    * collation, so the MINs agree bit-for-bit. [[minhashSignatures]] is
-    * the xxhash64 spelling; minhash only needs exchangeable uniform hash
-    * families.
+  /** MinHash (k=32) over word-3-gram shingles as 8 banded LSH keys: each
+    * of the 32 hash families is the lexicographic MIN over md5 hex strings
+    * (salted with the family index), and each band key is the md5 of 4
+    * concatenated mins. The output is doc_id + the 8 band keys, scalar
+    * string columns only, and every step is evaluable identically by
+    * DuckDB: hex strings compare bytewise identically under Spark's UTF8
+    * ordering and DuckDB's default VARCHAR collation, so the MINs agree
+    * bit-for-bit.
     */
   def qMinhashBands(s: SparkSession, dir: String): DataFrame = {
     // r18 content layer: the 32 md5 families run once per DISTINCT TEXT
@@ -669,8 +570,11 @@ object TextOps {
     // sides would race on a cold cache and re-run the corpus-sized
     // signature aggregate per side; warm builds skip the fill job
     val a = banded.as("a")
-    // shuffle_hash: see qSimhashNearDupPairsGeneric — candidate self-joins
-    // partition by bucket key, never broadcast
+    // shuffle_hash, never broadcast: a banded self-join's OUTPUT is
+    // quadratic in bucket df, so the plan must partition by the bucket key;
+    // a size-based broadcast (the banded frame can look tiny to the
+    // planner) would glue the pair expansion to the probe side's
+    // partitioning, one task on a single-split corpus
     val b = banded.as("b").hint("shuffle_hash")
     a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.doc_id") < col("b.doc_id"))
@@ -1203,17 +1107,9 @@ object TextOps {
        |GROUP BY 1, 2""".stripMargin
   }
 
-  /** Connected components over an undirected edge list by iterated
-    * min-label propagation: every node starts as its own label; each round
-    * takes the min of its own and its neighbors' labels; fixpoint = each
-    * node carries the min node id of its component (a unique, deterministic
-    * labeling). Rounds are bounded by the component diameter — near-dup
-    * graphs are unions of tight cliques-ish clusters, so a handful. Each
-    * round is one shuffle (join + min-agg); localCheckpoint cuts the
-    * otherwise-exponential lineage, and the convergence check is an exact
-    * changed-count, not a guess. For adversarial long-path graphs at 100 TB
-    * the same loop carries with large-star/small-star rewiring
-    * (Kiveris et al., SoCC'14) — unnecessary for dedup clusters.
+  /** Connected components over an undirected edge list: every node is
+    * labeled with the min node id of its component (a unique,
+    * deterministic labeling; isolated nodes label themselves).
     *
     * Small-graph fast path: after banded pair mining the near-dup edge
     * list is metadata-sized relative to the corpus (pairs ≪ docs —
@@ -1223,20 +1119,37 @@ object TextOps {
     * driver union-find over the already-persisted edge list — the same
     * budget-bounded-collect convention as the q18/q177 histogram
     * selection. Union-by-min-root makes every set's root its minimum
-    * member, so the labeling is bit-identical to the propagation
-    * fixpoint. Graphs above the budget (or with non-integral node ids)
-    * run the distributed loop unchanged — the switch is by measured
-    * size, exactly the call AQE would make.
+    * member, so the labeling is the min-id labeling. Graphs above the
+    * budget (or with non-integral node ids) run the distributed
+    * algorithm — the switch is by measured size, exactly the call AQE
+    * would make.
+    *
+    * Distributed algorithm: alternating LARGE-STAR / SMALL-STAR rewiring
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14), which converges in O(log n) rounds on any graph shape,
+    * long chains and deep trees included:
+    *  - large-star, per node u over its full neighborhood: attach every
+    *    STRICTLY LARGER neighbor to m = min(Γ(u) ∪ {u});
+    *  - small-star, per node u over its smaller-or-equal neighbors:
+    *    attach them and u itself to m.
+    *
+    * Both steps are one groupBy-min + one join each — no neighborhood
+    * materialized as an array anywhere, so a 10⁹-degree hub never builds a
+    * driver- or row-sized list (the skew lands in a hash aggregate, which
+    * partial-aggregates map-side). Fixpoint = the edge set is a union of
+    * stars centered at component minima, detected by an order-independent
+    * (count, xor-of-hashes) signature instead of a second join. Throws
+    * IllegalStateException if `maxIters` rounds reach no fixpoint: a
+    * partial labeling is never returned as if it were final.
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIters: Int = 20, driverBudget: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, ShortType, IntegerType, LongType}
-    // Symmetrize with ONE row-local explode, not a two-branch union (r20):
-    // a union's branches are separate consumers of the edge frame, so an
-    // uncached (often expensive — q85 hands the banded pair miner straight
-    // in) edge pipeline executed TWICE per run; the exploded array emits
-    // the same (a,b)/(b,a) multiset from a single pass. Measured on q85:
-    // the four banded-self-join map stages in the timed run became two.
+    // Symmetrize with ONE row-local explode, not a two-branch union: a
+    // union's branches are separate consumers of the edge frame, so an
+    // uncached edge pipeline (q85 hands the banded pair miner straight in)
+    // would run twice; the exploded array emits the same (a,b)/(b,a)
+    // multiset from a single pass.
     val sym = edges.select(explode(array(
         struct(col("a").as("a"), col("b").as("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
@@ -1251,8 +1164,8 @@ object TextOps {
     if (integral && nEdges <= driverBudget) {
       val spark = nodes.sparkSession
       import spark.implicits._
-      // collect the canonical half only — sym carries both directions for
-      // the distributed loop, but union-find needs each edge once
+      // collect the canonical half only: sym carries both directions, but
+      // union-find needs each edge once
       val pairs = sym.where(col("a") < col("b"))
         .select(col("a").cast("long"), col("b").cast("long"))
         .as[(Long, Long)].collect()
@@ -1278,61 +1191,7 @@ object TextOps {
         .join(broadcast(labelDf), Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
     }
-    // Iterate ONLY over nodes that touch an edge (sym is symmetric, so the
-    // a-side covers them all): isolated nodes can never change label, and
-    // in a dedup graph they are the overwhelming majority — at 100 TB the
-    // per-round joins run on the near-dup subgraph, not the corpus. The
-    // full node set rejoins once at the end as label = own id.
-    var labels = sym.select(col("a").as("node")).distinct()
-      .select(col("node"), col("node").as("label")).localCheckpoint()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIters) {
-      val nbrMin = sym.join(labels, col("b") === col("node"))
-        .groupBy(col("a")).agg(min(col("label")).as("nbr_label"))
-      // prev rides along in the same projection, so the convergence check
-      // is a filter-count on the checkpointed frame — no extra join; the
-      // checkpoint is lazy so that count is the round's ONLY job
-      val next = labels.join(nbrMin, col("node") === col("a"), "left")
-        .select(col("node"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"),
-          col("label").as("prev"))
-        .localCheckpoint(false)
-      changed = next.where(col("label") =!= col("prev")).count()
-      labels = next.select(col("node"), col("label"))
-      i += 1
-    }
-    sym.unpersist()
-    nodes.select(col("node"))
-      .join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-  }
-
-  /** Connected components by alternating LARGE-STAR / SMALL-STAR rewiring
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14): converges in O(log n) rounds on ANY graph shape, where
-    * [[connectedComponents]]' min-label propagation needs diameter rounds.
-    * Same signature, same unique min-id labeling — the drop-in variant for
-    * adversarial topologies (long chains, deep trees); for near-dup
-    * graphs (tight low-diameter clusters) plain propagation does fewer,
-    * cheaper shuffles per round and stays the q85 default.
-    *
-    *  - large-star, per node u over its full neighborhood: attach every
-    *    STRICTLY LARGER neighbor to m = min(Γ(u) ∪ {u});
-    *  - small-star, per node u over its smaller-or-equal neighbors:
-    *    attach them and u itself to m.
-    *
-    * Both steps are one groupBy-min + one join each — no neighborhood
-    * materialized as an array anywhere, so a 10⁹-degree hub never builds a
-    * driver- or row-sized list (the skew lands in a hash aggregate, which
-    * partial-aggregates map-side). Fixpoint = the edge set is a union of
-    * stars centered at component minima, detected by an order-independent
-    * (count, xor-of-hashes) signature instead of a second join. Throws if
-    * maxIters rounds don't converge — a silent wrong labeling is worse
-    * than a loud bound.
-    */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-      maxIters: Int = 25): DataFrame = {
+    // canonical (u > v) orientation of the symmetric edge set, no self-loops
     def canon(e: DataFrame) = e.where(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
@@ -1341,9 +1200,12 @@ object TextOps {
         expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
-    var e = canon(edges).localCheckpoint()
+    // only nodes that touch an edge take part: isolated nodes keep their
+    // own id, and in a dedup graph they are the overwhelming majority
+    var e = canon(sym).localCheckpoint()
+    sym.unpersist()
     var sig = signature(e)
-    var done = e.isEmpty
+    var done = sig._1 == 0L
     var i = 0
     while (!done && i < maxIters) {
       // large-star over the SYMMETRIC neighborhood of u
@@ -1369,13 +1231,13 @@ object TextOps {
     }
     if (!done)
       throw new IllegalStateException(
-        s"connectedComponentsStar: no fixpoint after $maxIters rounds")
+        s"connectedComponents: no fixpoint after $maxIters rounds")
     // fixpoint: every edge is (node, component-min); centers never appear
     // on the u side (nothing is smaller than the min), so they self-label
-    val lab = e.groupBy(col("u")).agg(min(col("v")).as("label"))
+    val labels = e.groupBy(col("u")).agg(min(col("v")).as("label"))
       .select(col("u").as("node"), col("label"))
     nodes.select(col("node"))
-      .join(lab, Seq("node"), "left")
+      .join(labels, Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))
   }
 
@@ -2846,7 +2708,7 @@ object TextOps {
     // file — 39 s of single-threaded hashing at 10×, BASELINE.md) to the
     // post-shuffle side, exchanging raw text instead of shingles. Same
     // exchange count, fewer bytes, order-insensitive MIN → values
-    // unchanged. See [[simhash]].
+    // unchanged. See [[qSimhashBands]].
     // r18 content-dedup layer (found by the 100× DUPLICATION audit, the
     // probe class VERDICT r17 #1 mandated): the r17b pair join attached
     // each side's payload (32-hash signature + shingle array, ~3.5 KB)

@@ -16,10 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object Docs {
 
-  // K salted-xxhash64 families. NOT the same family as the batch
-  // TextOps.minhashSignatures since r12 (batch derives families by
-  // re-hashing one per-shingle hash, Broder-style); streaming keys are
-  // never compared against batch signature values, only to each other.
+  // K salted-xxhash64 families. NOT the batch family (TextOps.qMinhashBands
+  // takes md5 mins so DuckDB can re-derive them); streaming keys are never
+  // compared against batch signature values, only to each other.
   private val K = 32
 
   /** Append a row-local MinHash signature key over word-3-gram shingles:

@@ -37,6 +37,13 @@ class DedupSpec extends AnyFunSuite {
 
   private val plantedPairs = (0 until 10).map(i => (i.toLong, 100L + i)).toSet
 
+  /** `docs` written as `documents.parquet`, for the queries that read a dir. */
+  private lazy val docsDir = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("exact Jaccard ground truth: planted pairs score ≈ 0.9, exact dups 1.0") {
     val pairs = TextOps.jaccardPairs(docs)
       .select("doc_a", "doc_b", "jaccard")
@@ -73,35 +80,23 @@ class DedupSpec extends AnyFunSuite {
     assert(TextOps.jaccardPairs(hotDocs, maxDfFrac = 1.0).count() == 45)
   }
 
-  test("MinHash LSH candidates recover planted near-dups (recall ≥ 0.8)") {
-    val sigs = TextOps.minhashSignatures(docs)
-    val cands = TextOps.minhashCandidates(sigs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recalled = plantedPairs.count(cands.contains)
-    assert(recalled >= 8, s"LSH recalled only $recalled/10 planted pairs")
-    // exact dups are certain candidates (identical signatures)
-    assert(cands.contains((20L, 200L)) && cands.contains((21L, 201L)))
-  }
-
   test("MinHash signature agreement estimates Jaccard for exact dups") {
-    val sigs = TextOps.minhashSignatures(docs)
-    // identical text → identical minhash signature AND band keys
-    def sigAndBands(id: Long) = sigs.where(col("doc_id") === id)
+    // identical text → identical minhash signature → all 8 band keys agree
+    val bands = TextOps.qMinhashBands(spark, docsDir)
+    def bandKeys(id: Long) = bands.where(col("doc_id") === id)
       .drop("doc_id").collect().head.toSeq
-    assert(sigAndBands(20L) == sigAndBands(200L))
-    assert(sigAndBands(21L) == sigAndBands(201L))
+    assert(bandKeys(20L) == bandKeys(200L))
+    assert(bandKeys(21L) == bandKeys(201L))
   }
 
   test("q56 content-layer candidates equal the per-doc md5 banded self-join") {
     // band keys are content functions, so expanding the content-level
     // pairs must emit exactly the per-doc candidate set
-    val dir = java.nio.file.Files.createTempDirectory("graft_q56").toString
-    docs.write.parquet(s"$dir/documents.parquet")
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     try {
-      val shipped = pairs(TextOps.qMinhashCandidatePairs(spark, dir))
-      val perDoc = pairs(TextOps.minhashCandidates(TextOps.qMinhashBands(spark, dir)))
+      val shipped = pairs(TextOps.qMinhashCandidatePairs(spark, docsDir))
+      val perDoc = pairs(TextOps.minhashCandidates(TextOps.qMinhashBands(spark, docsDir)))
       assert(shipped == perDoc,
         s"only-shipped=${(shipped -- perDoc).take(5)} only-perdoc=${(perDoc -- shipped).take(5)}")
       assert(plantedPairs.count(shipped.contains) >= 8,
@@ -112,16 +107,25 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("SimHash: identical text → identical hash; near-dup → small hamming; pairs mined via bands") {
-    val sims = TextOps.simhash(docs)
-    val byId = sims.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(byId(20L) == byId(200L))
-    val planted = plantedPairs.map { case (a, b) =>
-      java.lang.Long.bitCount(byId(a) ^ byId(b))
-    }
+    val bands = TextOps.qSimhashBands(spark, docsDir).collect()
+      .map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
+    // the four 16-bit bands partition the 64 bits: summed bit_count(xor)
+    // is the full hamming distance
+    def hamming(a: Long, b: Long) = bands(a).zip(bands(b))
+      .map { case (x, y) => Integer.bitCount(x ^ y) }.sum
+    assert(bands(20L) == bands(200L) && bands(21L) == bands(201L))
+    val planted = plantedPairs.toSeq.map { case (a, b) => hamming(a, b) }
     assert(planted.forall(_ <= 12), s"planted hamming distances too large: $planted")
-    val found = TextOps.simhashNearDups(sims, maxHamming = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(plantedPairs.count(found.contains) >= 8)
+    // q55 blocks on the 4 bands and keeps hamming ≤ 3: by pigeonhole the
+    // banding misses no such pair, so its output is the brute-force set
+    val ids = bands.keys.toSeq.sorted
+    val expected = (for (a <- ids; b <- ids if a < b && hamming(a, b) <= 3)
+      yield (a, b, hamming(a, b))).toSet
+    try {
+      val found = graft.SparkEntry.queries("q55_simhash_near_dups")(spark, docsDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(found == expected && expected.contains((20L, 200L, 0)))
+    } finally spark.catalog.clearCache()
   }
 
   test("exact dedup collapses identical content, keeps min doc_id") {
@@ -158,7 +162,7 @@ class DedupSpec extends AnyFunSuite {
     assert(got == Set(1L)) // one component, min label everywhere
   }
 
-  test("connectedComponentsStar: 1000-node path converges in O(log n) rounds") {
+  test("connectedComponents: 1000-node path converges in O(log n) rounds") {
     import spark.implicits._
     // the adversarial case for min-label propagation: diameter 999, which
     // would need 999 propagation rounds; star rewiring must finish in ≤15
@@ -166,10 +170,25 @@ class DedupSpec extends AnyFunSuite {
     val n = 1000L
     val nodes = (1L to n).toDF("node")
     val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val got = TextOps.connectedComponentsStar(nodes, edges, maxIters = 15)
+    val got = TextOps.connectedComponents(nodes, edges, maxIters = 15, driverBudget = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(got.length == 1000)
     assert(got.forall(_._2 == 1L))
+  }
+
+  test("connectedComponents: too few rounds for a fixpoint raise instead of a partial labeling") {
+    import spark.implicits._
+    val n = 200L
+    val nodes = (1L to n).toDF("node")
+    val edges = (1L until n).map(i => (i, i + 1)).toDF("a", "b")
+    // 2 rounds cannot close a 200-node path; a truncated labeling would
+    // split the one component into several
+    intercept[IllegalStateException] {
+      TextOps.connectedComponents(nodes, edges, maxIters = 2, driverBudget = 0L).collect()
+    }
+    val got = TextOps.connectedComponents(nodes, edges, maxIters = 20, driverBudget = 0L)
+      .collect().map(r => r.getLong(1))
+    assert(got.length == n && got.forall(_ == 1L))
   }
 
   test("connectedComponents: driver union-find fast path matches the distributed loop") {
@@ -183,7 +202,7 @@ class DedupSpec extends AnyFunSuite {
       }).toDF("a", "b")
     val fast = TextOps.connectedComponents(nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // driverBudget = 0 forces the distributed propagation loop
+    // driverBudget = 0 forces the distributed star-rewiring loop
     val dist = TextOps.connectedComponents(nodes, edges, driverBudget = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast == dist)
@@ -191,28 +210,9 @@ class DedupSpec extends AnyFunSuite {
     assert(Seq(46L to 60L: _*).forall(n => fast(n) == n))
   }
 
-  test("connectedComponentsStar matches propagation labeling on a mixed graph") {
-    import spark.implicits._
-    val nodes = (1L to 60L).toDF("node")
-    val rnd = new scala.util.Random(7)
-    // three planted components over 1..45 plus singletons 46..60
-    val edges = ((1L to 14L).map(i => (i, i + 1)) ++ // chain 1..15
-      (16L to 29L).map(i => (16L, i + 1)) ++ // star 16..30
-      (0 until 30).map { _ => // random clutter inside 31..45
-        val a = 31L + rnd.nextInt(15); val b = 31L + rnd.nextInt(15); (a, b)
-      }).toDF("a", "b")
-    val prop = TextOps.connectedComponents(nodes, edges, maxIters = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = TextOps.connectedComponentsStar(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == prop)
-  }
-
   test("q143 estimator audit: exact dups estimate 1.0 with zero error; est within MinHash bounds") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mherr").toString
-    docs.write.parquet(s"$dir/documents.parquet")
-    val got = TextOps.qMinhashErrorAudit(spark, dir).collect()
+    val got = TextOps.qMinhashErrorAudit(spark, docsDir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     // the planted exact-dup pairs are candidates with est = exact = 1.0
@@ -248,9 +248,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("q150 threshold sweep: counts monotone non-increasing; exact dups survive t=8") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sweep").toString
-    docs.write.parquet(s"$dir/documents.parquet")
-    val got = TextOps.qLshThresholdSweep(spark, dir).collect()
+    val got = TextOps.qLshThresholdSweep(spark, docsDir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // identical text -> identical signature -> all 8 bands agree: the two
     // planted exact-dup pairs must clear every threshold
@@ -258,7 +256,7 @@ class DedupSpec extends AnyFunSuite {
     val counts = (1L to 8L).map(t => got.getOrElse(t, 0L))
     assert(counts.zip(counts.tail).forall { case (a, b) => a >= b })
     // t=1 is exactly the q56 candidate-pair count
-    assert(got(1L) == TextOps.qMinhashCandidatePairs(spark, dir).count())
+    assert(got(1L) == TextOps.qMinhashCandidatePairs(spark, docsDir).count())
   }
 
   test("langid query is deterministic and covers every language") {

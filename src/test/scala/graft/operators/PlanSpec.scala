@@ -539,22 +539,14 @@ class PlanSpec extends AnyFunSuite {
       () => SparkEntry.queries("q49_jaccard_top_pairs")(spark, dir))
   }
 
-  test("simhashNearDups library core: banded self-join never broadcasts (cold + cached)") {
-    assertPairJoinPinned("simhashNearDups", Set("band", "key"))(
-      () => TextOps.simhashNearDups(
-        TextOps.simhash(graft.Tables.load(spark, dir, "documents")), maxHamming = 3))
-  }
-
   test("minhashCandidates library core: banded self-join never broadcasts (cold + cached)") {
     assertPairJoinPinned("minhashCandidates", Set("band", "key"))(
-      () => TextOps.minhashCandidates(
-        TextOps.minhashSignatures(graft.Tables.load(spark, dir, "documents"))))
+      () => TextOps.minhashCandidates(TextOps.qMinhashBands(spark, dir)))
   }
 
   test("q53 LSH bucket pairs: banded self-join never broadcasts (cold + cached)") {
-    assertPairJoinPinned("lshCandidatePairs", Set("band", "key"))(
-      () => Similarity.lshCandidatePairs(spark,
-        graft.Tables.load(spark, dir, "embeddings")))
+    assertPairJoinPinned("q53", Set("band", "key"))(
+      () => SparkEntry.queries("q53_ann_lsh")(spark, dir))
   }
 
   test("q116 fuzzy blocking: block self-join never broadcasts (cold + cached)") {

@@ -171,22 +171,21 @@ class ScaleSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // r19: BOTH gated queries ride the content layer now — each DELETES
+      // Both gated queries ride the content layer: each DELETES
       // the hot band before any join exists (300 identical docs collapse
       // to one representative row; the C(300,2) pairs re-emerge from the
       // row-local same-content explode). The stronger property for them
       // is that the output is complete and no skew handling is needed
       // because no skew survives; skew=true must NOT be required of a
       // plan whose join input is deduplicated. The AQE skew-split
-      // assertion stays alive on the per-doc LIBRARY core (simhash →
-      // simhashNearDups — the generic operator callers feed arbitrary
-      // per-doc signature frames, deliberately per-doc), which still
-      // takes the 300-identical-doc band into its banded self-join.
+      // assertion stays alive on the per-doc md5 reference (qMinhashBands →
+      // minhashCandidates, the per-doc spelling q56 is checked against),
+      // which still takes the 300-identical-doc band into its banded
+      // self-join.
       val subjects: Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean)] =
         Seq(
-          ("simhashNearDups_perdoc_core",
-            () => TextOps.simhashNearDups(TextOps.simhash(
-              spark.read.parquet(s"$docsDir/documents.parquet")), maxHamming = 3),
+          ("minhashCandidates_perdoc_md5",
+            () => TextOps.minhashCandidates(TextOps.qMinhashBands(spark, docsDir)),
             true),
           ("q55_simhash_near_dups",
             () => graft.SparkEntry.queries("q55_simhash_near_dups")(spark, docsDir),
