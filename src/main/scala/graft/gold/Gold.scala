@@ -104,36 +104,6 @@ object Gold {
       .select(col("month"), col("num_sorteos"), col("num_premios"),
         col("total_monto"), col("year"))
 
-  /** Incremental gold maintenance (S14 at warehouse scale): rebuild ONLY
-    * the year partitions a silver delta touched, instead of re-aggregating
-    * the whole history. Correct because gold_draw_summary groups by draw
-    * and a draw never spans years, so a year is a closed aggregation unit:
-    * each affected year is recomputed IN FULL from (year-pruned) silver —
-    * no partial-aggregate merge arithmetic to get wrong, `pct_vendido`
-    * and `top_premio` included — and swapped in atomically per-partition
-    * via dynamic partition overwrite. Untouched year directories are
-    * never read or written.
-    *
-    * At 100 TB: the silver reads are partition-pruned to the delta's
-    * years, the delta-years list itself is bounded metadata (collected),
-    * and the write replaces only those directories — the weekly cost is
-    * proportional to the affected years, not the table history.
-    */
-  def rebuildDrawSummaryYears(sorteos: DataFrame, premios: DataFrame,
-      deltaPremios: DataFrame, goldPath: String): Seq[Int] = {
-    val years = deltaPremios.select(col("year")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (years.nonEmpty) {
-      val soY = sorteos.where(col("year").isin(years: _*))
-      val prY = premios.where(col("year").isin(years: _*))
-      val out = drawSummary(soY, prY)
-        .join(broadcast(soY.select(col("numero_sorteo"), col("year"))),
-          Seq("numero_sorteo"))
-      graft.sources.Writers.overwritePartitions(out, goldPath, Seq("year"))
-    }
-    years
-  }
-
   /** All builders keyed by gold table name, each (sorteos, premios) → df. */
   val builders: Map[String, (DataFrame, DataFrame) => DataFrame] = Map(
     "gold_draw_summary" -> ((s, p) => drawSummary(s, p)),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import Transformer.{Premio, SilverDraw, Sorteo}
 
-/** Bronze → Silver: whole-file text scan, per-file atomic parse (flatMap),
+/** Bronze → Silver: whole-file text scan, per-file atomic parse,
   * typed silver Datasets with the enforced schema, and the incremental
   * skip-processed scan.
   *
@@ -66,18 +66,22 @@ object Silver {
     }
   }
 
-  /** Parse every raw file into typed silver draws. Malformed files THROW
-    * (whole-file atomicity, parser.py contract) unless `lenient`, which
-    * drops them — the reference logs-and-continues only for files missing
-    * the path key; parse errors are hard failures.
+  /** Parse every raw file into typed silver draws. Strict, per the
+    * reference's parser.py contract: a file parses whole or the batch
+    * fails (whole-file atomicity). Only files missing the `sorteo=` path
+    * key are skipped, and that happens earlier, in [[skipProcessed]]. A
+    * malformed file fails the batch with a [[Parser.ParseException]] whose
+    * message names the file's path; the parser's own error is its cause.
     */
-  def parseDraws(raw: Dataset[(String, String)], lenient: Boolean = false): Dataset[SilverDraw] = {
+  def parseDraws(raw: Dataset[(String, String)]): Dataset[SilverDraw] = {
     import raw.sparkSession.implicits._
-    if (lenient)
-      raw.flatMap { case (_, content) =>
-        scala.util.Try(Transformer.toSilver(Parser.parseDraw(content))).toOption
+    raw.map { case (path, content) =>
+      try Transformer.toSilver(Parser.parseDraw(content))
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          throw Parser.ParseException(s"malformed draw file $path: ${e.getMessage}").initCause(e)
       }
-    else raw.map { case (_, content) => Transformer.toSilver(Parser.parseDraw(content)) }
+    }
   }
 
   def sorteos(draws: Dataset[SilverDraw]): Dataset[Sorteo] = {

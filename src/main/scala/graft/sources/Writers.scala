@@ -2,28 +2,35 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Sinks and scans (SURVEY §2.1): Hive-partitioned and flat parquet silver
-  * sinks, the overwrite gold sink (which subsumes the reference's whole
-  * purge-Lambda + CTAS dance, purge_and_load.py:65-114 — S13/S14), CSV
-  * scan/sink, and catalog registration.
+/** Sinks and scans (SURVEY §2.1): the Hive-partitioned silver sink, the
+  * overwrite gold sink (which subsumes the reference's whole purge-Lambda
+  * + CTAS dance, purge_and_load.py:65-114 — S13/S14), CSV scan/sink,
+  * catalog registration and small-file compaction.
   */
 object Writers {
 
   /** S5: silver sink, Hive-partitioned by (year, sorteo)
     * (reference transformer.py:253-258 layout
-    * `silver/{ds}/year=Y/sorteo=N/`). Each weekly run adds new
-    * partitions; idempotent per draw: a rewrite of a draw replaces its
-    * (year, sorteo) directory (the [[overwritePartitions]] body), so
-    * rerunning after a crash between the sorteos and premios writes
-    * cannot duplicate rows.
+    * `silver/{ds}/year=Y/sorteo=N/`). Dynamic partition overwrite: a
+    * write replaces exactly the (year, sorteo) directories present in
+    * `df` and leaves every other partition untouched. Writing a draw is
+    * therefore idempotent: a rerun after a crash between the premios and
+    * sorteos writes replaces the draw instead of duplicating its rows.
+    * The overwrite mode is a per-write option, so no global
+    * `partitionOverwriteMode` conf leaks into other writers.
     */
   def writeSilverPartitioned(df: DataFrame, path: String): Unit =
-    overwritePartitions(df, path)
+    df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("year", "sorteo")
+      .parquet(path)
 
-  /** S13/S14: gold sink — full idempotent rebuild. `mode("overwrite")`
-    * replaces the reference's DROP TABLE + empty-the-prefix + CTAS
-    * choreography in one atomic writer call. Partitioned by `year` iff
-    * the frame has a `year` column ([[goldPartitioning]]).
+  /** S13/S14: gold sink — full rebuild. `mode("overwrite")` replaces the
+    * whole table in one writer call, standing in for the reference's
+    * DROP TABLE + empty-the-prefix + CTAS choreography, so rebuilding from
+    * the same silver always yields the same gold. The swap is not atomic:
+    * a concurrent reader can see the table empty mid-write. Partitioned by
+    * `year` iff the frame has a `year` column ([[goldPartitioning]]).
     */
   def writeGold(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").partitionBy(goldPartitioning(df): _*).parquet(path)
@@ -34,21 +41,6 @@ object Writers {
     */
   private def goldPartitioning(df: DataFrame): Seq[String] =
     if (df.columns.contains("year")) Seq("year") else Nil
-
-  /** S14 (incremental): DYNAMIC partition overwrite — replaces only the
-    * partitions present in `df`, leaving every other partition untouched.
-    * This is the reprocess-one-week pattern at warehouse scale: a
-    * corrected batch rewrites its own (year, sorteo) directories without
-    * the read-modify-write of a full overwrite and without `append`'s
-    * duplicate risk on rerun. The option is per-write, so no global
-    * `partitionOverwriteMode` conf leaks into other writers.
-    */
-  def overwritePartitions(df: DataFrame, path: String,
-      partitionCols: Seq[String] = Seq("year", "sorteo")): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
 
   /** S8: CSV scan (header + schema inference at the notebook boundary only —
     * SURVEY §1.2: inference is allowed at Bronze/notebook edges, never for
@@ -198,65 +190,5 @@ object Writers {
       Using.resource(Files.walk(root)) { s =>
         s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
       }
-  }
-
-  /** Range-clustered sink: `repartitionByRange` + in-partition sort on
-    * the cluster keys before writing, so each output file covers a
-    * narrow, near-disjoint key range and its parquet footer min/max
-    * stats actually prune — a selective key predicate then skips most
-    * files/row-groups at the scan. This is the layout lever for 100 TB
-    * fact tables (the poor cousin of Z-ordering, good enough when one
-    * leading key dominates predicates).
-    */
-  def writeRangeClustered(df: DataFrame, path: String, numFiles: Int,
-      clusterCols: Seq[String]): Unit = {
-    val cols = clusterCols.map(org.apache.spark.sql.functions.col)
-    df.repartitionByRange(numFiles, cols: _*)
-      .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Morton spread: the low 31 bits of a non-negative long, with one zero
-    * bit inserted between consecutive bits (2-D interleave masks — NOT the
-    * every-third-bit 3-D ladder) — classic mask-and-shift, expressed in
-    * Column ops so it stays inside whole-stage codegen (no UDF).
-    */
-  private def spreadBits(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{lit, shiftleft}
-    var x = c.bitwiseAND(lit(0x7FFFFFFFL))
-    x = x.bitwiseOR(shiftleft(x, 16)).bitwiseAND(lit(0x0000FFFF0000FFFFL))
-    x = x.bitwiseOR(shiftleft(x, 8)).bitwiseAND(lit(0x00FF00FF00FF00FFL))
-    x = x.bitwiseOR(shiftleft(x, 4)).bitwiseAND(lit(0x0F0F0F0F0F0F0F0FL))
-    x = x.bitwiseOR(shiftleft(x, 2)).bitwiseAND(lit(0x3333333333333333L))
-    x = x.bitwiseOR(shiftleft(x, 1)).bitwiseAND(lit(0x5555555555555555L))
-    x
-  }
-
-  /** Z-value (Morton interleave) of two non-negative integer columns,
-    * each truncated to 31 bits. Exposed for tests.
-    */
-  private[sources] def zValue(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.shiftleft
-    spreadBits(a.cast("long")).bitwiseOR(shiftleft(spreadBits(b.cast("long")), 1))
-  }
-
-  /** Z-order clustered sink: range-partition + sort on the Morton
-    * interleave of TWO cluster keys, so each output file covers a small
-    * RECTANGLE in (a, b) space and parquet footer min/max stats prune
-    * selective predicates on EITHER dimension — the multi-dimensional
-    * upgrade of [[writeRangeClustered]], whose single-key sort prunes
-    * only its leading key. Keys must be non-negative integers under 2^31
-    * (hash or bucketize wider domains first). The helper z column is
-    * dropped before the write, so the on-disk schema is unchanged.
-    */
-  def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
-      colA: String, colB: String): Unit = {
-    import org.apache.spark.sql.functions.col
-    df.withColumn("__z", zValue(col(colA), col(colB)))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
   }
 }

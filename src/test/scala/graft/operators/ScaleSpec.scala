@@ -9,29 +9,6 @@ class ScaleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  test("salted join is row-identical to the plain join on skewed data") {
-    import spark.implicits._
-    // skew: 90% of the big side carries one hot key
-    val big = (1 to 5000).map(i => (if (i % 10 == 0) i.toLong % 7 else 1L, i.toLong))
-      .toDF("k", "uid")
-    val small = Seq((1L, "hot"), (2L, "a"), (3L, "b"), (0L, "z")).toDF("k", "v")
-    val plain = big.join(small, Seq("k")).select("k", "uid", "v")
-      .collect().map(_.toSeq).toSet
-    val salted = Scale.saltedJoin(big, small, "k", "uid").select("k", "uid", "v")
-      .collect().map(_.toSeq).toSet
-    assert(salted == plain)
-    assert(salted.nonEmpty)
-  }
-
-  test("salted distinct-count equals plain countDistinct per key") {
-    val l = Tables.load(spark, dir, "lineitem")
-    val plain = l.groupBy(col("l_suppkey")).agg(countDistinct(col("l_partkey")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = Scale.saltedDistinctCount(l, "l_suppkey", "l_partkey")
-      .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_distinct")).toMap
-    assert(salted == plain)
-  }
-
   test("q08/q12/q76/q92 are row-identical to Spark's built-in Expand spellings") {
     // Each query re-spells a plan Spark would Expand (mixed distinct,
     // multi-distinct, ROLLUP, GROUPING SETS); PlanSpec pins the plan shape,
@@ -70,37 +47,12 @@ class ScaleSpec extends AnyFunSuite {
     }
   }
 
-  test("bucketed tables join without a shuffle exchange") {
-    // default warehouse (spark.sql.warehouse.dir is static); DROP TABLE cleans up
-    val l = Tables.load(spark, dir, "lineitem")
-      .select("l_orderkey", "l_extendedprice")
-    val o = Tables.load(spark, dir, "orders").select("o_orderkey", "o_totalprice")
-      .withColumnRenamed("o_orderkey", "l_orderkey")
-    Scale.writeBucketed(l, "bkt_lineitem", "l_orderkey", 8)
-    Scale.writeBucketed(o, "bkt_orders", "l_orderkey", 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    try {
-      val joined = Scale.bucketedJoin(spark, "bkt_lineitem", "bkt_orders", "l_orderkey")
-      assert(joined.count() > 0)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"bucketed join still shuffles:\n$plan")
-      // control: the same join over the raw (unbucketed) parquet DOES shuffle
-      val control = l.join(o, Seq("l_orderkey"))
-      control.count()
-      assert(control.queryExecution.executedPlan.toString.contains("Exchange"))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-      spark.sql("DROP TABLE IF EXISTS bkt_orders")
-    }
-  }
-
   test("AQE skew-join splitting fires on a hot key (skew=true in the final plan)") {
     import spark.implicits._
     // one key owns ~95% of the rows; with the skew thresholds dropped to
-    // toy scale, AQE must split that partition at runtime — the mechanism
-    // PLANS.md's standing configuration relies on for unsalted skew
+    // toy scale, AQE must split that partition at runtime. This split is
+    // the engine's only remedy for a skewed shuffle join (partial
+    // aggregation covers skewed group keys), so it must fire.
     val big = spark.range(200000)
       .select(when(col("id") % 20 =!= 0, lit(7L)).otherwise(col("id") % 97).as("k"),
         col("id").as("payload"))
@@ -235,33 +187,6 @@ class ScaleSpec extends AnyFunSuite {
         case (k, None) => spark.conf.unset(k)
       }
     }
-  }
-
-  test("file-level sampling reads a stable file subset, not the whole table") {
-    import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_blocksample")
-      .toString + "/t"
-    // 40 files, 100 rows each, file id recoverable from the rows
-    spark.range(4000).withColumn("bucket", col("id") % 40)
-      .repartition(40, col("bucket"))
-      .write.partitionBy("bucket").parquet(path)
-    val sampled = Scale.sampleFiles(spark, path, frac = 0.3, seed = 7L)
-    val buckets = sampled.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSet
-    // cluster sampling: whole files in or out, roughly frac of them
-    assert(buckets.size >= 4 && buckets.size <= 20,
-      s"expected ~12 of 40 files, got ${buckets.size}")
-    val perBucket = sampled.groupBy("bucket").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(perBucket.values.forall(_ == 100L),
-      "selected files must arrive complete (block = cluster sample)")
-    // deterministic: same seed -> same subset; different seed -> rotates
-    val again = Scale.sampleFiles(spark, path, frac = 0.3, seed = 7L)
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    assert(again == buckets)
-    val rotated = Scale.sampleFiles(spark, path, frac = 0.3, seed = 8L)
-      .select("bucket").distinct().collect().map(_.getInt(0)).toSet
-    assert(rotated != buckets, "seed rotation should select a different subset")
   }
 
   test("runtime bloom filter injects a might_contain prefilter into the probe scan") {

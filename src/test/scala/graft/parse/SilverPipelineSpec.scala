@@ -182,11 +182,14 @@ class SilverPipelineSpec extends AnyFunSuite {
     assert(counts.isEmpty)
   }
 
-  test("lenient parse mode drops malformed files instead of failing the batch") {
+  test("a malformed draw file fails the batch and the error names the file") {
     val raw = Silver.rawDraws(spark, "data/fixtures/bad/missing_*.txt")
     assert(raw.count() == 2)
-    assert(Silver.parseDraws(raw, lenient = true).count() == 0)
-    assertThrows[org.apache.spark.SparkException](Silver.parseDraws(raw).count())
+    val e = intercept[org.apache.spark.SparkException](Silver.parseDraws(raw).count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(messages.exists(_.contains("missing_")),
+      s"no error in the cause chain names the file:\n${messages.mkString("\n")}")
   }
 
   test("CSV sink/scan round-trip preserves silver premios values") {

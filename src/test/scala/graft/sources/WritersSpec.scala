@@ -7,26 +7,27 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** S14 incremental sink: dynamic partition overwrite must replace ONLY the
-  * partitions present in the incoming frame — the reprocess-one-batch
-  * pattern. A static overwrite would wipe the untouched partitions; an
-  * append would duplicate the reprocessed one. Both failure modes are
-  * asserted away here.
+/** The silver sink must replace ONLY the (year, sorteo) partitions
+  * present in the incoming frame: a static overwrite would wipe the
+  * untouched partitions, an append would duplicate the rewritten one. Both
+  * failure modes are asserted away here, next to the compaction contract:
+  * rows survive, the partition layout survives, and a crashed run's
+  * leftovers are repaired.
   */
 class WritersSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("overwritePartitions rewrites only the partitions in the frame") {
+  test("writeSilverPartitioned rewrites only the (year, sorteo) partitions in the frame") {
     import spark.implicits._
     val path = Files.createTempDirectory("graft_dyn").toString + "/silver"
     val full = Seq((1L, "a", 2020, 1), (2L, "b", 2020, 2), (3L, "c", 2021, 1))
       .toDF("id", "v", "year", "sorteo")
-    Writers.overwritePartitions(full, path)
+    Writers.writeSilverPartitioned(full, path)
 
     // reprocess ONLY (2020, 2): one corrected row replaces the old one
     val redo = Seq((2L, "B2", 2020, 2), (4L, "new", 2020, 2))
       .toDF("id", "v", "year", "sorteo")
-    Writers.overwritePartitions(redo, path)
+    Writers.writeSilverPartitioned(redo, path)
 
     val got = spark.read.parquet(path)
       .select("id", "v", "year", "sorteo")
@@ -123,79 +124,5 @@ class WritersSpec extends AnyFunSuite {
     assert(spark.read.parquet(path).count() == 100) // rows survived the rerun
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact-old")))
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path + ".compact-staging")))
-  }
-
-  test("zValue matches a reference Morton interleave") {
-    import spark.implicits._
-    def morton(a: Long, b: Long): Long = {
-      var r = 0L
-      var i = 0
-      while (i < 31) {
-        r |= ((a >> i) & 1L) << (2 * i)
-        r |= ((b >> i) & 1L) << (2 * i + 1)
-        i += 1
-      }
-      r
-    }
-    val samples = Seq((0L, 0L), (1L, 0L), (0L, 1L), (5L, 9L), (127L, 64L),
-      (0x7FFFFFFFL, 0x7FFFFFFFL), (123456L, 654321L), (2000000000L, 1L))
-    val got = samples.toDF("a", "b")
-      .select(Writers.zValue(col("a"), col("b")).as("z"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(got == samples.map { case (a, b) => morton(a, b) })
-  }
-
-  test("z-ordered layout bounds per-file rectangles so BOTH dims prune") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_zorder").toString
-    val grid = for { x <- 0 until 128; y <- 0 until 128 } yield (x.toLong, y.toLong)
-    val df = grid.toDF("x", "y")
-    Writers.writeZOrdered(df, s"$base/z", numFiles = 16, colA = "x", colB = "y")
-    Writers.writeRangeClustered(df, s"$base/xsorted", numFiles = 16,
-      clusterCols = Seq("x"))
-
-    // per-file bounding rectangles — the exact stats parquet footers carry
-    def rects(path: String) = spark.read.parquet(path)
-      .groupBy(input_file_name())
-      .agg(min(col("x")).as("x0"), max(col("x")).as("x1"),
-        min(col("y")).as("y0"), max(col("y")).as("y1"))
-      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-    def hitY(rs: Array[(Long, Long, Long, Long)]) = // y IN [16, 31]
-      rs.count { case (_, _, y0, y1) => y0 <= 31 && y1 >= 16 }
-    def hitX(rs: Array[(Long, Long, Long, Long)]) = // x IN [16, 31]
-      rs.count { case (x0, x1, _, _) => x0 <= 31 && x1 >= 16 }
-
-    val z = rects(s"$base/z")
-    val xs = rects(s"$base/xsorted")
-    assert(z.length == 16 && xs.length == 16)
-    // x-sorted: x-predicates prune hard, y-predicates touch EVERY file
-    assert(hitX(xs) <= 4, s"x-sorted x-prune ${hitX(xs)}")
-    assert(hitY(xs) == 16, s"x-sorted layout should not prune on y")
-    // z-ordered: BOTH single-dim predicates skip most files
-    assert(hitX(z) <= 8, s"z-order x-prune ${hitX(z)} of 16")
-    assert(hitY(z) <= 8, s"z-order y-prune ${hitY(z)} of 16")
-    // and the data is intact
-    assert(spark.read.parquet(s"$base/z").count() == grid.size)
-  }
-
-  test("range-clustered write produces near-disjoint per-file key ranges") {
-    import spark.implicits._
-    val path = Files.createTempDirectory("graft_cluster").toString + "/t"
-    val df = spark.range(20000)
-      .select((xxhash64(col("id")) % 1000).as("k"), col("id").as("payload"))
-    Writers.writeRangeClustered(df, path, numFiles = 8, clusterCols = Seq("k"))
-    // per-file [min, max] spans must be (nearly) disjoint: total overlap-free
-    // coverage means footer stats prune a selective k predicate to ~1 file
-    val spans = spark.read.parquet(path)
-      .groupBy(input_file_name().as("f"))
-      .agg(min(col("k")).as("lo"), max(col("k")).as("hi"))
-      .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(spans.length >= 4, s"expected several clustered files, got ${spans.length}")
-    spans.sliding(2).foreach { case Array((_, hi), (lo2, _)) =>
-      assert(lo2 >= hi, s"file ranges overlap: hi=$hi lo2=$lo2")
-    case _ => ()
-    }
-    // and the data survives intact
-    assert(spark.read.parquet(path).count() == 20000)
   }
 }
