@@ -38,11 +38,21 @@ object Log {
   def event(stage: String, fields: (String, Any)*): Unit =
     System.err.println(render(stage, fields: _*))
 
-  /** Time a block and log stage + elapsed_ms + the supplied fields. */
+  /** Time a block and log stage + elapsed_ms + the supplied fields. A
+    * block that throws logs the same event with `error` -> the
+    * exception's class name added, then rethrows.
+    */
   def timed[T](stage: String, fields: (String, Any)*)(body: => T): T = {
     val t0 = System.nanoTime()
-    val out = body
-    event(stage, (fields :+ ("elapsed_ms" -> (System.nanoTime() - t0) / 1000000L)): _*)
+    def elapsed = "elapsed_ms" -> (System.nanoTime() - t0) / 1000000L
+    val out =
+      try body
+      catch {
+        case e: Throwable =>
+          event(stage, (fields :+ elapsed :+ ("error" -> e.getClass.getName)): _*)
+          throw e
+      }
+    event(stage, (fields :+ elapsed): _*)
     out
   }
 }

@@ -1,8 +1,8 @@
 package graft
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.SparkSession
 
@@ -15,7 +15,10 @@ import graft.sources.Writers
   * (orchestration/main.tf:115-238). Stages are plain function calls on one
   * SparkSession; the seven independent gold builds run with bounded
   * parallelism 3 (the reference's Map MaxConcurrency, main.tf:196-199) on
-  * Spark's own scheduler via Futures.
+  * Spark's own scheduler. `run` returns or throws only after every gold
+  * build has finished: when builds fail, the others still complete and
+  * write their tables, and `run` rethrows the first failure (in
+  * `Gold.builders` order) with the rest attached as suppressed.
   */
 object Pipeline {
 
@@ -71,21 +74,24 @@ object Pipeline {
     val sorteos = spark.read.parquet(silverSorteos)
     val premios = spark.read.parquet(silverPremios)
 
-    val pool = Executors.newFixedThreadPool(GoldConcurrency)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futures = Gold.builders.toSeq.map { case (name, build) =>
-        Future {
-          Log.timed("gold_build", "table" -> name) {
-            Writers.writeGold(build(sorteos, premios), s"$outRoot/gold/$name")
-            val rows = spark.read.parquet(s"$outRoot/gold/$name").count()
-            Log.event("gold_rows", "table" -> name, "rows" -> rows)
-            name -> rows
-          }
-        }
+    val builds: Seq[Callable[(String, Long)]] = Gold.builders.toSeq.map { case (name, build) =>
+      () => Log.timed("gold_build", "table" -> name) {
+        Writers.writeGold(build(sorteos, premios), s"$outRoot/gold/$name")
+        val rows = spark.read.parquet(s"$outRoot/gold/$name").count()
+        Log.event("gold_rows", "table" -> name, "rows" -> rows)
+        name -> rows
       }
-      Await.result(Future.sequence(futures), Duration.Inf).toMap
-    } finally pool.shutdown()
+    }
+    // invokeAll returns only once every build has finished, failed or not
+    val pool = Executors.newFixedThreadPool(GoldConcurrency)
+    val done = try pool.invokeAll(builds.asJava).asScala.toSeq.map(f => Try(f.get()))
+      finally pool.shutdown()
+    val failures = done.collect { case Failure(e: ExecutionException) => e.getCause }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+    done.map(_.get).toMap
   }
 
   def main(args: Array[String]): Unit = {

@@ -379,16 +379,15 @@ object MgFreqText {
 }
 
 object FrequentItems {
-  /** Shared guarded builders — one definition for both the session
-    * registry and the `GraftExtensions` injection path, so a wrong-arity
-    * SQL call fails with the same clean analysis error in either.
+  /** Guarded builders: a wrong-arity SQL call fails with a clean
+    * analysis-time IllegalArgumentException.
     */
-  private[functions] val mgFreqBuilder: Seq[Expression] => Expression = {
+  private val mgFreqBuilder: Seq[Expression] => Expression = {
     case Seq(item, k) => MgFreq(item, k)
     case exprs => throw new IllegalArgumentException(
       s"mg_freq expects 2 arguments (item, k), got ${exprs.length}")
   }
-  private[functions] val mgFreqTextBuilder: Seq[Expression] => Expression = {
+  private val mgFreqTextBuilder: Seq[Expression] => Expression = {
     case Seq(text, k) => MgFreqText(text, k, k)
     case Seq(text, k, cap) => MgFreqText(text, k, cap)
     case exprs => throw new IllegalArgumentException(

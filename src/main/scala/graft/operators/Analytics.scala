@@ -804,51 +804,35 @@ object Analytics {
        |  CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS INTEGER) AS gid
        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin
 
-  /** A12 scale path: per-group percentiles via the mergeable KLL sketch
-    * aggregate ([[graft.functions.KllQuantiles]]) — one shuffle of
-    * O(k log n)-byte sketches, map-side partial aggregation, vs shipping
-    * raw values.
+  /** A12 scale path: per-group percentiles from Spark's built-in KLL
+    * sketch (`kll_sketch_agg_double`, Apache DataSketches, k = 256). It is
+    * a TypedImperativeAggregate, so partial sketches build map-side and
+    * the group-key shuffle carries O(k log n)-byte sketches, not rows.
     *
-    * Oracle closure (r14): the estimates depend on merge order (within
-    * the rank-error bound), so no DuckDB spelling can match them
-    * value-for-value. Instead the plan carries its own RANK-ERROR
-    * CERTIFICATE: each estimate is re-ranked against the actual column
-    * (broadcast of the 4×|flags| estimate rows back over lineitem —
-    * counts of strictly-below and at-or-below), and `rank_ok` is true
-    * iff the estimate's feasible rank interval [lo/n, hi/n] intersects
-    * [p − ε, p + ε] with ε = 0.02, the QuantileSketchSpec-pinned bound
-    * for k=256 — raising with the numbers if not. The DuckDB oracle
-    * recomputes the per-group row counts and expects literal TRUE
-    * certificates, so the driver's hash-match verifies real data AND
-    * enforces the sketch bound — closing the r13 `no_oracle` row
-    * without pretending sketch internals are portable.
+    * The estimates depend on the sketch's randomized compaction and on
+    * merge order, so no DuckDB spelling can match them value for value.
+    * The plan instead carries a rank-error certificate: each estimate is
+    * re-ranked against the column (the small estimate frame is broadcast
+    * back over lineitem, counting rows strictly below and at or below it),
+    * and `rank_ok` is true iff the feasible rank interval [lo/n, hi/n]
+    * meets [p − ε, p + ε] with ε = 0.02, the bound QuantileSketchSpec pins
+    * for k = 256. A violation raises with the numbers. The oracle
+    * recomputes the per-group row counts and expects literal TRUE, so the
+    * hash-match checks both the data and the sketch bound.
     *
-    * r20 A/B run and REJECTED (the q12/q86 class): widenScan on both
-    * passes read best 0.61 vs 0.65–0.69 s with WORSE medians (0.77 vs
-    * 0.66–0.72) — window noise, no adoption case (OPTIMIZATION_r20.md).
-    *
-    * r21 split verdict: widening ONLY the certificate pass wins where the
-    * both-passes widen lost. The stage profile localized the cost: the
-    * re-rank is 273 ms of serial CPU (600k rows × 4 probe quantiles through a
-    * 12-group aggregate, fused into the 1-row-group scan) vs the sketch
-    * build's 179 ms; widening the sketch pass had paid a full-width
-    * exchange to parallelize the smaller half AND re-ordered the sketch
-    * merges for nothing. The certificate exchange is 2 narrow columns,
-    * and the ×4 broadcast-join fan-out above it is exactly the row-dense
-    * CPU widenScan exists for. A/B same window at sf0.1: 0.65/0.59 →
-    * 0.52/0.52 s (OPTIMIZATION_r21.md, exceptAll = 0 — the certificate
-    * columns are partition-count-free: exact integer counts of a broadcast-fixed
-    * estimate). No-op at real multi-split scan parallelism, like every
-    * widenScan site.
+    * Only the certificate pass goes through [[graft.Tables.widenScan]]:
+    * its counts are exact integers against a broadcast-fixed estimate, so
+    * they do not depend on partitioning, and the re-rank is the
+    * row-dense half of the query. The sketch pass reads the scan as is.
     */
   def qKllQuantiles(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val probs = Seq(0.25, 0.5, 0.75, 0.95)
     val eps = 0.02 // KLL k=256 normalized rank-error bound (QuantileSketchSpec)
     val ests = t(s, dir, "lineitem")
       .groupBy(col("l_returnflag"))
-      .agg(graft.functions.QuantileSketch
-        .kllQuantiles("l_extendedprice", probs, 256).as("qs"))
+      .agg(kll_sketch_get_quantile_double(
+        kll_sketch_agg_double(col("l_extendedprice"), 256),
+        lit(probs.toArray)).as("qs"))
       .select(col("l_returnflag"),
         posexplode(col("qs")).as(Seq("pos", "est")))
       .withColumn("p", element_at(lit(probs.toArray), col("pos") + 1))

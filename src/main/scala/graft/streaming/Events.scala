@@ -141,32 +141,24 @@ object Events {
   final case class TypePercentiles(
       event_type: String, n: Long, p50: Double, p95: Double, p99: Double)
 
-  /** Streaming percentile monitoring: a [[graft.functions.KllSketch]] per
-    * event type carried across micro-batches as flatMapGroupsWithState
-    * state (serialized to its compact byte form — O(k log n) per key, the
-    * only state a percentile needs at any stream volume). Each batch emits
-    * the updated p50/p95/p99 over EVERYTHING seen so far — the
-    * latency-dashboard shape that windowed aggregation can't express and
-    * exact retention can't afford. Works identically on a batch frame
-    * (single "micro-batch" over the whole input).
+  /** Streaming percentile monitoring: per event type, the count and a
+    * built-in KLL sketch (`kll_sketch_agg_double`, k = 256) over every
+    * value seen so far, read out as p50/p95/p99. On a stream it is a plain
+    * streaming aggregation: the state store holds one O(k log n)-byte
+    * sketch per key, and in update mode each micro-batch emits the keys it
+    * touched. On a batch frame it is the same aggregation over the whole
+    * input. Below k values per key the sketch keeps every item, so the
+    * estimates are the exact inclusive-rank quantiles; above k its
+    * compaction is randomized and they vary within the rank-error bound.
     */
   def runningValuePercentiles(events: DataFrame)
       : org.apache.spark.sql.Dataset[TypePercentiles] = {
     import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import graft.functions.KllSketch
-    events.selectExpr("event_type", "value").as[(String, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[Array[Byte], TypePercentiles](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (et: String, rows: Iterator[(String, Double)], state: GroupState[Array[Byte]]) =>
-          val sketch = state.getOption.map(KllSketch.deserialize)
-            .getOrElse(new KllSketch(256))
-          rows.foreach { case (_, v) => sketch.update(v) }
-          state.update(sketch.serialize())
-          val q = sketch.quantiles(Seq(0.5, 0.95, 0.99))
-          Iterator(TypePercentiles(et, sketch.count, q(0), q(1), q(2)))
-      }
+    val q = kll_sketch_get_quantile_double(col("sketch"), lit(Array(0.5, 0.95, 0.99)))
+    events.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), kll_sketch_agg_double(col("value"), 256).as("sketch"))
+      .select(col("event_type"), col("n"), q(0).as("p50"), q(1).as("p95"), q(2).as("p99"))
+      .as[TypePercentiles]
   }
 
   final case class DebouncedEvent(

@@ -21,4 +21,20 @@ class LogSpec extends AnyFunSuite {
   test("timed returns the body's value and logs elapsed") {
     assert(Log.timed("t")(7) == 7)
   }
+
+  test("timed logs a failed block with its error class, then rethrows") {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val thrown =
+      try intercept[IllegalStateException] {
+        Log.timed("gold_build", "table" -> "gold_x")(throw new IllegalStateException("boom"))
+      } finally System.setErr(saved)
+    assert(thrown.getMessage == "boom")
+    val lines = buf.toString("UTF-8").linesIterator.filter(_.contains("gold_build")).toList
+    assert(lines.size == 1, lines)
+    assert(lines.head.matches(
+      """\{"event":"gold_build","table":"gold_x","elapsed_ms":\d+,""" +
+        """"error":"java.lang.IllegalStateException"\}"""), lines.head)
+  }
 }

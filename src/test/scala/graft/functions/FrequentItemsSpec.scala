@@ -160,18 +160,6 @@ class FrequentItemsSpec extends AnyFunSuite {
     assert(streamed == truth)
   }
 
-  test("GraftExtensions injects every graft function for spark.sql.extensions users") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    // register into a throwaway registry and check the full function
-    // surface landed (the declarative-install path must not lag the
-    // programmatic GraftFunctions.register one)
-    assert(org.apache.spark.sql.GraftExtensionsTestAccess.functionNames(ext) ==
-      Set("cosine_similarity", "token_term_counts", "word_shingles",
-        "kll_quantiles", "mg_freq", "mg_freq_text", "array_sum_long",
-        "bloom_agg", "bloom_might_contain"))
-  }
-
   test("invalid k fails at analysis, not execution") {
     import org.apache.spark.sql.AnalysisException
     GraftFunctions.register(spark)

@@ -5,28 +5,26 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The KLL aggregate's contract: rank error bounded regardless of
-  * partitioning, mergeable state, sane edge behavior. The exact values are
-  * intentionally NOT pinned — they may shift within the bound as merge
-  * order varies; the bound is the spec.
+/** The rank-error bound q81 certifies in-plan: Spark's built-in KLL sketch
+  * at k = 256 stays within ε = 0.02 of every probed rank, whatever the
+  * partitioning (so whatever the merge tree). The exact values are NOT
+  * pinned: compaction is randomized, so they move within the bound from
+  * run to run; the bound is the spec.
   */
 class QuantileSketchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private val N = 100000
   private val probs = Seq(0.01, 0.25, 0.5, 0.75, 0.99)
-  // KLL with k=256 gives relative rank error well under 1%; assert 2% to
-  // keep the test insensitive to compaction-parity luck.
+  // q81's eps: KLL with k=256 stays well under 1% normalized rank error
   private val eps = 0.02
 
   /** values 0..N-1 hashed into a scattered but known distribution: the true
     * quantile of rank r is simply the r-th smallest, recoverable by sort.
     */
-  private def df(parts: Int) = {
-    import spark.implicits._
+  private def df(parts: Int) =
     spark.range(N).repartition(parts)
       .select((xxhash64(col("id")) % 1000000).cast("double").as("x"))
-  }
 
   private def rankError(est: Double, sorted: Array[Double], p: Double): Double = {
     val below = java.util.Arrays.binarySearch(sorted, est) match {
@@ -37,60 +35,16 @@ class QuantileSketchSpec extends AnyFunSuite {
   }
 
   test("rank error within eps at several partition counts") {
-    GraftFunctions.register(spark)
     val sorted = df(8).collect().map(_.getDouble(0)).sorted
     Seq(1, 8, 37).foreach { parts =>
       val ests = df(parts)
-        .agg(QuantileSketch.kllQuantiles("x", probs, 256).as("qs"))
+        .agg(kll_sketch_get_quantile_double(
+          kll_sketch_agg_double(col("x"), 256), lit(probs.toArray)).as("qs"))
         .head().getSeq[Double](0)
       probs.zip(ests).foreach { case (p, est) =>
         val err = rankError(est, sorted, p)
         assert(err <= eps, s"parts=$parts p=$p est=$est rankErr=$err")
       }
     }
-  }
-
-  test("SQL form works and agrees in shape") {
-    GraftFunctions.register(spark)
-    df(4).createOrReplaceTempView("kll_in")
-    val ests = spark.sql(
-      "SELECT kll_quantiles(x, array(0.5D), 64) AS qs FROM kll_in")
-      .head().getSeq[Double](0)
-    assert(ests.length == 1 && !ests.head.isNaN)
-  }
-
-  test("sketch serialize/deserialize round-trips quantile state") {
-    val s = new KllSketch(64)
-    (1 to 10000).foreach(i => s.update(i.toDouble))
-    val back = KllSketch.deserialize(s.serialize())
-    assert(java.util.Arrays.equals(
-      s.quantiles(probs), back.quantiles(probs)))
-  }
-
-  test("merge conserves total weight; merged bound holds") {
-    val a = new KllSketch(128)
-    val b = new KllSketch(128)
-    val r = new scala.util.Random(42)
-    val all = Array.fill(50000)(r.nextDouble() * 1e6)
-    all.take(30000).foreach(a.update)
-    all.drop(30000).foreach(b.update)
-    a.merge(b)
-    val sorted = all.sorted
-    probs.zip(a.quantiles(probs)).foreach { case (p, est) =>
-      val err = rankError(est, sorted, p)
-      assert(err <= eps, s"merged p=$p est=$est rankErr=$err")
-    }
-  }
-
-  test("empty input yields NaN estimates, null values ignored") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val empty = Seq.empty[Double].toDF("x")
-      .agg(QuantileSketch.kllQuantiles("x", Seq(0.5), 64)).head().getSeq[Double](0)
-    assert(empty.head.isNaN)
-    val withNulls = Seq(Some(1.0), None, Some(3.0), None, Some(2.0))
-      .toDF("x")
-      .agg(QuantileSketch.kllQuantiles("x", Seq(0.5), 64)).head().getSeq[Double](0)
-    assert(withNulls.head == 2.0)
   }
 }

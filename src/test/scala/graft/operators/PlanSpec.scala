@@ -199,13 +199,13 @@ class PlanSpec extends AnyFunSuite {
   test("q81 KLL sketch aggregates partially map-side (ObjectHashAggregate)") {
     val p = executedPlan("q81_kll_quantiles")
     assert(p.contains("ObjectHashAggregate"), p)
-    assert(p.contains("kll_quantiles"), p)
-    // three shuffles since r21 (two since r14): the sketch merge on the
-    // group key, the rank-error certificate's re-rank aggregate
-    // (broadcast of the tiny estimate frame back over lineitem — a
-    // BroadcastHashJoin, never a shuffle join), plus the certificate
-    // pass's widenScan xxhash64 spread — present here because the test
-    // corpus is a 1-split file, a no-op at real scan parallelism
+    assert(p.contains("kll_sketch_agg_double"), p)
+    // three shuffles: the sketch merge on the group key, the rank-error
+    // certificate's re-rank aggregate (broadcast of the tiny estimate
+    // frame back over lineitem — a BroadcastHashJoin, never a shuffle
+    // join), plus the certificate pass's widenScan xxhash64 spread —
+    // present here because the test corpus is a 1-split file, a no-op at
+    // real scan parallelism
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 3, p)
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("SortMergeJoin"), p)

@@ -112,6 +112,24 @@ class SilverPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("a failed gold build: run throws only after the other six tables are written") {
+    val out = freshDir()
+    val draws = Silver.parseDraws(Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt"))
+    // silver premios without letras: only gold_letters_distribution reads it
+    Writers.writeSilverPartitioned(Silver.premios(draws).toDF().drop("letras"),
+      s"$out/silver/premios")
+    Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), s"$out/silver/sorteos")
+    Files.createDirectory(java.nio.file.Paths.get(s"$out/empty_raw"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      Pipeline.run(spark, s"$out/empty_raw/*.txt", out))
+    val others = Gold.builders.keySet - "gold_letters_distribution"
+    assert(others.size == 6)
+    others.foreach { t =>
+      assert(new java.io.File(s"$out/gold/$t/_SUCCESS").isFile,
+        s"$t has no _SUCCESS when run throws")
+    }
+  }
+
   test("SQL form of every gold query matches the DataFrame builders") {
     val draws = Silver.parseDraws(Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt"))
     val sorteos = Silver.sorteos(draws).toDF()
