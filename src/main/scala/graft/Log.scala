@@ -8,7 +8,9 @@ package graft
   */
 object Log {
 
-  /** Render one event as a JSON line. Exposed for tests. */
+  /** Render one event as a JSON line; a `Seq` value becomes a JSON
+    * array. Exposed for tests.
+    */
   def render(stage: String, fields: (String, Any)*): String = {
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""
@@ -28,6 +30,7 @@ object Log {
       case n: Long => n.toString
       case n: Float => n.toString
       case n: Double => n.toString
+      case xs: Seq[_] => xs.map(v).mkString("[", ",", "]")
       case other => "\"" + esc(other.toString) + "\""
     }
     (("event" -> stage) +: fields)

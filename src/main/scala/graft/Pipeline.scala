@@ -4,7 +4,8 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.gold.Gold
 import graft.parse.Silver
@@ -24,35 +25,32 @@ object Pipeline {
 
   val GoldConcurrency = 3
 
+  /** At most this many paths of raw files with no `sorteo=` key are logged. */
+  private val UnkeyedPathsLogged = 20
+
   /** Full run. Returns the per-gold-table row counts (the reference's own
     * acceptance style: "paste row counts into the PR", roadmap.md:493).
     */
   def run(spark: SparkSession, rawPath: String, outRoot: String): Map[String, Long] = {
     // Bronze → Silver. Draws already in silver sorteos are skipped: sorteos
     // is written last, so a draw present there has both of its tables.
+    // The skip runs on the driver, on the two listings, so the scan reads
+    // only the new files.
     val silverSorteos = s"$outRoot/silver/sorteos"
     val silverPremios = s"$outRoot/silver/premios"
-    // A raw glob matching no files is "nothing new this run" (the weekly
-    // scrape may legitimately produce zero draws), not a pipeline error.
-    val raw0 =
-      try Silver.rawDraws(spark, rawPath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          import spark.implicits._
-          spark.emptyDataset[(String, String)]
-      }
-    val raw = Silver.skipProcessed(raw0, Silver.processedSorteos(spark, silverSorteos))
-    // Materialize the increment ONCE and CUT its lineage (eager
-    // localCheckpoint): the emptiness probe and both silver writes read
-    // the same parsed draws, instead of each rerunning the bronze scan,
-    // the skip-processed anti-join and the parse. persist() is not
-    // enough: isEmpty caches only the first partition. The increment is
-    // bounded by arrival rate, so checkpoint size is small at any corpus
-    // scale.
-    val draws = Silver.parseDraws(raw).localCheckpoint()
-    try {
-      if (!draws.isEmpty) {
+    val listed = Silver.listRaw(spark, rawPath)
+    val fresh = listed.filter(Silver.isNew(Silver.processedKeys(spark, silverSorteos)))
+    val unkeyed = listed.filter(Silver.sorteoKey(_).isEmpty)
+    Log.event("bronze_scan", "listed" -> listed.size, "new" -> fresh.size,
+      "unkeyed" -> unkeyed.size, "unkeyed_paths" -> unkeyed.take(UnkeyedPathsLogged))
+    if (fresh.isEmpty) Log.event("silver_write_skipped", "reason" -> "no new draws")
+    else {
+      // Parse the increment ONCE and cut its lineage (eager
+      // localCheckpoint): both silver writes read the same parsed draws,
+      // instead of each rerunning the scan and the parse.
+      val draws = Silver.parseDraws(Silver.rawDraws(spark, fresh.map(Silver.literalGlob): _*))
+        .localCheckpoint()
+      try {
         // premios first, sorteos last: sorteos is the commit marker the
         // skip reads, and both sinks overwrite per (year, sorteo), so a
         // crash between the writes is repaired by the next run.
@@ -60,8 +58,8 @@ object Pipeline {
           Writers.writeSilverPartitioned(Silver.premios(draws).toDF(), silverPremios)
           Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), silverSorteos)
         }
-      } else Log.event("silver_write_skipped", "reason" -> "no new draws")
-    } finally draws.unpersist()
+      } finally draws.unpersist()
+    }
 
     // First-run guard: no draws parsed AND no pre-existing silver → there
     // is nothing to build gold from (reading the absent path would throw).
@@ -76,8 +74,13 @@ object Pipeline {
 
     val builds: Seq[Callable[(String, Long)]] = Gold.builders.toSeq.map { case (name, build) =>
       () => Log.timed("gold_build", "table" -> name) {
-        Writers.writeGold(build(sorteos, premios), s"$outRoot/gold/$name")
-        val rows = spark.read.parquet(s"$outRoot/gold/$name").count()
+        // The write counts the rows. Read the count only after the write
+        // succeeds: a failed write never completes the observation, and
+        // get() would block for good.
+        val observed = Observation(name)
+        Writers.writeGold(build(sorteos, premios).observe(observed, count(lit(1)).as("rows")),
+          s"$outRoot/gold/$name")
+        val rows = observed.get("rows").asInstanceOf[Long]
         Log.event("gold_rows", "table" -> name, "rows" -> rows)
         name -> rows
       }

@@ -1,6 +1,9 @@
 package graft.parse
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.net.URI
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import Transformer.{Premio, SilverDraw, Sorteo}
@@ -14,62 +17,90 @@ import Transformer.{Premio, SilverDraw, Sorteo}
   * reference parser.py:106-119) — so the unit of parallelism is the file.
   * `wholetext` keeps file = record; at 100 TB of draws this is a
   * many-small-files scan, which Spark packs into tasks via
-  * spark.sql.files.maxPartitionBytes — no driver-side listing loops.
+  * spark.sql.files.maxPartitionBytes.
   */
 object Silver {
 
-  /** S1: raw text scan, one record per file with its path. */
-  def rawDraws(spark: SparkSession, rawPath: String): Dataset[(String, String)] = {
+  /** S1: raw text scan, one record per file with its path. Each argument
+    * is a Hadoop glob.
+    */
+  def rawDraws(spark: SparkSession, rawPaths: String*): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").text(rawPath)
+    spark.read.option("wholetext", "true").text(rawPaths: _*)
       .select(input_file_name().as("path"), col("value").as("content"))
       .as[(String, String)]
   }
 
-  /** S4: incremental scan — drop raw files whose `sorteo=` path key already
-    * exists in silver. Distributed anti-join on the partition value, the
-    * Spark shape of the reference's processed-set check
-    * (transformer.py:91-117); no driver-side set. A file with no
-    * `sorteo=N/` path segment is skipped as well (the reference
-    * logs-and-continues on a missing path key, transformer.py:110-115):
-    * its null key never matches the anti-join, so keeping it would
-    * re-append its rows to silver on every run.
+  /** The files a raw glob matches, listed on the driver, as decoded
+    * paths (the listing itself is URI-encoded). A glob matching nothing is
+    * "nothing new this run" (the weekly scrape may legitimately produce
+    * zero draws), not an error.
+    */
+  def listRaw(spark: SparkSession, rawPath: String): Seq[String] =
+    try spark.read.text(rawPath).inputFiles.toSeq.map(f => new Path(new URI(f)).toString)
+    catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => Nil }
+
+  /** A listed file path as a glob that matches only that file. */
+  def literalGlob(path: String): String = path.replaceAll("""([{}\[\]*?\\])""", """\\$1""")
+
+  private val SorteoKey = "sorteo=(\\d+)/".r
+
+  /** S3: the `sorteo=N/` partition key in a file's path, if it has one. */
+  def sorteoKey(path: String): Option[Long] =
+    SorteoKey.findFirstMatchIn(path).flatMap(_.group(1).toLongOption)
+
+  /** S4: the skip rule, the Spark shape of the reference's processed-set
+    * check (transformer.py:91-117). A raw file is new iff its path key is
+    * not in `processed`. A file with no `sorteo=N/` path segment is never
+    * new (the reference logs-and-continues on a missing path key,
+    * transformer.py:110-115): no processed key can ever match it, so
+    * keeping it would re-append its rows to silver on every run.
+    */
+  def isNew(processed: Set[Long])(path: String): Boolean =
+    sorteoKey(path).exists(k => !processed(k))
+
+  /** S4 on an already scanned Dataset: drop the records [[isNew]] rejects.
+    * `Pipeline.run` applies the same rule to the raw listing instead, so
+    * it never reads a processed file.
     */
   def skipProcessed(
       raw: Dataset[(String, String)],
       processedSorteos: DataFrame): Dataset[(String, String)] = {
     import raw.sparkSession.implicits._
-    raw.toDF("path", "content")
-      .withColumn("sorteo", regexp_extract(col("path"), "sorteo=(\\d+)/", 1).cast("long"))
-      .where(col("sorteo").isNotNull)
-      .join(processedSorteos.select(col("sorteo").cast("long").as("sorteo")),
-        Seq("sorteo"), "left_anti")
-      .select(col("path"), col("content"))
-      .as[(String, String)]
+    val processed = processedSorteos.select(col("sorteo").cast("long")).as[Long].collect().toSet
+    raw.filter(r => isNew(processed)(r._1))
   }
 
-  /** Already-present silver partition keys (empty frame if silver doesn't
-    * exist yet, or holds no committed file: a write that failed before
-    * its commit leaves the directory behind with no data in it).
+  /** Keys of the draws silver `sorteos` holds, taken from its file listing
+    * on the driver. The set is one long per draw (about 0.8 MB at 10^5
+    * draws), and holding it there lets the raw listing be pruned before
+    * any file is read. Empty if silver doesn't exist yet, or holds no
+    * committed file: a write that failed before its commit leaves the
+    * directory behind with no data in it.
     */
-  def processedSorteos(spark: SparkSession, silverSorteosPath: String): DataFrame = {
-    import spark.implicits._
+  def processedKeys(spark: SparkSession, silverSorteosPath: String): Set[Long] =
     // Only a missing or data-less path means "nothing processed". Any
     // OTHER read failure (corrupt footer, transient IO) must propagate:
     // silently returning the empty set would hide the damage and reparse
-    // and rewrite every draw in the raw history.
-    try spark.read.parquet(silverSorteosPath).select(col("sorteo")).distinct()
+    // and rewrite every draw in the raw history. Keys come from file names,
+    // so a damaged file the schema read does not open still counts.
+    try spark.read.parquet(silverSorteosPath).inputFiles.flatMap(sorteoKey).toSet
     catch {
-      case e: org.apache.spark.sql.AnalysisException
+      case e: AnalysisException
           if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")(e.getCondition) =>
-        Seq.empty[Long].toDF("sorteo")
+        Set.empty
     }
+
+  /** [[processedKeys]] as a one-column `sorteo` frame. */
+  def processedSorteos(spark: SparkSession, silverSorteosPath: String): DataFrame = {
+    import spark.implicits._
+    processedKeys(spark, silverSorteosPath).toSeq.toDF("sorteo")
   }
 
   /** Parse every raw file into typed silver draws. Strict, per the
     * reference's parser.py contract: a file parses whole or the batch
     * fails (whole-file atomicity). Only files missing the `sorteo=` path
-    * key are skipped, and that happens earlier, in [[skipProcessed]]. A
+    * key are skipped, and that happens earlier, by [[isNew]]. A
     * malformed file fails the batch with a [[Parser.ParseException]] whose
     * message names the file's path; the parser's own error is its cause.
     */

@@ -18,6 +18,11 @@ class LogSpec extends AnyFunSuite {
     assert(ctl == "{\"event\":\"x\",\"msg\":\"a\\u0001b\"}")
   }
 
+  test("render emits a Seq as a JSON array of typed values") {
+    assert(Log.render("x", "paths" -> Seq("a\"b", "c"), "ns" -> Seq(1L, 2L), "none" -> Nil) ==
+      """{"event":"x","paths":["a\"b","c"],"ns":[1,2],"none":[]}""")
+  }
+
   test("timed returns the body's value and logs elapsed") {
     assert(Log.timed("t")(7) == 7)
   }

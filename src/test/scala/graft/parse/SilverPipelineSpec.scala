@@ -34,6 +34,25 @@ class SilverPipelineSpec extends AnyFunSuite {
     Files.copy(p, dst)
   }
 
+  /** `Pipeline.run` with its standard error captured; returns the one
+    * `bronze_scan` event it logged.
+    */
+  private def runScanned(glob: String, out: String): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try Pipeline.run(spark, glob, out) finally System.setErr(saved)
+    val scans = buf.toString("UTF-8").linesIterator
+      .filter(_.startsWith("{\"event\":\"bronze_scan\"")).toList
+    assert(scans.size == 1, scans)
+    scans.head
+  }
+
+  /** An integer field of a logged event. */
+  private def field(event: String, name: String): Long =
+    s""""$name":(\\d+)""".r.findFirstMatchIn(event).map(_.group(1).toLong)
+      .getOrElse(fail(s"no $name in $event"))
+
   test("bronze scan finds all fixture files; partition keys extract from paths") {
     val raw = Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt")
     assert(raw.count() == 3)
@@ -73,9 +92,12 @@ class SilverPipelineSpec extends AnyFunSuite {
     // geo_winnings is year-partitioned on disk and excludes NO VENDIDO
     assert(new java.io.File(s"$out/gold/gold_geo_winnings/year=2024").isDirectory)
 
-    // all 7 gold tables built with rows
+    // all 7 gold tables built with rows, counted by the write itself
     assert(counts.keySet == Gold.builders.keySet)
     assert(counts.values.forall(_ > 0))
+    counts.foreach { case (t, n) =>
+      assert(n == spark.read.parquet(s"$out/gold/$t").count(), s"$t observed count")
+    }
 
     // incremental rerun: all draws already in silver → nothing appended,
     // gold rebuild (overwrite) stays identical
@@ -155,7 +177,9 @@ class SilverPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/silver/premios").count() == 11)
     // a NEW draw arrives: only its 3 rows append, nothing re-processed
     stage(raw, "results_raw_lottery_url_id_310_3101.txt")
-    Pipeline.run(spark, s"$raw/year=*/sorteo=*/*.txt", out)
+    val scan = runScanned(s"$raw/year=*/sorteo=*/*.txt", out)
+    assert(field(scan, "listed") == 3)
+    assert(field(scan, "new") == 1, scan) // only the new file is read
     val premios = spark.read.parquet(s"$out/silver/premios")
     assert(premios.count() == 14)
     assert(premios.where(col("sorteo") === 3046).count() == 7) // not duplicated
@@ -170,11 +194,29 @@ class SilverPipelineSpec extends AnyFunSuite {
     stage(raw, "results_raw_lottery_url_id_288_3047.txt", Some("year=2024/incoming"))
     val glob = s"$raw/year=*/*/*.txt"
     assert(Silver.rawDraws(spark, glob).count() == 2)
-    Pipeline.run(spark, glob, out)
+    val scan1 = runScanned(glob, out)
     val first = spark.read.parquet(s"$out/silver/premios").count()
-    Pipeline.run(spark, glob, out)
+    val scan2 = runScanned(glob, out)
     assert(spark.read.parquet(s"$out/silver/premios").count() == first)
     assert(first == 7) // only the keyed draw; the loose one is skipped
+    // the loose file is counted and named on every run, never read
+    for (scan <- Seq(scan1, scan2)) {
+      assert(field(scan, "unkeyed") == 1, scan)
+      assert(scan.contains("year=2024/incoming/results_raw_lottery_url_id_288_3047.txt"), scan)
+    }
+    assert(field(scan1, "new") == 1, scan1)
+    assert(field(scan2, "new") == 0, scan2)
+  }
+
+  test("a new raw file is read by its own path, glob characters and spaces included") {
+    val out = freshDir()
+    val raw = freshDir()
+    stage(raw, "results_raw_lottery_url_id_287_3046.txt", Some("year=2024/sorteo=3046/a [b]{c} d"))
+    stage(raw, "results_raw_lottery_url_id_288_3047.txt", Some("year=2024/sorteo=3047/x?y*z"))
+    val glob = s"$raw/year=*/sorteo=*/*/*.txt"
+    val scan = runScanned(glob, out)
+    assert(field(scan, "new") == 2, scan)
+    assert(spark.read.parquet(s"$out/silver/premios").count() == 7 + 4)
   }
 
   test("processedSorteos: empty on missing path, but corrupt silver PROPAGATES") {
