@@ -128,24 +128,18 @@ object Bench {
     val errs = scala.collection.mutable.LinkedHashMap[String, String]()
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
 
-    // Cache hygiene note (applies to every measure() call): query builders
-    // persist query-local intermediates (banded signature tables, gram
-    // streams) that the returned lazy plan references more than once —
-    // they cannot unpersist before returning without defeating the cache.
-    // The session-owner releases them instead: each query's cached frames
-    // live exactly for its warmup + timed runs (steady-state reuse), then
-    // are dropped so a 177-query sweep never accumulates storage memory.
-    // recordErr=false on the deferred retry pass: a retry that throws must
-    // not stamp an errs entry onto a query whose FIRST pass succeeded —
-    // the line's contract is that errors and positive times are disjoint.
-    // Cold column (r21, VERDICT r20 #2): persist() fills used to happen in
-    // the untimed warmup, so every cache-dependent win was priced at its
-    // steady state only. Now the warmup is followed by a clearCache() and
-    // ONE TIMED fill-inclusive run — what a cold single-shot job pays —
-    // emitted as `queries_cold` alongside the unchanged best-of-3
-    // steady-state `queries` (the timed triple still reads warm caches,
-    // now filled by the cold run instead of the warmup; headline
-    // semantics unchanged).
+    // Cache hygiene (every measure() call): query builders persist
+    // query-local intermediates (banded signature tables, gram streams)
+    // with plain persist(), because the returned lazy plan reads them more
+    // than once. Bench is the session owner and releases them with
+    // clearCache(): each query's cached frames live exactly for its cold
+    // and timed runs, so a 177-query sweep never accumulates storage
+    // memory. The warmup is followed by a clearCache() and ONE timed
+    // fill-inclusive run (what a cold single-shot job pays), reported as
+    // `queries_cold`; the best-of-3 `queries` then read the caches that
+    // run filled. recordErr=false on the deferred retry pass: a retry that
+    // throws must not stamp an errs entry onto a query whose FIRST pass
+    // succeeded, since errors and positive times are disjoint.
     val colds = scala.collection.mutable.LinkedHashMap[String, Double]()
     def measure(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         recordErr: Boolean = true): Option[Seq[Double]] =

@@ -39,7 +39,8 @@ object Pipeline {
     val silverSorteos = s"$outRoot/silver/sorteos"
     val silverPremios = s"$outRoot/silver/premios"
     val listed = Silver.listRaw(spark, rawPath)
-    val fresh = listed.filter(Silver.isNew(Silver.processedKeys(spark, silverSorteos)))
+    val processed = Silver.processedKeys(spark, silverSorteos)
+    val fresh = listed.filter(Silver.isNew(processed))
     val unkeyed = listed.filter(Silver.sorteoKey(_).isEmpty)
     Log.event("bronze_scan", "listed" -> listed.size, "new" -> fresh.size,
       "unkeyed" -> unkeyed.size, "unkeyed_paths" -> unkeyed.take(UnkeyedPathsLogged))
@@ -47,25 +48,24 @@ object Pipeline {
     else {
       // Parse the increment ONCE and cut its lineage (eager
       // localCheckpoint): both silver writes read the same parsed draws,
-      // instead of each rerunning the scan and the parse.
+      // instead of each rerunning the scan and the parse. The checkpoint
+      // is not in the CacheManager; Spark's ContextCleaner frees its
+      // blocks once `draws` becomes unreachable.
       val draws = Silver.parseDraws(Silver.rawDraws(spark, fresh.map(Silver.literalGlob): _*))
         .localCheckpoint()
-      try {
-        // premios first, sorteos last: sorteos is the commit marker the
-        // skip reads, and both sinks overwrite per (year, sorteo), so a
-        // crash between the writes is repaired by the next run.
-        Log.timed("silver_write", "path" -> silverSorteos) {
-          Writers.writeSilverPartitioned(Silver.premios(draws).toDF(), silverPremios)
-          Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), silverSorteos)
-        }
-      } finally draws.unpersist()
+      // premios first, sorteos last: sorteos is the commit marker the
+      // skip reads, and both sinks overwrite per (year, sorteo), so a
+      // crash between the writes is repaired by the next run.
+      Log.timed("silver_write", "path" -> silverSorteos) {
+        Writers.writeSilverPartitioned(Silver.premios(draws).toDF(), silverPremios)
+        Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), silverSorteos)
+      }
     }
 
-    // First-run guard: no draws parsed AND no pre-existing silver → there
-    // is nothing to build gold from (reading the absent path would throw).
-    val fs = new org.apache.hadoop.fs.Path(silverSorteos)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(silverSorteos))) return Map.empty
+    // First-run guard: silver held no draw and none was new, so silver
+    // was never written and there is nothing to build gold from (reading
+    // the absent path would throw).
+    if (processed.isEmpty && fresh.isEmpty) return Map.empty
 
     // Gold: read silver back (the canonical source) and rebuild all seven
     // tables with bounded parallelism.

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -518,7 +517,7 @@ object Curation {
         col("text"), lit(3), lit(true))).as("shingle"))
       .distinct()
       .withColumn("w", split(col("shingle"), " "))
-      .persistTracked()
+      .persist()
     // All three rotated blocking passes fused into ONE self-join: each
     // shingle emits its three (pass-tagged) block keys row-locally, so
     // one hot-block cap + one join replace three of each — same
@@ -568,7 +567,7 @@ object Curation {
     // Bounded by 3·|distinct shingles| blocked rows (the semi build-side
     // bound above); eager fill per the fork-cache rule.
     val keep = blocked.join(kept, Seq("bk"), "left_semi")
-      .persistTrackedFilled() // warm-gated (r21) — fill job only when cold
+      .persistFilled()
     // Thresholded levenshtein (banded O(k·n) with early exit, returns -1
     // past the bound) screens every in-block candidate — the hot loop —
     // instead of the full O(n²) DP; the bounded call returns the EXACT

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -448,7 +447,7 @@ object Relational {
     val baskets = t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
-      .persistTracked()
+      .persist()
     // sorted basket ⇒ emitted pairs already satisfy a < b
     val top0 = baskets
       .select(explode(expr(
@@ -459,7 +458,7 @@ object Relational {
       .agg(count(lit(1)).as("n_ab"))
       .orderBy(col("n_ab").desc, col("part_a").asc, col("part_b").asc)
       .limit(20)
-    val top = top0.persistTrackedFilled()
+    val top = top0.persistFilled()
     // r21 cold-build guard (the q147 warm-gated fill convention): the
     // final plan hangs FOUR broadcast builds (parts, counts×2, nOrders)
     // off these caches, and on a cold run their threads raced the
@@ -476,7 +475,7 @@ object Relational {
     val counts = baskets.select(explode(col("ps")).as("l_partkey"))
       .join(broadcast(parts), Seq("l_partkey"))
       .groupBy(col("l_partkey")).agg(count(lit(1)).as("n_p"))
-      .persistTracked()
+      .persist()
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
     top
       .join(broadcast(counts.select(col("l_partkey").as("part_a"), col("n_p").as("n_a"))),

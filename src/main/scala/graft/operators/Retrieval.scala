@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -167,7 +166,7 @@ object Retrieval {
     val sh = t(s, dir, "documents")
       .select(col("doc_id"), explode(call_function("word_shingles",
         col("text"), lit(3), lit(true))).as("shingle"))
-      .persistTracked()
+      .persist()
     val firstSeen = sh.groupBy(col("shingle")).agg(min(col("doc_id")).as("first_doc"))
     sh.join(firstSeen, Seq("shingle"))
       .groupBy(col("doc_id"))
@@ -259,7 +258,7 @@ object Retrieval {
     // a full recompute — the session-owner's clearCache releases it,
     // the same lifecycle as e/nodes.
     val warm = edges0.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    edges0.persistTracked()
+    edges0.persist()
     if (!warm) edges0.count()
     val nodes0 = edges0.select(col("src").as("token"))
       .union(edges0.select(col("dst").as("token"))).distinct()
@@ -268,9 +267,9 @@ object Retrieval {
     // path; the arithmetic is the same elementwise IEEE ops the literal
     // spelling baked in, so values are bit-identical.
     val nv = nodes0.agg(count(lit(1)).as("v"))
-    val nodes = nodes0.crossJoin(broadcast(nv)).persistTracked()
+    val nodes = nodes0.crossJoin(broadcast(nv)).persist()
     val e = edges0.crossJoin(broadcast(nv))
-      .repartition(col("dst")).persistTracked()
+      .repartition(col("dst")).persist()
     // Materialize caches with multiple independent consumers before the
     // lazy chain: sibling AQE stages that scan an unfilled
     // InMemoryRelation concurrently each recompute its child plan —

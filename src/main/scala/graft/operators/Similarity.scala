@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -116,7 +115,7 @@ object Similarity {
         struct(lit(0).as("band"), col("band0").as("key")),
         struct(lit(1).as("band"), col("band1").as("key")))).as("bk"))
       .select(col("vec_id"), col("bk.band"), col("bk.key"))
-      .persistTracked()
+      .persist()
     val a = banded.as("a")
     // shuffle_hash, never broadcast: bucket self-joins partition by the
     // bucket key — a size-based broadcast would pin the quadratic pair
@@ -709,7 +708,7 @@ object Similarity {
     val b = portableSignBits(s, e, 64)
       .select(col("vec_id"), band(0).as("b0"), band(1).as("b1"),
         band(2).as("b2"), band(3).as("b3"))
-      .persistTracked()
+      .persist()
     // only the 10 query vectors can match the truth side — broadcast 10
     // rows, not band keys for the whole corpus
     val qb = b.where(col("vec_id") < 10)
@@ -859,7 +858,7 @@ object Similarity {
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "v0")))
       .select(col("label"), (col("pos0") + 1).cast("int").as("pos"),
         col("v0").cast("double").as("v"))
-      .persistTracked()
+      .persist()
     val byLabel = x.groupBy(col("label"), col("pos")).agg(
       count(lit(1)).as("n_vecs"),
       (sum(col("v").cast(DecimalType(18, 6))).cast("double")

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,7 +93,7 @@ object Stats {
       .agg(count(lit(1)).as("cnt"),
         sum(col("x1")).as("p1"), sum(col("x2")).as("p2"),
         sum(col("x3")).as("p3"), sum(col("x4")).as("p4"))
-      .persistTracked()
+      .persist()
     val modes = partials
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("c_mktsegment"))
@@ -185,7 +184,7 @@ object Stats {
     val daily = t(s, dir, "events")
       .groupBy(col("event_type"), expr(s"ts DIV $DayNs").as("day_idx"))
       .agg(dsum(col("value")).as("v"))
-      .persistTracked()
+      .persist()
     val bounds = daily.agg(min(col("day_idx")).as("mn"), max(col("day_idx")).as("mx"))
     val grid = daily.select(col("event_type")).distinct()
       .crossJoin(broadcast(bounds))
@@ -261,7 +260,7 @@ object Stats {
     val lens = t(s, dir, "documents")
       .select(col("source"), size(split(col("text"), " ")).cast("long").as("l"))
     val bySrcLen = lens.groupBy(col("source"), col("l")).agg(count(lit(1)).as("c_sl"))
-      .persistTracked()
+      .persist()
     val byLen = bySrcLen.groupBy(col("l")).agg(sum(col("c_sl")).as("c_l"))
     val nSrc = bySrcLen.groupBy(col("source")).agg(sum(col("c_sl")).as("n_src"))
     val nAll = bySrcLen.agg(sum(col("c_sl")).as("n_all"))
@@ -508,7 +507,7 @@ object Stats {
     val ut = t(s, dir, "events")
       .select(col("user_id"), col("event_type"))
       .repartition(col("user_id"))
-      .distinct().persistTracked()
+      .distinct().persist()
     val nUsers = ut.select(countDistinct(col("user_id")).as("n_users"))
     val marg = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n_t"))
     val pairs = ut.as("a").join(ut.as("b"),
@@ -811,7 +810,7 @@ object Stats {
         (year(col("o_orderdate")) * 12 + month(col("o_orderdate")))
           .cast("long").as("x"))
       .agg(dsum(col("o_totalprice")).as("y"))
-      .persistTracked()
+      .persist()
     val pairs = m.as("a").join(m.as("b"),
         col("a.priority") === col("b.priority") && col("a.x") < col("b.x"))
       .select(col("a.priority").as("priority"),

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -419,7 +418,7 @@ object Temporal {
       .select(col("s_us"), col("e_us"),
         expr(s"s_us DIV $DayUs").as("s_day"),
         expr(s"e_us DIV $DayUs").as("e_day"))
-      .persistTracked()
+      .persist()
     // r21 (the q85 one-pass symmetrize move, guide §2.4): the old
     // two-branch union scanned the session cache twice (2 × 32 cached
     // partitions per run); one row-local explode emits the same
@@ -648,7 +647,7 @@ object Temporal {
     val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"), expr(s"ts DIV $DayNs").as("day_idx"))
       .agg(dsum(col("value")).as("v"))
-      .persistTracked()
+      .persist()
     val grid = daily.groupBy(col("event_type"))
       .agg(min(col("day_idx")).as("mn"), max(col("day_idx")).as("mx"))
       .select(col("event_type"), explode(expr("sequence(mn, mx)")).as("day_idx"))
@@ -853,7 +852,7 @@ object Temporal {
     val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"), expr(s"ts DIV $DayNs").as("day_idx"))
       .agg(dsum(col("value")).as("v"))
-      .persistTracked()
+      .persist()
     // Day-span AND moments in ONE agg over the (persisted, tiny) daily
     // frame (r15, was two passes with the second one re-deriving the
     // grid join): gap days enter both decimal sums as exact zeros and
@@ -956,7 +955,7 @@ object Temporal {
     val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"), expr(s"ts DIV $DayNs").as("day_idx"))
       .agg(dsum(col("value")).as("v"))
-      .persistTracked()
+      .persist()
     // same one-pass span+moment fusion as q164 (gap days are exact zeros
     // in the decimal sum; the grid count is the span)
     val stats = daily.groupBy(col("event_type")).agg(
@@ -1058,7 +1057,7 @@ object Temporal {
     val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"), expr(s"ts DIV $DayNs").as("day_idx"))
       .agg(dsum(col("value")).as("v"))
-      .persistTracked()
+      .persist()
     val grid = daily.groupBy(col("event_type"))
       .agg(min(col("day_idx")).as("mn"), max(col("day_idx")).as("mx"))
       .select(col("event_type"), explode(expr("sequence(mn, mx)")).as("day_idx"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.CacheScope.PersistTracked
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -307,16 +306,13 @@ object TextOps {
     * semi carries no broadcast hint (the rep set is corpus-sized under
     * independent structure — the q139 lesson; the size-based planner
     * degrades it to a shuffle join gracefully).
-    * Cache contract (r19, advisor): `ids` is persisted here (several
-    * consumers read it — the expansion joins, the same-content branch)
-    * and consumers' banded frames persist in their own builders; none of
-    * them can unpersist before returning without defeating the reuse the
-    * persist exists for, so the SESSION OWNER releases them — the
-    * Bench/Verify/BenchScale `clearCache()`-between-queries convention.
-    * r20: embedding API users get the mechanical alternative — run the
-    * query inside [[graft.CacheScope.scoped]] and every builder-persisted
-    * frame (all persists go through `persistTracked()`) is released when
-    * the block exits (CacheHygieneSpec).
+    * Cache contract: `ids` is persisted here (several consumers read
+    * it — the expansion joins, the same-content branch) and consumers'
+    * banded frames persist in their own builders. The returned plan reads
+    * these caches, so no builder can unpersist before returning; the
+    * session owner releases them with `spark.catalog.clearCache()` once
+    * the query is consumed (Bench/Verify/BenchScale do so between
+    * queries; operators/CacheHygieneSpec).
     */
   /** CPU-dense doc_id text exchange with a PINNED partition count (r18):
     * AQE's coalescer sizes partitions by BYTES, so a small corpus's text
@@ -341,7 +337,7 @@ object TextOps {
       .agg(min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("ids"))
       .select(col("rep"), col("ids"))
-      .persistTracked()
+      .persist()
     val reps = byDoc(docs.select(col("doc_id"), col("text")))
       .join(ids.select(col("rep").as("doc_id")), Seq("doc_id"), "left_semi")
     (ids, reps)
@@ -413,7 +409,7 @@ object TextOps {
     val joined = pairs
       .join(ids.select(col("rep").as("ra"), col("ids").as("ids_a")), Seq("ra"))
       .join(ids.select(col("rep").as("rb"), col("ids").as("ids_b")), Seq("rb"))
-      .persistTracked()
+      .persist()
     // Eager fill (see minhashCandidates) doubling as the DEGENERACY PROBE:
     // when no row exceeds the bound — every audited corpus — the degenerate
     // branch is elided from the plan entirely (no empty exchange stage, no
@@ -456,7 +452,7 @@ object TextOps {
     // Fork-point cache + degeneracy probe — same rule as expandRepPairs
     // (r20b): the probe fills the cache AND elides the degenerate branch
     // when it is empty.
-    val r = rows.persistTracked()
+    val r = rows.persist()
     val nDeg = r.where(size(col("ids")) > seg).count()
     val normal = r.where(size(col("ids")) <= seg)
       .select(p :+ explode(col("ids")).as("da") :+ col("ids"): _*)
@@ -563,7 +559,7 @@ object TextOps {
       explode(array((0 until MinhashBands).map(b =>
         struct(lit(b).as("band"), col(s"band$b").as("key"))): _*)).as("bk"))
       .select(col("doc_id"), col("bk.band"), col("bk.key"))
-      .persistTrackedFilled()
+      .persistFilled()
     // warm-gated eager fill (q147 cold-build convention, gated r21):
     // sibling AQE stages that scan an UNFILLED InMemoryRelation
     // concurrently each recompute its child plan — the self-join's two
@@ -654,7 +650,7 @@ object TextOps {
     // cannot occur, and the count job was one full cached re-scan per
     // run for nothing (32 tasks, ~1 s summed runMs, warm;
     // OPTIMIZATION_r21.md).
-    val arr = units.persistTracked()
+    val arr = units.persist()
     val dfAgg = weightCol match {
       case Some(w) => arr.select(explode(col("arr")).as("shingle"), col(w))
         .groupBy(col("shingle"))
@@ -747,9 +743,9 @@ object TextOps {
     // and InMemoryTableScan preserves the cached exchange's
     // HashPartitioning(shingle), so neither side re-shuffles. Bounded by
     // Σ postings (the same class as the `arr` cache above it); the
-    // session owner / CacheScope releases it.
+    // session owner's clearCache() releases it.
     val keyed = keepN.repartition(parts, col("shingle"))
-      .persistTrackedFilled() // sibling AQE stages must not race it cold
+      .persistFilled() // sibling AQE stages must not race it cold
     val a = keyed.select(Seq(col(idCol).as(aName), col("shingle"),
       col("n_sh").as("n_a")) ++ weightCol.map(w => col(w).as("w_a")): _*)
     val b = keyed.select(Seq(col(idCol).as(bName), col("shingle"),
@@ -820,7 +816,7 @@ object TextOps {
       .select(col("rep").as("ra"), col("rep").as("rb"),
         col("n_sh").cast("long").as("common"), lit(1.0).as("jaccard"),
         (col("copies") * (col("copies") - 1) / lit(2)).cast("long").as("mult"))
-    val cand = cross.unionByName(same).persistTracked()
+    val cand = cross.unionByName(same).persist()
     // threshold: smallest jaccard needed to cover 20 doc pairs (collect
     // is ≤20 rows by construction)
     val top = cand.select(col("jaccard"), col("mult"))
@@ -892,7 +888,6 @@ object TextOps {
     * (OPTIMIZATION_r21.md, exceptAll = 0 both directions).
     */
   def qLangId(s: SparkSession, dir: String): DataFrame = {
-    import graft.CacheScope.PersistTracked
     val docs = t(s, dir, "documents")
     val langs = Seq("de", "en", "es", "fr", "zh")
     val tok = docs.select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("token"))
@@ -905,7 +900,7 @@ object TextOps {
     // vocab × langs — the same class as the profile broadcast built from
     // it); consumers: the two driver collects + the pivot.
     val tf = train.groupBy("lang", "token").agg(count(lit(1)).as("tf"))
-      .persistTracked()
+      .persist()
     // lang_n = per-lang train token count = Σ tf (exact integers);
     // V = distinct train tokens = tf's distinct token count (every train
     // token appears in tf by construction). Both bounded collects.
@@ -964,7 +959,7 @@ object TextOps {
     // persisted: consumed by both self-join sides — without it the 64-vote
     // aggregation over every distinct-text token recomputes per consumer
     val bands = simhashBandsOf(reps).withColumnRenamed("doc_id", "rep")
-      .persistTrackedFilled() // warm-gated eager fill — see minhashCandidates
+      .persistFilled()
     // Each banded row carries ALL four band values alongside its blocking
     // key, so the exact hamming is computable straight off the self-join
     // output — no joins back to the signature table. The payload is 4 ints
@@ -993,7 +988,7 @@ object TextOps {
       // exchanges are never cache entries). Lazy: the first consumer
       // fills it, so single-consumer callers (q55/q56 ride their own
       // fork-point cache above this) pay one memory write, no extra job.
-      .persistTracked()
+      .persist()
     (pairs, ids, bands.select(col("rep")))
   }
 
@@ -1057,7 +1052,7 @@ object TextOps {
     // signature aggregation over all distinct-text shingles runs twice.
     val bands = minhashBandsOf(reps).withColumnRenamed("doc_id", "rep")
       .join(ids.select(col("rep"), size(col("ids")).cast("long").as("n")), Seq("rep"))
-      .persistTrackedFilled() // warm-gated eager fill — see minhashCandidates
+      .persistFilled()
     val banded = bands.select(col("rep"), col("n"),
       explode(array((0 until MinhashBands).map(b =>
         struct(lit(b).as("b"), col(s"band$b").as("k"))): _*)).as("bk"))
@@ -1073,7 +1068,7 @@ object TextOps {
       // run re-ran the banded self-join's BOTH map sides (twin 8.0 s +
       // 4.2 s runMs stages per run, OPTIMIZATION_r20.md). Lazy — q56 rides its
       // expandRepPairs fork cache and just pays one memory write.
-      .persistTracked()
+      .persist()
     (pairs, ids, bands.select(col("rep")))
   }
 
@@ -1154,7 +1149,7 @@ object TextOps {
         struct(col("a").as("a"), col("b").as("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
-      .distinct().persistTracked()
+      .distinct().persist()
     // one count: materializes the (often expensive) pair miner into the
     // cache exactly once AND prices the graph for the plan choice
     val nEdges = sym.count()
@@ -1617,7 +1612,7 @@ object TextOps {
     // Warm-gated fill: the denom broadcast build and the scoring join
     // must not race it cold.
     val counts = train.groupBy(col("token")).agg(count(lit(1)).as("c"))
-      .persistTrackedFilled()
+      .persistFilled()
     val denom = counts.agg(coalesce(sum(col("c")), lit(0L)).as("n_train"))
       .crossJoin(counts.agg(count(lit(1)).as("v")))
     tok.where(col("doc_id") % 2 === 1)
@@ -2085,7 +2080,7 @@ object TextOps {
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("rep"))
       .agg(collect_list(struct(col("source"), col("cnt"))).as("srcs"))
-      .persistTrackedFilled() // warm-gated eager fill — see minhashCandidates
+      .persistFilled()
     // r17 cliff rule, carried over: only the pair KEY SET is
     // output-bounded, so only it broadcasts (the content-pair frame is
     // strictly ≤ the doc-pair frame the old spelling broadcast); the
@@ -2571,7 +2566,7 @@ object TextOps {
     // one bigram shuffle: total and top-20 both derive from the persisted
     // counts frame (a second corpus scan for N would double the heavy work)
     val bgCounts = bg.groupBy(col("a"), col("b")).agg(count(lit(1)).as("c_ab"))
-      .persistTracked()
+      .persist()
     val nBi = bgCounts.agg(sum(col("c_ab")).as("n_bi"))
     val top = bgCounts
       .orderBy(col("c_ab").desc, col("a").asc, col("b").asc)
@@ -2593,7 +2588,7 @@ object TextOps {
     // Measured at the 100× independent corpus (BASELINE.md): broadcast-uni
     // 4.7 s warm / semi-above-agg pivot 6.3 s / this token-level semi ≈
     // the broadcast spelling, with the hard broadcast ceiling gone.
-    val topC = top.persistTrackedFilled()
+    val topC = top.persistFilled()
     // r21 cold-build guard (the q147 warm-gated fill convention): the
     // final plan hangs nBi + wanted + uniTop×2 off broadcast builds whose
     // threads raced the unfilled bgCounts/topC caches on a cold run and
@@ -2610,7 +2605,7 @@ object TextOps {
       .where(col("w") =!= "")
       .join(broadcast(wanted), Seq("w"), "left_semi")
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
-    val uniTop = uniTop0.persistTrackedFilled()
+    val uniTop = uniTop0.persistFilled()
     topC
       .join(broadcast(uniTop.select(col("w").as("a"), col("cw").as("c_a"))), Seq("a"))
       .join(broadcast(uniTop.select(col("w").as("b"), col("cw").as("c_b"))), Seq("b"))
@@ -2753,7 +2748,7 @@ object TextOps {
         .as(s"band$b")
     }
     val sigB = sig.select(col("doc_id").as("rep") +: col("arr") +:
-      ((0 until MinhashK).map(i => col(s"m$i")) ++ bands): _*).persistTracked()
+      ((0 until MinhashK).map(i => col(s"m$i")) ++ bands): _*).persist()
     val banded = sigB.select(col("rep"),
       explode(array((0 until MinhashBands).map(b =>
         struct(lit(b).as("b"), col(s"band$b").as("k"))): _*)).as("bk"))
@@ -2776,7 +2771,7 @@ object TextOps {
     // est/common/jaccard are row-local array arithmetic — zip_with
     // equality count for the estimate, array_intersect size for true
     // overlap.
-    val candB = cand.persistTracked()
+    val candB = cand.persist()
     def side(key: String, sfx: String) = sigB
       .select(col("rep").as(key),
         array((0 until MinhashK).map(i => col(s"m$i")): _*).as(s"sig$sfx"),
@@ -3005,7 +3000,7 @@ object TextOps {
     // the distinct-domain frame persists so WARM builds read a ≤64-row
     // cache instead of re-scanning the source column per run
     val srcArr = docs.select(col("source")).where(col("source").isNotNull)
-      .distinct().persistTracked().collect().map(_.getString(0)).sorted
+      .distinct().persist().collect().map(_.getString(0)).sorted
     if (srcArr.isEmpty || srcArr.length > 64)
       return sourceOverlapSets(docs)
     val maskMap = srcArr.zipWithIndex.map { case (s, i) => s -> (1L << i) }.toMap
@@ -3029,7 +3024,7 @@ object TextOps {
       .groupBy(col("shingle").as("sh"))
       .agg(expr("bit_or(mask)").as("m"))
       .groupBy(col("m")).agg(count(lit(1)).as("c"))
-      .persistTrackedFilled()
+      .persistFilled()
     val bits = expr(s"filter(sequence(0, ${srcArr.length - 1}), " +
       "i -> ((m >> i) & 1) = 1)")
     // a null-source doc carries a null mask; bit_or skips nulls, and an
@@ -3070,7 +3065,7 @@ object TextOps {
           col("text"), lit(3), lit(true))).as("shingle"))
       .groupBy(col("shingle").as("sh"))
       .agg(array_sort(collect_set(col("source"))).as("srcs"))
-      .persistTracked()
+      .persist()
     val sizes = bySh.select(explode(col("srcs")).as("source"))
       .groupBy(col("source")).agg(count(lit(1)).as("n_sh"))
     bySh.where(size(col("srcs")) >= 2)
@@ -3137,7 +3132,7 @@ object TextOps {
       .where(col("token") =!= "")
     val counts = posTok.groupBy(col("pos"), col("token"))
       .agg(count(lit(1)).as("c"))
-      .persistTracked()
+      .persist()
     val w = Window.partitionBy(col("pos"))
       .orderBy(col("c").desc, col("token").asc)
     counts
@@ -3199,7 +3194,7 @@ object TextOps {
       .withColumn("n", sum(col("c")).over(Window.partitionBy(col("source"))))
       .select(col("source"), col("token"),
         (col("c").cast("double") / col("n")).as("p"))
-      .persistTracked()
+      .persist()
     val scalars = p.groupBy(col("source")).agg(
       sum(round(col("p") * log(col("p")), 9).cast(DecimalType(28, 9)))
         .cast("double").as("e"),
@@ -3386,7 +3381,7 @@ object TextOps {
     val tok = t(s, dir, "documents")
       .select(col("source"), explode(toks(col("text"))).as("token"))
     val cst = tok.groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
-      .persistTrackedFilled()
+      .persistFilled()
     // r21 cold-build guard (the q147 warm-gated fill convention): the
     // grid pipeline hangs top/kdf/stats off broadcast builds whose
     // threads raced the unfilled cst cache on a cold run and replayed the
@@ -3419,7 +3414,7 @@ object TextOps {
     val z = grid.join(broadcast(stats), Seq("token"))
       .select(col("source"), col("token"),
         round((col("f") - col("mu")) / sqrt(col("variance")), 6).as("z"))
-      .persistTracked()
+      .persist()
     z.as("a").join(z.as("b"),
         col("a.token") === col("b.token") && col("a.source") < col("b.source"))
       .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))

@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r20 (VERDICT r19 #3): builders persist multi-consumer intermediates and
-  * the SESSION OWNER was the only release point (the mains' clearCache
-  * convention). CacheScope.scoped makes release mechanical for embedding
-  * API users; these tests pin the contract on the heaviest cache users —
-  * the content-dedup layer (q49/q55), the posting core, and the fuzzy
-  * blocking vocabulary (q116).
+/** Builders persist multi-consumer intermediates and the session owner is
+  * the only release point (the mains' clearCache convention). This pins
+  * that convention on the content-dedup layer (q55): its persisted frames
+  * stay cached after the query returns, and clearCache releases them.
   */
 class CacheHygieneSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -16,62 +13,13 @@ class CacheHygieneSpec extends AnyFunSuite {
 
   private def cacheEmpty: Boolean = spark.sharedState.cacheManager.isEmpty
 
-  test("scoped {} releases every builder-persisted frame after the consuming action") {
-    spark.catalog.clearCache()
-    assert(cacheEmpty)
-    val out = CacheScope.scoped {
-      val top = SparkEntry.queries("q49_jaccard_top_pairs")(spark, dir).collect()
-      val dups = SparkEntry.queries("q55_simhash_near_dups")(spark, dir).collect()
-      val fuzzy = SparkEntry.queries("q116_fuzzy_pairs")(spark, dir).collect()
-      assert(!cacheEmpty, "builders should persist INSIDE the scope")
-      (top.length, dups.length, fuzzy.length)
-    }
-    assert(out._1 > 0)
-    assert(cacheEmpty,
-      "cache entries survived CacheScope.scoped — a builder persists " +
-        "outside persistTracked(), or release was skipped")
-  }
-
-  test("scoped {} releases on failure too") {
-    spark.catalog.clearCache()
-    intercept[RuntimeException] {
-      CacheScope.scoped {
-        SparkEntry.queries("q55_simhash_near_dups")(spark, dir).count()
-        sys.error("consumer blew up")
-      }
-    }
-    assert(cacheEmpty, "failure path must still unpersist tracked frames")
-  }
-
   test("outside a scope the session-owner convention is unchanged") {
     spark.catalog.clearCache()
     SparkEntry.queries("q55_simhash_near_dups")(spark, dir).count()
     assert(!cacheEmpty,
-      "un-scoped builders must keep their persisted frames alive (the " +
-        "returned plan references them; Bench/Verify clearCache between queries)")
+      "builders must keep their persisted frames alive (the returned plan " +
+        "references them; Bench/Verify clearCache between queries)")
     spark.catalog.clearCache()
-    assert(cacheEmpty)
-  }
-
-  test("nested scopes release only their own frames") {
-    import spark.implicits._
-    import CacheScope.PersistTracked
-    spark.catalog.clearCache()
-    import org.apache.spark.storage.StorageLevel
-    CacheScope.scoped {
-      val outer = Seq(1, 2, 3).toDF("a").persistTracked()
-      outer.count()
-      val inner = CacheScope.scoped {
-        val i = Seq(4, 5).toDF("b").persistTracked()
-        i.count()
-        i
-      }
-      // inner released, outer still cached
-      assert(inner.storageLevel == StorageLevel.NONE,
-        "inner scope's frame must be unpersisted at inner scope exit")
-      assert(outer.storageLevel != StorageLevel.NONE,
-        "outer frame must survive the inner scope")
-    }
     assert(cacheEmpty)
   }
 }

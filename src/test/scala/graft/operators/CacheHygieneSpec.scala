@@ -27,13 +27,19 @@ class CacheHygieneSpec extends AnyFunSuite {
     val base = cachedRddIds
     // q180 (join-free since r17 — kept as a no-cache control),
     // q105 (rides the persisted simhash band table), q147 (persisted
-    // edge/node frames feeding the lazy iteration chain).
+    // edge/node frames feeding the lazy iteration chain), q55 (the
+    // persisted content-dedup layer and band table). The persisting
+    // builders must still hold their frames when the query returns: the
+    // returned plan reads them, and only the session owner releases them.
     val heavy = Seq(
-      "q180" -> ((d: String) => Curation.qSubstringDedup(spark, d)),
-      "q105" -> ((d: String) => TextOps.qDupSourceMatrix(spark, d)),
-      "q147" -> ((d: String) => Retrieval.qTokenPagerank(spark, d)))
-    for (_ <- 1 to 3; (name, fn) <- heavy) {
+      ("q180", false, (d: String) => Curation.qSubstringDedup(spark, d)),
+      ("q105", true, (d: String) => TextOps.qDupSourceMatrix(spark, d)),
+      ("q147", true, (d: String) => Retrieval.qTokenPagerank(spark, d)),
+      ("q55", true, (d: String) => TextOps.qSimhashNearDupPairs(spark, d)))
+    for (_ <- 1 to 3; (name, persists, fn) <- heavy) {
       assert(fn(dir).count() > 0, s"$name returned no rows")
+      if (persists) assert((cachedRddIds -- base).nonEmpty,
+        s"$name returned without its persisted frames cached")
       spark.catalog.clearCache()
       val leaked = cachedRddIds -- base
       assert(leaked.isEmpty,
