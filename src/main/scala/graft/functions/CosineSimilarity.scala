@@ -106,12 +106,6 @@ object GraftFunctions {
       s"cosine_similarity expects 2 arguments, got ${exprs.length}")
   }
 
-  private val arraySumLongBuilder: Seq[Expression] => Expression = {
-    case Seq(a) => ArraySumLong(a)
-    case exprs => throw new IllegalArgumentException(
-      s"array_sum_long expects 1 argument (array<bigint>), got ${exprs.length}")
-  }
-
   /** Graft spellings of the internal expressions Spark's runtime
     * bloom-filter join plans with (`BloomFilterAggregate` /
     * `BloomFilterMightContain`) — exposed as first-class functions so the
@@ -168,8 +162,6 @@ object GraftFunctions {
       "bloom_agg", bloomAggBuilder, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "bloom_might_contain", bloomMightContainBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_sum_long", arraySumLongBuilder, "scala_udf")
     FrequentItems.register(spark)
   }
 }

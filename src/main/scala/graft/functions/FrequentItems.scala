@@ -23,10 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * > n/(k+1) is present, and each estimate undercounts by at most
   * n/(k+1). That makes the sketch a CANDIDATE GENERATOR: a second exact
   * pass over just the ≤k candidates turns the approximate summary into an
-  * exact, deterministic top-k — the shape q103 runs, so the final answer
-  * never depends on partitioning even though per-partition sketches do.
+  * exact, deterministic top-k — the shape of the q103/q114 overflow
+  * fallback, so the final answer never depends on partitioning even
+  * though per-partition sketches do.
   *
-  * Exactness certificate (r14): [[err]] tracks the cumulative amount any
+  * Exactness certificate: [[err]] tracks the cumulative amount any
   * single counter can have been decremented by (update's decrement-all
   * rounds add 1 each; merge compaction adds the subtracted pivot; merge
   * sums the peers' errs). `err == 0` therefore certifies that NO
@@ -34,10 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * item is still present and every counter is its EXACT count. Running
   * the sketch with a capacity well above the expected key cardinality
   * (see `mg_freq_text(text, k, cap)`) turns the candidate generator into
-  * a single-pass exact top-k whenever the corpus vocabulary fits, with
-  * the two-pass recount as the certified fallback when it doesn't — the
-  * adaptivity is free because `err` is a by-product of work MG already
-  * does. For a non-exact sketch, `err` is also an upper bound on the
+  * a single-pass exact top-k whenever the corpus vocabulary fits; `err`
+  * is a by-product of work MG already does. For a non-exact sketch, `err` is also an upper bound on the
   * true count of any item absent from the counters (it can only have
   * been evicted by decrements totalling ≤ err).
   */
@@ -115,22 +114,6 @@ final class MgSketch(val k: Int) extends Serializable {
     var i = 0
     counters.forEach { (it, c) => out(i) = (it.toString, c.v); i += 1 }
     out.sortBy { case (it, c) => (-c, it) }
-  }
-
-  /** Upper bound on the TRUE count of any item outside the top `kOut`
-    * counters: an untruncated counter's true count is ≤ est + err ≤
-    * est(kOut+1) + err, and an absent item's is ≤ err. With `err == 0`
-    * and no truncation this is 0 — the single-pass exactness case.
-    */
-  def boundBeyond(kOut: Int): Long = {
-    if (counters.size <= kOut) err
-    else {
-      val vals = new Array[Long](counters.size)
-      var i = 0
-      counters.forEach { (_, c) => vals(i) = c.v; i += 1 }
-      java.util.Arrays.sort(vals)
-      err + vals(vals.length - (kOut + 1)) // (kOut+1)-th largest est
-    }
   }
 
   def serialize(): Array[Byte] = {
@@ -253,37 +236,28 @@ case class MgFreq(
   * in place (maximal non-space runs, the repo-wide token contract — the
   * same loop as [[TokenTermCounts]]), feeding each token to the sketch
   * as a zero-copy UTF8String view. Returns `struct<n: bigint, err:
-  * bigint, bound: bigint, items: array<struct<item,est>>>`:
+  * bigint, items: array<struct<item,est>>>`:
   *  - `n` — the EXACT non-empty token count of the absorbed stream
-  *    (MgSketch counts absorbed items), so the two-pass heavy-hitters
-  *    plans get their guarantee denominator from the same scan instead
-  *    of a separate corpus pass;
+  *    (MgSketch counts absorbed items);
   *  - `err` — the sketch's exactness certificate ([[MgSketch.err]]):
   *    `err == 0` proves no eviction ever fired, so every `est` in
   *    `items` is an EXACT count and no item outside the sketch was ever
-  *    seen — the caller can skip its recount pass entirely;
-  *  - `bound` — `boundBeyond(k)`: an upper bound on the true count of
-  *    any token NOT in `items`, the certification floor for the
-  *    two-pass fallback (strictly tighter than the classic n/(k+1)
-  *    when cap ≫ k);
+  *    seen;
   *  - `items` — the top-`k` counters, (est DESC, item ASC).
   *
-  * `cap` (optional, default `k`) is the sketch CAPACITY — the MG
-  * counter budget, decoupled from the returned arity `k` (r14). Running
-  * with `cap` well above the corpus vocabulary (e.g. 1<<16 for word
-  * tokens — a few MB of counter state per aggregation buffer, constant
-  * w.r.t. data size) makes `err == 0` the common case, turning the
-  * two-pass heavy-hitters shape into a certified SINGLE pass; when the
-  * vocabulary overflows `cap` the sketch degrades gracefully to the
-  * classic MG candidate generator with error ≤ n/(cap+1).
+  * `cap` (optional, default `k`) is the sketch CAPACITY, the MG counter
+  * budget, separate from the returned arity `k`. With `cap` well above
+  * the corpus vocabulary (1<<16 for word tokens: a few MB of counter
+  * state per aggregation buffer, whatever the data size) `err == 0` is
+  * the common case, and q103/q114 certify their top-k in a single pass.
+  * When the vocabulary overflows `cap`, the sketch is the classic MG
+  * summary, with error ≤ n/(cap+1).
   *
-  * Why this exists (r13, BASELINE "MG constant factor"): the exploded
-  * spelling `explode(split(text,' ')) … mg_freq(token, k)` pays a row
-  * through the aggregate iterator, a String decode, and a boxed map
-  * probe PER TOKEN — measured as the dominant term of q103/q114 at 10×
-  * data. Here the per-token cost is one in-place map probe; only a new
-  * counter entry (≤cap live, amortized by MG's decrement-all) allocates.
-  * Decision parity with the exploded spelling is spec-pinned
+  * Per-token cost is one in-place map probe; only a new counter entry
+  * (≤cap live, amortized by MG's decrement-all) allocates. The exploded
+  * spelling `explode(split(text,' ')) … mg_freq(token, k)` instead pays a
+  * row through the aggregate iterator, a String decode and a map probe
+  * per token. Parity with that spelling is spec-pinned
   * (FrequentItemsSpec): same sketch semantics, same candidates.
   */
 case class MgFreqText(
@@ -316,7 +290,6 @@ case class MgFreqText(
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("err", LongType, nullable = false),
-    StructField("bound", LongType, nullable = false),
     StructField("items", ArrayType(
       StructType(Seq(
         StructField("item", StringType, nullable = false),
@@ -338,7 +311,7 @@ case class MgFreqText(
   }
 
   override def eval(buffer: MgSketch): Any =
-    InternalRow(buffer.count, buffer.err, buffer.boundBeyond(outK),
+    InternalRow(buffer.count, buffer.err,
       new GenericArrayData(buffer.topItems.take(outK).map { case (it, c) =>
         InternalRow(UTF8String.fromString(it), c)
       }))

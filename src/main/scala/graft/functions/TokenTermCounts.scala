@@ -109,10 +109,9 @@ case class TokenTermCounts(left: Expression, right: Expression)
   override def prettyName: String = "token_term_counts"
 }
 
-/** Per-byte-length index over a term list (r13): the per-token inner loop
+/** Per-byte-length index over a term list: the per-token inner loop
   * visits only terms whose byte length equals the token's, so a WIDE term
-  * list — e.g. the union of per-group heavy-hitter candidates, hundreds of
-  * terms — costs ~|same-length terms| byte-compares per token instead of
+  * list costs ~|same-length terms| byte-compares per token instead of
   * |terms| length checks. Built once per plan and shipped to executors as
   * a codegen reference object. Top-level class so generated Java can name
   * it.
@@ -189,8 +188,4 @@ object TokenTermCounts {
     }
     new GenericArrayData(out)
   }
-
-  /** Compat overload (specs / ad-hoc callers): builds the index per call. */
-  def count(s: UTF8String, terms: Array[Array[Byte]]): ArrayData =
-    count(s, new TermTable(terms))
 }

@@ -152,35 +152,20 @@ object Curation {
       |FROM documents d JOIN m ON d.source = m.source
       |GROUP BY d.source""".stripMargin
 
-  /** q114: per-group exact heavy hitters — certified SINGLE pass (r14).
-    * q103's Misra-Gries shape composed under `groupBy(source)`: one
-    * fused-tokenization MG sketch PER SOURCE
-    * ([[graft.functions.MgFreqText]] under a grouped agg, capacity
-    * 1<<16 decoupled from the returned arity 5), with each source's
-    * exactness certificate (`err == 0` — no eviction ever fired for
-    * that source's sketch) checked lazily INSIDE the plan: a certified
-    * source's (est DESC, item ASC)-ordered head IS its exact top-5, and
-    * a source whose vocabulary overflowed the capacity raises a
-    * deterministic refusal naming [[qGroupHeavyHittersDistributed]],
-    * the collect-free sketch-then-recount spelling that stays exact for
-    * any vocabulary whose per-source top-5 clears the classic MG floor.
+  /** q114: per-group exact heavy hitters in one certified pass. One
+    * fused-tokenization Misra-Gries sketch per source
+    * ([[graft.functions.MgFreqText]], capacity 1<<16, returned arity 5).
+    * A source whose sketch never evicted (`err == 0`) has exact
+    * estimates, so its (est DESC, item ASC) head IS its exact top-5, and
+    * a source with fewer than 5 types returns its true shorter list. The
+    * check runs inside the plan at every execution. A source whose
+    * vocabulary overflows the capacity raises, naming
+    * [[qGroupHeavyHittersRecount]]. A NULL source is a group like any
+    * other, as in the SQL oracle.
     *
-    * This retires the r13 eager machinery wholesale rather than
-    * patching it (kept as [[qGroupHeavyHittersTwoPass]], parity
-    * spec-pinned): no driver collect, so no source-cardinality budget;
-    * no literal candidate map, so NULL sources are just another group
-    * (they return their true top-5 like the DuckDB oracle instead of
-    * refusing); no build-time snapshot, so the advisor's
-    * vanished-source witness gap cannot exist — the plan re-certifies
-    * against the corpus as it stands at every execution. A source with
-    * genuinely fewer than 5 distinct types returns its true (<5) rows
-    * (the certificate proves the short answer is the whole answer).
-    *
-    * Scale: ONE scan; the grouped aggregate holds min(vocab, cap)
-    * counters per live source per partition (the counter map grows
-    * lazily to the OBSERVED vocabulary — a few MB at word-token
-    * vocabularies) and the shuffle ships one such sketch per (source,
-    * partition); the explode touches ≤5 rows per source.
+    * Scale: one scan; each aggregation buffer holds at most
+    * min(vocab, cap) counters, and the shuffle ships one sketch per
+    * (source, partition).
     */
   def qGroupHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -200,223 +185,74 @@ object Curation {
           lit(": sketch capacity overflowed (err "),
           col("r.err").cast("string"),
           lit(s") — vocabulary exceeds $cap types, single-pass "),
-          lit("exactness unprovable; use qGroupHeavyHittersDistributed"))))))
+          lit("exactness unprovable; use qGroupHeavyHittersRecount"))))))
       .select(col("source"), (col("pos") + 1).as("rank"),
         col("col.item").as("token"), col("col.est").as("cnt"))
   }
 
-  /** The eager two-pass q114 spelling — the r13 shape, retained as the
-    * fallback for corpora where some source's vocabulary overflows the
-    * certified single pass's capacity but its top-5 still clears the
-    * sketch's non-candidate bound: one grouped capacity-cap sketch pass
-    * (eager, budget-gated driver collect of the per-source candidate
-    * rows), then — unless every source certified exact, in which case
-    * the answer is baked with a narrow per-source doc-count + n_chars
-    * witness scan — ONE fused recount scan against the union of all
-    * sources' candidates, with the per-source top-5 selected by an
-    * array sort over that source's candidate slots and certified
-    * strictly above its source's bound (est(k+1th) + err). The pass-1
-    * source list is full-outer-joined back into the recount frame
-    * (r14, advisor) so a source deleted — or added — between the
-    * passes surfaces as a guard raise rather than a silent omission;
-    * `posexplode_outer` keeps short/empty candidate lists on the guard
-    * path too. Falls back to [[qGroupHeavyHittersDistributed]] when the
-    * source cardinality exceeds the collect budget or a NULL source
-    * can't key the literal candidate map.
+  /** q114's fallback for a source whose vocabulary overflows
+    * [[qGroupHeavyHitters]]'s capacity: the exact per-source top-5 from
+    * `k` Misra-Gries candidates per source, see [[heavyHittersRecount]].
     */
-  def qGroupHeavyHittersTwoPass(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val k = 64
-    val cap = 1 << 16
-    // Budget on the eager per-source candidate collect: `source` is a
-    // corpus-origin label (cardinality ~tens by nature), so the O(n_src
-    // × k) collect is metadata-sized — but the bound is DATA-dependent,
-    // so it is budget-gated with the distributed spelling as fallback,
-    // the same policy as q85's union-find collect.
-    val srcBudget = 256
-    // Pass 1 (eager, r13): per-source fused-tokenization sketch — one
-    // narrow scan, no explode, one result row per source. The witness
-    // pair (doc count, n_chars sum) rides the same scan.
-    val docsT = t(s, dir, "documents")
-    val hasChars = docsT.columns.contains("n_chars")
-    val charsAgg =
-      if (hasChars) coalesce(sum(col("n_chars")), lit(0L)) else lit(0L)
-    val sk = docsT.groupBy(col("source"))
-      .agg(expr(s"mg_freq_text(text, $k, $cap)").as("r"),
-        count(lit(1)).as("docs"), charsAgg.as("chars"))
-      .select(col("source"), col("r.n").as("n"),
-        expr("transform(r.items, x -> x.item)").as("cands"),
-        col("r.err").as("err"), col("r.bound").as("bound"),
-        expr("transform(r.items, x -> x.est)").as("ests"),
-        col("docs"), col("chars"))
-    val srcRows = sk.limit(srcBudget + 1).collect()
-    val union = srcRows.flatMap(_.getSeq[String](2)).distinct.toSeq
-    // null-source rows can't key the literal candidate map (CreateMap
-    // rejects null keys) — the distributed spelling's left-join miss
-    // reaches its guard for them instead
-    if (srcRows.length > srcBudget || union.isEmpty ||
-        srcRows.exists(_.isNullAt(0)))
-      return qGroupHeavyHittersDistributed(s, dir, k)
-    if (srcRows.forall(_.getLong(3) == 0L)) {
-      // Certified single pass: every source's sketch is exact — bake the
-      // per-source top-5 and verify the snapshot with one narrow scan
-      // (source + n_chars columns only, no text re-tokenization).
-      val nSrc0 = srcRows.length
-      val baked = array(srcRows.map { r =>
-        val top = r.getSeq[String](2).zip(r.getSeq[Long](5)).take(5)
-        struct(
-          lit(r.getString(0)).as("source"),
-          lit(r.getLong(6)).as("docs0"),
-          lit(r.getLong(7)).as("chars0"),
-          array(top.map { case (tok, cnt) =>
-            struct(lit(tok).as("token"), lit(cnt).as("cnt")) }: _*)
-            .cast("array<struct<token: string, cnt: bigint>>").as("items"))
-      }.toSeq: _*)
-      return docsT.groupBy(col("source"))
-        .agg(count(lit(1)).as("d"), charsAgg.as("ch"))
-        .agg(map_from_entries(collect_list(
-          struct(col("source"), struct(col("d"), col("ch"))))).as("m"))
-        .select(col("m"), posexplode(baked).as(Seq("spos", "sc")))
-        .select(col("sc.source").as("source"),
-          // witness per exploded row: the execution-time source map must
-          // have the same cardinality (no new sources), contain this
-          // source (not vanished), and agree on its (docs, chars) pair
-          (size(col("m")) === nSrc0 &&
-            element_at(col("m"), col("sc.source"))("d") === col("sc.docs0") &&
-            element_at(col("m"), col("sc.source"))("ch") === col("sc.chars0"))
-            .as("ok"),
-          posexplode(col("sc.items")))
-        .select(col("source"), (col("pos") + 1).as("rank"),
-          col("col.token").as("token"),
-          when(col("ok"), col("col.cnt"))
-            .otherwise(raise_error(concat(
-              lit("q114 snapshot witness violated for source "),
-              coalesce(col("source"), lit("<null>")),
-              lit(" (the corpus changed between sketch and execution — "),
-              lit("rebuild the query)")))).as("cnt"))
-    }
-    // Pass 2: ONE fused recount scan — token_term_counts against the
-    // UNION of all sources' candidates (length-bucketed probe keeps the
-    // per-token cost ~|same-length terms|), reduced per source by
-    // array_sum_long into an O(|union|)-long vector. No second explode,
-    // no (source, token) shuffle; the per-source exact counts and exact
-    // stream length (element 1) come out of the same vector. The
-    // per-source top-5 is an ARRAY sort over each source's ≤k candidate
-    // slots (a literal source→candidates map indexed into the count
-    // vector) instead of a row-level window rank: n_src single-row sorts
-    // beat a broadcast join + two window passes' worth of stages, and
-    // the interpreted HOF touches ≤k elements per source, once.
-    val idx = union.zipWithIndex.toMap
-    val candsLit = array(union.map(lit): _*)
-    // full-outer-join the pass-1 source list back in (r14, advisor): a
-    // source DELETED from the corpus between the passes produces no
-    // pass-2 group row, and without this it would vanish from the
-    // output instead of reaching the per-source guard; the join keeps a
-    // row whose NULL `c` fails the n === n_sketch witness and raises.
-    // Full outer (not right) so a NEW source keeps its row too and
-    // raises via its NULL candidate-map lookup, as before. Both sides
-    // are n_src-row aggregates — the join is metadata-sized.
-    val per = docsT.groupBy(col("source"))
-      .agg(call_function("array_sum_long",
-        call_function("token_term_counts", col("text"), candsLit)).as("c"))
-      .join(s.range(1).select(explode(
-        array(srcRows.map(r => lit(r.getString(0))): _*)).as("source")),
-        Seq("source"), "full_outer")
-    // the literal map carries candidate INDICES (ints), not
-    // (token, index) structs — token text is recovered from the one
-    // shared candsLit array, keeping the plan's literal footprint (and
-    // its per-invocation analysis cost) small
-    val candMap = map(srcRows.flatMap { r =>
-      Seq(lit(r.getString(0)),
-        array(r.getSeq[String](2).map(tok => lit(idx(tok))): _*)
-          .cast("array<int>"))
-    }.toSeq: _*)
-    // pass-1 stream lengths, for the cross-pass snapshot witness
-    val nMap = map(srcRows.flatMap { r =>
-      Seq(lit(r.getString(0)), lit(r.getLong(1)))
-    }.toSeq: _*)
-    // per-source non-candidate bounds (est(k+1th) + err — the sketch's
-    // own certificate, strictly tighter than n/(k+1) with cap >> k)
-    val boundMap = map(srcRows.flatMap { r =>
-      Seq(lit(r.getString(0)), lit(r.getLong(4)))
-    }.toSeq: _*)
-    val candArr = element_at(candMap, col("source"))
-    val top5 = slice(array_sort(
-      transform(candArr, x =>
-        struct(element_at(col("c"), x + 2).as("cnt"),
-          element_at(candsLit, x + 1).as("token"))),
-      (a, b) => when(a("cnt") > b("cnt"), -1)
-        .when(a("cnt") < b("cnt"), 1)
-        .when(a("token") < b("token"), -1)
-        .when(a("token") > b("token"), 1).otherwise(0)),
-      1, 5)
-    // posexplode_outer: a source whose sketch came back EMPTY (or whose
-    // candidate list is short) still emits a row and reaches the guard
-    // instead of vanishing — same conservative contract as before.
-    per.select(col("source"), element_at(col("c"), 1).as("n"),
-        element_at(nMap, col("source")).as("n_sketch"),
-        element_at(boundMap, col("source")).as("bound"),
-        size(candArr).as("n_cands"), posexplode_outer(top5))
-      .select(col("source"), (col("pos") + 1).as("rank"),
-        col("col.token").as("token"),
-        when(col("n") === col("n_sketch") &&
-            col("n_cands") >= 5 && col("col.cnt") > col("bound"),
-          col("col.cnt"))
-          .otherwise(raise_error(concat(
-            lit("q114 MG safety margin violated for source "),
-            // coalesce: a NULL source must not null the whole message
-            coalesce(col("source"), lit("<null>")),
-            lit(": n_cands "),
-            coalesce(col("n_cands").cast("string"), lit("0")),
-            lit(", cnt "), coalesce(col("col.cnt").cast("string"), lit("null")),
-            lit(", non-candidate bound "),
-            coalesce(col("bound").cast("string"), lit("null")),
-            lit(" with n = "), coalesce(col("n").cast("string"), lit("null")),
-            lit(", sketch-pass n = "),
-            coalesce(col("n_sketch").cast("string"), lit("null")),
-            lit(" (mismatch = corpus changed between passes)"),
-            lit(s" — raise cap above $cap if n matches")))).as("cnt"))
-  }
+  def qGroupHeavyHittersRecount(s: SparkSession, dir: String, k: Int = 64): DataFrame =
+    heavyHittersRecount(s, dir, "q114", "qGroupHeavyHittersRecount", Seq("source"), 5, k)
 
-  /** The distributed (collect-free) q114 spelling — explode + sketch +
-    * candidate recount join — used when the group cardinality exceeds the
-    * candidate-collect budget. Bit-identical results (both recounts are
-    * exact over the same candidate sets; parity spec-pinned).
+  /** The collect-free overflow fallback of q103 and q114: the exact
+    * top-`top` tokens per group of `documents`, output as the group
+    * columns, `rank`, `token` and `cnt`.
+    *
+    * `mg_freq(token, k)` keeps every token whose count in its group
+    * exceeds n/(k+1), where n is the group's token count. The candidates
+    * are recounted exactly, with a broadcast join and a group-by. So a
+    * group's recounted top-`top` is its true top-`top` when it has `top`
+    * rows and each count clears n/(k+1). Otherwise the plan raises and
+    * names `k` and `entry`, the public spelling to call again with a
+    * larger `k`. Group keys compare with `<=>`, so a NULL group is a
+    * group like any other, as in the SQL oracles.
     */
-  private[operators] def qGroupHeavyHittersDistributed(
-      s: SparkSession, dir: String, k: Int): DataFrame = {
-    val toksDf = t(s, dir, "documents")
-      .select(col("source"), explode(toks(col("text"))).as("token"))
+  private[operators] def heavyHittersRecount(s: SparkSession, dir: String,
+      q: String, entry: String, groups: Seq[String], top: Int, k: Int): DataFrame = {
+    graft.functions.GraftFunctions.register(s)
+    val keys = groups.map(col)
+    // `l` joined to the broadcast `r` on `on`, NULL matching NULL; the
+    // output keeps `l`'s key columns only
+    def joinNullSafe(l: DataFrame, r: DataFrame, on: Seq[String], how: String) = {
+      val rr = broadcast(on.foldLeft(r)((d, c) => d.withColumnRenamed(c, s"r_$c")))
+      l.join(rr, on.map(c => l(c) <=> rr(s"r_$c")).foldLeft(lit(true))(_ && _), how)
+        .drop(on.map(c => s"r_$c"): _*)
+    }
+    val docs = t(s, dir, "documents")
+    val toksDf = docs.select(keys :+ explode(toks(col("text"))).as("token"): _*)
       .where(col("token") =!= "")
-    val cands = toksDf.groupBy(col("source"))
+    val cands = toksDf.groupBy(keys: _*)
       .agg(expr(s"mg_freq(token, $k)").as("sk"))
-      .select(col("source"), explode(expr("transform(sk, x -> x.item)")).as("token"))
-    // per-doc non-empty token count = element 0 of the fused
+      .select(keys :+ explode(expr("transform(sk, x -> x.item)")).as("token"): _*)
+    // per-group non-empty token count = element 0 of the fused
     // token_term_counts pass (tokens = maximal non-space runs) — no
     // interpreted filter lambda, no token array materialization
-    val nPerSrc = t(s, dir, "documents")
-      .groupBy(col("source"))
+    val nPerGroup = docs.groupBy(keys: _*)
       .agg(sum(element_at(call_function("token_term_counts",
         col("text"), expr("CAST(array() AS ARRAY<STRING>)")), 1)).as("n"))
-    val rn = row_number().over(
-      Window.partitionBy(col("source")).orderBy(col("cnt").desc, col("token").asc))
-    val top = toksDf.join(broadcast(cands), Seq("source", "token"))
-      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("cnt"))
-      .withColumn("rank", rn).where(col("rank") <= 5)
-      .withColumn("rows_in_src",
-        count(lit(1)).over(Window.partitionBy(col("source"))))
-    nPerSrc.join(broadcast(top), Seq("source"), "left")
-      .select(col("source"), col("rank"), col("token"),
-        when(col("rows_in_src") === 5 && col("cnt") * (k + 1) > col("n"), col("cnt"))
+    val inGroup = Window.partitionBy(keys: _*)
+    val counted = joinNullSafe(toksDf, cands, groups :+ "token", "inner")
+      .groupBy(keys :+ col("token"): _*).agg(count(lit(1)).as("cnt"))
+      .withColumn("rank", row_number().over(
+        inGroup.orderBy(col("cnt").desc, col("token").asc)))
+      .where(col("rank") <= top)
+      .withColumn("rows_in_group", count(lit(1)).over(inGroup))
+    // a NULL group name must not null the whole message
+    val where = groups.foldLeft(lit(""))((m, g) =>
+      concat(m, lit(s" for $g "), coalesce(col(g), lit("<null>"))))
+    // the left join keeps a group with no candidate rows on the guard path
+    joinNullSafe(nPerGroup, counted, groups, "left")
+      .select(keys ++ Seq(col("rank"), col("token"),
+        when(col("rows_in_group") === top && col("cnt") * (k + 1) > col("n"), col("cnt"))
           .otherwise(raise_error(concat(
-            lit("q114 MG safety margin violated for source "),
-            // coalesce: a NULL source must not null the whole message
-            coalesce(col("source"), lit("<null>")),
-            lit(": rows_in_src "),
-            coalesce(col("rows_in_src").cast("string"), lit("0")),
+            lit(s"$q MG safety margin violated"), where,
+            lit(": rows "), coalesce(col("rows_in_group").cast("string"), lit("0")),
             lit(", cnt "), coalesce(col("cnt").cast("string"), lit("null")),
-            lit(s", floor n/${k + 1} with n = "), col("n"),
-            lit(s" — raise k above $k")))).as("cnt"))
+            lit(s", floor n/${k + 1} with n = "), coalesce(col("n").cast("string"), lit("null")),
+            lit(s" — raise k above $k in $entry")))).as("cnt")): _*)
   }
 
   val qGroupHeavyHittersSql: String =

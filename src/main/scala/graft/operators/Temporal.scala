@@ -62,7 +62,7 @@ object Temporal {
     * and per-row frame work scale O(n × |types|), so past the budget
     * the band-bucketed join spelling ([[rangeJoinBucketed]] — pure
     * shuffle join, no per-type columns) takes over, the same
-    * budget-with-fallback policy as q114/q85. And because the counter
+    * budget-with-fallback policy as q85. And because the counter
     * columns bind the type domain at BUILD time, the plan carries an
     * execution-time witness: every event row's own type surfaces as a
     * `type_a` group, so a type that appears after plan construction is

@@ -2286,40 +2286,18 @@ object TextOps {
        |FROM terms GROUP BY source, n_docs""".stripMargin
   }
 
-  /** Exact heavy hitters — certified SINGLE pass (r14). One Misra-Gries
-    * sketch over the whole corpus ([[graft.functions.MgFreqText]] — the
-    * fused-tokenization aggregate; each partition ships O(cap) counters
-    * instead of one partial count per distinct key), run with capacity
-    * `cap = 1<<16` decoupled from the returned arity 20. The sketch
-    * carries an exactness certificate ([[graft.functions.MgSketch.err]]):
-    * `err == 0` proves no eviction ever fired anywhere in the merge
-    * tree — the vocabulary fit the capacity, every estimate IS the
-    * exact count, and no token outside the sketch was ever seen — so
-    * the (est DESC, item ASC)-ordered head of the counters IS the exact
-    * top-20, checked lazily INSIDE the returned plan. No second pass,
-    * no eager driver collect, no snapshot semantics at all: the plan
-    * re-certifies against the corpus as it stands at EVERY execution,
-    * which retires the r13 build-vs-execute witness machinery rather
-    * than patching it. Counter state stays a few MB per aggregation
-    * buffer, constant w.r.t. data size. (The alternative lever the r13
-    * verdict floated — a multi-row-group 10× layout so both engines
-    * split the scan — is a ratio LOSS by arithmetic: both engines' scan
-    * terms shrink ~P× but Spark's per-job scheduler floor doesn't, so
-    * the quotient degrades. Deleting the second scan wins instead:
-    * measured 0.75 → ~0.45 s at 10×, decomposition in BASELINE.md.)
-    *
-    * When the vocabulary overflows the capacity (`err > 0`) exactness
-    * is unprovable from one pass and the plan REFUSES — deterministic
-    * `raise_error` naming [[qHeavyHittersTwoPass]], the eager
-    * sketch-then-recount spelling that stays exact for any vocabulary
-    * whose top-20 clears its (far tighter than n/(k+1)) candidate
-    * bound. That spelling is the documented shape for huge key domains
-    * (all 5-grams of a 100 TB corpus): q41's single hash-aggregate
-    * would spill on |domain| partial counts; the sketch never
-    * materializes more than cap. A corpus with fewer than 20 types
-    * legitimately returns fewer rows on the certified path (the
-    * certificate proves the short answer is the whole answer). Oracle:
-    * plain exact top-20.
+  /** q103: exact corpus-wide top-20 tokens in one certified pass. One
+    * fused-tokenization Misra-Gries sketch over the whole corpus
+    * ([[graft.functions.MgFreqText]]; each partition ships at most `cap`
+    * counters instead of one partial count per distinct token), with
+    * capacity `cap = 1<<16` and returned arity 20. A sketch that never
+    * evicted (`err == 0`) holds exact counts and every token it ever saw,
+    * so its (est DESC, item ASC) head IS the exact top-20; a corpus with
+    * fewer than 20 types returns its true shorter list. The check runs
+    * inside the plan at every execution, with no driver collect. A
+    * vocabulary that overflows the capacity raises, naming
+    * [[qHeavyHittersRecount]]. Counter state is a few MB per aggregation
+    * buffer, whatever the data size. Oracle: plain exact top-20.
     */
   def qHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
@@ -2335,128 +2313,17 @@ object TextOps {
           lit("q103 MG safety margin violated: sketch capacity "),
           lit(s"overflowed (err "), col("r.err").cast("string"),
           lit(s") — vocabulary exceeds $cap types, single-pass "),
-          lit("exactness unprovable; use qHeavyHittersTwoPass"))))))
+          lit("exactness unprovable; use qHeavyHittersRecount"))))))
       .select(col("col.item").as("token"), col("col.est").as("cnt"))
   }
 
-  /** The eager two-pass heavy-hitters spelling — the fallback for
-    * corpora whose vocabulary overflows [[qHeavyHitters]]'s capacity
-    * certificate. Pass 1 (eager, at build time) runs the capacity-cap
-    * sketch and materializes the single result row (an O(k) collect —
-    * the items array is truncated to k entries inside the aggregate's
-    * eval, whatever the capacity); if the sketch certifies exact
-    * (`err == 0`) the answer is baked directly with a narrow doc-count +
-    * n_chars witness scan, else pass 2 recounts ONLY the ≤k candidates
-    * exactly in one fused `token_term_counts` + `array_sum_long` scan
-    * (no second explode, no shuffle, no join) and certifies each
-    * returned count strictly above the sketch's non-candidate `bound`
-    * (est(k+1th) + err — far tighter than the classic n/(k+1) since
-    * cap ≫ k).
-    *
-    * Snapshot contract (this spelling only): pass 1 binds its result at
-    * build time; executing against a corpus that changed in between is
-    * detected — the recount guard cross-checks pass 2's independently
-    * computed stream length against pass 1's, and the baked-exact plan
-    * re-counts documents and re-sums `n_chars` in a cheap narrow scan.
-    * (A corpus edit preserving those witnesses evades detection —
-    * accepted, same-size substitution across a refresh is not a failure
-    * mode the snapshot contract claims to cover. A corpus lacking the
-    * `n_chars` column falls back to the doc-count witness alone.)
+  /** q103's fallback for a vocabulary that overflows [[qHeavyHitters]]'s
+    * capacity: the exact top-20 from `k` Misra-Gries candidates, in rank
+    * order, see [[Curation.heavyHittersRecount]].
     */
-  def qHeavyHittersTwoPass(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    val k = 64
-    val cap = 1 << 16
-    val docsT = t(s, dir, "documents")
-    val hasChars = docsT.columns.contains("n_chars")
-    val charsAgg =
-      if (hasChars) coalesce(sum(col("n_chars")), lit(0L))
-      else lit(0L)
-    val sk = docsT
-      .agg(expr(s"mg_freq_text(text, $k, $cap)").as("r"),
-        count(lit(1)).as("docs"), charsAgg.as("chars"))
-      .select(col("r.n").as("n"), col("r.err").as("err"),
-        col("r.bound").as("bound"),
-        expr("transform(r.items, x -> x.item)").as("cands"),
-        expr("transform(r.items, x -> x.est)").as("ests"),
-        col("docs"), col("chars"))
-      .head()
-    val n = sk.getLong(0)
-    val err = sk.getLong(1)
-    val bound = sk.getLong(2)
-    val cands = sk.getSeq[String](3)
-    if (err == 0L) {
-      // Certified exact at build time: bake the top-20 and verify the
-      // snapshot with one narrow scan (doc count + n_chars, no text).
-      val docs0 = sk.getLong(5)
-      val chars0 = sk.getLong(6)
-      val top = cands.zip(sk.getSeq[Long](4)).take(20)
-      val baked = array(top.map { case (tok, cnt) =>
-        struct(lit(tok).as("token"), lit(cnt).as("cnt")) }: _*)
-        .cast("array<struct<token: string, cnt: bigint>>")
-      return docsT
-        .agg(count(lit(1)).as("d"), charsAgg.as("ch"))
-        .select(col("d"), col("ch"), posexplode(baked))
-        .select(col("col.token").as("token"),
-          when(col("d") === docs0 && col("ch") === chars0, col("col.cnt"))
-            .otherwise(raise_error(concat(
-              lit("q103 snapshot witness violated: docs/chars "),
-              col("d"), lit("/"), col("ch"),
-              lit(s" vs sketch-pass $docs0/$chars0 (the corpus changed "),
-              lit("between sketch and execution — rebuild the query)"))))
-            .as("cnt"))
-    }
-    if (cands.length < 20)
-      // an under-filled sketch (decrement churn on a near-uniform corpus)
-      // can't certify a top-20 — refuse at execution, same contract as
-      // the full guard below
-      return s.range(1).select(
-        lit(null).cast("string").as("token"),
-        raise_error(lit(s"q103 MG safety margin violated: rows_out " +
-          s"${cands.length}, bound $bound with n = $n — raise cap above $cap"))
-          .cast("long").as("cnt"))
-    // Pass 2 (fallback, vocabulary > cap): fused exact recount of the ≤k
-    // candidates — one narrow token_term_counts scan reduced by
-    // array_sum_long into a single (k+2)-long vector. No second explode,
-    // no candidate shuffle, no join: element 1 of the vector is the
-    // exact stream length n, the candidate counts are exact, and the MG
-    // bound (non-candidates have true count <= bound) makes the top-20
-    // provably exact iff every returned cnt clears it strictly. The
-    // top-20 selection is an ARRAY sort over the single ≤k-element row
-    // (interpreted HOF, but over 64 elements once — not the hot path),
-    // not a row-level orderBy: a row sort on a 1-row frame still pays a
-    // range-partition sampling job + exchange, which was a visible
-    // share of the query's floor-bound absolute at 10×.
-    val candsLit = array(cands.map(lit): _*)
-    docsT
-      .agg(call_function("array_sum_long",
-        call_function("token_term_counts", col("text"), candsLit)).as("c"))
-      // posexplode_outer (r14, advisor): if the corpus empties (or goes
-      // all-null-text) between the passes, array_sum_long evaluates to
-      // NULL and a plain posexplode would drop the one aggregate row —
-      // silently returning an empty frame instead of reaching the
-      // witness. The outer explode keeps the row, its NULL n fails the
-      // n === $n check, and the guard raises as documented.
-      .select(element_at(col("c"), 1).as("n"),
-        posexplode_outer(slice(array_sort(
-          zip_with(candsLit, slice(col("c"), 2, cands.length),
-            (tok, cn) => struct(cn.as("cnt"), tok.as("token"))),
-          (a, b) => when(a("cnt") > b("cnt"), -1)
-            .when(a("cnt") < b("cnt"), 1)
-            .when(a("token") < b("token"), -1)
-            .when(a("token") > b("token"), 1).otherwise(0)),
-          1, 20)))
-      .select(col("col.token").as("token"),
-        when(col("n") === n && col("col.cnt") > bound, col("col.cnt"))
-          .otherwise(raise_error(concat(
-            lit("q103 MG safety margin violated: cnt "),
-            coalesce(col("col.cnt").cast("string"), lit("null")),
-            lit(s", non-candidate bound $bound with n = "),
-            coalesce(col("n").cast("string"), lit("null")),
-            lit(s"; sketch-pass n = $n (a mismatch means the corpus "),
-            lit("changed between sketch and recount — rebuild the query)"),
-            lit(s" — raise cap above $cap if n matches")))).as("cnt"))
-  }
+  def qHeavyHittersRecount(s: SparkSession, dir: String, k: Int = 64): DataFrame =
+    Curation.heavyHittersRecount(s, dir, "q103", "qHeavyHittersRecount", Nil, 20, k)
+      .orderBy(col("rank")).select(col("token"), col("cnt"))
 
   val qHeavyHittersSql: String =
     """SELECT token, COUNT(*) AS cnt FROM (

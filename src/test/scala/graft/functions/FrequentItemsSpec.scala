@@ -7,8 +7,8 @@ import graft.TestSpark
 
 /** The Misra-Gries aggregate's contract: the n/(k+1) survival guarantee
   * holds under eviction pressure (vocab ≫ k) at any partitioning, state
-  * round-trips through serde, and the two-pass heavy-hitters query is
-  * EXACT despite the approximate intermediate. Exact counter values are
+  * round-trips through serde, and the sketch-then-recount heavy hitters
+  * are EXACT despite the approximate intermediate. Exact counter values are
   * intentionally not pinned — they vary with merge order inside the
   * guarantee; the guarantee is the spec.
   */
@@ -210,10 +210,9 @@ class FrequentItemsSpec extends AnyFunSuite {
     import spark.implicits._
     // 70_000 distinct near-uniform tokens (each once) overflow the 1<<16
     // capacity — err > 0 voids the certificate — plus one common token
-    // so the compacted sketch keeps non-empty candidates and the PASS-2
-    // bound guard is what fires: counts at/below the non-candidate bound
-    // can't prove the top-20 exact, so the plan must refuse rather than
-    // return a silently-maybe-wrong answer
+    // so the compacted sketch keeps non-empty candidates: the guard must
+    // fire on the array, not vanish into an empty explode, and the
+    // refusal names the fallback a caller can run
     val dir = java.nio.file.Files.createTempDirectory("graft_q103_huge").toString
     (1 to 70).map { d =>
       val t0 = (d - 1) * 1000
@@ -227,17 +226,17 @@ class FrequentItemsSpec extends AnyFunSuite {
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("q103 MG safety margin violated")),
-      s"wrong failure: $e")
+    assert(messages(e).exists(m => m.contains("q103 MG safety margin violated") &&
+      m.contains("qHeavyHittersRecount")), s"wrong failure: $e")
   }
 
-  test("qHeavyHittersTwoPass stays exact where the single-pass certificate overflows") {
+  test("qHeavyHittersRecount stays exact where the single-pass certificate overflows") {
     import spark.implicits._
     // 70_000 distinct singletons overflow the 1<<16 capacity (so the
     // certified single pass refuses), but 25 genuinely common tokens
-    // clear the two-pass candidate bound by miles — the eager
-    // sketch-then-recount fallback must return their exact top-20 where
-    // qHeavyHitters raises. This is the 100 TB huge-key-domain shape.
+    // occur 2100 times each, above the fallback's floor n/65 ≈ 1885 —
+    // the sketch-then-recount fallback must return their exact top-20
+    // where qHeavyHitters raises. This is the huge-key-domain shape.
     val dir = java.nio.file.Files.createTempDirectory("graft_q103_2p").toString
     val commons = (0 until 25).map(i => f"common_$i%02d")
     (1 to 70).map { d =>
@@ -254,7 +253,7 @@ class FrequentItemsSpec extends AnyFunSuite {
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
     assert(messages(e).exists(_.contains("q103 MG safety margin violated")),
       s"wrong failure: $e")
-    val got = graft.operators.TextOps.qHeavyHittersTwoPass(spark, dir)
+    val got = graft.operators.TextOps.qHeavyHittersRecount(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(got.toSeq === commons.sorted.take(20).map((_, 70L * 30)))
   }
@@ -283,40 +282,6 @@ class FrequentItemsSpec extends AnyFunSuite {
     assert(viaText.getLong(0) === nTrue, "n must be the exact non-empty token count")
     assert(viaText.getSeq[Any](1) === skExplode,
       "items/estimates must match the exploded spelling")
-  }
-
-  test("array_sum_long serde keeps empty-width state distinct from no-rows state") {
-    // a partial aggregate that saw only EMPTY arrays must round-trip to
-    // [] — not collapse to the no-rows NULL state — across the
-    // serialization boundary partial aggregation introduces
-    val agg = ArraySumLong(org.apache.spark.sql.catalyst.expressions.Literal(null))
-    val seen = agg.deserialize(agg.serialize(new ArraySumLong.Buf(Array.empty[Long])))
-    assert(seen.sums != null && seen.sums.isEmpty)
-    val none = agg.deserialize(agg.serialize(new ArraySumLong.Buf(null)))
-    assert(none.sums == null)
-    val wide = agg.deserialize(agg.serialize(new ArraySumLong.Buf(Array(7L, -2L))))
-    assert(wide.sums.toSeq == Seq(7L, -2L))
-  }
-
-  test("array_sum_long: element-wise sums, null rows skipped, width guard") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val df = Seq(
-      (1, Some(Seq(1L, 2L, 3L))),
-      (1, Some(Seq(10L, 20L, 30L))),
-      (1, None),
-      (2, None)).toDF("g", "a")
-    val got = df.groupBy("g").agg(expr("array_sum_long(a)").as("s"))
-      .collect().map(r => r.getInt(0) -> Option(r.getSeq[Long](1))).toMap
-    assert(got(1) === Some(Seq(11L, 22L, 33L)))
-    assert(got(2) === None, "all-null group must yield NULL, like SUM")
-    val bad = Seq(Seq(1L, 2L), Seq(1L)).toDF("a")
-    val e = intercept[Exception] {
-      bad.agg(expr("array_sum_long(a)")).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("width")), s"wrong failure: $e")
   }
 
   test("two-pass heavy hitters is exact under eviction pressure") {

@@ -82,7 +82,7 @@ class TokenTermCountsSpec extends AnyFunSuite {
             terms.count(t => ref.contains(t)).toLong
           val got = TokenTermCounts.count(
             UTF8String.fromString(text),
-            terms.map(_.getBytes("UTF-8")).toArray).toLongArray.toSeq
+            new TermTable(terms.map(_.getBytes("UTF-8")).toArray)).toLongArray.toSeq
           assert(got == expected, s"seed=$i text='$text' terms=$terms")
       }
     }

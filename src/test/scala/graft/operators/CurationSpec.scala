@@ -132,12 +132,11 @@ class CurationSpec extends AnyFunSuite {
     assert(got == Set(("first", 2L, 2L), ("second", 2L, 0L)))
   }
 
-  test("q114's three spellings agree on a guard-passing corpus") {
+  test("q114's two spellings agree on a guard-passing corpus") {
     // per source: 6 distinct tokens with counts 100/90/80/70/60/5 →
     // n_src = 405, floor 405/65 ≈ 6.2, top-5 all clear it, and 6 < cap
-    // so no sketch ever evicts — the certified single pass (the scale
-    // default), the eager two-pass fallback, and the distributed
-    // fallback must return the identical exact top-5
+    // so no sketch ever evicts — the certified single pass and the
+    // recount fallback must return the identical exact top-5
     def srcDocs(src: String, off: Int): Seq[(Long, String, String, Long)] = {
       val text = (1 to 6).flatMap(t =>
         Seq.fill(Seq(100, 90, 80, 70, 60, 5)(t - 1))(s"${src}_tok$t")).mkString(" ")
@@ -148,26 +147,26 @@ class CurationSpec extends AnyFunSuite {
       df.collect().map(r =>
         (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
     val lazyRows = rows(Curation.qGroupHeavyHitters(spark, dir))
-    val twoPass = rows(Curation.qGroupHeavyHittersTwoPass(spark, dir))
-    val dist = rows(Curation.qGroupHeavyHittersDistributed(spark, dir, 64))
-    assert(lazyRows === dist)
-    assert(lazyRows === twoPass)
+    val recount = rows(Curation.qGroupHeavyHittersRecount(spark, dir))
+    assert(lazyRows === recount)
     assert(lazyRows.size === 10) // 5 per source
     assert(lazyRows.contains(("alpha", 1, "alpha_tok1", 100L)))
     assert(lazyRows.contains(("beta", 5, "beta_tok5", 60L)))
   }
 
   test("q114 treats a NULL source as just another group, matching the SQL oracle") {
-    // the r13 eager spelling had to refuse NULL sources (a literal
-    // candidate map can't key them); the certified single pass has no
-    // such map, so a NULL-source group returns its true top-5 exactly
-    // like DuckDB's PARTITION BY source does
+    // a NULL-source group returns its true top-5 exactly like DuckDB's
+    // PARTITION BY source does — on the certified single pass and on
+    // the recount fallback, whose joins must match NULL to NULL
     val dir = docsDir(Seq((1L, "a a a a a a b c d e f", null, 21L)))
-    val got = Curation.qGroupHeavyHitters(spark, dir).collect()
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (Option(r.getString(0)), r.getInt(1), r.getString(2), r.getLong(3)))
-    assert(got.toSeq === Seq(
+      .toSeq.sortBy(_._2)
+    val want = Seq(
       (None, 1, "a", 6L), (None, 2, "b", 1L), (None, 3, "c", 1L),
-      (None, 4, "d", 1L), (None, 5, "e", 1L)))
+      (None, 4, "d", 1L), (None, 5, "e", 1L))
+    assert(rows(Curation.qGroupHeavyHitters(spark, dir)) === want)
+    assert(rows(Curation.qGroupHeavyHittersRecount(spark, dir)) === want)
   }
 
   test("q114 certifies a near-uniform source exactly when its vocab fits the capacity") {
@@ -215,8 +214,28 @@ class CurationSpec extends AnyFunSuite {
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("q114 MG safety margin violated")),
-      s"wrong failure: $e")
+    assert(messages(e).exists(m => m.contains("q114 MG safety margin violated") &&
+      m.contains("qGroupHeavyHittersRecount")), s"wrong failure: $e")
+  }
+
+  test("q114's recount fallback refuses below n/(k+1), naming k, and certifies with a larger k") {
+    // source "flat": 200 distinct tokens twice each → n = 400. With the
+    // default k = 64 the floor is 400/65 ≈ 6.2, which no count of 2
+    // clears, so the fallback must refuse and say which knob to turn;
+    // with k = 256 the floor is 400/257 ≈ 1.6 and the same corpus
+    // returns its exact top-5 (all cnt 2, ties by token ASC)
+    val dir = docsDir(Seq((1L,
+      (1 to 200).map(i => f"tok_$i%03d tok_$i%03d").mkString(" "), "flat", 100L)))
+    val e = intercept[Exception] {
+      Curation.qGroupHeavyHittersRecount(spark, dir).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(m => m.contains("q114 MG safety margin violated") &&
+      m.contains("raise k above 64 in qGroupHeavyHittersRecount")), s"wrong failure: $e")
+    val got = Curation.qGroupHeavyHittersRecount(spark, dir, k = 256).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSeq.sortBy(_._2)
+    assert(got === (1 to 5).map(i => ("flat", i, f"tok_$i%03d", 2L)))
   }
 
   test("OOV boundary cases: all-vocab doc scores 0, all-OOV doc scores full") {
