@@ -191,28 +191,32 @@ object Curation {
   }
 
   /** q114's fallback for a source whose vocabulary overflows
-    * [[qGroupHeavyHitters]]'s capacity: the exact per-source top-5 from
-    * `k` Misra-Gries candidates per source, see [[heavyHittersRecount]].
+    * [[qGroupHeavyHitters]]'s capacity: the exact per-source top-5, see
+    * [[heavyHittersRecount]].
     */
-  def qGroupHeavyHittersRecount(s: SparkSession, dir: String, k: Int = 64): DataFrame =
-    heavyHittersRecount(s, dir, "q114", "qGroupHeavyHittersRecount", Seq("source"), 5, k)
+  def qGroupHeavyHittersRecount(s: SparkSession, dir: String): DataFrame =
+    heavyHittersRecount(s, dir, "q114", Seq("source"), 5)
 
   /** The collect-free overflow fallback of q103 and q114: the exact
     * top-`top` tokens per group of `documents`, output as the group
     * columns, `rank`, `token` and `cnt`.
     *
-    * `mg_freq(token, k)` keeps every token whose count in its group
-    * exceeds n/(k+1), where n is the group's token count. The candidates
-    * are recounted exactly, with a broadcast join and a group-by. So a
-    * group's recounted top-`top` is its true top-`top` when it has `top`
-    * rows and each count clears n/(k+1). Otherwise the plan raises and
-    * names `k` and `entry`, the public spelling to call again with a
-    * larger `k`. Group keys compare with `<=>`, so a NULL group is a
-    * group like any other, as in the SQL oracles.
+    * One [[graft.functions.MgFreqText]] sketch per group, at the
+    * registered queries' capacity 1<<16, gives the group's token count
+    * n, its error `err` and its top 65 counters. Those candidates are
+    * recounted exactly, with a broadcast join and a group-by. A token
+    * outside them has true count at most `err` plus the 65th estimate
+    * (`bound`). So a group's recounted top-`top` is its true top-`top`
+    * when it has `top` rows that each clear `bound`, or when the
+    * candidates' counts add up to n (every token was a candidate).
+    * Otherwise the plan raises. Group keys compare with `<=>`, so a NULL
+    * group is a group like any other, as in the SQL oracles.
     */
   private[operators] def heavyHittersRecount(s: SparkSession, dir: String,
-      q: String, entry: String, groups: Seq[String], top: Int, k: Int): DataFrame = {
+      q: String, groups: Seq[String], top: Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
+    val cap = 1 << 16
+    val k = 65
     val keys = groups.map(col)
     // `l` joined to the broadcast `r` on `on`, NULL matching NULL; the
     // output keeps `l`'s key columns only
@@ -222,20 +226,20 @@ object Curation {
         .drop(on.map(c => s"r_$c"): _*)
     }
     val docs = t(s, dir, "documents")
-    val toksDf = docs.select(keys :+ explode(toks(col("text"))).as("token"): _*)
-      .where(col("token") =!= "")
-    val cands = toksDf.groupBy(keys: _*)
-      .agg(expr(s"mg_freq(token, $k)").as("sk"))
-      .select(keys :+ explode(expr("transform(sk, x -> x.item)")).as("token"): _*)
-    // per-group non-empty token count = element 0 of the fused
-    // token_term_counts pass (tokens = maximal non-space runs) — no
-    // interpreted filter lambda, no token array materialization
-    val nPerGroup = docs.groupBy(keys: _*)
-      .agg(sum(element_at(call_function("token_term_counts",
-        col("text"), expr("CAST(array() AS ARRAY<STRING>)")), 1)).as("n"))
+    // a group with no tokens has no answer rows
+    val sk = docs.groupBy(keys: _*)
+      .agg(expr(s"mg_freq_text(text, $k, $cap)").as("r"))
+      .where(col("r.n") > 0)
+    val cands = sk.select(keys :+ explode(col("r.items.item")).as("token"): _*)
+    val bounds = sk.select(keys ++ Seq(col("r.n").as("n"), (col("r.err") +
+      when(size(col("r.items")) === k, element_at(col("r.items"), k)("est"))
+        .otherwise(0L)).as("bound")): _*)
     val inGroup = Window.partitionBy(keys: _*)
-    val counted = joinNullSafe(toksDf, cands, groups :+ "token", "inner")
+    val counted = joinNullSafe(
+        docs.select(keys :+ explode(toks(col("text"))).as("token"): _*),
+        cands, groups :+ "token", "inner")
       .groupBy(keys :+ col("token"): _*).agg(count(lit(1)).as("cnt"))
+      .withColumn("covered", sum(col("cnt")).over(inGroup))
       .withColumn("rank", row_number().over(
         inGroup.orderBy(col("cnt").desc, col("token").asc)))
       .where(col("rank") <= top)
@@ -244,15 +248,18 @@ object Curation {
     val where = groups.foldLeft(lit(""))((m, g) =>
       concat(m, lit(s" for $g "), coalesce(col(g), lit("<null>"))))
     // the left join keeps a group with no candidate rows on the guard path
-    joinNullSafe(nPerGroup, counted, groups, "left")
+    joinNullSafe(bounds, counted, groups, "left")
       .select(keys ++ Seq(col("rank"), col("token"),
-        when(col("rows_in_group") === top && col("cnt") * (k + 1) > col("n"), col("cnt"))
+        when(col("covered") === col("n") ||
+            col("rows_in_group") === top && col("cnt") > col("bound"), col("cnt"))
           .otherwise(raise_error(concat(
             lit(s"$q MG safety margin violated"), where,
             lit(": rows "), coalesce(col("rows_in_group").cast("string"), lit("0")),
             lit(", cnt "), coalesce(col("cnt").cast("string"), lit("null")),
-            lit(s", floor n/${k + 1} with n = "), coalesce(col("n").cast("string"), lit("null")),
-            lit(s" — raise k above $k in $entry")))).as("cnt")): _*)
+            lit(", non-candidate bound "), col("bound").cast("string"),
+            lit(" with n = "), col("n").cast("string"),
+            lit(s" — too flat for $k sketch candidates to prove exact; count "),
+            lit("every token instead, as TextOps.qTokenFreq does")))).as("cnt")): _*)
   }
 
   val qGroupHeavyHittersSql: String =

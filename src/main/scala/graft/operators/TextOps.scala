@@ -2318,11 +2318,11 @@ object TextOps {
   }
 
   /** q103's fallback for a vocabulary that overflows [[qHeavyHitters]]'s
-    * capacity: the exact top-20 from `k` Misra-Gries candidates, in rank
-    * order, see [[Curation.heavyHittersRecount]].
+    * capacity: the exact top-20 in rank order, see
+    * [[Curation.heavyHittersRecount]].
     */
-  def qHeavyHittersRecount(s: SparkSession, dir: String, k: Int = 64): DataFrame =
-    Curation.heavyHittersRecount(s, dir, "q103", "qHeavyHittersRecount", Nil, 20, k)
+  def qHeavyHittersRecount(s: SparkSession, dir: String): DataFrame =
+    Curation.heavyHittersRecount(s, dir, "q103", Nil, 20)
       .orderBy(col("rank")).select(col("token"), col("cnt"))
 
   val qHeavyHittersSql: String =

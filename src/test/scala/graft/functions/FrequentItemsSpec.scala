@@ -234,9 +234,10 @@ class FrequentItemsSpec extends AnyFunSuite {
     import spark.implicits._
     // 70_000 distinct singletons overflow the 1<<16 capacity (so the
     // certified single pass refuses), but 25 genuinely common tokens
-    // occur 2100 times each, above the fallback's floor n/65 ≈ 1885 —
-    // the sketch-then-recount fallback must return their exact top-20
-    // where qHeavyHitters raises. This is the huge-key-domain shape.
+    // occur 2100 times each, far above the sketch's non-candidate bound
+    // (its error plus its 65th estimate, a few counts here), so the
+    // sketch-then-recount fallback must return their exact top-20 where
+    // qHeavyHitters raises. This is the huge-key-domain shape.
     val dir = java.nio.file.Files.createTempDirectory("graft_q103_2p").toString
     val commons = (0 until 25).map(i => f"common_$i%02d")
     (1 to 70).map { d =>
@@ -256,6 +257,35 @@ class FrequentItemsSpec extends AnyFunSuite {
     val got = graft.operators.TextOps.qHeavyHittersRecount(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(got.toSeq === commons.sorted.take(20).map((_, 70L * 30)))
+  }
+
+  test("qHeavyHittersRecount certifies a Zipf-shaped top-20 past the capacity") {
+    import spark.implicits._
+    // Zipf-like head: z_i occurs 100 * (200 / i) times (i = 1..200), so
+    // the 20th count is 1000 and the 65th is 300; 70_000 singletons
+    // overflow the 1<<16 capacity. n ≈ 188k puts n/65 near 2900, far above
+    // the 20th count, but the sketch's own bound (error ≤ n/65537 plus
+    // the 65th estimate) sits near 300, so the fallback certifies the
+    // exact top-20 where the single pass refuses
+    val dir = java.nio.file.Files.createTempDirectory("graft_q103_zipf").toString
+    val head = (1 to 200).flatMap(i => Seq.fill(200 / i)(f"z_$i%03d"))
+    (1 to 100).map { d =>
+      val t0 = (d - 1) * 700
+      (d.toLong, (head ++ (1 to 700).map(j => s"s_${t0 + j}")).mkString(" "))
+    }.toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val e = intercept[Exception] {
+      graft.operators.TextOps.qHeavyHitters(spark, dir).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("q103 MG safety margin violated")),
+      s"wrong failure: $e")
+    val want = (1 to 200).map(i => (f"z_$i%03d", 100L * (200 / i)))
+      .sortBy { case (tok, c) => (-c, tok) }.take(20)
+    val got = graft.operators.TextOps.qHeavyHittersRecount(spark, dir)
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(got.toSeq === want)
   }
 
   test("mg_freq_text matches the exploded mg_freq spelling bit-for-bit") {

@@ -218,24 +218,42 @@ class CurationSpec extends AnyFunSuite {
       m.contains("qGroupHeavyHittersRecount")), s"wrong failure: $e")
   }
 
-  test("q114's recount fallback refuses below n/(k+1), naming k, and certifies with a larger k") {
-    // source "flat": 200 distinct tokens twice each → n = 400. With the
-    // default k = 64 the floor is 400/65 ≈ 6.2, which no count of 2
-    // clears, so the fallback must refuse and say which knob to turn;
-    // with k = 256 the floor is 400/257 ≈ 1.6 and the same corpus
-    // returns its exact top-5 (all cnt 2, ties by token ASC)
-    val dir = docsDir(Seq((1L,
-      (1 to 200).map(i => f"tok_$i%03d tok_$i%03d").mkString(" "), "flat", 100L)))
+  test("the recount fallback returns a group's true shorter list") {
+    // source "short" has 3 types next to a 6-type source: its candidates'
+    // counts add up to its n, so every token was a candidate and the
+    // 3-row list is exact, as on the single pass; likewise a corpus with
+    // no tokens at all returns no q103 rows
+    val six = (1 to 6).flatMap(t => Seq.fill(7 - t)(s"w$t")).mkString(" ")
+    val dir = docsDir(Seq((1L, "a a b c", "short", 7L), (2L, six, "six", 41L)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSet
+    val want = Set(("short", 1, "a", 2L), ("short", 2, "b", 1L), ("short", 3, "c", 1L)) ++
+      (1 to 5).map(t => ("six", t, s"w$t", (7 - t).toLong))
+    assert(rows(Curation.qGroupHeavyHitters(spark, dir)) === want)
+    assert(rows(Curation.qGroupHeavyHittersRecount(spark, dir)) === want)
+    val empty = docsDir(Seq((1L, "", "none", 0L)))
+    assert(TextOps.qHeavyHittersRecount(spark, empty).collect().isEmpty)
+  }
+
+  test("q114's recount fallback refuses a source too flat to certify") {
+    // source "flat": 70_000 distinct tokens twice each overflow the 1<<16
+    // capacity, so the sketch's error plus its 65th estimate is at least
+    // 2 and no count of 2 clears it; the 65 candidates miss the true
+    // top-5 (the five smallest tokens), so the fallback must refuse and
+    // point at an exact count
+    val flatDocs = (1 to 70).map { d =>
+      val t0 = (d - 1) * 1000
+      (d.toLong, (1 to 1000).map(i => s"tok_${t0 + i} tok_${t0 + i}").mkString(" "),
+        "flat", 100L)
+    }
+    val dir = docsDir(flatDocs)
     val e = intercept[Exception] {
       Curation.qGroupHeavyHittersRecount(spark, dir).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(m => m.contains("q114 MG safety margin violated") &&
-      m.contains("raise k above 64 in qGroupHeavyHittersRecount")), s"wrong failure: $e")
-    val got = Curation.qGroupHeavyHittersRecount(spark, dir, k = 256).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3))).toSeq.sortBy(_._2)
-    assert(got === (1 to 5).map(i => ("flat", i, f"tok_$i%03d", 2L)))
+    assert(messages(e).exists(m => m.contains("q114 MG safety margin violated for source flat") &&
+      m.contains("TextOps.qTokenFreq")), s"wrong failure: $e")
   }
 
   test("OOV boundary cases: all-vocab doc scores 0, all-OOV doc scores full") {
