@@ -156,86 +156,15 @@ object MgSketch {
   }
 }
 
-/** `mg_freq(item, k)` — distributed heavy-hitters candidates as a
-  * first-class Catalyst aggregate: per-partition Misra-Gries summaries
-  * build map-side (update) and combine on the reduce side (merge), so a
-  * corpus-wide frequent-tokens pass shuffles O(k)-entry sketches instead
-  * of one partial count per DISTINCT KEY — the difference that matters
-  * when the key domain is huge (all n-grams of 100 TB of text) and a
-  * hash aggregate's partial map would spill or blow the shuffle. Returns
-  * array<struct<item,est>> ordered (est DESC, item ASC).
-  */
-case class MgFreq(
-    child: Expression,
-    kExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgSketch] {
-
-  // Safe by the time execution reaches it: checkInputDataTypes has already
-  // rejected non-foldable, NULL, and non-positive k at analysis.
-  private lazy val sketchK: Int = kExpr.eval().asInstanceOf[Int]
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-  // All k validation lives here so an invalid call fails AT ANALYSIS with
-  // a clear message — not as an executor-side require inside a lazy val
-  // (non-foldable k) or a confusing MgSketch require after a NULL literal
-  // unboxes to 0 (the pre-round-7 behavior).
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType || kExpr.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure(
-        s"mg_freq expects (STRING, INT), got " +
-          s"(${child.dataType.sql}, ${kExpr.dataType.sql})")
-    else if (!kExpr.foldable)
-      TypeCheckResult.TypeCheckFailure("mg_freq k must be a literal")
-    else kExpr.eval() match {
-      case null => TypeCheckResult.TypeCheckFailure("mg_freq k must not be NULL")
-      case k: Int if k >= 1 => TypeCheckResult.TypeCheckSuccess
-      case k => TypeCheckResult.TypeCheckFailure(s"mg_freq k must be >= 1, got $k")
-    }
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("item", StringType, nullable = false),
-      StructField("est", LongType, nullable = false))),
-    containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "mg_freq"
-
-  override def createAggregationBuffer(): MgSketch = new MgSketch(sketchK)
-
-  override def update(buffer: MgSketch, input: InternalRow): MgSketch = {
-    val v = child.eval(input)
-    if (v != null) buffer.update(v.asInstanceOf[UTF8String])
-    buffer
-  }
-
-  override def merge(buffer: MgSketch, other: MgSketch): MgSketch = {
-    buffer.merge(other); buffer
-  }
-
-  override def eval(buffer: MgSketch): Any =
-    new GenericArrayData(buffer.topItems.map { case (it, c) =>
-      InternalRow(UTF8String.fromString(it), c)
-    })
-
-  override def serialize(buffer: MgSketch): Array[Byte] = buffer.serialize()
-  override def deserialize(bytes: Array[Byte]): MgSketch =
-    MgSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): MgFreq =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): MgFreq =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MgFreq =
-    copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-/** `mg_freq_text(text, k[, cap])` — the fused-tokenization spelling of
-  * [[MgFreq]]: one update call per DOCUMENT that scans the text's bytes
-  * in place (maximal non-space runs, the repo-wide token contract — the
-  * same loop as [[TokenTermCounts]]), feeding each token to the sketch
-  * as a zero-copy UTF8String view. Returns `struct<n: bigint, err:
+/** `mg_freq_text(text, k[, cap])` — distributed heavy-hitters candidates
+  * as a first-class Catalyst aggregate over a [[MgSketch]]: per-partition
+  * summaries build map-side (update) and combine on the reduce side
+  * (merge), so a corpus-wide frequent-tokens pass shuffles O(cap)-entry
+  * sketches instead of one partial count per DISTINCT KEY. Tokenization
+  * is fused: one update call per DOCUMENT scans the text's bytes in place
+  * (maximal non-space runs, the repo-wide token contract — the same loop
+  * as [[TokenTermCounts]]), feeding each token to the sketch as a
+  * zero-copy UTF8String view. Returns `struct<n: bigint, err:
   * bigint, items: array<struct<item,est>>>`:
   *  - `n` — the EXACT non-empty token count of the absorbed stream
   *    (MgSketch counts absorbed items);
@@ -254,11 +183,11 @@ case class MgFreq(
   * summary, with error ≤ n/(cap+1).
   *
   * Per-token cost is one in-place map probe; only a new counter entry
-  * (≤cap live, amortized by MG's decrement-all) allocates. The exploded
-  * spelling `explode(split(text,' ')) … mg_freq(token, k)` instead pays a
-  * row through the aggregate iterator, a String decode and a map probe
-  * per token. Parity with that spelling is spec-pinned
-  * (FrequentItemsSpec): same sketch semantics, same candidates.
+  * (≤cap live, amortized by MG's decrement-all) allocates. A row holding
+  * one space-free token feeds the sketch exactly that token, so
+  * `mg_freq_text(token, k)` over an exploded token column absorbs the
+  * same stream as the whole documents (FrequentItemsSpec pins the
+  * parity).
   */
 case class MgFreqText(
     child: Expression,
@@ -352,14 +281,9 @@ object MgFreqText {
 }
 
 object FrequentItems {
-  /** Guarded builders: a wrong-arity SQL call fails with a clean
+  /** Guarded builder: a wrong-arity SQL call fails with a clean
     * analysis-time IllegalArgumentException.
     */
-  private val mgFreqBuilder: Seq[Expression] => Expression = {
-    case Seq(item, k) => MgFreq(item, k)
-    case exprs => throw new IllegalArgumentException(
-      s"mg_freq expects 2 arguments (item, k), got ${exprs.length}")
-  }
   private val mgFreqTextBuilder: Seq[Expression] => Expression = {
     case Seq(text, k) => MgFreqText(text, k, k)
     case Seq(text, k, cap) => MgFreqText(text, k, cap)
@@ -367,12 +291,8 @@ object FrequentItems {
       s"mg_freq_text expects 2 or 3 arguments (text, k[, cap]), got ${exprs.length}")
   }
 
-  /** Idempotent session-local registration of `mg_freq` and
-    * `mg_freq_text`.
-    */
+  /** Idempotent session-local registration of `mg_freq_text`. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_freq", mgFreqBuilder, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "mg_freq_text", mgFreqTextBuilder, "scala_udf")
   }

@@ -233,8 +233,8 @@ object TextOps {
     // groupBy adds no second exchange
     simhashBandsOf(byDoc(t(s, dir, "documents")))
 
-  /** Portable simhash band build over a caller-partitioned frame (r19):
-    * the body of [[qSimhashBands]], caller owns the doc_id exchange —
+  /** Portable simhash band build over a caller-partitioned frame: the
+    * body of [[qSimhashBands]], caller owns the doc_id exchange —
     * [[qSimhashBands]] feeds it byDoc(documents); the content-layer
     * consumers ([[simhashRepPairs]]) feed it the already doc_id-keyed
     * representative frame, so the vote aggregate adds no exchange
@@ -285,51 +285,39 @@ object TextOps {
   private val MinhashK = 32
   private val MinhashBands = 8 // 8 bands x 4 rows
 
-  /** Content-dedup layer (r18, found by the duplication-structure audit):
-    * signature/banding/pair math in the near-dup family depends only on
-    * CONTENT — identical texts have identical shingle sets, signatures,
-    * and band keys — so the quadratic stages run per DISTINCT TEXT and
-    * expand back to doc granularity at the end. Work becomes a function
-    * of the corpus's distinct-content structure: strictly ≤ the per-doc
-    * spelling under EVERY corpus structure, and duplication (the
-    * realistic adversarial case — the r17b q143 OOM class) collapses to
-    * the original-content universe. Returns:
-    *   ids  — one row per distinct text: (rep = min doc_id, ids = sorted
-    *          doc-id list), persisted (several consumers, content-sized);
-    *   reps — the corpus cut to representative rows (doc_id, text),
-    *          STREAMING (one full-text doc_id-keyed exchange — the same
-    *          exchange the r17b repartition hoist paid, so the
-    *          independent-corpus cost is one extra skinny scan+hash pass).
-    * Mechanics pinned by measurement (PLANS r18): no text ever enters an
-    * aggregate (a first(text) spelling fell off the codegen hash-agg path
-    * into the object/sort fallback and re-sorted the corpus), and the
-    * semi carries no broadcast hint (the rep set is corpus-sized under
-    * independent structure — the q139 lesson; the size-based planner
-    * degrades it to a shuffle join gracefully).
-    * Cache contract: `ids` is persisted here (several consumers read
-    * it — the expansion joins, the same-content branch) and consumers'
-    * banded frames persist in their own builders. The returned plan reads
-    * these caches, so no builder can unpersist before returning; the
-    * session owner releases them with `spark.catalog.clearCache()` once
-    * the query is consumed (Bench/Verify/BenchScale do so between
-    * queries; operators/CacheHygieneSpec).
-    */
-  /** CPU-dense doc_id text exchange with a PINNED partition count (r18):
-    * AQE's coalescer sizes partitions by BYTES, so a small corpus's text
-    * exchange collapses toward one partition and the downstream
-    * 32-family/64-vote hashing runs serial — measured on q48 at sf0.1:
-    * ~4.9 s with the coalesced exchange vs 0.3 s pinned, flat from 8 to
-    * 32 threads (one 4.6 s task in the final stage, BASELINE.md). This is
-    * the r17 scan-stage serialization re-entering through AQE instead of file
-    * layout. An explicit numPartitions exempts the exchange from
-    * coalescing; the session's shuffle parallelism is exactly the count
-    * the aggregate's own exchange would have carried.
+  /** CPU-dense doc_id text exchange with a PINNED partition count: AQE's
+    * coalescer sizes partitions by BYTES, so a small corpus's text
+    * exchange would collapse toward one partition and run the downstream
+    * 32-family/64-vote hashing serially (q48 at sf0.1: ~4.9 s coalesced
+    * vs 0.3 s pinned, BASELINE.md). An explicit numPartitions exempts the
+    * exchange from coalescing; the session's shuffle parallelism is
+    * exactly the count the aggregate's own exchange would have carried.
     */
   private def byDoc(docs: DataFrame): DataFrame =
     docs.repartition(
       docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
       col("doc_id"))
 
+  /** Content-dedup layer: signature/banding/pair math in the near-dup
+    * family depends only on CONTENT — identical texts have identical
+    * shingle sets, signatures and band keys — so the quadratic stages run
+    * per DISTINCT TEXT and expand back to doc granularity at the end. Work
+    * is then never more than the per-doc spelling's, and duplication
+    * collapses to the original-content universe. Returns:
+    *   ids  — one row per distinct text: (rep = min doc_id, ids = sorted
+    *          doc-id list), persisted (several consumers, content-sized);
+    *   reps — the corpus cut to representative rows (doc_id, text),
+    *          streaming through one full-text doc_id-keyed exchange.
+    * No text ever enters an aggregate (a first(text) spelling falls off
+    * the codegen hash-agg path into the object/sort fallback and
+    * re-sorts the corpus), and the semi carries no broadcast hint (the
+    * rep set is corpus-sized under independent structure; the size-based
+    * planner degrades it to a shuffle join). History: PLANS.md.
+    * The returned plans read the `ids` cache, so no builder can unpersist
+    * it before returning; the session owner releases it with
+    * `spark.catalog.clearCache()` once the query is consumed
+    * (operators/CacheHygieneSpec).
+    */
   private[operators] def contentLayer(docs: DataFrame): (DataFrame, DataFrame) = {
     val ids = docs
       .select(md5(col("text")).as("cid"), col("doc_id"))
@@ -343,143 +331,47 @@ object TextOps {
     (ids, reps)
   }
 
-  /** Degeneracy bound for the row-local pair expansions (r20, VERDICT r19
-    * #2 — the one residual the r19 scaladoc documented but did not
-    * enforce): an id list longer than this is sliced into ≤-this-sized
-    * segments and the SEGMENT GRID is redistributed (one round-robin
-    * exchange) before the element explodes, so a boilerplate content
-    * duplicated 10⁵+ times parallelizes its ~10¹⁰-row expansion across
-    * ceil(n/seg)² tasks instead of serializing it on one. Normal corpora
-    * (every audited structure: ≤100 copies/content at 10×/100×
-    * duplication) never exceed the bound — their rows take the original
-    * single-generate path and the degenerate branch stays empty (its
-    * per-task cost is an empty filter; the branch's exchange moves zero
-    * rows).
-    */
-  private[operators] val ExpandSegment = 4096
-
-  /** ≤seg-element contiguous slices of an array column. */
-  private def chunks(c: Column, seg: Int): Column =
-    transform(
-      sequence(lit(0),
-        greatest(ceil(size(c).cast("double") / lit(seg.toDouble)).cast("int"),
-          lit(1)) - lit(1)),
-      i => slice(c, i * lit(seg) + lit(1), lit(seg)))
-
-  /** [[chunks]] tagged with the chunk index (for the i ≤ j same-array
-    * grid). */
-  private def chunkedIdx(c: Column, seg: Int): Column =
-    transform(
-      sequence(lit(0),
-        greatest(ceil(size(c).cast("double") / lit(seg.toDouble)).cast("int"),
-          lit(1)) - lit(1)),
-      i => struct(i.as("i"), slice(c, i * lit(seg) + lit(1), lit(seg)).as("seg")))
-
-  /** Doc-pair expansion of a representative-pair frame (r18): attach both
+  /** Doc-pair expansion of a representative-pair frame: attach both
     * sorted id lists and emit one row per (least, greatest) combination —
     * two row-local generators, no doc-granularity join. `payload` columns
     * ride through unchanged (they are content-pair functions). The ids
     * joins sit ABOVE the pair aggregate by construction: pair-keyed ⨝
-    * content-keyed, both bounded by the query's own output domain — the
-    * shuffle-join class the r17b rule allows.
-    *
-    * Duplication-degree bound (r20 — mechanical, was documentation-only
-    * in r19): rows where either id list exceeds [[ExpandSegment]] divert
-    * to a sliced spelling — both lists chunk into ≤seg segments, the
-    * segment grid explodes first (ceil(na/seg)·ceil(nb/seg) rows, each
-    * carrying ≤seg² element pairs), one round-robin exchange spreads the
-    * grid, and only then do the element explodes run — so ONE degenerate
-    * content pair's |ids_a|·|ids_b| doc pairs land on many tasks instead
-    * of one. Normal rows keep the r18 single-generate plan; on corpora
-    * with NO degenerate rows the branch is elided from the plan entirely
-    * (the fork-cache eager fill doubles as the driver-side probe — r20b).
-    * Equivalence (exact row multiset) is pinned in
-    * ContentLayerSpec at a tiny segment bound and end-to-end at the
-    * default bound on a 4200-copy content.
+    * content-keyed, both bounded by the query's own output domain, so
+    * the size-based planner may broadcast either side. A content pair's
+    * |ids_a|·|ids_b| doc pairs come out of one task; the output is
+    * quadratic in the copy count whatever the spelling.
     */
   private[operators] def expandRepPairs(pairs: DataFrame, ids: DataFrame,
-      payload: Seq[String], seg: Int = ExpandSegment): DataFrame = {
+      payload: Seq[String]): DataFrame = {
     val p = payload.map(col)
-    // Fork-point cache (r20b): normal/degenerate are COMPLEMENTARY filters
-    // over this frame — without a cache here each branch re-executes the
-    // whole pair pipeline above it (the banded self-join + verify +
-    // distinct), which read +52%/+63% on the q55/q56 gate rows the day the
-    // fork landed (tools/scale_r20_dev1.json; A/B in BASELINE.md r20).
-    // The frame is bounded by the query's own pair-output domain.
-    val joined = pairs
+    pairs
       .join(ids.select(col("rep").as("ra"), col("ids").as("ids_a")), Seq("ra"))
       .join(ids.select(col("rep").as("rb"), col("ids").as("ids_b")), Seq("rb"))
-      .persist()
-    // Eager fill (see minhashCandidates) doubling as the DEGENERACY PROBE:
-    // when no row exceeds the bound — every audited corpus — the degenerate
-    // branch is elided from the plan entirely (no empty exchange stage, no
-    // union), so normal corpora pay exactly the r18 single-generate plan
-    // plus this count. Driver-side adaptivity, same pattern as q49's
-    // threshold collect.
-    val nDeg = joined
-      .where(size(col("ids_a")) > seg || size(col("ids_b")) > seg).count()
-    val normal = joined
-      .where(size(col("ids_a")) <= seg && size(col("ids_b")) <= seg)
       .select(p :+ explode(col("ids_a")).as("da") :+ col("ids_b"): _*)
       .select(p :+ col("da") :+ explode(col("ids_b")).as("db"): _*)
-    val parts = pairs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    def deg = joined
-      .where(size(col("ids_a")) > seg || size(col("ids_b")) > seg)
-      .select(p ++ Seq(explode(chunks(col("ids_a"), seg)).as("sa"),
-        col("ids_b")): _*)
-      .select(p ++ Seq(col("sa"),
-        explode(chunks(col("ids_b"), seg)).as("sb")): _*)
-      .repartition(parts)
-      .select(p ++ Seq(explode(col("sa")).as("da"), col("sb")): _*)
-      .select(p :+ col("da") :+ explode(col("sb")).as("db"): _*)
-    (if (nDeg == 0) normal else normal.unionByName(deg))
       .select(least(col("da"), col("db")).as("doc_a") +:
         greatest(col("da"), col("db")).as("doc_b") +: p: _*)
   }
 
-  /** All ordered (doc_a < doc_b) pairs from each row's SORTED `ids` array,
+  /** All ordered (doc_a < doc_b) pairs from each row's `ids` array,
     * payload riding — the same-content half of the expansion family.
-    * Shares [[expandRepPairs]]'s mechanical degeneracy bound: arrays
-    * longer than seg chunk into the indexed segment grid (i ≤ j — sound
-    * because `ids` is sorted ascending and doc ids are unique, so chunk
-    * i's elements all precede chunk j's for i < j and the da < db filter
-    * completes the triangle exactly), redistribute, then explode.
+    * Doc ids are unique within a list, so `da < db` keeps each unordered
+    * pair exactly once.
     */
-  private[operators] def sameIdPairs(rows: DataFrame, payload: Seq[String],
-      seg: Int = ExpandSegment): DataFrame = {
+  private[operators] def sameIdPairs(rows: DataFrame, payload: Seq[String]): DataFrame = {
     val p = payload.map(col)
-    // Fork-point cache + degeneracy probe — same rule as expandRepPairs
-    // (r20b): the probe fills the cache AND elides the degenerate branch
-    // when it is empty.
-    val r = rows.persist()
-    val nDeg = r.where(size(col("ids")) > seg).count()
-    val normal = r.where(size(col("ids")) <= seg)
+    rows
       .select(p :+ explode(col("ids")).as("da") :+ col("ids"): _*)
       .select(p :+ col("da") :+ explode(col("ids")).as("db"): _*)
       .where(col("da") < col("db"))
-    val parts = rows.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    def deg = r.where(size(col("ids")) > seg)
-      .select(p :+ chunkedIdx(col("ids"), seg).as("cs"): _*)
-      .select(p :+ explode(col("cs")).as("ca") :+ col("cs"): _*)
-      .select(p ++ Seq(col("ca"), explode(col("cs")).as("cb")): _*)
-      .where(col("ca.i") <= col("cb.i"))
-      .repartition(parts)
-      .select(p ++ Seq(explode(col("ca.seg")).as("da"),
-        col("cb.seg").as("sb")): _*)
-      .select(p :+ col("da") :+ explode(col("sb")).as("db"): _*)
-      .where(col("da") < col("db"))
-    (if (nDeg == 0) normal else normal.unionByName(deg))
       .select(col("da").as("doc_a") +: col("db").as("doc_b") +: p: _*)
   }
 
-  /** Same-content doc pairs (r18): every content with ≥2 copies yields all
+  /** Same-content doc pairs: every content with ≥2 copies yields all
     * id-list combinations — duplicates agree on every band/signature
     * component by construction. `withSig` restricts to contents that have
     * a signature (<3-token texts produce no shingles and were never
-    * candidates in the per-doc spellings either). Degeneracy-bounded via
-    * [[sameIdPairs]] (r20).
+    * candidates in the per-doc spellings either).
     */
   private def sameContentPairs(ids: DataFrame, withSig: DataFrame): DataFrame =
     sameIdPairs(
@@ -498,9 +390,8 @@ object TextOps {
     * bit-for-bit.
     */
   def qMinhashBands(s: SparkSession, dir: String): DataFrame = {
-    // r18 content layer: the 32 md5 families run once per DISTINCT TEXT
-    // (contentLayer's semi replaces the bare repartition — same full-text
-    // exchange, the r17 hoist property preserved) and the per-doc
+    // content layer: the 32 md5 families run once per DISTINCT TEXT,
+    // after contentLayer's full-text doc_id exchange, and the per-doc
     // rows re-emerge by a row-local explode over the id lists.
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
     val bandCols = (0 until MinhashBands).map(b => col(s"band$b"))
@@ -765,18 +656,14 @@ object TextOps {
 
   /** Top-20 most-similar document pairs by 3-gram filtered-Jaccard.
     *
-    * r19: rides the content-dedup layer (VERDICT r18 #2 — "a content-layer
-    * rewrite making the [q49 pin-headroom] question moot"; the last heavy
-    * pair family off the per-doc posting join). Everything the pair math
-    * needs is a CONTENT function — identical texts have identical shingle
-    * sets, so document frequency is the COPY-WEIGHTED content frequency
-    * (sum(copies) ≡ the per-doc COUNT(*), exactly, in integers), the hot
-    * set, kept-array and n_sh are per-content, and the posting self-join +
-    * pair aggregate run on the distinct-content universe: the quadratic
-    * stage is ~duplication² smaller under duplication and identical under
-    * independent structure (the audited 10× dup corpus: 50k docs → 4,992
-    * contents → the 113M-row pair aggregate collapses to the ~1.1M
-    * content-pair frame).
+    * Rides the content-dedup layer ([[contentLayer]]). Everything the
+    * pair math needs is a CONTENT function — identical texts have
+    * identical shingle sets, so document frequency is the COPY-WEIGHTED
+    * content frequency (sum(copies) ≡ the per-doc COUNT(*), exactly, in
+    * integers), the hot set, kept-array and n_sh are per-content, and the
+    * posting self-join + pair aggregate run on the distinct-content
+    * universe: the quadratic stage is ~duplication² smaller under
+    * duplication and identical under independent structure.
     *
     * The top-20 never expands more than it must: candidate content pairs
     * (cross: copies_a·copies_b doc pairs each; same-content: C(copies,2)
@@ -794,13 +681,10 @@ object TextOps {
   def qJaccardTopPairs(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
-    // per-content kept-shingle arrays + copy counts through the SHARED
-    // posting-pair core (r19 review follow-up): the r15/r16 mechanics
-    // (bounded one-row hot broadcast, array_except in place, n_sh riding
-    // the shuffles, expansion-sized exchanges, pinned-off-broadcast
-    // self-join) live once in keptShingleArrays/postingPairAgg; this
-    // site supplies the copy weights — df = sum(copies) ≡ the per-doc
-    // COUNT(*) in exact integers, mult = max(copies_a·copies_b) — at the
+    // per-content kept-shingle arrays + copy counts through the shared
+    // posting-pair core (keptShingleArrays/postingPairAgg); this site
+    // supplies the copy weights — df = sum(copies) ≡ the per-doc COUNT(*)
+    // in exact integers, mult = max(copies_a·copies_b) — at the
     // library-default 0.5 df cap (inside jaccardPairs' [0.1, 1] bound).
     val sizes = ids.select(col("rep"), size(col("ids")).cast("long").as("copies"))
     val units = reps.select(col("doc_id").as("rep"),
@@ -941,17 +825,14 @@ object TextOps {
         sum(when(col("pred_lang") === col("true_lang"), 1).otherwise(0)).as("n_correct"))
   }
 
-  /** Shared rep-level core of q55/q105 (r19 content layer — the last two
-    * per-doc pair plans, VERDICT r18 #1): the banded self-join and the
+  /** Shared rep-level core of q55/q85/q105: the banded self-join and the
     * hamming verification run on the distinct-content universe. SimHash
     * bands and the 64-bit hamming are CONTENT functions (identical texts
     * → identical token streams → identical votes), so the quadratic
-    * stage collapses to the original-content universe under duplication
-    * — the structure where the per-doc spelling read 87.6 s warm at
-    * 100× dup while converted siblings (q143, same 27M-pair output) read
-    * 14.4 s cold. Returns (pairs, ids, sigReps): pairs = (ra, rb,
-    * hamming) at representative granularity, verified hamming ≤ 3 and
-    * distinct; ids/sigReps as in [[minhashRepPairs]].
+    * stage collapses to the original-content universe under duplication.
+    * Returns (pairs, ids, sigReps): pairs = (ra, rb, hamming) at
+    * representative granularity, verified hamming ≤ 3 and distinct;
+    * ids/sigReps as in [[minhashRepPairs]].
     */
   private def simhashRepPairs(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -980,14 +861,13 @@ object TextOps {
       .where(col("hamming") <= 3)
       .select(col("ra"), col("rb"), col("hamming"))
       .distinct()
-      // Persisted (r20): the verified pair set is bounded by the query's
-      // own pair-output domain (the r17b broadcast rule's bound), and two
-      // consumers otherwise re-run the banded self-join's map stages per
-      // run — q85's CC symmetrize reads it once-per-run after sym's
-      // unpersist, and q105's pair broadcast rebuilds per run (broadcast
-      // exchanges are never cache entries). Lazy: the first consumer
-      // fills it, so single-consumer callers (q55/q56 ride their own
-      // fork-point cache above this) pay one memory write, no extra job.
+      // Persisted: the verified pair set is bounded by the query's own
+      // pair-output domain, and two consumers otherwise re-run the banded
+      // self-join's map stages per run — q85's CC symmetrize reads it
+      // once-per-run after sym's unpersist, and q105's pair broadcast
+      // rebuilds per run (broadcast exchanges are never cache entries).
+      // Lazy: the first consumer fills it, so q55's expansion (its one
+      // consumer) pays one memory write, no extra job.
       .persist()
     (pairs, ids, bands.select(col("rep")))
   }
@@ -998,7 +878,7 @@ object TextOps {
     * bit_count(xor), since the 4 bands partition the 64 bits. Banded
     * blocking, never all-pairs; fully DuckDB-expressible.
     *
-    * r19: rides the content-dedup layer ([[simhashRepPairs]]). Cross-
+    * Rides the content-dedup layer ([[simhashRepPairs]]). Cross-
     * content pairs inherit the content pair's verified hamming verbatim
     * (bands are content functions); same-content pairs are hamming = 0
     * exactly, restricted to contents that HAVE bands (<1-token texts
@@ -1034,9 +914,9 @@ object TextOps {
        |WHERE $ham <= 3""".stripMargin
   }
 
-  /** Shared rep-level core of q56/q150 (r18 content layer): the banded
-    * self-join and the band-agreement pair aggregate run on the
-    * distinct-content universe. Returns (pairs, ids, sigReps):
+  /** Shared rep-level core of q56/q150: the banded self-join and the
+    * band-agreement pair aggregate run on the distinct-content universe.
+    * Returns (pairs, ids, sigReps):
     * pairs = (ra, rb, n_bands, mult) where ra/rb are representative
     * doc_ids, n_bands the band-agreement count (a content-pair function),
     * and mult = |ids_a|·|ids_b| the number of doc pairs each content pair
@@ -1062,12 +942,11 @@ object TextOps {
           col("x.rep") < col("y.rep"))
       .groupBy(col("x.rep").as("ra"), col("y.rep").as("rb"))
       .agg(count(lit(1)).as("n_bands"), max(col("x.n") * col("y.n")).as("mult"))
-      // Persisted (r20, the simhashRepPairs rule): bounded by the query's
-      // own pair-output domain. q150 consumes the pair aggregate directly
-      // (no fork-point cache above it), so without this every steady-state
-      // run re-ran the banded self-join's BOTH map sides (twin 8.0 s +
-      // 4.2 s runMs stages per run, OPTIMIZATION_r20.md). Lazy — q56 rides its
-      // expandRepPairs fork cache and just pays one memory write.
+      // Persisted (the simhashRepPairs rule): bounded by the query's own
+      // pair-output domain. Without it every repeat of q150, which
+      // consumes the pair aggregate directly, re-runs the banded
+      // self-join's BOTH map sides (OPTIMIZATION_r20.md). Lazy: q56's
+      // expansion, its one consumer there, fills it with one memory write.
       .persist()
     (pairs, ids, bands.select(col("rep")))
   }
@@ -2563,51 +2442,24 @@ object TextOps {
     * without rounding, the q49 convention).
     */
   def qMinhashErrorAudit(s: SparkSession, dir: String): DataFrame = {
-    // repartition(doc_id) at the TEXT level (r17b): the groupBy(doc_id)
-    // needed this exchange anyway — hoisting it below the scan moves the
-    // 32-family md5 evaluation from the SCAN stage (whose parallelism is
-    // the input file layout: ONE task on a single-row-group fixture/scale
-    // file — 39 s of single-threaded hashing at 10×, BASELINE.md) to the
-    // post-shuffle side, exchanging raw text instead of shingles. Same
-    // exchange count, fewer bytes, order-insensitive MIN → values
-    // unchanged. See [[qSimhashBands]].
-    // r18 content-dedup layer (found by the 100× DUPLICATION audit, the
-    // probe class VERDICT r17 #1 mandated): the r17b pair join attached
-    // each side's payload (32-hash signature + shingle array, ~3.5 KB)
-    // once PER PAIR — under 100× duplication every doc sits in ~100
-    // pairs, so the join shuffled ~190 GB for a 2 GB corpus and died on
-    // disk (the audit's 27M-pair reading). But est/jaccard depend only on
-    // CONTENT: identical texts have identical signatures and shingle
-    // sets, so the whole quadratic stage now runs per DISTINCT TEXT
-    // (cid = md5(text)) and expands to doc pairs row-locally at the end.
-    // Work is a function of the corpus's distinct-content structure —
-    // strictly ≤ the per-doc spelling under EVERY corpus structure
-    // (duplication: quadratic stage collapses to the original-content
-    // universe; independent: cid ≈ doc_id and the plan degenerates to
-    // r17b's at the same cost). Values are bit-identical; the oracle SQL
-    // is untouched.
-    // Dedup mechanics (v2, measured): a per-cid text aggregate
-    // (first(text)) cannot run on the codegen hash-agg fast path — a
-    // string-valued buffer forces the object/sort fallback, which at the
-    // 100× INDEPENDENT corpus (where cid ≈ doc) re-sorted 2.3 GB of text
-    // and doubled the cold reading (94.6 s vs r17b's 44.9). So no text
-    // ever enters an aggregate: one SKINNY pass picks each content's
-    // representative (min doc_id) and collects the doc-id list, and a
-    // LeftSemi join cuts the corpus to representative rows — the same
-    // single full-text doc_id-keyed exchange r17b's repartition paid, so
-    // the independent-corpus cost is unchanged while duplication
-    // collapses the text reaching the signature build to one copy per
-    // distinct content. Pair keys are the representatives' 8-byte
-    // doc_ids from here on (rep_a/rep_b), not 32-char digests.
+    // Content-dedup layer ([[contentLayer]]): est/jaccard depend only on
+    // CONTENT (identical texts have identical signatures and shingle
+    // sets), so the quadratic stage runs per DISTINCT TEXT and expands to
+    // doc pairs row-locally at the end. Attaching the per-doc payload
+    // (32-hash signature + shingle array) once PER PAIR instead makes the
+    // join's shuffle quadratic in the duplication degree. The text reaches
+    // the signature build through contentLayer's doc_id-keyed exchange, so
+    // the 32-family md5 evaluation runs after a shuffle at cluster
+    // parallelism, never in the scan stage (see [[qSimhashBands]]). Pair
+    // keys are the representatives' 8-byte doc_ids (rep_a/rep_b).
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
     val sh = shinglesDistinct(reps)
     val mins = (0 until MinhashK).map(i =>
       min(md5(concat_ws(":", lit(i), col("shingle")).cast("binary"))).as(s"m$i"))
-    // The per-text distinct shingle ARRAY rides the signature aggregate
-    // (r17b): the true-jaccard side needs it, and collecting it here
-    // costs no extra pass (shinglesDistinct already dedups, so
-    // collect_list is set-valued). No persist on sh (r18, advisor): it
-    // is consumed exactly once.
+    // The per-text distinct shingle ARRAY rides the signature aggregate:
+    // the true-jaccard side needs it, and collecting it here costs no
+    // extra pass (shinglesDistinct already dedups, so collect_list is
+    // set-valued). No persist on sh: it is consumed exactly once.
     val aggs = mins :+ collect_list(col("shingle")).as("arr")
     val sig = sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
     val bands = (0 until MinhashBands).map { b =>
@@ -2625,19 +2477,15 @@ object TextOps {
           col("x.rep") < col("y.rep"))
       .select(col("x.rep").as("rep_a"), col("y.rep").as("rep_b"))
       .distinct()
-    // r17b (the broadcast dual, measured the hard way): the first r17 fix
-    // broadcast est/common/sizes on the claim "candidate-bounded". That
-    // held on the independent 100× corpus but NOT under duplication —
-    // `common` was pairs-sharing-a-shingle (corpus-STRUCTURE-dependent,
-    // not banding-bounded) and its broadcast hit Spark's 8 GiB hard limit
-    // at 11.6 GiB on the 10× duplication corpus. Only the banded pair KEY
-    // SET is output-bounded, so that is the only thing that broadcasts
-    // (16 B/content-pair — two rep doc_ids); each side's payload attaches by STREAMING
-    // the persisted per-text frame through that broadcast, the two
-    // pair-keyed sides meet in ONE co-partitioned shuffle join, and
-    // est/common/jaccard are row-local array arithmetic — zip_with
-    // equality count for the estimate, array_intersect size for true
-    // overlap.
+    // Only the banded pair KEY SET is output-bounded (16 B per content
+    // pair), so it is the only thing that broadcasts; `common` (pairs
+    // sharing a shingle) depends on corpus structure and outgrew Spark's
+    // 8 GiB broadcast limit on a 10× duplication corpus. Each side's
+    // payload attaches by STREAMING the persisted per-text frame through
+    // the key broadcast, the two pair-keyed sides meet in ONE
+    // co-partitioned shuffle join, and est/common/jaccard are row-local
+    // array arithmetic — zip_with equality count for the estimate,
+    // array_intersect size for true overlap. History: PLANS.md.
     val candB = cand.persist()
     def side(key: String, sfx: String) = sigB
       .select(col("rep").as(key),
@@ -2652,8 +2500,8 @@ object TextOps {
       .withColumn("jaccard", col("common").cast("double")
         / (size(col("arr_a")) + size(col("arr_b")) - col("common")))
       .select(col("rep_a"), col("rep_b"), col("est_jaccard"), col("jaccard"))
-    // Expansion back to doc pairs (expandRepPairs/sameContentPairs, the
-    // shared r18 helpers): cross-content pairs carry est/jaccard verbatim
+    // Expansion back to doc pairs (expandRepPairs/sameContentPairs):
+    // cross-content pairs carry est/jaccard verbatim
     // (content-pair functions); same-content pairs are est = jaccard = 1
     // exactly, restricted to contents that HAVE a signature.
     val cross = expandRepPairs(

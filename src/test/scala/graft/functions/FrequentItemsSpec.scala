@@ -5,12 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The Misra-Gries aggregate's contract: the n/(k+1) survival guarantee
-  * holds under eviction pressure (vocab ≫ k) at any partitioning, state
-  * round-trips through serde, and the sketch-then-recount heavy hitters
-  * are EXACT despite the approximate intermediate. Exact counter values are
-  * intentionally not pinned — they vary with merge order inside the
-  * guarantee; the guarantee is the spec.
+/** The Misra-Gries aggregate's contract (`mg_freq_text`, fed one
+  * space-free token per row where a case needs a plain item stream): the
+  * n/(k+1) survival guarantee holds under eviction pressure (vocab ≫ k)
+  * at any partitioning, state round-trips through serde, and the
+  * sketch-then-recount heavy hitters are EXACT despite the approximate
+  * intermediate. Exact counter values are intentionally not pinned — they
+  * vary with merge order inside the guarantee; the guarantee is the spec.
   */
 class FrequentItemsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -33,7 +34,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     val n = truth.values.sum
     val k = 32
     Seq(1, 8, 37).foreach { parts =>
-      val sk = skewed(parts).agg(expr(s"mg_freq(item, $k)").as("sk"))
+      val sk = skewed(parts).agg(expr(s"mg_freq_text(item, $k).items").as("sk"))
         .select(expr("transform(sk, x -> x.item)").as("items"))
         .head().getSeq[String](0).toSet
       assert(sk.size <= k, s"sketch holds ${sk.size} > k=$k at parts=$parts")
@@ -50,7 +51,7 @@ class FrequentItemsSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = truth.values.sum
     val k = 32
-    val ests = skewed(8).agg(expr(s"mg_freq(item, $k)").as("sk"))
+    val ests = skewed(8).agg(expr(s"mg_freq_text(item, $k).items").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item"), col("e.est"))
       .collect().map(r => r.getString(0) -> r.getLong(1))
@@ -142,7 +143,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(batchDf.schema).parquet(streamDir)
     def toksOf(df: org.apache.spark.sql.DataFrame) =
       df.select(explode(split(col("text"), " ")).as("token")).where(col("token") =!= "")
-    val q = toksOf(stream).agg(expr("mg_freq(token, 64)").as("sk"))
+    val q = toksOf(stream).agg(expr("mg_freq_text(token, 64).items").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item").as("item"), col("e.est").as("est"))
       .writeStream.format("memory").queryName("mg_stream")
@@ -166,7 +167,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq("a", "b").toDF("item")
     def analyze(kSpelling: String): Unit =
-      df.agg(expr(s"mg_freq(item, $kSpelling)")).queryExecution.analyzed
+      df.agg(expr(s"mg_freq_text(item, $kSpelling)")).queryExecution.analyzed
 
     val nonFoldable = intercept[AnalysisException](analyze("length(item)"))
     assert(nonFoldable.getMessage.contains("literal"))
@@ -288,12 +289,12 @@ class FrequentItemsSpec extends AnyFunSuite {
     assert(got.toSeq === want)
   }
 
-  test("mg_freq_text matches the exploded mg_freq spelling bit-for-bit") {
+  test("mg_freq_text over whole documents matches its one-token-per-row feed") {
     GraftFunctions.register(spark)
     import spark.implicits._
-    // single partition so both spellings absorb the identical token
-    // stream in the identical order — MG results are then deterministic
-    // and must agree exactly (same sketch, different feed path)
+    // single partition so both feeds absorb the identical token stream in
+    // the identical order — MG results are then deterministic and must
+    // agree exactly (same sketch, different feed path)
     val docs = Seq(
       "the quick brown fox  the lazy dog", // double space → empty token to skip
       " leading and trailing ",
@@ -301,17 +302,19 @@ class FrequentItemsSpec extends AnyFunSuite {
       "unicode tokens ünïcødé ünïcødé 日本語",
       (1 to 200).map(i => s"tok_${i % 17}").mkString(" "))
       .toDF("text").coalesce(1)
-    val viaText = docs.agg(expr("mg_freq_text(text, 8)").as("r"))
-      .select(col("r.n"), expr("transform(r.items, x -> struct(x.item, x.est))"))
-      .head()
+    def sketch(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.agg(expr(s"mg_freq_text($c, 8)").as("r"))
+        .select(col("r.n"), expr("transform(r.items, x -> struct(x.item, x.est))"))
+        .head()
     val exploded = docs.select(explode(split(col("text"), " ")).as("token"))
       .where(col("token") =!= "")
     val nTrue = exploded.count()
-    val skExplode = exploded.agg(expr("mg_freq(token, 8)").as("sk"))
-      .select(expr("transform(sk, x -> struct(x.item, x.est))")).head().getSeq[Any](0)
+    val viaText = sketch(docs, "text")
+    val viaTokens = sketch(exploded, "token")
     assert(viaText.getLong(0) === nTrue, "n must be the exact non-empty token count")
-    assert(viaText.getSeq[Any](1) === skExplode,
-      "items/estimates must match the exploded spelling")
+    assert(viaTokens.getLong(0) === nTrue)
+    assert(viaText.getSeq[Any](1) === viaTokens.getSeq[Any](1),
+      "items/estimates must match the one-token-per-row feed")
   }
 
   test("two-pass heavy hitters is exact under eviction pressure") {
@@ -321,7 +324,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     // n/(k+1) must sit below it — k=256 gives ~56. (k=32's floor ~439
     // would NOT cover it; exactness is conditional on k, by design.)
     val toksDf = skewed(16).withColumnRenamed("item", "token")
-    val cands = toksDf.agg(expr("mg_freq(token, 256)").as("sk"))
+    val cands = toksDf.agg(expr("mg_freq_text(token, 256).items").as("sk"))
       .select(explode(expr("transform(sk, x -> x.item)")).as("token"))
     val got = toksDf.join(broadcast(cands), Seq("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))

@@ -132,41 +132,64 @@ class ContentLayerSpec extends AnyFunSuite {
     assert(got.filter(_._1 >= 500L).forall(t => t._2 == t._1))
   }
 
-  test("expansion degeneracy guard: sliced spelling equals single-generate exactly (tiny seg)") {
-    // r20 (VERDICT r19 #2): id lists past ExpandSegment divert to a
-    // chunk-grid spelling with a redistribution exchange between the
-    // explodes. Pin the EXACT row-multiset equivalence of the two
-    // spellings at a tiny segment bound where both the cross grid and the
-    // i ≤ j same-array triangle exercise multi-chunk paths, including
-    // uneven tail chunks.
+  test("doc-pair expansions emit exactly the id-list pairs computed in Scala") {
+    // Exact row multisets: the cross expansion attaches both id lists and
+    // orients each pair with least/greatest; the same-content expansion
+    // keeps da < db over one list. Uneven list sizes (100 × 37) so a
+    // swapped or truncated explode shows.
     import spark.implicits._
     val idsA = (0L until 100L).toArray
     val idsB = (200L until 237L).toArray
     val ids = Seq((0L, idsA), (200L, idsB)).toDF("rep", "ids")
     val pairs = Seq((0L, 200L)).toDF("ra", "rb").withColumn("x", lit(7))
     def key(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-        .sortBy(t => (t._1, t._2)).toSeq
-    val sliced = key(TextOps.expandRepPairs(pairs, ids, Seq("x"), seg = 8))
-    val single = key(TextOps.expandRepPairs(pairs, ids, Seq("x"), seg = 1 << 20))
-    assert(sliced.size == 100 * 37)
-    assert(sliced == single)
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
+    val cross = key(TextOps.expandRepPairs(pairs, ids, Seq("x")))
+    val crossWant = (for (a <- idsA; b <- idsB) yield (a min b, a max b, 7)).toSeq.sorted
+    assert(cross.size == 100 * 37)
+    assert(cross == crossWant)
 
-    val rows = Seq(Tuple1((0L until 100L).toArray)).toDF("ids")
-      .withColumn("y", lit(3))
-    val sameSliced = key(TextOps.sameIdPairs(rows, Seq("y"), seg = 8))
-    val sameSingle = key(TextOps.sameIdPairs(rows, Seq("y"), seg = 1 << 20))
-    assert(sameSliced.size == 100 * 99 / 2)
-    assert(sameSliced == sameSingle)
+    val rows = Seq(Tuple1(idsA)).toDF("ids").withColumn("y", lit(3))
+    val same = key(TextOps.sameIdPairs(rows, Seq("y")))
+    val sameWant = idsA.toSeq.combinations(2).map(c => (c(0), c(1), 3)).toSeq.sorted
+    assert(same.size == 100 * 99 / 2)
+    assert(same == sameWant)
   }
 
-  test("a 4200-copy degenerate content expands correctly at the DEFAULT segment bound") {
-    // End-to-end through q55 on a corpus whose duplication degree crosses
-    // ExpandSegment (4096): one content duplicated 4201× must emit
-    // exactly C(4201,2) hamming-0 pairs, duplicate-free — through the
-    // chunk-grid path, not one unsplittable task. (The r19 spelling
-    // would also produce these rows, serially; this pins the r20 slicing
-    // didn't change a single row at the default bound.)
+  test("the doc-pair expansions submit no Spark job while they build") {
+    // Building the expansion plans must stay lazy: no probe action on the
+    // driver. Jobs are counted per job group through the status tracker;
+    // a fence job in a second group, once visible, proves every earlier
+    // job event has been processed.
+    import spark.implicits._
+    val ids = Seq((0L, Array(0L, 1L, 2L)), (10L, Array(10L, 11L))).toDF("rep", "ids")
+    val pairs = Seq((0L, 10L)).toDF("ra", "rb").withColumn("x", lit(7))
+    val rows = ids.select(col("ids")).withColumn("y", lit(3))
+    val sc = spark.sparkContext
+    val build = s"expand-build-${java.util.UUID.randomUUID}"
+    val fence = s"expand-fence-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(build, "doc-pair expansion build")
+    val (cross, same) =
+      try (TextOps.expandRepPairs(pairs, ids, Seq("x")), TextOps.sameIdPairs(rows, Seq("y")))
+      finally sc.clearJobGroup()
+    sc.setJobGroup(fence, "status-tracker fence")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(fence).isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup(fence).nonEmpty, "fence job never recorded")
+    val built = sc.statusTracker.getJobIdsForGroup(build)
+    assert(built.isEmpty, s"building the expansions ran ${built.length} Spark job(s)")
+    // the built plans still hold the pairs
+    assert(cross.count() == 6)
+    assert(same.count() == 4)
+  }
+
+  test("a 4201-copy content expands through q55 to every same-content pair once") {
+    // End-to-end through q55 on a corpus where one content is duplicated
+    // 4201× (past the 100 copies per content of the audited duplication
+    // corpora): it must emit exactly C(4201,2) hamming-0 pairs,
+    // duplicate-free.
     import spark.implicits._
     val text = (0 until 40).map(i => vocab(i % vocab.length)).mkString(" ")
     val rnd = new scala.util.Random(11)
@@ -184,7 +207,7 @@ class ContentLayerSpec extends AnyFunSuite {
       val n = pairs.count()
       assert(n == 4201L * 4200L / 2,
         s"expected C(4201,2)=${4201L * 4200L / 2} same-content pairs, got $n")
-      assert(pairs.distinct().count() == n, "duplicate pair rows from the chunk grid")
+      assert(pairs.distinct().count() == n, "duplicate pair rows")
       assert(pairs.where(col("hamming") =!= 0).count() == 0)
     } finally spark.catalog.clearCache()
   }
