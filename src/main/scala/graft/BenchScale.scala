@@ -195,6 +195,13 @@ object BenchScale {
     rows.collect { case (a, t) if !passes(a, t) => (a, t / a.duckSec / a.maxRatio) }
       .sortBy(-_._2).map(_._1)
 
+  /** The corpus directories the selected rows read (unit-tested): a run
+    * checks only these, so a `docs10x`-only selection needs no temporal
+    * corpus.
+    */
+  def requiredDirs(rows: Seq[Anchor], docsDir: String, tempDir: String): Seq[String] =
+    rows.map(a => if (a.corpus == "docs10x") docsDir else tempDir).distinct
+
   def main(args: Array[String]): Unit = {
     val docsDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/sf01x10")
     val tempDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR_T", "/tmp/sf01x10t")
@@ -202,8 +209,9 @@ object BenchScale {
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-    def dirOf(corpus: String) = if (corpus == "docs10x") docsDir else tempDir
-    val missing = Seq(docsDir, tempDir).filterNot(d =>
+    def dirOf(a: Anchor) = requiredDirs(Seq(a), docsDir, tempDir).head
+    val gated = anchors.filter(a => only.forall(_.contains(a.query)))
+    val missing = requiredDirs(gated, docsDir, tempDir).filterNot(d =>
       Files.exists(Paths.get(d, "documents.parquet")))
     if (missing.nonEmpty) {
       val line = s"""{"metric":"scale_gate","pass":false,"error":"corpus missing: ${missing.mkString(",")} — rebuild with: python3 tools/make_10x.py"}"""
@@ -221,11 +229,11 @@ object BenchScale {
     def measure(a: Anchor): Double =
       try {
         val fn = fns(a.query)
-        Bench.force(fn(spark, dirOf(a.corpus))) // warmup: codegen + IO + persist fills
+        Bench.force(fn(spark, dirOf(a))) // warmup: codegen + IO + persist fills
         System.gc()
         (1 to 3).map { _ =>
           val t0 = System.nanoTime()
-          Bench.force(fn(spark, dirOf(a.corpus)))
+          Bench.force(fn(spark, dirOf(a)))
           (System.nanoTime() - t0) / 1e9
         }.min
       } catch {
@@ -234,7 +242,6 @@ object BenchScale {
           -1.0
       } finally spark.catalog.clearCache()
 
-    val gated = anchors.filter(a => only.forall(_.contains(a.query)))
     var best = gated.map(a => a -> measure(a)).toMap
     // Deferred retry rounds: only still-failing rows re-measure, worst first.
     var round = 0

@@ -1,11 +1,12 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSession
 
 /** Native codegen cosine similarity over two float-array columns.
   *
@@ -94,74 +95,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def prettyName: String = "cosine_similarity"
 }
 
-/** The one registration path for the graft SQL functions:
-  * [[GraftFunctions.register]] installs them on an existing session. Each
-  * builder rejects a wrong-arity call with an IllegalArgumentException at
-  * analysis time.
-  */
-object GraftFunctions {
-  private val cosineBuilder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case exprs => throw new IllegalArgumentException(
-      s"cosine_similarity expects 2 arguments, got ${exprs.length}")
-  }
-
-  /** Graft spellings of the internal expressions Spark's runtime
-    * bloom-filter join plans with (`BloomFilterAggregate` /
-    * `BloomFilterMightContain`) — exposed as first-class functions so the
-    * cross-corpus dedup prefilter ([[graft.operators.CrossCorpus]]) can
-    * build and probe corpus blooms declaratively. Usage:
-    * `bloom_agg(longCol, estItemsL, numBitsL)` → binary;
-    * `bloom_might_contain(bloomBinary, longCol)` → boolean.
-    */
-  private val bloomAggBuilder: Seq[Expression] => Expression = {
-    case Seq(child, est, bits) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        child, est, bits)
-    case exprs => throw new IllegalArgumentException(
-      s"bloom_agg expects 3 arguments (value, estItems, numBits), got ${exprs.length}")
-  }
-  private val bloomMightContainBuilder: Seq[Expression] => Expression = {
-    case Seq(bloom, value) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, value)
-    case exprs => throw new IllegalArgumentException(
-      s"bloom_might_contain expects 2 arguments (bloom, value), got ${exprs.length}")
-  }
-
-  private val tokenTermCountsBuilder: Seq[Expression] => Expression = {
-    case Seq(t, terms) => TokenTermCounts(t, terms)
-    case exprs => throw new IllegalArgumentException(
-      s"token_term_counts expects 2 arguments (text, terms), got ${exprs.length}")
-  }
-
-  private val wordShinglesBuilder: Seq[Expression] => Expression = {
-    case Seq(t, n, d) if n.foldable && d.foldable =>
-      (n.eval(), d.eval()) match {
-        case (nv: Number, dv: java.lang.Boolean) =>
-          WordShingles(t, nv.intValue(), dv.booleanValue())
-        case (nv, dv) => throw new IllegalArgumentException(
-          "word_shingles expects a non-null int n and boolean dedup, " +
-            s"got n = $nv, dedup = $dv")
-      }
-    case Seq(_, _, _) => throw new IllegalArgumentException(
-      "word_shingles expects FOLDABLE (constant) n and dedup arguments")
-    case exprs => throw new IllegalArgumentException(
-      "word_shingles expects 3 arguments (text, int n, boolean dedup), " +
-        s"got ${exprs.length}")
-  }
-
-  /** Idempotent session-local registration (all graft functions). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", cosineBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_term_counts", tokenTermCountsBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", wordShinglesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", bloomAggBuilder, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", bloomMightContainBuilder, "scala_udf")
-    FrequentItems.register(spark)
-  }
+object CosineSimilarity {
+  /** Column-level constructor, registry-free (like [[DecSum6.column]]). */
+  def column(a: Column, b: Column): Column =
+    ColumnBridge.column(
+      CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }

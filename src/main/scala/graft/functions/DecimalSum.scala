@@ -150,8 +150,9 @@ case class DecSum6(child: Expression)
 }
 
 object DecSum6 {
-  /** Column-level constructor, registry-free (dsum call sites span every
-    * module, including sessions that never call GraftFunctions.register).
+  /** Column-level constructor: the aggregate goes straight into the
+    * DataFrame DSL through [[org.apache.spark.sql.graft.ColumnBridge]],
+    * so it works on any session, with no function registry involved.
     */
   def column(c: Column): Column =
     ColumnBridge.column(

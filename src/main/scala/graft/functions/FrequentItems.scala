@@ -2,13 +2,15 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable Misra-Gries frequent-items summary (Misra & Gries '82;
@@ -34,7 +36,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * eviction ever happened anywhere in the merge tree — every absorbed
   * item is still present and every counter is its EXACT count. Running
   * the sketch with a capacity well above the expected key cardinality
-  * (see `mg_freq_text(text, k, cap)`) turns the candidate generator into
+  * (see [[MgFreqText]]'s `cap`) turns the candidate generator into
   * a single-pass exact top-k whenever the corpus vocabulary fits; `err`
   * is a by-product of work MG already does. For a non-exact sketch, `err` is also an upper bound on the
   * true count of any item absent from the counters (it can only have
@@ -156,7 +158,7 @@ object MgSketch {
   }
 }
 
-/** `mg_freq_text(text, k[, cap])` — distributed heavy-hitters candidates
+/** `MgFreqText.column(text, k, cap)` — distributed heavy-hitters candidates
   * as a first-class Catalyst aggregate over a [[MgSketch]]: per-partition
   * summaries build map-side (update) and combine on the reduce side
   * (merge), so a corpus-wide frequent-tokens pass shuffles O(cap)-entry
@@ -174,8 +176,9 @@ object MgSketch {
   *    seen;
   *  - `items` — the top-`k` counters, (est DESC, item ASC).
   *
-  * `cap` (optional, default `k`) is the sketch CAPACITY, the MG counter
-  * budget, separate from the returned arity `k`. With `cap` well above
+  * `cap` (at least `k`) is the sketch CAPACITY, the MG counter budget,
+  * separate from the returned arity `k`; both are plain Ints, checked
+  * when the expression is built. With `cap` well above
   * the corpus vocabulary (1<<16 for word tokens: a few MB of counter
   * state per aggregation buffer, whatever the data size) `err == 0` is
   * the common case, and q103/q114 certify their top-k in a single pass.
@@ -185,37 +188,25 @@ object MgSketch {
   * Per-token cost is one in-place map probe; only a new counter entry
   * (≤cap live, amortized by MG's decrement-all) allocates. A row holding
   * one space-free token feeds the sketch exactly that token, so
-  * `mg_freq_text(token, k)` over an exploded token column absorbs the
+  * `MgFreqText.column(token, k, k)` over an exploded token column absorbs the
   * same stream as the whole documents (FrequentItemsSpec pins the
   * parity).
   */
 case class MgFreqText(
     child: Expression,
-    kExpr: Expression,
-    capExpr: Expression,
+    k: Int,
+    cap: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[MgSketch] {
+  extends TypedImperativeAggregate[MgSketch] with UnaryLike[Expression] {
 
-  private lazy val outK: Int = kExpr.eval().asInstanceOf[Int]
-  private lazy val sketchCap: Int = capExpr.eval().asInstanceOf[Int]
+  require(k >= 1 && cap >= k,
+    s"mg_freq_text needs k >= 1 and cap >= k, got k = $k, cap = $cap")
 
-  override def children: Seq[Expression] = Seq(child, kExpr, capExpr)
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != StringType || kExpr.dataType != IntegerType ||
-        capExpr.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure(
-        s"mg_freq_text expects (STRING, INT[, INT]), got " +
-          s"(${child.dataType.sql}, ${kExpr.dataType.sql}, ${capExpr.dataType.sql})")
-    else if (!kExpr.foldable || !capExpr.foldable)
-      TypeCheckResult.TypeCheckFailure("mg_freq_text k and cap must be literals")
-    else (kExpr.eval(), capExpr.eval()) match {
-      case (null, _) | (_, null) =>
-        TypeCheckResult.TypeCheckFailure("mg_freq_text k/cap must not be NULL")
-      case (k: Int, cap: Int) if k >= 1 && cap >= k => TypeCheckResult.TypeCheckSuccess
-      case (k, cap) => TypeCheckResult.TypeCheckFailure(
-        s"mg_freq_text needs k >= 1 and cap >= k, got k = $k, cap = $cap")
-    }
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"mg_freq_text expects a STRING column, got ${child.dataType.sql}")
   override def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
     StructField("err", LongType, nullable = false),
@@ -227,7 +218,7 @@ case class MgFreqText(
   override def nullable: Boolean = false
   override def prettyName: String = "mg_freq_text"
 
-  override def createAggregationBuffer(): MgSketch = new MgSketch(sketchCap)
+  override def createAggregationBuffer(): MgSketch = new MgSketch(cap)
 
   override def update(buffer: MgSketch, input: InternalRow): MgSketch = {
     val v = child.eval(input)
@@ -241,7 +232,7 @@ case class MgFreqText(
 
   override def eval(buffer: MgSketch): Any =
     InternalRow(buffer.count, buffer.err,
-      new GenericArrayData(buffer.topItems.take(outK).map { case (it, c) =>
+      new GenericArrayData(buffer.topItems.take(k).map { case (it, c) =>
         InternalRow(UTF8String.fromString(it), c)
       }))
 
@@ -253,12 +244,16 @@ case class MgFreqText(
     copy(mutableAggBufferOffset = offset)
   override def withNewInputAggBufferOffset(offset: Int): MgFreqText =
     copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): MgFreqText =
-    copy(child = newChildren(0), kExpr = newChildren(1), capExpr = newChildren(2))
+  override protected def withNewChildInternal(newChild: Expression): MgFreqText =
+    copy(child = newChild)
 }
 
 object MgFreqText {
+  /** Column-level constructor, registry-free (like [[DecSum6.column]]). */
+  def column(text: Column, k: Int, cap: Int): Column =
+    ColumnBridge.column(
+      MgFreqText(ColumnBridge.expression(text), k, cap).toAggregateExpression())
+
   /** Tokenize `s` on space runs and absorb every non-empty token. Space
     * (0x20) never occurs inside a UTF-8 multibyte sequence, so the
     * byte-level split is exact for any input — same argument as
@@ -277,23 +272,5 @@ object MgFreqText {
         sk.update(UTF8String.fromBytes(b, start, i - start))
       }
     }
-  }
-}
-
-object FrequentItems {
-  /** Guarded builder: a wrong-arity SQL call fails with a clean
-    * analysis-time IllegalArgumentException.
-    */
-  private val mgFreqTextBuilder: Seq[Expression] => Expression = {
-    case Seq(text, k) => MgFreqText(text, k, k)
-    case Seq(text, k, cap) => MgFreqText(text, k, cap)
-    case exprs => throw new IllegalArgumentException(
-      s"mg_freq_text expects 2 or 3 arguments (text, k[, cap]), got ${exprs.length}")
-  }
-
-  /** Idempotent session-local registration of `mg_freq_text`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mg_freq_text", mgFreqTextBuilder, "scala_udf")
   }
 }

@@ -1,15 +1,18 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{array, lit}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass whole-token counting against a constant term list.
   *
-  * `token_term_counts(text, array('a','b',…))` → `array<bigint>` where
+  * `TokenTermCounts.column(text, Seq("a", "b", …))` → `array<bigint>` where
   * element 0 is the total token count (tokens = maximal runs of
   * non-space bytes, i.e. `string_split(text, ' ')` minus empties),
   * element i+1 is the number of tokens exactly equal to the i-th term,
@@ -150,6 +153,13 @@ final class TermTable(val terms: Array[Array[Byte]]) extends Serializable {
 }
 
 object TokenTermCounts {
+  /** Column-level constructor, registry-free (like [[DecSum6.column]]):
+    * the term list is an `array(lit(term), …)` of the given strings.
+    */
+  def column(text: Column, terms: Seq[String]): Column =
+    ColumnBridge.column(TokenTermCounts(ColumnBridge.expression(text),
+      ColumnBridge.expression(array(terms.map(lit): _*))))
+
   /** The fused loop: tokenize on 0x20 runs, count all tokens and exact
     * matches per term (length-bucketed candidate probe). Called from both
     * interpreted eval and codegen.

@@ -1,16 +1,18 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass word n-gram shingle extraction.
   *
-  * `word_shingles(text, n, dedup)` → `array<string>`: the word n-grams of
+  * `WordShingles.column(text, n, dedup)` → `array<string>`: the word n-grams of
   * `string_split(text, ' ')` (empties included, exactly like the
   * composable `transform(sequence(…), i -> concat_ws(' ', slice(toks,
   * i, n)))` spelling), in order; fewer than n tokens yields an empty
@@ -77,6 +79,10 @@ case class WordShingles(child: Expression, n: Int, dedup: Boolean)
 }
 
 object WordShingles {
+  /** Column-level constructor, registry-free (like [[DecSum6.column]]). */
+  def column(text: Column, n: Int, dedup: Boolean): Column =
+    ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n, dedup))
+
   private val empty = new GenericArrayData(new Array[Any](0))
 
   /** One pass over the bytes: spaces are token boundaries (0x20 never

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.Tables
 
@@ -26,32 +29,46 @@ object CrossCorpus {
 
   private def t(s: SparkSession, dir: String, n: String) = Tables.load(s, dir, n)
 
+  /** The bloom filter over a long column that Spark's runtime bloom join
+    * builds (`BloomFilterAggregate`), as an aggregate Column: a binary
+    * filter sized for `expectedItems` with `numBits` bits.
+    */
+  private[operators] def bloomAgg(value: Column, expectedItems: Long,
+      numBits: Long): Column =
+    ColumnBridge.column(new BloomFilterAggregate(ColumnBridge.expression(value),
+      Literal(expectedItems), Literal(numBits)).toAggregateExpression())
+
+  /** Probe of a [[bloomAgg]] filter (`BloomFilterMightContain`): false
+    * only for a value that was never added.
+    */
+  private[operators] def bloomMightContain(bloom: Array[Byte], value: Column): Column =
+    ColumnBridge.column(BloomFilterMightContain(Literal(bloom),
+      ColumnBridge.expression(value)))
+
   /** Novel rows of `newBatch` (those whose `key` column value never
     * appears in `seen`), via bloom prefilter + exact anti-join confirm.
     * A non-long key column is fed to the bloom through xxhash64 (the
     * bloom expression wants a long) — correctness-invisible, since the
     * bloom only gates which rows pay the EXACT anti-join on the raw key.
-    * Requires [[graft.functions.GraftFunctions.register]] on the session
-    * (bloom_agg / bloom_might_contain are graft-registered spellings of
-    * Spark's internal runtime-bloom-join expressions).
+    * Works on any session: the bloom expressions enter the plan as
+    * Column constructors ([[bloomAgg]], [[bloomMightContain]]).
     */
   def novelRows(newBatch: DataFrame, seen: DataFrame, key: String,
       expectedItems: Long = 1000000L, numBits: Long = 8388608L): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val keyIsLong = seen.schema(key).dataType == LongType
-    val bloomKey = if (keyIsLong) s"$key" else s"xxhash64($key)"
+    val bloomKey = if (keyIsLong) col(key) else xxhash64(col(key))
     // The bloom builds DISTRIBUTED (partial filters OR-merge map-side);
     // only the final numBits/8-byte binary (1 MiB at the default) lands on
     // the driver — the same lifecycle as Spark's own runtime bloom join,
     // whose might_contain likewise requires a materialized constant filter.
     val bloomBytes = seen
-      .agg(expr(s"bloom_agg($bloomKey, ${expectedItems}L, ${numBits}L)").as("bloom"))
+      .agg(bloomAgg(bloomKey, expectedItems, numBits).as("bloom"))
       .head().getAs[Array[Byte]]("bloom")
     // empty seen corpus -> null bloom -> everything in the batch is novel
     if (bloomBytes == null) return newBatch
-    val probe = if (keyIsLong) col(key) else xxhash64(col(key))
     val flagged = newBatch.withColumn("maybe_seen",
-      call_function("bloom_might_contain", lit(bloomBytes), probe))
+      bloomMightContain(bloomBytes, bloomKey))
     val definitelyNovel = flagged.where(!col("maybe_seen")).drop("maybe_seen")
     val confirmNovel = flagged.where(col("maybe_seen")).drop("maybe_seen")
       .join(seen.select(col(key)).distinct(), Seq(key), "left_anti")
@@ -68,7 +85,6 @@ object CrossCorpus {
     * (no false negatives).
     */
   def qCrossCorpusDedup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("source"), md5(col("text")).as("content_key"))
     val seen = docs.where(col("doc_id") % 2 === 0)

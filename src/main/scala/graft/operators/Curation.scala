@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{MgFreqText, TokenTermCounts, WordShingles}
 
 /** Corpus-curation operators (round 7): the dedup-resolution and robust-
   * screening passes a training-data pipeline runs AFTER candidate
@@ -168,11 +169,10 @@ object Curation {
     * (source, partition).
     */
   def qGroupHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cap = 1 << 16
     t(s, dir, "documents")
       .groupBy(col("source"))
-      .agg(expr(s"mg_freq_text(text, 5, $cap)").as("r"))
+      .agg(MgFreqText.column(col("text"), 5, cap).as("r"))
       // the guard lives on the ARRAY, before the explode: an err > 0
       // sketch whose counters compacted to empty must still raise, not
       // vanish into a zero-row group (the posexplode of an empty
@@ -214,7 +214,6 @@ object Curation {
     */
   private[operators] def heavyHittersRecount(s: SparkSession, dir: String,
       q: String, groups: Seq[String], top: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cap = 1 << 16
     val k = 65
     val keys = groups.map(col)
@@ -228,7 +227,7 @@ object Curation {
     val docs = t(s, dir, "documents")
     // a group with no tokens has no answer rows
     val sk = docs.groupBy(keys: _*)
-      .agg(expr(s"mg_freq_text(text, $k, $cap)").as("r"))
+      .agg(MgFreqText.column(col("text"), k, cap).as("r"))
       .where(col("r.n") > 0)
     val cands = sk.select(keys :+ explode(col("r.items.item")).as("token"): _*)
     val bounds = sk.select(keys ++ Seq(col("r.n").as("n"), (col("r.err") +
@@ -287,17 +286,16 @@ object Curation {
     * explode + distinct, keyed (source, token).
     */
   def qOovRate(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val docs = t(s, dir, "documents")
     val vocabArr = array(vocab.map(lit): _*)
-    // r12: instance counts from one fused token_term_counts pass —
-    // element 1 is the total non-empty token count, elements 2..|V|+1
-    // the per-vocab-term counts, so OOV instances = total − in-vocab
-    // sum. Two-level select keeps the expression evaluated once per row
-    // (CollapseProject cost guard). The distinct-type branch swaps its
-    // interpreted filter lambda for a post-explode codegen filter.
+    // instance counts from one fused TokenTermCounts pass — element 1 is
+    // the total non-empty token count, elements 2..|V|+1 the per-vocab-
+    // term counts, so OOV instances = total − in-vocab sum. Two-level
+    // select keeps the expression evaluated once per row (CollapseProject
+    // cost guard). The distinct-type branch filters after the explode
+    // (codegen), not with an interpreted filter lambda.
     val withC = docs.select(col("source"),
-      call_function("token_term_counts", col("text"), vocabArr).as("c"))
+      TokenTermCounts.column(col("text"), vocab).as("c"))
     val inVocabSum = (1 to vocab.length)
       .map(i => element_at(col("c"), i + 1)).reduce(_ + _)
     val inst = withC
@@ -352,12 +350,10 @@ object Curation {
     */
   def fuzzyShinglePairs(docs: DataFrame, maxDist: Int = 2,
       maxBlock: Int = 10000): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    // r12: per-doc distinct shingles via the fused zero-copy expression
-    // (sub-3-token docs emit an empty array — same rows as the old gate)
+    // per-doc distinct shingles via the fused zero-copy expression
+    // (sub-3-token docs emit an empty array, so they yield no rows)
     val sh = docs
-      .select(explode(call_function("word_shingles",
-        col("text"), lit(3), lit(true))).as("shingle"))
+      .select(explode(WordShingles.column(col("text"), 3, dedup = true)).as("shingle"))
       .distinct()
       .withColumn("w", split(col("shingle"), " "))
       .persist()
@@ -379,17 +375,16 @@ object Curation {
       xxhash64(lit(tag), col("w").getItem(i), col("w").getItem(j))
     val blocked = sh.select(col("shingle"),
       explode(array(bk("01", 0, 1), bk("12", 1, 2), bk("02", 0, 2))).as("bk"))
-    // r19 shave (the q116 accept policy tripped at local[16]): the hot
-    // cap rides a co-partitioned semi-join against the KEPT counts
-    // instead of a driver-broadcast anti-join against the hot keys — the
+    // The hot cap rides a co-partitioned semi-join against the KEPT
+    // counts, not a driver-broadcast anti-join against the hot keys — the
     // counts aggregate's output is already hash(bk)-partitioned, as is
-    // the self-join, so the semi adds no exchange and the broadcast
-    // construction job disappears. Partial aggregation still absorbs hot
-    // blocks map-side; no block's rows ever concentrate in one task.
-    // Build-side bound (r20, advisor): `kept` spans every NON-hot block
+    // the self-join, so the semi adds no exchange and no broadcast
+    // construction job. Partial aggregation still absorbs hot blocks
+    // map-side; no block's rows ever concentrate in one task.
+    // Build-side bound: `kept` spans every NON-hot block
     // key — ≤ 3·|distinct shingles| rows, i.e. it grows with corpus
-    // VOCABULARY where the retired anti-join's build side (the hot set)
-    // was output-bounded. The growth is hash-partitioned 8-byte keys
+    // VOCABULARY where an anti-join's build side (the hot set) would be
+    // output-bounded. The growth is hash-partitioned 8-byte keys
     // (~24 B/row in the per-task hash map ⟹ ~1 GB per 40M vocab terms
     // per task at 32 partitions — fine far past the audited scales), and
     // ShuffledHashJoin's build side spills to disk past
@@ -400,12 +395,11 @@ object Curation {
     val kept = blocked.groupBy(col("bk")).agg(count(lit(1)).as("members"))
       .where(col("members") <= maxBlock).select(col("bk"))
       .hint("shuffle_hash")
-    // Persisted post-semi (r20, the q49 posting-cache rule): AQE's
-    // exchange reuse misses the self-join's two canonically-identical
-    // sides, so each run re-ran the blocked explode + bk exchange + semi
-    // TWICE (twin 8.0/4.7 s and 6.3/3.7 s runMs stage pairs,
-    // OPTIMIZATION_r20.md).
-    // Both sides now scan this cache, whose preserved hashpartitioning(bk)
+    // Persisted post-semi (the q49 posting-cache rule): AQE's exchange
+    // reuse misses the self-join's two canonically-identical sides, so
+    // without the cache each run re-runs the blocked explode + bk
+    // exchange + semi TWICE.
+    // Both sides scan this cache, whose preserved hashpartitioning(bk)
     // also satisfies the shuffled-hash join — no exchange above the cache.
     // Bounded by 3·|distinct shingles| blocked rows (the semi build-side
     // bound above); eager fill per the fork-cache rule.
@@ -422,7 +416,7 @@ object Curation {
     // 2-subsets of {0,1,2} union to all three positions, i.e. a pair
     // found by two passes would have all three words equal and be
     // excluded by sa < sb — so each pair exits exactly one rotation
-    // pass, once. PRECONDITION (r20, advisor): the proof counts one
+    // pass, once. PRECONDITION: the proof counts one
     // blocked row per (shingle, pass) — that is exactly the
     // `.distinct()` on `sh` above (corpus-unique shingles). Relaxing
     // that distinct would emit one row per OCCURRENCE per pass and
@@ -433,7 +427,7 @@ object Curation {
     keep.select(col("bk"), col("shingle").as("sa"))
       .join(keep.select(col("bk"), col("shingle").as("sb"))
         // shuffle_hash: block self-joins partition by the block key,
-        // never broadcast (TextOps r15 note — quadratic output)
+        // never broadcast (quadratic output)
         .hint("shuffle_hash"), Seq("bk"))
       .where(col("sa") < col("sb") &&
         levenshtein(col("sa"), col("sb"), maxDist) >= 0)
@@ -662,54 +656,33 @@ object Curation {
     *
     * Scale: gram emission is row-local (`transform(sequence)` + explode —
     * never materializing the quadratic suffix set); the stream flows
-    * through exactly two decreasing shuffles and NO persist (r21; was
-    * three): (1) ONE gkey repartition below which nothing reduces anyway,
-    * feeding both the (gkey, doc_id) aggregate that dedupes in-doc
-    * repeats while keeping the per-doc instance count AND the
-    * gkey-partitioned window that derives the per-gram document count
-    * `nd` — replacing the r12 spelling's countDistinct + dup-set join
-    * back onto the raw persisted stream, which re-shuffled the whole
-    * corpus and cached ~9 GB at the 100× corpus (191.9 s vs 24.4 s oracle
-    * once honest forcing exposed it; BASELINE r17) — then (2) one doc_id
-    * rollup sums instance counts under the nd≥2 flag.
+    * through exactly two decreasing shuffles and NO persist: (1) ONE
+    * gkey repartition below which nothing reduces anyway, feeding both
+    * the (gkey, doc_id) aggregate that dedupes in-doc repeats while
+    * keeping the per-doc instance count AND the gkey-partitioned window
+    * that derives the per-gram document count `nd` (no countDistinct +
+    * dup-set join back onto a persisted raw stream, which re-shuffles
+    * the whole corpus and caches it) — then (2) one doc_id rollup sums
+    * instance counts under the nd≥2 flag.
     */
   def substringDupStats(docs: DataFrame, k: Int = 10): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    // r12: k-gram emission via the fused zero-copy expression (sub-k-token
-    // docs emit an empty array — same rows as the old ≥k gate)
+    // k-gram emission via the fused zero-copy expression (sub-k-token
+    // docs emit an empty array, so they yield no rows)
     val keyed = docs
-      .select(col("doc_id"), explode(call_function("word_shingles",
-        col("text"), lit(k), lit(false))).as("gram"))
+      .select(col("doc_id"),
+        explode(WordShingles.column(col("text"), k, dedup = false)).as("gram"))
       .select(col("doc_id"), col("gram").as("gkey"))
-    // r17 rewrite (found by the honest-forcing 100× re-measure: the old
-    // persist + countDistinct + dup-set join spelling read 191.9 s at the
-    // 100× corpus, 8× the oracle — the r16/r17 benches never saw it
-    // because count()-forcing ELIMINATED the unreferenced left join).
-    // Join-free instead: one (gkey, doc_id) aggregate dedupes the stream
-    // and keeps the per-doc instance count; nd = per-gram doc count rides
-    // a window over the deduped frame (no join back onto the raw stream,
+    // Join-free: one (gkey, doc_id) aggregate dedupes the stream and
+    // keeps the per-doc instance count; nd = per-gram doc count rides a
+    // window over the deduped frame (no join back onto the raw stream,
     // no corpus-sized cache); the doc rollup sums cnt under the nd≥2
-    // flag. Two decreasing shuffles (r21), zero persists, exact integer
-    // counts — identical results by construction.
-    // r20 A/B note: widenScanOn(doc_id) before the explode (trading the
-    // 21 MB gram exchange for a 0.6 MB text exchange with the explode
-    // parallel) measured a WASH — 0.685 vs 0.658–0.697 s same-window
-    // (OPTIMIZATION_r20.md): the serial explode map is only ~250 ms and
-    // the first aggregate's exchange already carries deduped partials.
-    // Rejected.
-    // r21 (guide §2.4 "two operations keyed the same way share one
-    // exchange"): the (gkey, doc_id) aggregate's own exchange carried the
-    // FULL 21.1 MB gram stream right after the emission stage had already
-    // shuffled it once more for the window — map-side partial dedup
-    // reduced nothing (225 704 rows in and out at sf0.1; stride-1 k-grams
-    // are near-unique within a doc), so shuffles (1) and (2) of the
-    // r17 three-shuffle design were byte-duplicates. Repartitioning on
-    // gkey ONCE below the aggregate satisfies BOTH the aggregate's
-    // clustering (gkey is a prefix of (gkey, doc_id)) and the window's
-    // partitionBy(gkey) — the middle exchange disappears and the window
-    // needs only a local sort. Two decreasing shuffles total. A/B same
-    // window at sf0.1: 0.51/0.55 → 0.39/0.38 s, exceptAll = 0
-    // (OPTIMIZATION_r21.md).
+    // flag. Exact integer counts.
+    // Two operations keyed the same way share one exchange: stride-1
+    // k-grams are near-unique within a doc, so a map-side partial dedup
+    // reduces nothing, and repartitioning on gkey ONCE below the
+    // aggregate satisfies BOTH the aggregate's clustering (gkey is a
+    // prefix of (gkey, doc_id)) and the window's partitionBy(gkey) — the
+    // window needs only a local sort. Two decreasing shuffles total.
     val perDocGram = keyed.repartition(col("gkey"))
       .groupBy(col("gkey"), col("doc_id"))
       .agg(count(lit(1)).as("cnt"))

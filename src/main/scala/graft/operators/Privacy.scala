@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.TokenTermCounts
 
 /** Compliance pass of a training-data pipeline: PII detection/redaction
   * and rule-based quality screening (the C4/Gopher-style filters a corpus
@@ -143,18 +144,16 @@ object Privacy {
     *  - r_ttr:  type-token ratio >= 0.5 (distinct/total — repetition screen)
     */
   def qQualityRules(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // r12: sumlen is pure arithmetic — split on ' ' is lossless, so
+    // sumlen is pure arithmetic — split on ' ' is lossless, so
     // Σ length(token) = length(text) − (n_words − 1) separators; the
-    // stopword count comes from the fused single-pass token_term_counts
+    // stopword count comes from the fused single-pass TokenTermCounts
     // ('the'/'a' are non-empty, so whole-token-run counts equal the
-    // filter-over-split-with-empties spelling). Replaces two interpreted
-    // per-token lambdas; toksq survives only for n_distinct.
+    // filter-over-split-with-empties spelling); toksq serves only
+    // n_distinct.
     val m = t(s, dir, "documents")
       .withColumn("toksq", split(col("text"), " "))
       .withColumn("n_words", size(col("toksq")).cast("long"))
-      .withColumn("ttc", call_function("token_term_counts",
-        col("text"), array(lit("the"), lit("a"))))
+      .withColumn("ttc", TokenTermCounts.column(col("text"), Seq("the", "a")))
       .withColumn("sumlen",
         (length(col("text")).cast("long") - col("n_words") + lit(1L)))
       .withColumn("n_stop", col("ttc").getItem(1) + col("ttc").getItem(2))
@@ -219,13 +218,11 @@ object Privacy {
     * global aggregate, scalar output.
     */
   def qFilterKappa(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // r12: same fused/arithmetic spelling as qQualityRules (see there)
+    // same fused/arithmetic spelling as qQualityRules (see there)
     val m = t(s, dir, "documents")
       .withColumn("toksq", split(col("text"), " "))
       .withColumn("n_words", size(col("toksq")).cast("long"))
-      .withColumn("ttc", call_function("token_term_counts",
-        col("text"), array(lit("the"), lit("a"))))
+      .withColumn("ttc", TokenTermCounts.column(col("text"), Seq("the", "a")))
       .withColumn("sumlen",
         (length(col("text")).cast("long") - col("n_words") + lit(1L)))
       .withColumn("n_stop", col("ttc").getItem(1) + col("ttc").getItem(2))

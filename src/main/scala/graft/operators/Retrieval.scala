@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.functions.{TokenTermCounts, WordShingles}
 import Relational.{dsum, dsumSql}
 
 /** Lexical retrieval and corpus-graph operators over the `documents`
@@ -41,13 +42,12 @@ object Retrieval {
     * the split text (`size(filter(tokens, …))`), df/N/total_dl collapse
     * in one single-row partial aggregate that broadcasts back over a
     * second scan, and per-doc scoring + top-20 is row-local arithmetic
-    * into TakeOrdered. Two corpus scans, ZERO corpus shuffles — the r11
-    * spelling exploded every token through a per-doc aggregation
-    * exchange plus two doc-keyed joins (3 docs-sized shuffles and ~7
-    * stages) to compute what is row-local arithmetic for a constant
-    * query. (Corpus statistics that genuinely need the full vocabulary
-    * — tfidf q59, xent q93 — keep their token shuffle; BM25 against a
-    * constant query does not.)
+    * into TakeOrdered. Two corpus scans, ZERO corpus shuffles — no token
+    * explode through a per-doc aggregation exchange and doc-keyed joins
+    * for what is row-local arithmetic for a constant query. (Corpus
+    * statistics that genuinely need the full vocabulary — tfidf q59,
+    * xent q93 — keep their token shuffle; BM25 against a constant query
+    * does not.)
     *
     * Float determinism: idf and the tf normalizer are pure double
     * arithmetic with identical operation order in both engines (ln agrees
@@ -57,7 +57,6 @@ object Retrieval {
     * produces — then rounds to 6 after the cast to double.
     */
   def qBm25TopDocs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // One fused byte-wise pass per document computes dl, every term's tf,
     // and the hit-term count together (functions/TokenTermCounts.scala):
     // c(0)=dl, c(i+1)=tf_i, c(k+1)=|{i: tf_i>0}|. Composable spellings
@@ -68,8 +67,7 @@ object Retrieval {
     // and must not count toward n_docs/total_dl — the exploded oracle
     // never sees it).
     val k = QueryTerms.length
-    val cnts = call_function("token_term_counts", col("text"),
-      array(QueryTerms.map(lit): _*))
+    val cnts = TokenTermCounts.column(col("text"), QueryTerms)
     val statsBase = t(s, dir, "documents")
       .where(btrim(col("text")) =!= "")
       .select(cnts.as("c"))
@@ -160,12 +158,11 @@ object Retrieval {
     * Novelty = exact integer ratio, rounded — no float pipeline at all.
     */
   def qNgramNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // r12: distinct per-doc shingles via the fused zero-copy expression
-    // (sub-3-token docs emit an empty array — same rows as the old gate)
+    // distinct per-doc shingles via the fused zero-copy expression
+    // (sub-3-token docs emit an empty array, so they yield no rows)
     val sh = t(s, dir, "documents")
-      .select(col("doc_id"), explode(call_function("word_shingles",
-        col("text"), lit(3), lit(true))).as("shingle"))
+      .select(col("doc_id"),
+        explode(WordShingles.column(col("text"), 3, dedup = true)).as("shingle"))
       .persist()
     val firstSeen = sh.groupBy(col("shingle")).agg(min(col("doc_id")).as("first_doc"))
     sh.join(firstSeen, Seq("shingle"))
@@ -205,8 +202,8 @@ object Retrieval {
     * then sum to < 1, which is fine for ranking; the docstring of the
     * oracle mirrors the same choice.
     *
-    * Scale shape (r12 spelling): the corpus is touched ONCE (bigram
-    * count aggregate — token-pair keys, map-side combine), out-weight
+    * Scale shape: the corpus is touched ONCE (bigram count aggregate —
+    * token-pair keys, map-side combine), out-weight
     * normalization is fused into the edge build as a src-partitioned
     * window (no separate out-weight aggregate + join), and the edge
     * cache is REPARTITIONED BY dst with |V| attached as a column. That
@@ -220,28 +217,23 @@ object Retrieval {
     * frame (tokens with in-edges); the all-nodes rank frame — needed
     * because danglers still hold the base rank — is reconstituted once
     * at the end from the cached node set instead of once per round.
-    * Measured vs the r11 agg+join spelling: 1.2→0.6 s steady-state at
-    * sf0.1 (BASELINE.md, r12 candidates B/C/D). At web scale |V| ranks
-    * are MBs (broadcastable); a doc-link-graph variant (ranks no longer
-    * broadcastable) keeps the same dst-partitioned edge cache and swaps
-    * the broadcast for a pre-partitioned shuffle join + the q85
-    * localCheckpoint lineage cut. Per-contribution DECIMAL(18,9)
+    * At web scale |V| ranks are MBs (broadcastable); a doc-link-graph
+    * variant (ranks no longer broadcastable) keeps the same
+    * dst-partitioned edge cache and swaps the broadcast for a
+    * pre-partitioned shuffle join + the q85 localCheckpoint lineage cut. Per-contribution DECIMAL(18,9)
     * rounding keeps every Σ order-free (q93 convention); out-weight
     * fractions are exact integer ratios evaluated in identical order in
     * both engines.
     */
   def qTokenPagerank(s: SparkSession, dir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-    // r12: adjacent pairs through the fused word_shingles expression —
-    // a 2-shingle with an empty side starts or ends with its separator
+    // adjacent pairs through the fused word-shingle expression — a
+    // 2-shingle with an empty side starts or ends with its separator
     // space (tokens are space-free), so the codegen'd prefix/suffix
-    // checks reproduce the old p.src <> '' AND p.dst <> '' filter over
-    // raw-sequence pairs exactly; replaces an interpreted transform +
-    // filter pass with per-window struct allocation.
-    graft.functions.GraftFunctions.register(s)
+    // checks are exactly a src <> '' AND dst <> '' filter over the
+    // raw-sequence pairs.
     val edges0 = t(s, dir, "documents")
-      .select(explode(call_function("word_shingles",
-        col("text"), lit(2), lit(false))).as("bg"))
+      .select(explode(WordShingles.column(col("text"), 2, dedup = false)).as("bg"))
       .where(!col("bg").startsWith(" ") && !col("bg").endsWith(" "))
       .select(substring_index(col("bg"), " ", 1).as("src"),
         substring_index(col("bg"), " ", -1).as("dst"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.CosineSimilarity
 import Relational.dsum
 
 /** Similarity search over the `embeddings` table (Array[Float] vectors).
@@ -34,14 +35,6 @@ object Similarity {
 
   def normExpr(a: String): Column = sqrt(dotExpr(a, a))
 
-  /** Fused codegen cosine (custom Catalyst Expression, registered
-    * per-session; identical numerics to dotExpr/normExpr composition).
-    */
-  private def cosineCol(s: SparkSession, a: String, b: String): Column = {
-    graft.functions.GraftFunctions.register(s)
-    call_function("cosine_similarity", col(a), col(b))
-  }
-
   /** Brute-force cosine top-k: query vectors (vec_id < 10) broadcast against
     * the full corpus; rank per query with deterministic tiebreak.
     */
@@ -52,7 +45,7 @@ object Similarity {
     val pairs = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
       .crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", cosineCol(s, "qvec", "nvec"))
+      .withColumn("cosine", CosineSimilarity.column(col("qvec"), col("nvec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     pairs.withColumn("rank", row_number().over(w))
@@ -191,7 +184,7 @@ object Similarity {
     bandedPairs(portableSignBuckets(s, e, 64))
       .join(vecs.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))
       .join(vecs.select(col("vec_id").as("id_b"), col("embedding").as("vb")), Seq("id_b"))
-      .withColumn("cosine", cosineCol(s, "va", "vb"))
+      .withColumn("cosine", CosineSimilarity.column(col("va"), col("vb")))
       .orderBy(col("cosine").desc, col("id_a").asc, col("id_b").asc)
       .limit(20)
       .select(col("id_a"), col("id_b"), col("cosine"))
@@ -271,22 +264,21 @@ object Similarity {
     * instead of |queries| × corpus — the standard coarse-quantization
     * scale path next to LSH (q53).
     */
-  def annIvf(s: SparkSession, e: DataFrame, k: Int = 5, nProbe: Int = 2): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def annIvf(e: DataFrame, k: Int = 5, nProbe: Int = 2): DataFrame = {
     val cents = centroidVectors(e)
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val probeW = Window.partitionBy(col("query_id"))
       .orderBy(col("cscore").desc, col("label").asc)
     val probes = q.crossJoin(broadcast(cents))
-      .withColumn("cscore", call_function("cosine_similarity", col("qvec"), col("cvec")))
+      .withColumn("cscore", CosineSimilarity.column(col("qvec"), col("cvec")))
       .withColumn("crank", row_number().over(probeW))
       .where(col("crank") <= nProbe)
       .select(col("query_id"), col("qvec"), col("label"))
     val cands = probes.join(e.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("nvec"), col("label")), Seq("label"))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", call_function("cosine_similarity", col("qvec"), col("nvec")))
+      .withColumn("cosine", CosineSimilarity.column(col("qvec"), col("nvec")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     cands.withColumn("rank", row_number().over(w))
@@ -295,7 +287,7 @@ object Similarity {
   }
 
   def qAnnIvf(s: SparkSession, dir: String): DataFrame =
-    annIvf(s, t(s, dir, "embeddings"))
+    annIvf(t(s, dir, "embeddings"))
 
   /** DuckDB re-derivation of [[qAnnIvf]]: decimal-exact centroid floats,
     * broadcast probe ranking with the same (score, label) tiebreak, then
@@ -357,14 +349,13 @@ object Similarity {
     * machinery, and ties break on (cosine DESC, centroid label ASC).
     */
   def qKmeansReassign(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = t(s, dir, "embeddings")
     val cents = centroidVectors(e).select(col("label").as("clabel"), col("cvec"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("clabel").asc)
     e.select(col("vec_id"), col("label"), col("embedding"))
       .crossJoin(broadcast(cents))
-      .withColumn("sim", call_function("cosine_similarity", col("embedding"), col("cvec")))
+      .withColumn("sim", CosineSimilarity.column(col("embedding"), col("cvec")))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .groupBy(col("label"), col("clabel"))
@@ -484,7 +475,7 @@ object Similarity {
     val b = e.select(col("label"), col("vec_id").as("id_b"), col("embedding").as("vb"))
     val pruned = a.join(b, Seq("label"))
       .where(col("id_a") < col("id_b"))
-      .withColumn("sim", cosineCol(s, "va", "vb"))
+      .withColumn("sim", CosineSimilarity.column(col("va"), col("vb")))
       .where(col("sim") > lit(SemDedupTau))
       .groupBy(col("id_b"))
       .agg(count(lit(1)).as("n_dups_lower"))
@@ -525,32 +516,24 @@ object Similarity {
     * to a foreign centroid. The go/no-go report before trusting a
     * clustering for SemDeDup-style pruning (q94 assigns, q102 prunes,
     * this grades). Work = corpus × nClusters against the bounded centroid
-    * table (collected, r21 — one row per cluster by construction) — one
+    * table (collected — one row per cluster by construction) — one
     * narrow pass, one bounded-key aggregate; means accumulate as decimals
     * ([[Relational.davg]]) so partition order never shows.
     */
   def qClusterSilhouette(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = t(s, dir, "embeddings")
-    // r21 row-local rewrite (guide §2.4 remove shuffles outright): the
-    // crossJoin × broadcast-centroids → (vec_id, label) re-aggregate
-    // existed only to pivot the nClusters sims back to one row per vector
-    // — the stage profile read 7 jobs for ~150 ms of summed stage time, pure
-    // exchange/job overhead. The centroid table is BOUNDED (one row per
-    // cluster — the k-means contract, same class as the q49 ≤20-row
-    // threshold collect), so collect it and evaluate own_cos/best_other
-    // as row-local expressions: one scan, one bounded-key aggregate, and
-    // the pivot exchange + broadcast build disappear. Bit-identity: each
-    // sim is the same codegen'd cosine_similarity over the same float
-    // vectors (collected floats round-trip exactly as literals);
-    // max(when(clabel===label)) over the single own row IS the own sim,
-    // and greatest(...) over the other nClusters−1 sims is the same
-    // null-skipping double max as max(when(≠)). A/B same window at
-    // sf0.1: 0.39/0.43 → 0.36/0.33 s (OPTIMIZATION_r21.md, exceptAll = 0).
+    // The centroid table is BOUNDED (one row per cluster, the k-means
+    // contract), so it is collected and own_cos/best_other are row-local
+    // expressions: one scan, one bounded-key aggregate, no pivot
+    // exchange. Bit-identity with the per-pair spelling: each sim is the
+    // same codegen'd cosine over the same float vectors (collected floats
+    // round-trip exactly as literals), and greatest(...) over the other
+    // nClusters−1 sims is the same null-skipping double max as
+    // max(when(≠)).
     val cents = centroidVectors(e)
       .select(col("label").as("clabel"), col("cvec")).collect()
     val sims = cents.map { r =>
-      (r.get(0), call_function("cosine_similarity", col("embedding"),
+      (r.get(0), CosineSimilarity.column(col("embedding"),
         typedLit(r.getSeq[Float](1))))
     }
     val own = sims.tail.foldLeft(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{MgFreqText, TokenTermCounts, WordShingles}
 import Relational.{dsum, dsumSql}
 
 /** Large-scale training-data text operators over the `documents` table:
@@ -26,19 +27,15 @@ object TextOps {
   /** Distinct per-doc 3-gram shingles via the fused single-pass
     * expression (functions/WordShingles.scala): `split(text, ' ')` is
     * lossless, so every shingle is a byte substring of the text — one
-    * pass, no token materialization, no interpreted lambdas. r12: the
-    * shingle scan had become the dominant LINEAR term of the banded
-    * dedup family at 10× once banding bounded the joins. Sub-3-token
-    * docs yield an empty array (no rows after the explode), identical
-    * to the old size(toks) >= 3 gate. The dedup stays row-local —
+    * pass, no token materialization, no interpreted lambdas; the shingle
+    * scan is the dominant LINEAR term of the banded dedup family.
+    * Sub-3-token docs yield an empty array (no rows after the explode),
+    * the same rows as a size(toks) >= 3 gate. The dedup stays row-local —
     * the first shuffle any consumer sees is its own aggregation.
     */
-  private def shinglesDistinct(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  private def shinglesDistinct(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(call_function("word_shingles",
-        col("text"), lit(3), lit(true))).as("shingle"))
-  }
+      explode(WordShingles.column(col("text"), 3, dedup = true)).as("shingle"))
 
   /** Word 2-shingles of the space-run-collapsed, trimmed text — the
     * bigrams of consecutive NON-EMPTY tokens (collapsing runs IS the
@@ -47,11 +44,8 @@ object TextOps {
     * spelling lives here once. Callers split each bigram back on its
     * single interior space with substring_index.
     */
-  private[operators] def neBigrams(s: SparkSession): Column = {
-    graft.functions.GraftFunctions.register(s)
-    call_function("word_shingles",
-      trim(regexp_replace(col("text"), " +", " ")), lit(2), lit(false))
-  }
+  private[operators] def neBigrams: Column =
+    WordShingles.column(trim(regexp_replace(col("text"), " +", " ")), 2, dedup = false)
 
   /** Value 0-15 of the j-th (1-based) hex digit of an md5 hex string.
     * Spelled via ascii() so the DuckDB oracle can evaluate the identical
@@ -110,16 +104,13 @@ object TextOps {
     * until the (absent) aggregation; scales embarrassingly.
     */
   def qDocQuality(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // r12: Σ token length = length(text) − (n_tokens − 1) separators
-    // (split on ' ' is lossless; empty tokens contribute 0 either way)
-    // and the stopword count is the fused token_term_counts pass —
-    // replaces two interpreted per-token lambda chains. toks survives
-    // for the counts that genuinely need the token array.
+    // Σ token length = length(text) − (n_tokens − 1) separators (split
+    // on ' ' is lossless; empty tokens contribute 0 either way) and the
+    // stopword count is one fused TokenTermCounts pass; toks serves only
+    // the counts that genuinely need the token array.
     t(s, dir, "documents")
       .withColumn("toks", toks(col("text")))
-      .withColumn("ttc", call_function("token_term_counts",
-        col("text"), array(lit("the"), lit("a"))))
+      .withColumn("ttc", TokenTermCounts.column(col("text"), Seq("the", "a")))
       .select(
         col("doc_id"),
         length(col("text")).as("n_chars_calc"),
@@ -186,18 +177,16 @@ object TextOps {
     * Entirely row-local array math — no explode, no shuffle, no aggregate:
     * the count of shingles is `size(shingles)` and the distinct count is
     * `size(array_distinct(shingles))`, both computed inside the scan's
-    * project. At 100 TB this is a pure map over the corpus. r12: shingles
-    * come from the fused zero-copy expression; the ≥3-token gate stays
+    * project. At 100 TB this is a pure map over the corpus. Shingles come
+    * from the fused zero-copy expression; the ≥3-token gate stays
     * spelled on raw `text` (NOT on the projected shingle column) so
     * pushdown can't clone the expensive expression into the scan filter.
     */
   def qShingleStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     t(s, dir, "documents")
       .where(size(toks(col("text"))) >= 3)
       .select(col("doc_id"),
-        call_function("word_shingles", col("text"), lit(3), lit(false))
-          .as("shingles"))
+        WordShingles.column(col("text"), 3, dedup = false).as("shingles"))
       .select(col("doc_id"),
         size(col("shingles")).as("n_shingles"),
         size(array_distinct(col("shingles"))).as("n_distinct_shingles"))
@@ -482,8 +471,7 @@ object TextOps {
     * distinct values per corpus-size unit), so it collapses to one
     * broadcast row and is removed ROW-LOCALLY with array_except — no
     * anti-join, and n_sh = size of the kept array is free at the scan, so
-    * no sizes table ever joins back onto the pair frame (r16; see the
-    * in-body note for the measured 100x failure of the join spelling).
+    * no sizes table ever joins back onto the pair frame.
     */
   def jaccardPairs(docs: DataFrame, maxDfFrac: Double = 0.5): DataFrame = {
     // The row-local hot-set spelling is safe BECAUSE the hot set is
@@ -491,15 +479,13 @@ object TextOps {
     // to one collect_list row and broadcasts. A tiny maxDfFrac (say
     // 0.01 on a large corpus) would grow that single row past the
     // broadcast/row limits where the retired anti-join degraded
-    // gracefully — bound it rather than fail weirdly downstream
-    // (advisor r16). Callers needing a more aggressive cap should
-    // pre-filter the corpus instead.
+    // gracefully — bound it rather than fail weirdly downstream. Callers
+    // needing a more aggressive cap should pre-filter the corpus instead.
     require(maxDfFrac >= 0.1 && maxDfFrac <= 1.0,
       s"maxDfFrac=$maxDfFrac outside [0.1, 1]: the broadcast hot set is " +
         "only bounded for df caps ≥ 0.1 of the corpus")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val units = docs.select(col("doc_id"),
-      call_function("word_shingles", col("text"), lit(3), lit(true)).as("arr"))
+      WordShingles.column(col("text"), 3, dedup = true).as("arr"))
     val nDocs = docs.select(count(lit(1)).as("n_docs"))
     val (kept, pairRows) = keptShingleArrays(units, "doc_id", None, nDocs, maxDfFrac)
     postingPairAgg(kept, pairRows, "doc_id", None, "doc_a", "doc_b")
@@ -679,7 +665,6 @@ object TextOps {
     * deterministic oracle ordering. The oracle SQL is untouched.
     */
   def qJaccardTopPairs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
     // per-content kept-shingle arrays + copy counts through the shared
     // posting-pair core (keptShingleArrays/postingPairAgg); this site
@@ -688,7 +673,7 @@ object TextOps {
     // library-default 0.5 df cap (inside jaccardPairs' [0.1, 1] bound).
     val sizes = ids.select(col("rep"), size(col("ids")).cast("long").as("copies"))
     val units = reps.select(col("doc_id").as("rep"),
-      call_function("word_shingles", col("text"), lit(3), lit(true)).as("arr"))
+      WordShingles.column(col("text"), 3, dedup = true).as("arr"))
       .join(sizes, Seq("rep"))
     val nDocs = ids.select(sum(size(col("ids"))).as("n_docs"))
     val (ka, pairRows) = keptShingleArrays(units, "rep", Some("copies"), nDocs, 0.5)
@@ -1389,12 +1374,11 @@ object TextOps {
     * tokens" (Gopher Table A1) are a WHERE over this output.
     */
   def qRepetitionStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // r12: bigram array via the fused zero-copy expression (n=2); the
-    // sort + longest-equal-run fold over it is unchanged
+    // the sort + longest-equal-run fold runs over the fused bigram array
+    // (`bigrams`, projected just before it)
     val topBigram = expr(
       """aggregate(
-        |  array_sort(word_shingles(text, 2, false)),
+        |  array_sort(bigrams),
         |  named_struct('prev', '', 'run', CAST(0 AS BIGINT),
         |               'best', CAST(0 AS BIGINT), 'bestkey', ''),
         |  (a, x) -> CASE WHEN x = a.prev
@@ -1411,6 +1395,7 @@ object TextOps {
     t(s, dir, "documents")
       .withColumn("toks", toks(col("text")))
       .where(size(col("toks")) >= 2)
+      .withColumn("bigrams", WordShingles.column(col("text"), 2, dedup = false))
       .withColumn("tb", topBigram)
       .select(col("doc_id"),
         size(col("toks")).as("n_tokens"),
@@ -1544,27 +1529,23 @@ object TextOps {
     */
   def qBigramXent(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    // r12: fused bigram extraction (shared [[neBigrams]] spelling)
-    // replaces two interpreted lambdas (filter + transform with
-    // per-window struct allocation); each bigram splits back on its
-    // single interior space with codegen'd substring_index. This frame
-    // is deliberately NOT persisted: its four consumers re-scan, which
-    // at 100 TB beats caching an exploded corpus-sized frame.
+    // fused bigram extraction (shared [[neBigrams]] spelling); each
+    // bigram splits back on its single interior space with codegen'd
+    // substring_index. This frame is deliberately NOT persisted: its four
+    // consumers re-scan, which at 100 TB beats caching an exploded
+    // corpus-sized frame.
     val bg = t(s, dir, "documents")
-      .select(col("doc_id"), col("source"), explode(neBigrams(s)).as("bg"))
+      .select(col("doc_id"), col("source"), explode(neBigrams).as("bg"))
       .select(col("doc_id"), col("source"),
         substring_index(col("bg"), " ", 1).as("w1"),
         substring_index(col("bg"), " ", -1).as("w2"))
     val train = bg.where(col("doc_id") % 2 === 0)
-    // r21 note: the one-pass variant (derive C(w1·)/V from a PERSISTED
-    // bigram-model cache, the q46/q93 move) was A/B-run and REJECTED:
-    // 0.87 s vs this spelling's 0.55 warm (OPTIMIZATION_r21.md,
-    // exceptAll = 0). The three "extra" train explodes parallelize
-    // across cores inside one action, while the bigram-model cache —
-    // corpus-scaled, unlike q93's vocabulary-sized unigram model — costs
-    // more to materialize and re-read than the explodes it saves, and
-    // caching a corpus-scaled frame is exactly what the bg note above
-    // declines on memory grounds at 100 TB.
+    // No bigram-model cache to derive C(w1·)/V in one pass: the three
+    // train explodes parallelize across cores inside one action, while a
+    // corpus-scaled model cache (unlike q93's vocabulary-sized unigram
+    // model) costs more to materialize and re-read than the explodes it
+    // saves, and is exactly what the bg note above declines on memory
+    // grounds at 100 TB.
     val bgCounts = train.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
     val ctxCounts = train.groupBy(col("w1")).agg(count(lit(1)).as("cc"))
     val v = train.select(col("w2")).union(train.select(col("w1")))
@@ -1858,28 +1839,27 @@ object TextOps {
     * oracle compares one scalar per doc.
     */
   def qWinnowFingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    // widenScan (r20, guide §2.5): the per-shingle md5 transform — the
-    // query's dominant term — is row-local and ran fused into the 1-split
-    // documents scan. Spreading the texts first (0.6 MB exchange) halves
-    // the query: 0.57 → 0.29 s same-window (OPTIMIZATION_r20.md, exceptAll = 0).
+    // widenScan: the per-shingle md5 transform — the query's dominant
+    // term — is row-local and would otherwise run fused into a 1-split
+    // documents scan; spreading the texts first lets it use every core.
     // No-op at real scan parallelism.
     winnowFingerprintOf(Tables.widenScan(
       t(s, dir, "documents").select(col("doc_id"), col("text")),
       col("doc_id")))
   }
 
-  /** Builder core of q101 over any (doc_id, text) frame (r20: split out
-    * so the widenScan A/B can feed it a repartitioned input).
+  /** Builder core of q101 over any (doc_id, text) frame (a widened or
+    * a plain scan).
     */
   private[graft] def winnowFingerprintOf(docs: DataFrame): DataFrame = {
     docs
       .withColumn("toks", toks(col("text")))
       .where(size(col("toks")) >= 6) // ≥4 shingles → ≥1 full window
-      // r12: shingle generation through the fused zero-copy expression;
-      // the per-shingle md5 lambda (the dominant term) is unchanged
+      // the per-shingle md5 lambda (the dominant term) runs over the
+      // fused shingle array (`shingles`, projected just before it)
+      .withColumn("shingles", WordShingles.column(col("text"), 3, dedup = false))
       .withColumn("hs", expr(
-        """transform(word_shingles(text, 3, false),
+        """transform(shingles,
           |  s -> CAST(conv(substring(md5(CAST(s AS BINARY)), 1, 12), 16, 10) AS BIGINT))"""
           .stripMargin))
       .withColumn("fps", expr(
@@ -2179,10 +2159,9 @@ object TextOps {
     * buffer, whatever the data size. Oracle: plain exact top-20.
     */
   def qHeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val cap = 1 << 16
     t(s, dir, "documents")
-      .agg(expr(s"mg_freq_text(text, 20, $cap)").as("r"))
+      .agg(MgFreqText.column(col("text"), 20, cap).as("r"))
       // the guard lives on the ARRAY, before the explode: an err > 0
       // sketch whose counters compacted to empty must still raise, not
       // vanish into a zero-row result (the posexplode of an empty
@@ -2295,18 +2274,18 @@ object TextOps {
     * adjacent-token pairs. The word2vec-era association signal that
     * separates true collocations from chance co-occurrence. One bigram
     * shuffle; unigram counts come from a second corpus pass semi-filtered
-    * at the scan to the ≤40 tokens the top-20 pairs reference (r17 — no
+    * at the scan to the ≤40 tokens the top-20 pairs reference (no
     * vocabulary-wide exchange or broadcast anywhere). The PMI arithmetic
     * runs on the broadcast-sized top-20 frame with exact-integer ln
     * arguments (identical doubles both engines), rounded to 6dp.
     */
   def qBigramPmi(s: SparkSession, dir: String): DataFrame = {
-    // r12: unigrams explode the raw split with a codegen'd post-explode
+    // unigrams explode the raw split with a codegen'd post-explode
     // filter (no interpreted filter lambda); bigrams use the shared
     // [[neBigrams]] fused spelling, split back on the interior space.
     val docs = t(s, dir, "documents")
     val bg = docs
-      .select(explode(neBigrams(s)).as("bg"))
+      .select(explode(neBigrams).as("bg"))
       .select(substring_index(col("bg"), " ", 1).as("a"),
         substring_index(col("bg"), " ", -1).as("b"))
     // one bigram shuffle: total and top-20 both derive from the persisted
@@ -2318,34 +2297,28 @@ object TextOps {
       .orderBy(col("c_ab").desc, col("a").asc, col("b").asc)
       .limit(20)
     // A full unigram count table is VOCABULARY-sized — it grows with the
-    // corpus (r17: ~1.5M types on the 100× independent corpus,
-    // unboundable at 100 TB), so broadcasting it (the pre-r17 spelling)
-    // was the q49 cliff class in broadcast form: the UNBOUNDED side
-    // shipped as the build table while the 20-row side streamed. Only the
-    // ≤40 tokens the top-20 pairs reference ever matter, so the bounded
-    // set travels the other way: a broadcast SEMI-join against those
-    // tokens filters the token stream AT THE SCAN, before any exchange —
-    // the vocabulary-wide unigram shuffle disappears entirely (not merely
-    // un-broadcast), the surviving aggregate groups ≤40 keys, and THAT is
-    // what broadcasts back onto the top frame. top and uniTop are
-    // persisted because each is read from two branches (top: wanted + the
-    // final join; uniTop: both attach broadcasts); both are metadata-
-    // sized (20 and ≤40 rows), so the caches cost nothing at any scale.
-    // Measured at the 100× independent corpus (BASELINE.md): broadcast-uni
-    // 4.7 s warm / semi-above-agg pivot 6.3 s / this token-level semi ≈
-    // the broadcast spelling, with the hard broadcast ceiling gone.
+    // corpus (~1.5M types on the 100× independent corpus, unboundable at
+    // 100 TB), so broadcasting it would ship the UNBOUNDED side as the
+    // build table while the 20-row side streamed. Only the ≤40 tokens the
+    // top-20 pairs reference ever matter, so the bounded set travels the
+    // other way: a broadcast SEMI-join against those tokens filters the
+    // token stream AT THE SCAN, before any exchange — the vocabulary-wide
+    // unigram shuffle disappears entirely (not merely un-broadcast), the
+    // surviving aggregate groups ≤40 keys, and THAT is what broadcasts
+    // back onto the top frame. top and uniTop are persisted because each
+    // is read from two branches (top: wanted + the final join; uniTop:
+    // both attach broadcasts); both are metadata-sized (20 and ≤40 rows),
+    // so the caches cost nothing at any scale.
     val topC = top.persistFilled()
-    // r21 cold-build guard (the q147 warm-gated fill convention): the
-    // final plan hangs nBi + wanted + uniTop×2 off broadcast builds whose
-    // threads raced the unfilled bgCounts/topC caches on a cold run and
-    // replayed the corpus bigram aggregate (cold 0.91 s vs 0.18 warm, r21
-    // bench). One gated fill serializes bgCounts + topC exactly once;
-    // warm builds skip it and the steady-state path is unchanged. The
-    // uniTop fill is gated separately — its compute is its OWN corpus
-    // token scan, which the two attach broadcasts would duplicate cold.
-    // (The sequential-collect alternative — marginals as literal maps —
-    // was A/B-run and REJECTED: it serialized the warm cached reads the
-    // broadcast threads do in parallel; OPTIMIZATION_r21.md.)
+    // cold-build guard (the warm-gated fill convention): the final plan
+    // hangs nBi + wanted + uniTop×2 off broadcast builds whose threads
+    // would race unfilled bgCounts/topC caches on a cold run and replay
+    // the corpus bigram aggregate. One gated fill serializes bgCounts +
+    // topC exactly once; warm builds skip it. The uniTop fill is gated
+    // separately — its compute is its OWN corpus token scan, which the
+    // two attach broadcasts would duplicate cold. Marginals stay
+    // broadcast joins, not collected literal maps, so warm builds read
+    // the cached frames in parallel.
     val wanted = topC.select(explode(array(col("a"), col("b"))).as("w")).distinct()
     val uniTop0 = docs.select(explode(toks(col("text"))).as("w"))
       .where(col("w") =!= "")
@@ -2683,9 +2656,8 @@ object TextOps {
     * leakage even when no document is copied whole — the signal that
     * two "different" crawls share a boilerplate substrate.
     *
-    * Scale shape (r21 bitmask rewrite, was collect_set of source sets):
-    * ONE corpus-scale shuffle — group by shingle into the BITMASK of
-    * sources containing it (the source DOMAIN is bounded, so the set is
+    * Scale shape: ONE corpus-scale shuffle — group by shingle into the
+    * BITMASK of sources containing it (the source DOMAIN is bounded, so the set is
     * one long; bit_or partial-combines map-side in a codegen'd long
     * buffer). The per-shingle frame then collapses to the mask
     * HISTOGRAM — one (mask, count) row per distinct co-occurrence
@@ -2696,18 +2668,16 @@ object TextOps {
     * DuckDB oracle.
     */
   def sourceOverlap(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
-    // r21 bitmask spelling (guide §4 + §2.3): the source DOMAIN is bounded
-    // (docstring), so a shingle's source SET is one long of bits. The
-    // per-shingle aggregate becomes bit_or over a LONG buffer — a
-    // codegen'd HashAggregate where collect_set forced ObjectHashAggregate
-    // with array buffers — and the exchange's value side narrows from
-    // array<string> to 8 bytes. Everything downstream collapses to the
-    // MASK HISTOGRAM (one row per distinct co-occurrence pattern, ≤
-    // min(|shingles|, 2^|sources|) rows of 16 bytes — strictly smaller
-    // than the retired per-shingle srcs cache): sizes and pair counts are
-    // Σc over set bits, generated row-locally. The domain collect is a
-    // bounded driver action (the q46/q104 convention) on one
+    // The source DOMAIN is bounded (docstring), so a shingle's source SET
+    // is one long of bits. The per-shingle aggregate becomes bit_or over a
+    // LONG buffer — a codegen'd HashAggregate where collect_set forced
+    // ObjectHashAggregate with array buffers — and the exchange's value
+    // side narrows from array<string> to 8 bytes. Everything downstream
+    // collapses to the MASK HISTOGRAM (one row per distinct co-occurrence
+    // pattern, ≤ min(|shingles|, 2^|sources|) rows of 16 bytes — strictly
+    // smaller than a per-shingle source-set cache): sizes and pair
+    // counts are Σc over set bits, generated row-locally. The domain
+    // collect is a bounded driver action (the q46/q104 convention) on one
     // dictionary-encoded column; sorted, so bit index order IS
     // lexicographic order and the (source_a < source_b) pair orientation
     // is unchanged. >64 sources falls back to the set spelling below —
@@ -2723,18 +2693,12 @@ object TextOps {
     // shingle); the exploded stream carries (long, shingle)
     val grams = docs
       .select(element_at(typedLit(maskMap), col("source")).as("mask"),
-        explode(call_function("word_shingles",
-          col("text"), lit(3), lit(true))).as("shingle"))
+        explode(WordShingles.column(col("text"), 3, dedup = true)).as("shingle"))
     // warm-gated fill: the mask histogram has three consumers (two
     // broadcast sizes builds + the pair branch) that must not race it
-    // cold. A first r21 cut collected sizes to the driver instead (the
-    // q49 sequential rule) — bench-convention warm runs then paid TWO
-    // serial driver round-trips per build where these broadcast builds
-    // overlap in parallel (0.74 vs 0.59 s warm, final sweep), the same
-    // trap the q169/q139/q167 seq-collect rejection records. The masks
-    // cache the parallel consumers re-read is ≤2^|sources| rows of 16
-    // bytes — unlike the retired per-shingle srcs cache, whose
-    // corpus-sized re-reads were the old spelling's warm cost.
+    // cold, and the broadcast builds overlap in parallel where collecting
+    // sizes to the driver would serialize two round-trips per build. The
+    // cache the consumers re-read is ≤2^|sources| rows of 16 bytes.
     val masks = grams
       .groupBy(col("shingle").as("sh"))
       .agg(expr("bit_or(mask)").as("m"))
@@ -2767,17 +2731,14 @@ object TextOps {
         round(col("common").cast("double") / col("n_b"), 6).as("containment_b"))
   }
 
-  /** The pre-r21 per-shingle source-SET spelling — the >64-source
-    * fallback of [[sourceOverlap]] (a long can't carry the domain) and
-    * its equivalence witness (TextStatsSpec pins the two row-identical;
-    * the r21 A/B ledger timed them).
+  /** The per-shingle source-SET spelling — the >64-source fallback of
+    * [[sourceOverlap]] (a long can't carry the domain) and its
+    * equivalence witness (TextStatsSpec pins the two row-identical).
     */
   private[graft] def sourceOverlapSets(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val bySh = docs
       .select(col("source"),
-        explode(call_function("word_shingles",
-          col("text"), lit(3), lit(true))).as("shingle"))
+        explode(WordShingles.column(col("text"), 3, dedup = true)).as("shingle"))
       .groupBy(col("shingle").as("sh"))
       .agg(array_sort(collect_set(col("source"))).as("srcs"))
       .persist()

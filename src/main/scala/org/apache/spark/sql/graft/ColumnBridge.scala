@@ -4,14 +4,16 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Registry-free Column ⇄ catalyst Expression bridge.
+/** Column ⇄ catalyst Expression bridge: the one way a graft expression
+  * enters a plan.
   *
   * Spark 4 made `Column` expression-agnostic (ColumnNode); the classic
   * converters live in [[org.apache.spark.sql.classic.ExpressionUtils]],
-  * which is `private[sql]` — so library code that wires a custom catalyst
-  * aggregate straight into the DataFrame DSL (graft.functions.DecSum6,
-  * used by Relational.dsum's 60+ call sites across sessions that never
-  * touch the function registry) needs this one-file subpackage bridge.
+  * which is `private[sql]`. Each graft expression has a Column
+  * constructor beside it (`DecSum6.column`, `WordShingles.column`, …)
+  * that builds the expression tree through this one-file subpackage
+  * bridge, so library code wires custom catalyst expressions straight
+  * into the DataFrame DSL on any session, with no function registry.
   * JVM-public, Scala-package-restricted: the standard extension-library
   * access pattern, no reflection and no behavior override.
   */

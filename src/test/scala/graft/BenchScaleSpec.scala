@@ -48,4 +48,13 @@ class BenchScaleSpec extends AnyFunSuite {
       c -> 4.5 /* 1.5x over */)
     assert(BenchScale.retryOrder(rows).map(_.query) == Seq("qy", "qz"))
   }
+
+  test("a run needs only the corpus directories its selected rows read") {
+    val docsOnly = BenchScale.anchors.filter(_.corpus == "docs10x")
+    assert(BenchScale.requiredDirs(docsOnly, "/docs", "/temporal") == Seq("/docs"))
+    val t = BenchScale.Anchor("qt", "temporal10x", 10.0, 2.0)
+    assert(BenchScale.requiredDirs(Seq(t), "/docs", "/temporal") == Seq("/temporal"))
+    assert(BenchScale.requiredDirs(BenchScale.anchors, "/docs", "/temporal").toSet ==
+      Set("/docs", "/temporal"))
+  }
 }

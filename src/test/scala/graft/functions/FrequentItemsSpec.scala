@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The Misra-Gries aggregate's contract (`mg_freq_text`, fed one
+/** The Misra-Gries aggregate's contract (`MgFreqText`, fed one
   * space-free token per row where a case needs a plain item stream): the
   * n/(k+1) survival guarantee holds under eviction pressure (vocab ≫ k)
   * at any partitioning, state round-trips through serde, and the
@@ -28,13 +28,12 @@ class FrequentItemsSpec extends AnyFunSuite {
   }
 
   test("every item above n/(k+1) survives, at several partitionings") {
-    GraftFunctions.register(spark)
     val truth = skewed(4).groupBy("item").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = truth.values.sum
     val k = 32
     Seq(1, 8, 37).foreach { parts =>
-      val sk = skewed(parts).agg(expr(s"mg_freq_text(item, $k).items").as("sk"))
+      val sk = skewed(parts).agg(MgFreqText.column(col("item"), k, k)("items").as("sk"))
         .select(expr("transform(sk, x -> x.item)").as("items"))
         .head().getSeq[String](0).toSet
       assert(sk.size <= k, s"sketch holds ${sk.size} > k=$k at parts=$parts")
@@ -46,12 +45,11 @@ class FrequentItemsSpec extends AnyFunSuite {
   }
 
   test("estimates undercount by at most n/(k+1)") {
-    GraftFunctions.register(spark)
     val truth = skewed(4).groupBy("item").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val n = truth.values.sum
     val k = 32
-    val ests = skewed(8).agg(expr(s"mg_freq_text(item, $k).items").as("sk"))
+    val ests = skewed(8).agg(MgFreqText.column(col("item"), k, k)("items").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item"), col("e.est"))
       .collect().map(r => r.getString(0) -> r.getLong(1))
@@ -133,7 +131,6 @@ class FrequentItemsSpec extends AnyFunSuite {
   }
 
   test("mg_freq aggregates under Structured Streaming, exact when vocab <= k") {
-    GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.001"
     val batchDf = spark.read.parquet(s"$dir/documents.parquet")
     val streamDir = java.nio.file.Files.createTempDirectory("graft_mg_stream").toString
@@ -143,7 +140,7 @@ class FrequentItemsSpec extends AnyFunSuite {
     val stream = spark.readStream.schema(batchDf.schema).parquet(streamDir)
     def toksOf(df: org.apache.spark.sql.DataFrame) =
       df.select(explode(split(col("text"), " ")).as("token")).where(col("token") =!= "")
-    val q = toksOf(stream).agg(expr("mg_freq_text(token, 64).items").as("sk"))
+    val q = toksOf(stream).agg(MgFreqText.column(col("token"), 64, 64)("items").as("sk"))
       .select(explode(col("sk")).as("e"))
       .select(col("e.item").as("item"), col("e.est").as("est"))
       .writeStream.format("memory").queryName("mg_stream")
@@ -161,22 +158,11 @@ class FrequentItemsSpec extends AnyFunSuite {
     assert(streamed == truth)
   }
 
-  test("invalid k fails at analysis, not execution") {
-    import org.apache.spark.sql.AnalysisException
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    val df = Seq("a", "b").toDF("item")
-    def analyze(kSpelling: String): Unit =
-      df.agg(expr(s"mg_freq_text(item, $kSpelling)")).queryExecution.analyzed
-
-    val nonFoldable = intercept[AnalysisException](analyze("length(item)"))
-    assert(nonFoldable.getMessage.contains("literal"))
-    val nullK = intercept[AnalysisException](analyze("CAST(NULL AS INT)"))
-    assert(nullK.getMessage.contains("NULL"))
-    val zeroK = intercept[AnalysisException](analyze("0"))
-    assert(zeroK.getMessage.contains(">= 1"))
-    val badType = intercept[AnalysisException](analyze("'four'"))
-    assert(badType.getMessage.contains("STRING"))
+  test("invalid k or cap is rejected when the sketch column is built") {
+    val zeroK = intercept[IllegalArgumentException](MgFreqText.column(col("item"), 0, 0))
+    assert(zeroK.getMessage.contains(">= 1"), zeroK.getMessage)
+    val smallCap = intercept[IllegalArgumentException](MgFreqText.column(col("item"), 8, 4))
+    assert(smallCap.getMessage.contains("cap >= k"), smallCap.getMessage)
   }
 
   test("q103 certifies a near-uniform corpus exactly when its vocab fits the capacity") {
@@ -290,7 +276,6 @@ class FrequentItemsSpec extends AnyFunSuite {
   }
 
   test("mg_freq_text over whole documents matches its one-token-per-row feed") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // single partition so both feeds absorb the identical token stream in
     // the identical order — MG results are then deterministic and must
@@ -303,7 +288,7 @@ class FrequentItemsSpec extends AnyFunSuite {
       (1 to 200).map(i => s"tok_${i % 17}").mkString(" "))
       .toDF("text").coalesce(1)
     def sketch(df: org.apache.spark.sql.DataFrame, c: String) =
-      df.agg(expr(s"mg_freq_text($c, 8)").as("r"))
+      df.agg(MgFreqText.column(col(c), 8, 8).as("r"))
         .select(col("r.n"), expr("transform(r.items, x -> struct(x.item, x.est))"))
         .head()
     val exploded = docs.select(explode(split(col("text"), " ")).as("token"))
@@ -318,13 +303,12 @@ class FrequentItemsSpec extends AnyFunSuite {
   }
 
   test("two-pass heavy hitters is exact under eviction pressure") {
-    GraftFunctions.register(spark)
     // same shape as q103 over the 10k-item skewed domain. k must honor the
     // guarantee for the whole top-10: the 10th count is 100, so the floor
     // n/(k+1) must sit below it — k=256 gives ~56. (k=32's floor ~439
     // would NOT cover it; exactness is conditional on k, by design.)
     val toksDf = skewed(16).withColumnRenamed("item", "token")
-    val cands = toksDf.agg(expr("mg_freq_text(token, 256).items").as("sk"))
+    val cands = toksDf.agg(MgFreqText.column(col("token"), 256, 256)("items").as("sk"))
       .select(explode(expr("transform(sk, x -> x.item)")).as("token"))
     val got = toksDf.join(broadcast(cands), Seq("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))

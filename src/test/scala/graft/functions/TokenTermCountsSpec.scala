@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** token_term_counts contract: exact whole-token semantics identical to
+/** TokenTermCounts contract: exact whole-token semantics identical to
   * the exploded `split + filter-empty + count` spelling, byte-level
   * tokenization safe for UTF-8, and codegen/interpreted agreement. The
   * q142 oracle gate proves end-to-end equality vs DuckDB; this pins the
@@ -15,11 +15,9 @@ class TokenTermCountsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def counts(text: String, terms: Seq[String]): Seq[Long] = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq(text).toDF("t")
-      .select(call_function("token_term_counts", col("t"),
-        array(terms.map(lit): _*)).as("c"))
+      .select(TokenTermCounts.column(col("t"), terms).as("c"))
       .collect()(0).getSeq[Long](0)
   }
 
@@ -89,17 +87,14 @@ class TokenTermCountsSpec extends AnyFunSuite {
   }
 
   test("null text yields null, not a crash") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val got = Seq[(java.lang.Long, String)]((1L, null)).toDF("id", "t")
-      .select(call_function("token_term_counts", col("t"),
-        array(lit("x"))).as("c"))
+      .select(TokenTermCounts.column(col("t"), Seq("x")).as("c"))
       .collect()(0)
     assert(got.isNullAt(0))
   }
 
   test("parity with the exploded split-count spelling on real corpus text") {
-    GraftFunctions.register(spark)
     // null text is covered by its own test above; here both legs must see
     // the same rows (a null-text doc has no exploded rows but a null
     // fused result — not comparable cell-wise)
@@ -107,8 +102,7 @@ class TokenTermCountsSpec extends AnyFunSuite {
       .where(col("text").isNotNull)
     val terms = Seq("join", "window", "stream", "dup")
     val fused = docs
-      .select(col("doc_id"), call_function("token_term_counts", col("text"),
-        array(terms.map(lit): _*)).as("c"))
+      .select(col("doc_id"), TokenTermCounts.column(col("text"), terms).as("c"))
       .select(col("doc_id") +: (0 to terms.length)
         .map(i => col("c")(i).as(s"c$i")): _*)
     val tok = docs.select(col("doc_id"),
@@ -130,11 +124,9 @@ class TokenTermCountsSpec extends AnyFunSuite {
   }
 
   test("interpreted eval agrees with codegen") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("join a join", " b  dup", "").toDF("t")
-      .select(call_function("token_term_counts", col("t"),
-        array(lit("join"), lit("dup"))).as("c"))
+      .select(TokenTermCounts.column(col("t"), Seq("join", "dup")).as("c"))
     val withCodegen = df.collect().map(_.getSeq[Long](0)).toList
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")

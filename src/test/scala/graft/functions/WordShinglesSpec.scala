@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** word_shingles contract: exact equality with the composable
+/** WordShingles contract: exact equality with the composable
   * `transform(sequence(…), i -> concat_ws(' ', slice(toks, i, n)))` +
   * `array_distinct` spelling (the one every banded-dedup oracle mirrors),
   * including empty tokens from space runs, UTF-8, order, and the
@@ -16,10 +16,9 @@ class WordShinglesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def fused(text: String, n: Int, dedup: Boolean): Seq[String] = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq(text).toDF("t")
-      .select(call_function("word_shingles", col("t"), lit(n), lit(dedup)).as("s"))
+      .select(WordShingles.column(col("t"), n, dedup).as("s"))
       .collect()(0).getSeq[String](0)
   }
 
@@ -72,12 +71,11 @@ class WordShinglesSpec extends AnyFunSuite {
       gen.apply(Gen.Parameters.default, Seed(i.toLong)).map { case (t, n, d) => (i, t, n, d) })
     // one batched job for all 300 cases, not 300 single-row collects:
     // (n, dedup) has only 8 combinations, so group cases per combination
-    GraftFunctions.register(spark)
     import spark.implicits._
     cases.groupBy { case (_, _, n, d) => (n, d) }.foreach { case ((n, d), cs) =>
       val got = cs.map(c => (c._1, c._2)).toDF("seed", "t")
         .select(col("seed"),
-          call_function("word_shingles", col("t"), lit(n), lit(d)).as("s"))
+          WordShingles.column(col("t"), n, d).as("s"))
         .collect().map(r => r.getInt(0) -> r.getSeq[String](1)).toMap
       cs.foreach { case (seed, text, _, _) =>
         assert(got(seed) == reference(text, n, d),
@@ -86,34 +84,20 @@ class WordShinglesSpec extends AnyFunSuite {
     }
   }
 
-  test("bad n/dedup arguments fail at analysis with a named error, not a raw NPE/CCE") {
-    GraftFunctions.register(spark)
+  test("n < 1 fails at analysis with a named error, not at execution") {
     import spark.implicits._
     val df = Seq("a b c").toDF("t")
-    val nullN = intercept[Exception] {
-      df.selectExpr("word_shingles(t, CAST(NULL AS INT), true)").collect()
+    val zeroN = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(WordShingles.column(col("t"), 0, dedup = true)).queryExecution.analyzed
     }
-    assert(nullN.getMessage.contains("non-null int n"), nullN.getMessage)
-    val strN = intercept[Exception] {
-      df.selectExpr("word_shingles(t, '3', true)").collect()
-    }
-    assert(strN.getMessage.contains("non-null int n"), strN.getMessage)
-    val nonFoldable = intercept[Exception] {
-      df.selectExpr("word_shingles(t, length(t), true)").collect()
-    }
-    assert(nonFoldable.getMessage.contains("FOLDABLE"), nonFoldable.getMessage)
-    val arity = intercept[Exception] {
-      df.selectExpr("word_shingles(t)").collect()
-    }
-    assert(arity.getMessage.contains("3 arguments"), arity.getMessage)
+    assert(zeroN.getMessage.contains("n must be >= 1"), zeroN.getMessage)
   }
 
   test("null text yields null; interpreted eval agrees with codegen") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq[(java.lang.Long, String)]((1L, null), (2L, "a b c d"))
       .toDF("id", "t").orderBy("id")
-      .select(call_function("word_shingles", col("t"), lit(3), lit(true)).as("s"))
+      .select(WordShingles.column(col("t"), 3, dedup = true).as("s"))
     val rows = df.collect()
     assert(rows(0).isNullAt(0))
     assert(rows(1).getSeq[String](0) == Seq("a b c", "b c d"))

@@ -22,7 +22,6 @@ class CrossCorpusSpec extends AnyFunSuite {
   }
 
   test("novelRows equals the exact anti-join under a well-sized bloom") {
-    graft.functions.GraftFunctions.register(spark)
     val (seen, fresh) = frames()
     val got = CrossCorpus.novelRows(fresh, seen, "k")
       .collect().map(_.getLong(0)).toSet
@@ -33,7 +32,6 @@ class CrossCorpusSpec extends AnyFunSuite {
   }
 
   test("exactness survives a deliberately terrible bloom (fp-saturated)") {
-    graft.functions.GraftFunctions.register(spark)
     val (seen, fresh) = frames()
     // 64 bits for 500 items: the filter saturates and claims nearly
     // everything "maybe seen" — the confirm join must rescue every one
@@ -46,25 +44,21 @@ class CrossCorpusSpec extends AnyFunSuite {
   }
 
   test("empty seen corpus: the whole batch is novel") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val fresh = (1L to 10L).toDF("k")
     val empty = Seq.empty[Long].toDF("k")
     assert(CrossCorpus.novelRows(fresh, empty, "k").count() == 10)
   }
 
-  test("bloom functions work from plain SQL too") {
-    graft.functions.GraftFunctions.register(spark)
+  test("bloom round trip: members always hit, an absent key misses") {
     import spark.implicits._
-    (1L to 100L).toDF("k").createOrReplaceTempView("cc_seen")
-    val bloom = spark.sql(
-      "SELECT bloom_agg(k, 1000L, 65536L) AS b FROM cc_seen")
+    val bloom = (1L to 100L).toDF("k")
+      .agg(CrossCorpus.bloomAgg(col("k"), 1000L, 65536L).as("b"))
       .head().getAs[Array[Byte]]("b")
-    val hits = spark.sql(
-      s"SELECT k FROM VALUES (50L), (500L) AS t(k)")
-      .withColumn("hit", call_function("bloom_might_contain", lit(bloom), col("k")))
+    val hits = (Seq(500L) ++ (1L to 100L)).toDF("k")
+      .withColumn("hit", CrossCorpus.bloomMightContain(bloom, col("k")))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(hits(50L), "true member must hit (no false negatives)")
+    assert((1L to 100L).forall(hits), "every member must hit (no false negatives)")
     // 500 is absent; with 64 KiB for 100 items a false positive is ~impossible
     assert(!hits(500L))
   }

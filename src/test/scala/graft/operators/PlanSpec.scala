@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkEntry, TestSpark}
@@ -857,5 +858,26 @@ class PlanSpec extends AnyFunSuite {
       assert(plan.contains("word_shingles"),
         s"$name no longer plans the fused word_shingles expression")
     }
+  }
+
+  test("graft expressions run on a fresh session and register no function") {
+    // Every graft expression enters a plan through its Column constructor,
+    // so a query using it runs on any session and leaves that session's
+    // function registry untouched. One registered query per family.
+    val s = spark.newSession()
+    val keys = Seq(
+      "q49_jaccard_top_pairs", // WordShingles
+      "q103_heavy_hitters", // MgFreqText
+      "q117_cross_corpus_dedup", // bloom aggregate + probe
+      "q51_ann_brute_force", // CosineSimilarity
+      "q142_bm25_topdocs") // TokenTermCounts
+    try keys.foreach { k =>
+      assert(SparkEntry.queries(k)(s, dir).collect().nonEmpty, s"$k returned no rows")
+    } finally s.catalog.clearCache()
+    val names = Seq("cosine_similarity", "token_term_counts", "word_shingles",
+      "mg_freq_text", "bloom_agg", "bloom_might_contain")
+    val registered = names.filter(n =>
+      s.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(registered.isEmpty, s"session registry holds $registered")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.functions.CosineSimilarity
 
 /** LSH ANN recall against brute-force ground truth on planted
   * near-duplicate vectors, plus sketch-accuracy bounds.
@@ -60,12 +61,11 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("codegen cosine_similarity expression matches the interpreted HOF fold bit-for-bit") {
-    graft.functions.GraftFunctions.register(spark)
     val a = vecs.select(col("vec_id").as("ida"), col("embedding").as("va"))
     val b = vecs.select(col("vec_id").as("idb"), col("embedding").as("vb"))
     val sample = a.where(col("ida") < 20).crossJoin(b.where(col("idb") < 20))
     val cmp = sample
-      .withColumn("c_native", call_function("cosine_similarity", col("va"), col("vb")))
+      .withColumn("c_native", CosineSimilarity.column(col("va"), col("vb")))
       .withColumn("c_hof",
         Similarity.dotExpr("va", "vb") / (Similarity.normExpr("va") * Similarity.normExpr("vb")))
       .collect()
@@ -76,15 +76,16 @@ class SimilaritySpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToLongBits(n) == java.lang.Double.doubleToLongBits(h),
         s"bit mismatch: $n vs $h")
     }
-    // SQL form works too (function registered in the session catalog)
-    val viaSql = spark.sql(
-      "SELECT cosine_similarity(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), " +
-        "array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)))").collect().head.getDouble(0)
-    assert(viaSql == 1.0)
-    // null / mismatch semantics
-    val nulls = spark.sql(
-      "SELECT cosine_similarity(array(CAST(1.0 AS FLOAT)), array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))), " +
-        "cosine_similarity(array(CAST(0.0 AS FLOAT)), array(CAST(0.0 AS FLOAT)))").collect().head
+    // constant vectors: identical directions give exactly 1.0
+    def v(xs: Float*) = typedLit(xs.toSeq)
+    val one = spark.range(1).select(CosineSimilarity.column(v(1f, 0f), v(1f, 0f)))
+      .collect().head.getDouble(0)
+    assert(one == 1.0)
+    // null / mismatch semantics: a length mismatch and a zero-norm vector
+    // are null, not an error or NaN
+    val nulls = spark.range(1).select(
+      CosineSimilarity.column(v(1f), v(1f, 2f)),
+      CosineSimilarity.column(v(0f), v(0f))).collect().head
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
   }
 
@@ -109,7 +110,6 @@ class SimilaritySpec extends AnyFunSuite {
         .view.mapValues(_.map(_.getAs[Long]("neighbor_id")).toSet).toMap
 
     // brute-force ground truth over the same frame
-    graft.functions.GraftFunctions.register(spark)
     val q = clustered.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
@@ -118,10 +118,10 @@ class SimilaritySpec extends AnyFunSuite {
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("nvec"))
       .crossJoin(broadcast(q))
       .where(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine", call_function("cosine_similarity", col("qvec"), col("nvec")))
+      .withColumn("cosine", CosineSimilarity.column(col("qvec"), col("nvec")))
       .withColumn("rank", row_number().over(w)).where(col("rank") <= 5))
 
-    val ivf = neighborSet(Similarity.annIvf(spark, clustered))
+    val ivf = neighborSet(Similarity.annIvf(clustered))
     assert(ivf.keySet == brute.keySet)
     // keys is a Set — map through a Seq or identical per-query recalls dedup
     val recall = brute.keys.toSeq.map(k => (ivf(k) & brute(k)).size / 5.0).sum / brute.size

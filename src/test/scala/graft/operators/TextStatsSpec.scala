@@ -239,7 +239,7 @@ class TextStatsSpec extends AnyFunSuite {
   }
 
   test("neBigrams collapsed-text identity: pairs of consecutive non-empty tokens") {
-    // The r12 q119/q139 rewrite rests on this identity: word 2-shingles
+    // The q119/q139 bigram spelling rests on this identity: word 2-shingles
     // of the space-run-collapsed trimmed text, split back on the single
     // interior space, equal the consecutive pairs of NON-EMPTY tokens of
     // the raw split. Pinned as a property over adversarial spacing.
@@ -258,7 +258,7 @@ class TextStatsSpec extends AnyFunSuite {
       "" :+ " " :+ "a" :+ "  a  " :+ "a b"
     val got = texts.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("id", "text")
-      .select(col("id"), TextOps.neBigrams(spark).as("bgs"))
+      .select(col("id"), TextOps.neBigrams.as("bgs"))
       .collect().map(r => r.getInt(0) ->
         r.getSeq[String](1).map(bg => bg.split(" ", -1) match {
           case Array(a, b) => (a, b)
