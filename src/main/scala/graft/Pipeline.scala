@@ -35,7 +35,10 @@ object Pipeline {
     // Bronze → Silver. Draws already in silver sorteos are skipped: sorteos
     // is written last, so a draw present there has both of its tables.
     // The skip runs on the driver, on the two listings, so the scan reads
-    // only the new files.
+    // only the new files. The only Spark jobs a run submits are for data:
+    // the parse, the two silver writes and the gold builds. Silver's
+    // schema comes from the code, and on one JVM the listings stay on the
+    // driver (Session.builder).
     val silverSorteos = s"$outRoot/silver/sorteos"
     val silverPremios = s"$outRoot/silver/premios"
     val listed = Silver.listRaw(spark, rawPath)
@@ -68,9 +71,10 @@ object Pipeline {
     if (processed.isEmpty && fresh.isEmpty) return Map.empty
 
     // Gold: read silver back (the canonical source) and rebuild all seven
-    // tables with bounded parallelism.
-    val sorteos = spark.read.parquet(silverSorteos)
-    val premios = spark.read.parquet(silverPremios)
+    // tables with bounded parallelism. With the declared schemas these
+    // reads open no file until a gold build runs.
+    val sorteos = spark.read.schema(Silver.SorteosSchema).parquet(silverSorteos)
+    val premios = spark.read.schema(Silver.PremiosSchema).parquet(silverPremios)
 
     val builds: Seq[Callable[(String, Long)]] = Gold.builders.toSeq.map { case (name, build) =>
       () => Log.timed("gold_build", "table" -> name) {

@@ -14,6 +14,13 @@ import org.apache.spark.sql.SparkSession
   *    `errors="coerce"` → NULL (reference transformer.py:55-70,213-222); we
   *    need `cast` / `to_date` to yield NULL on bad input, not throw.
   *  - UTC session timezone for oracle (DuckDB) parity on timestamps.
+  *  - Single-JVM masters (`local`, `local[...]`) only: shuffle and spill
+  *    compression off, and `spark.sql.sources.parallelPartitionDiscovery.threshold`
+  *    at 100 000, so a file listing stays on the driver instead of running
+  *    as a Spark job once it passes 32 paths. On one JVM both are pure
+  *    per-job latency. Cluster masters, `local-cluster[...]` included,
+  *    keep Spark's defaults: there blocks cross the network and a listing
+  *    job spreads the file-system calls over the executors.
   */
 object Session {
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder = {
@@ -39,13 +46,15 @@ object Session {
       .config("spark.ui.enabled", "false")
     // Single-JVM masters move shuffle blocks through loopback memory /
     // page cache, where lz4 framing of KB-sized blocks is pure per-stage
-    // latency; on a real (network-bound) cluster the default ON is
-    // correct, so only single-JVM masters opt out. `local-cluster[...]`
-    // deliberately does NOT match (ADVICE r11): it moves blocks between
-    // executor JVMs over sockets, where the network-default applies.
+    // latency, and a listing job only hands the driver's own file-system
+    // calls to its own task threads. On a real (network-bound) cluster the
+    // defaults are correct, so only single-JVM masters opt out.
+    // `local-cluster[...]` deliberately does NOT match: it moves blocks
+    // between executor JVMs over sockets, where the network defaults apply.
     if (master == "local" || master.startsWith("local["))
       b.config("spark.shuffle.compress", "false")
         .config("spark.shuffle.spill.compress", "false")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "100000")
     else b
   }
 

@@ -3,8 +3,9 @@ package graft.parse
 import java.net.URI
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import Transformer.{Premio, SilverDraw, Sorteo}
 
@@ -18,8 +19,31 @@ import Transformer.{Premio, SilverDraw, Sorteo}
   * `wholetext` keeps file = record; at 100 TB of draws this is a
   * many-small-files scan, which Spark packs into tasks via
   * spark.sql.files.maxPartitionBytes.
+  *
+  * Silver's schema comes from the code: every read of silver states
+  * [[SorteosSchema]] or [[PremiosSchema]], so a read opens no file to
+  * infer one. With the listing on the driver on single-JVM masters
+  * ([[graft.Session.builder]]), reading silver's metadata submits no
+  * Spark job.
   */
 object Silver {
+
+  /** Read schema of silver `sorteos`, from the [[Sorteo]] encoder. */
+  val SorteosSchema: StructType = readSchema(Encoders.product[Sorteo].schema)
+
+  /** Read schema of silver `premios`, from the [[Premio]] encoder. */
+  val PremiosSchema: StructType = readSchema(Encoders.product[Premio].schema)
+
+  /** A silver table as a parquet read yields it: the data columns, all
+    * nullable, then the partition columns `year` and `sorteo` as the ints
+    * Spark takes from `year=2024/sorteo=3046` directory names (the row's
+    * `sorteo` is a long, its directory value is not).
+    */
+  private def readSchema(row: StructType): StructType = {
+    val partitions = Seq("year", "sorteo")
+    StructType(row.filterNot(f => partitions.contains(f.name)).map(_.copy(nullable = true)) ++
+      partitions.map(StructField(_, IntegerType)))
+  }
 
   /** S1: raw text scan, one record per file with its path. Each argument
     * is a Hadoop glob.
@@ -77,19 +101,17 @@ object Silver {
     * any file is read. Empty if silver doesn't exist yet, or holds no
     * committed file: a write that failed before its commit leaves the
     * directory behind with no data in it.
+    *
+    * The read states [[SorteosSchema]], so the keys come from file names
+    * alone and no file is opened. A committed file that is damaged still
+    * counts as processed: its draw is never reparsed and rewritten, and
+    * the run fails when gold reads it. Only a missing path means "nothing
+    * processed"; any other listing failure propagates.
     */
   def processedKeys(spark: SparkSession, silverSorteosPath: String): Set[Long] =
-    // Only a missing or data-less path means "nothing processed". Any
-    // OTHER read failure (corrupt footer, transient IO) must propagate:
-    // silently returning the empty set would hide the damage and reparse
-    // and rewrite every draw in the raw history. Keys come from file names,
-    // so a damaged file the schema read does not open still counts.
-    try spark.read.parquet(silverSorteosPath).inputFiles.flatMap(sorteoKey).toSet
-    catch {
-      case e: AnalysisException
-          if Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")(e.getCondition) =>
-        Set.empty
-    }
+    try spark.read.schema(SorteosSchema).parquet(silverSorteosPath)
+      .inputFiles.flatMap(sorteoKey).toSet
+    catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => Set.empty }
 
   /** [[processedKeys]] as a one-column `sorteo` frame. */
   def processedSorteos(spark: SparkSession, silverSorteosPath: String): DataFrame = {

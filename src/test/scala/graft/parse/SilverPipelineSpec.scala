@@ -1,10 +1,14 @@
 package graft.parse
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
 import org.apache.parquet.hadoop.ParquetOutputCommitter
+import org.apache.spark.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,16 +38,28 @@ class SilverPipelineSpec extends AnyFunSuite {
     Files.copy(p, dst)
   }
 
-  /** `Pipeline.run` with its standard error captured; returns the one
-    * `bronze_scan` event it logged.
+  /** `Pipeline.run` with its standard error captured: the run's outcome
+    * and the events it logged.
     */
-  private def runScanned(glob: String, out: String): String = {
+  private def runLogged(glob: String, out: String): (Try[Map[String, Long]], List[String]) = {
     val buf = new java.io.ByteArrayOutputStream()
     val saved = System.err
     System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
-    try Pipeline.run(spark, glob, out) finally System.setErr(saved)
-    val scans = buf.toString("UTF-8").linesIterator
-      .filter(_.startsWith("{\"event\":\"bronze_scan\"")).toList
+    val result = try Try(Pipeline.run(spark, glob, out)) finally System.setErr(saved)
+    (result, buf.toString("UTF-8").linesIterator.filter(_.startsWith("{\"event\":")).toList)
+  }
+
+  /** The logged events named `name`. */
+  private def events(logged: List[String], name: String): List[String] =
+    logged.filter(_.startsWith(s"""{"event":"$name","""))
+
+  /** A successful `Pipeline.run`; returns the one `bronze_scan` event it
+    * logged.
+    */
+  private def runScanned(glob: String, out: String): String = {
+    val (result, logged) = runLogged(glob, out)
+    result.get
+    val scans = events(logged, "bronze_scan")
     assert(scans.size == 1, scans)
     scans.head
   }
@@ -137,12 +153,13 @@ class SilverPipelineSpec extends AnyFunSuite {
   test("a failed gold build: run throws only after the other six tables are written") {
     val out = freshDir()
     val draws = Silver.parseDraws(Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt"))
-    // silver premios without letras: only gold_letters_distribution reads it
-    Writers.writeSilverPartitioned(Silver.premios(draws).toDF().drop("letras"),
+    // silver premios whose letras file column is a long, not the declared
+    // string: only gold_letters_distribution reads it, and its scan fails
+    Writers.writeSilverPartitioned(Silver.premios(draws).toDF().withColumn("letras", lit(1L)),
       s"$out/silver/premios")
     Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), s"$out/silver/sorteos")
     Files.createDirectory(java.nio.file.Paths.get(s"$out/empty_raw"))
-    intercept[org.apache.spark.sql.AnalysisException](
+    intercept[org.apache.spark.SparkException](
       Pipeline.run(spark, s"$out/empty_raw/*.txt", out))
     val others = Gold.builders.keySet - "gold_letters_distribution"
     assert(others.size == 6)
@@ -219,20 +236,92 @@ class SilverPipelineSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/silver/premios").count() == 7 + 4)
   }
 
-  test("processedSorteos: empty on missing path, but corrupt silver PROPAGATES") {
+  test("processedSorteos: empty on a missing path or a data-less directory") {
     val out = freshDir()
     // missing path → first run → empty processed set
     assert(Silver.processedSorteos(spark, s"$out/nope").count() == 0)
     // a directory an aborted write left without data → nothing processed
     Files.createDirectory(java.nio.file.Paths.get(s"$out/aborted"))
     assert(Silver.processedSorteos(spark, s"$out/aborted").count() == 0)
-    // corrupt silver (present path, unreadable footer) must throw, never
-    // silently reparse and rewrite every draw
-    Files.write(java.nio.file.Paths.get(s"$out/corrupt.parquet"),
-      "not a parquet file".getBytes)
-    assertThrows[Exception] {
-      Silver.processedSorteos(spark, s"$out/corrupt.parquet").count()
+  }
+
+  test("a corrupt silver file fails the run at the gold read; no draw is rewritten") {
+    val glob = s"$rawPath/year=*/sorteo=*/*.txt"
+    val out = freshDir()
+    Pipeline.run(spark, glob, out)
+    val part = Files.list(java.nio.file.Paths.get(s"$out/silver/sorteos/year=2024/sorteo=3046"))
+      .filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
+    Files.write(part, "not a parquet file".getBytes)
+    /** Every file under silver with its modification time. */
+    def silverState(): Map[String, Long] = {
+      val root = java.nio.file.Paths.get(s"$out/silver")
+      Files.walk(root).filter(Files.isRegularFile(_)).iterator().asScala
+        .map(p => root.relativize(p).toString -> Files.getLastModifiedTime(p).toMillis).toMap
     }
+    val before = silverState()
+    // the damaged draw still counts as processed, so nothing is reparsed:
+    // treating damage as "not processed" would rewrite every draw in the
+    // raw history
+    val (result, logged) = runLogged(glob, out)
+    assert(result.isFailure, "a run over corrupt silver must throw")
+    val scans = events(logged, "bronze_scan")
+    assert(scans.size == 1 && field(scans.head, "new") == 0, logged)
+    assert(events(logged, "silver_write").isEmpty)
+    assert(events(logged, "gold_build").exists(_.contains("\"error\":")),
+      s"the failure must come from a gold build:\n${logged.mkString("\n")}")
+    assert(silverState() == before, "a run over corrupt silver rewrote a silver partition")
+  }
+
+  test("silver's declared read schemas are the ones Spark infers from its files") {
+    val out = freshDir()
+    val draws = Silver.parseDraws(Silver.rawDraws(spark, s"$rawPath/year=*/sorteo=*/*.txt"))
+    Writers.writeSilverPartitioned(Silver.sorteos(draws).toDF(), s"$out/sorteos")
+    Writers.writeSilverPartitioned(Silver.premios(draws).toDF(), s"$out/premios")
+    val declared = Map("sorteos" -> Silver.SorteosSchema, "premios" -> Silver.PremiosSchema)
+    for ((t, schema) <- declared) {
+      val inferred = spark.read.parquet(s"$out/$t").schema
+      assert(inferred == schema, s"$t:\n${inferred.treeString}\n${schema.treeString}")
+    }
+  }
+
+  test("the weekly increment submits no listing or schema-inference job") {
+    import spark.implicits._
+    val out = freshDir()
+    val raw = freshDir()
+    // a 40-draw history: more paths than the 32 above which Spark's
+    // default lists with a job
+    val history = 2001L to 2040L
+    val day = java.sql.Date.valueOf("2023-01-07")
+    Writers.writeSilverPartitioned(history.map(n => Transformer.Premio(n, Some(n), Some("AB"),
+      100.0, Some("V"), Some("C"), Some("D"), 2023, n)).toDF(), s"$out/silver/premios")
+    Writers.writeSilverPartitioned(history.map(n => Transformer.Sorteo(n, Some("ORDINARIO"),
+      Some(day), Some(day), Some(1L), Some(2L), Some(3L), None, None, None, 2023, n)).toDF(),
+      s"$out/silver/sorteos")
+    // their raw files: already processed, so never opened
+    history.foreach { n =>
+      val f = java.nio.file.Paths.get(raw, s"year=2023/sorteo=$n/draw_$n.txt")
+      Files.createDirectories(f.getParent)
+      Files.createFile(f)
+    }
+    stage(raw, "results_raw_lottery_url_id_287_3046.txt")
+
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.foreach(st => sites.add(st.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val counts =
+      try Pipeline.run(spark, s"$raw/year=*/sorteo=*/*.txt", out)
+      finally {
+        ListenerBus.flush(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    val metadata = sites.asScala.filter(site =>
+      Seq("text at Silver.scala", "parquet at Silver.scala", "parquet at Pipeline.scala")
+        .exists(site.startsWith))
+    assert(metadata.isEmpty, s"metadata jobs among ${sites.asScala.toList}")
+    assert(counts("gold_draw_summary") == 41)
   }
 
   test("Pipeline.run on a raw glob matching nothing returns empty, no throw") {
