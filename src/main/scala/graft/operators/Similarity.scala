@@ -110,10 +110,11 @@ object Similarity {
       .select(col("vec_id"), col("bk.band"), col("bk.key"))
       .persist()
     val a = banded.as("a")
-    // shuffle_hash, never broadcast: bucket self-joins partition by the
-    // bucket key — a size-based broadcast would pin the quadratic pair
-    // expansion to the probe side's partitioning (see
-    // TextOps.minhashCandidates)
+    // shuffle_hash, never broadcast: a bucket self-join's OUTPUT is
+    // quadratic in bucket size, so it must partition by the bucket key —
+    // a size-based broadcast (the banded frame can look tiny to the
+    // planner) would pin the pair expansion to the probe side's
+    // partitioning, one task on a single-split input
     val b = banded.as("b").hint("shuffle_hash")
     a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
         col("a.vec_id") < col("b.vec_id"))

@@ -149,23 +149,16 @@ object Temporal {
        | AND epoch_ns(b.ts) - epoch_ns(a.ts) <= $BandNs
        |GROUP BY 1, 2""".stripMargin
 
-  /** For every event, the priority of the user's latest ORDER at or before
-    * the event time ('none' when the user has no prior orders) — the
-    * classic "dimension state as of the event" enrichment — rolled up to
-    * counts, via the compact-history [[asofLatest]] (per-customer order
-    * history is dimension-bounded).
-    */
   /** Generic as-of core: probe rows (k, t_ns) each enriched with the
     * latest NON-NULL `attr` of the build rows (k, t_ns, attr) at or
     * before it (null when none) — last-known-value semantics: null-attr
     * build rows are skipped, not carried, so a tombstone does not mask an
-    * earlier reading (and the two spellings below stay row-for-row
-    * equivalent — `last(ignoreNulls)` can never see a build null).
+    * earlier reading (the same rows q58's oracle computes with
+    * `last_value(attr IGNORE NULLS)` over a union + forward-fill).
     * Same-instant build rows are visible to the probe; equal-time builds
     * tiebreak on attr for a deterministic total order.
     *
-    * Compact-history join (r15, was union + forward-fill — kept below as
-    * [[asofLatestStreamed]]): the build side folds to one (t_ns, attr)
+    * Compact-history join: the build side folds to one (t_ns, attr)
     * array per key — dimension-sized, not event-sized — and each probe
     * row takes the lexicographic max of its at-or-before prefix:
     * `array_max(filter(...))` IS "latest t, then max attr" under struct
@@ -178,20 +171,20 @@ object Temporal {
     * histories. The SHUFFLE_HASH hint PINS that shape: JoinSelection
     * gives an explicit join-strategy hint precedence over size-based
     * broadcast, under AQE re-planning too (the same precedence the
-    * TextOps r15 no-broadcast pins rely on), so the join never upgrades
-    * to broadcast — a deterministic exchange on k instead of a
+    * TextOps no-broadcast pair-join pins rely on), so the join never
+    * upgrades to broadcast — a deterministic exchange on k instead of a
     * size-estimate race, and the probe side is never sorted either way.
-    * The old spelling shuffled AND sorted build+probe together; this one
-    * replaces that O((|b|+|p|) log) per-key sort with O(|b| log h) local
-    * array sorts. Assumes per-key history fits one array buffer — true
-    * for "dimension state as of the event" enrichment (orders per
-    * customer); for unbounded per-key histories use
-    * [[asofLatestStreamed]].
+    * A union + forward-fill spelling would shuffle AND sort build+probe
+    * together; this one replaces that O((|b|+|p|) log) per-key sort with
+    * O(|b| log h) local array sorts. Precondition: each key's build
+    * history fits one array buffer — true for "dimension state as of the
+    * event" enrichment (orders per customer), not for unbounded per-key
+    * histories.
     */
   def asofLatest(build: DataFrame, probe: DataFrame): DataFrame = {
     // null-attr build rows dropped (last-known-value semantics, see
     // docstring): array_max would otherwise return the latest row's null
-    // while asofLatestStreamed's last(ignoreNulls) skips it
+    // instead of the latest non-null reading
     val hist = build.where(col("attr").isNotNull).groupBy(col("k"))
       .agg(collect_list(struct(col("t_ns"), col("attr"))).as("hist"))
     // shuffle-hash, histories as build side: sorting either stream buys
@@ -208,28 +201,12 @@ object Temporal {
           .getField("attr").as("last_attr"))
   }
 
-  /** Union + forward-fill as-of (the r14 spelling): build and probe
-    * interleave on one per-key timeline and `last(ignoreNulls)` carries
-    * the latest NON-NULL build attr forward (probe rows ride with a null
-    * attr sentinel, so null build attrs are inherently skipped — the
-    * same last-known-value semantics [[asofLatest]] now enforces by
-    * filtering). One wide sort over build+probe — use when per-key build
-    * histories are too large to hold as arrays; row-for-row equivalent
-    * to [[asofLatest]] including null-attr builds (parity spec-pinned).
+  /** For every event, the priority of the user's latest ORDER at or before
+    * the event time ('none' when the user has no prior orders) — the
+    * classic "dimension state as of the event" enrichment — rolled up to
+    * counts, via the compact-history [[asofLatest]] (per-customer order
+    * history is dimension-bounded).
     */
-  def asofLatestStreamed(build: DataFrame, probe: DataFrame): DataFrame = {
-    val b = build.select(col("k"), col("t_ns"), col("attr"), lit(0).as("is_probe"))
-    val p = probe.select(col("k"), col("t_ns"),
-      lit(null).cast("string").as("attr"), lit(1).as("is_probe"))
-    val w = Window.partitionBy(col("k"))
-      .orderBy(col("t_ns").asc, col("is_probe").asc, col("attr").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    b.unionByName(p)
-      .withColumn("last_attr", last(col("attr"), ignoreNulls = true).over(w))
-      .where(col("is_probe") === 1)
-      .select(col("k"), col("t_ns"), col("last_attr"))
-  }
-
   def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.load(s, dir, "orders")
       .select(col("o_custkey").as("k"),

@@ -16,7 +16,7 @@ import Relational.{dsum, dsumSql}
   * higher-order array functions evaluated row-local), so the only shuffles
   * are on (doc, token/shingle) keys; nothing collects to the driver and no
   * all-pairs products exist — near-dup candidate generation goes through
-  * banded LSH buckets ([[TextOps.minhashCandidates]]).
+  * banded LSH buckets ([[TextOps.qMinhashCandidatePairs]]).
   */
 object TextOps {
 
@@ -426,130 +426,71 @@ object TextOps {
        |FROM m""".stripMargin
   }
 
-  /** LSH candidate pairs: docs agreeing on ≥1 of the 8 band keys.
-    * The banded frame (ndocs × 8 rows) is persisted before the self-join
-    * — same convention as q56's oracled spelling: without it the whole
-    * corpus-sized signature aggregation under `sigs` evaluates once per
-    * join side (measured ~2× on the 10× rebuild; ReuseExchange does not
-    * reliably dedupe the AQE-replanned sides). The session owner
-    * (Bench/Verify clearCache) releases it.
+  /** Document-frequency cap of q49's posting join: a shingle whose
+    * copy-weighted df is above this fraction of the corpus's documents is
+    * dropped like a stopword, from the numerator and both denominators
+    * alike, so the similarity is exact filtered-Jaccard. The cap is
+    * strict (`df > HotDfFrac·n_docs`): a shingle in exactly half of the
+    * documents stays. At 0.5 the hot set has at most 2·avg_shingles_per_doc
+    * members, which is what lets it ride one broadcast row
+    * ([[keptShingleArrays]]).
     */
-  def minhashCandidates(sigs: DataFrame): DataFrame = {
-    val banded = sigs.select(col("doc_id"),
-      explode(array((0 until MinhashBands).map(b =>
-        struct(lit(b).as("band"), col(s"band$b").as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.key"))
-      .persistFilled()
-    // warm-gated eager fill (q147 cold-build convention, gated r21):
-    // sibling AQE stages that scan an UNFILLED InMemoryRelation
-    // concurrently each recompute its child plan — the self-join's two
-    // sides would race on a cold cache and re-run the corpus-sized
-    // signature aggregate per side; warm builds skip the fill job
-    val a = banded.as("a")
-    // shuffle_hash, never broadcast: a banded self-join's OUTPUT is
-    // quadratic in bucket df, so the plan must partition by the bucket key;
-    // a size-based broadcast (the banded frame can look tiny to the
-    // planner) would glue the pair expansion to the probe side's
-    // partitioning, one task on a single-split corpus
-    val b = banded.as("b").hint("shuffle_hash")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
+  private val HotDfFrac = 0.5
 
-  /** N-gram Jaccard via an inverted shingle index (join on shingle →
-    * common counts → |A∪B| = |A|+|B|-common). Bucketed by shingle; the skew
-    * guard drops ubiquitous shingles (df > maxDfFrac of the corpus) like a
-    * stopword filter — at 100 TB those buckets would otherwise
-    * quadratically dominate. Numerator AND denominators are computed over
-    * the same filtered shingle universe, so the similarity is exact
-    * filtered-Jaccard (== exact Jaccard whenever the cap doesn't bite).
+  /** Hot-capped kept-shingle arrays: the head of q49's posting-join pair
+    * core. Input `units`: (rep, copies, arr), one row per distinct content
+    * with its copy count and its distinct shingle array; `nDocs`: one
+    * row, `n_docs`. Document frequency is copy-weighted, df =
+    * sum(copies), which equals the per-doc COUNT(*) in exact integers, so
+    * the hot set is the one a per-doc posting join would drop.
     *
-    * Scale shape: per-doc distinct shingle ARRAYS are built ONCE and
-    * persisted; the hot-shingle set is tiny by construction (≤ 1/maxDfFrac
-    * distinct values per corpus-size unit), so it collapses to one
-    * broadcast row and is removed ROW-LOCALLY with array_except — no
-    * anti-join, and n_sh = size of the kept array is free at the scan, so
-    * no sizes table ever joins back onto the pair frame.
-    */
-  def jaccardPairs(docs: DataFrame, maxDfFrac: Double = 0.5): DataFrame = {
-    // The row-local hot-set spelling is safe BECAUSE the hot set is
-    // bounded by ≤ avg_shingles_per_doc/maxDfFrac members: it collapses
-    // to one collect_list row and broadcasts. A tiny maxDfFrac (say
-    // 0.01 on a large corpus) would grow that single row past the
-    // broadcast/row limits where the retired anti-join degraded
-    // gracefully — bound it rather than fail weirdly downstream. Callers
-    // needing a more aggressive cap should pre-filter the corpus instead.
-    require(maxDfFrac >= 0.1 && maxDfFrac <= 1.0,
-      s"maxDfFrac=$maxDfFrac outside [0.1, 1]: the broadcast hot set is " +
-        "only bounded for df caps ≥ 0.1 of the corpus")
-    val units = docs.select(col("doc_id"),
-      WordShingles.column(col("text"), 3, dedup = true).as("arr"))
-    val nDocs = docs.select(count(lit(1)).as("n_docs"))
-    val (kept, pairRows) = keptShingleArrays(units, "doc_id", None, nDocs, maxDfFrac)
-    postingPairAgg(kept, pairRows, "doc_id", None, "doc_a", "doc_b")
-  }
-
-  /** Hot-capped kept-shingle arrays — the shared head of the posting-join
-    * pair family (per-doc jaccardPairs and the content-granularity q49).
-    * Input `units`: (idCol[, weightCol], arr). Per-unit shingle ARRAYS
-    * survive to the hot-filter (r16): the retired spelling exploded
-    * first, anti-joined the hot set out, and later joined a sizes table
-    * back onto the AGGREGATED pairs — two joins against the largest
-    * frame in the query; at the 100× corpus the sizes side crossed the
+    * Per-content shingle ARRAYS survive to the hot filter. Exploding
+    * first, anti-joining the hot set out and joining a sizes table back
+    * onto the AGGREGATED pairs puts two joins against the largest frame
+    * in the query; at the 100× corpus the sizes side crossed the
     * broadcast threshold and both joins became sort-merge over the
     * 113M-pair frame (2 extra pair-frame exchanges + sorts, 6.5 GB of
-    * spill, ~60% of the query's wall — BASELINE.md r16 stage ledger,
+    * spill, ~60% of the query's wall — BASELINE.md's 100× stage ledger,
     * tools/probe100x_r16_spark.log). Row-local instead: the hot set is
-    * BOUNDED (df > maxDfFrac·n_docs ⟹ at most avg_shingles/maxDfFrac
+    * BOUNDED (df > HotDfFrac·n_docs ⟹ at most avg_shingles/HotDfFrac
     * members), so it collapses to one collect_list row, broadcasts, and
     * array_except drops it from each unit's array in place; n_sh =
-    * size(ka) is free at the scan (BASELINE.md A/B/C: old 15.5 s, window
-    * n_sh-carry 18.8 s, this 14.5 s; 100x full query 336 → ~107 s).
-    * With `weightCol` (copy counts), df = sum(weight) — identical to the
-    * per-doc COUNT(*) in exact integers, so the hot set is the same set.
+    * size(ka) is free at the scan (BASELINE.md A/B/C: anti-join 15.5 s,
+    * window n_sh-carry 18.8 s, this 14.5 s; 100x full query 336 → ~107 s).
     *
-    * Caller contract: `units` is persisted and eagerly filled here (the
-    * hot-set aggregate and the posting explode both read it); the
+    * Returns the kept frame (rep, copies, ka, n_sh) and the exact
+    * posting-join output size. Caller contract: `units` is persisted here
+    * (the hot-set aggregate and the posting explode both read it); the
     * returned plan references it, so it cannot be unpersisted before
     * return. Session owners running many queries should clearCache()
     * between them (Bench/Verify convention).
     */
-  private def keptShingleArrays(units: DataFrame, idCol: String,
-      weightCol: Option[String], nDocs: DataFrame,
-      maxDfFrac: Double): (DataFrame, Long) = {
-    // No eager count here (r21): arr's consumers are strictly sequential
-    // DRIVER actions — the stat collect below reads it alone (and fills
-    // the cache as a side effect of that one pass), and the posting fill
-    // in postingPairAgg runs only after the collect returns — so the
-    // sibling-AQE-stage race the minhashCandidates fill guards against
-    // cannot occur, and the count job was one full cached re-scan per
-    // run for nothing (32 tasks, ~1 s summed runMs, warm;
-    // OPTIMIZATION_r21.md).
+  private def keptShingleArrays(units: DataFrame, nDocs: DataFrame): (DataFrame, Long) = {
+    // No eager fill: arr's consumers are strictly sequential DRIVER
+    // actions — the stat collect below reads it alone (and fills the
+    // cache as a side effect of that one pass), and the posting fill in
+    // postingPairAgg starts only after the collect returns — so no two
+    // AQE stages can scan it cold at once, and a count job would be one
+    // full cached re-scan per run for nothing (32 tasks, ~1 s summed
+    // runMs, warm; OPTIMIZATION_r21.md).
     val arr = units.persist()
-    val dfAgg = weightCol match {
-      case Some(w) => arr.select(explode(col("arr")).as("shingle"), col(w))
-        .groupBy(col("shingle"))
-        .agg(sum(col(w)).as("df"), count(lit(1)).as("cnt"))
-      case None => arr.select(explode(col("arr")).as("shingle"))
-        .groupBy(col("shingle"))
-        .agg(count(lit(1)).as("df"), count(lit(1)).as("cnt"))
-    }
-    // ONE driver-side pass over the df aggregate returns BOTH plan inputs
-    // (r20): the bounded hot set (≤ avg_shingles/maxDfFrac members — the
-    // r16 broadcast-rule bound, now a driver value instead of a lazy
-    // BroadcastExchange subplan) and the EXACT posting-join output size
-    // Σ cnt·(cnt−1)/2 over the kept shingles, which sizes the pair
-    // exchanges to the data (postingPairAgg) instead of a 4×cores
-    // constant. `cnt` counts UNITS per shingle — the self-join's row
-    // expansion — independent of the copy weights that define hotness.
-    // One collect job replaces one broadcast-build job; doubling it as
-    // the sizing probe is the q49 threshold-collect convention.
+    val dfAgg = arr.select(explode(col("arr")).as("shingle"), col("copies"))
+      .groupBy(col("shingle"))
+      .agg(sum(col("copies")).as("df"), count(lit(1)).as("cnt"))
+    // ONE driver-side pass over the df aggregate returns BOTH plan inputs:
+    // the bounded hot set (≤ avg_shingles/HotDfFrac members — a driver
+    // value, not a lazy BroadcastExchange subplan) and the EXACT
+    // posting-join output size Σ cnt·(cnt−1)/2 over the kept shingles,
+    // which sizes the pair exchanges to the data (postingPairAgg) instead
+    // of a 4×cores constant. `cnt` counts CONTENTS per shingle — the
+    // self-join's row expansion — independent of the copy weights that
+    // define hotness. One collect job replaces one broadcast-build job;
+    // doubling it as the sizing probe is the q49 threshold-collect
+    // convention.
     val stat = dfAgg.crossJoin(broadcast(nDocs)).agg(
-      collect_list(when(col("df") > col("n_docs") * maxDfFrac,
+      collect_list(when(col("df") > col("n_docs") * HotDfFrac,
         col("shingle"))).as("hot"),
-      sum(when(col("df") <= col("n_docs") * maxDfFrac,
+      sum(when(col("df") <= col("n_docs") * HotDfFrac,
         col("cnt") * (col("cnt") - lit(1L)))).as("pairs2")).head()
     val pairRows = if (stat.isNullAt(1)) 0L else stat.getLong(1) / 2
     // the collected hot set re-enters the plan as a one-row LocalRelation
@@ -561,7 +502,7 @@ object TextOps {
         org.apache.spark.sql.types.StructField("hot",
           org.apache.spark.sql.types.ArrayType(
             dfAgg.schema("shingle").dataType), nullable = false))))
-    val lead = col(idCol) +: weightCol.map(col).toSeq
+    val lead = Seq(col("rep"), col("copies"))
     val kept = arr.crossJoin(broadcast(hotDf))
       .select(lead :+ array_except(col("arr"), col("hot")).as("ka"): _*)
       .select(lead :+ col("ka") :+ size(col("ka")).as("n_sh"): _*)
@@ -569,13 +510,12 @@ object TextOps {
   }
 
   /** Posting-list self-join + pair aggregate over [[keptShingleArrays]]
-    * output — the shared tail of the pair family. Output: (aName, bName,
-    * common, n_a, n_b[, mult], jaccard), with mult = max(w_a·w_b) when a
-    * weight column rides the rows (the content-granularity doc-pair
-    * multiplicity).
+    * output: the tail of q49's pair core. Output: (ra, rb, common, n_a,
+    * n_b, mult, jaccard), where mult = max(copies_a·copies_b) is the
+    * number of doc pairs the content pair stands for.
     *
-    * Partition count sized to the pair EXPANSION, not the input (r15):
-    * the self-join's output is Σ df² — ~100× its input on a 10× corpus —
+    * Partition count sized to the pair EXPANSION, not the input: the
+    * self-join's output is Σ df² — ~100× its input on a 10× corpus —
     * and the pair groups are near-distinct, so each map-side partial
     * aggregate holds ~all of its partition's pairs. At the session
     * default (cores) partitions the partial maps exceed task memory and
@@ -594,48 +534,44 @@ object TextOps {
     * more rows, but every aggregate map fits and the useless map-side
     * partial agg (~1.2 rows/group) disappears below the exchange.
     */
-  private def postingPairAgg(kept: DataFrame, pairRows: Long, idCol: String,
-      weightCol: Option[String], aName: String, bName: String): DataFrame = {
-    // Pair exchanges sized to the EXACT expansion (r20; was a flat
-    // 4×cores): Σ cnt·(cnt−1)/2 is known from the hot-set collect, so
-    // partitions = expansion / 2²⁰ rows — the r15 operating point (113M
-    // pairs ran clean at 128 partitions ≈ 880k/map and thrashed at 32 ≈
-    // 3.5M/map) — floored at the session parallelism and capped at 2¹⁵
-    // (past ~34G pairs, raise the session parallelism with the cluster;
-    // the cap only guards the driver against absurd task counts). At
-    // bench SF the estimate reads ~1.3M pairs → cores partitions,
-    // retiring the 128-task deser-bound stages (~68 ms/task
-    // deserialization, 10.9 s summed on a 21 MB stage; OPTIMIZATION_r20.md).
+  private def postingPairAgg(kept: DataFrame, pairRows: Long): DataFrame = {
+    // Pair exchanges sized to the EXACT expansion: Σ cnt·(cnt−1)/2 is
+    // known from the hot-set collect, so partitions = expansion / 2²⁰
+    // rows — the operating point at which 113M pairs ran clean (128
+    // partitions ≈ 880k/map; 32 ≈ 3.5M/map thrashed) — floored at the
+    // session parallelism and capped at 2¹⁵ (past ~34G pairs, raise the
+    // session parallelism with the cluster; the cap only guards the
+    // driver against absurd task counts). At bench SF the estimate reads
+    // ~1.3M pairs → cores partitions, so no stage runs 128
+    // deserialization-bound tasks (~68 ms/task, 10.9 s summed on a 21 MB
+    // stage; OPTIMIZATION_r20.md).
     val parts = math.min(math.max(
       kept.sparkSession.sparkContext.defaultParallelism.toLong,
       (pairRows + (1L << 20) - 1) / (1L << 20)), 1L << 15).toInt
-    val lead = col(idCol) +: weightCol.map(col).toSeq
     val keepN = kept.where(col("n_sh") >= 1)
-      .select(lead ++ Seq(col("n_sh"), explode(col("ka")).as("shingle")): _*)
+      .select(col("rep"), col("copies"), col("n_sh"), explode(col("ka")).as("shingle"))
     // The posting table is persisted POST-exchange and eagerly filled:
     // both self-join sides scan the cache — AQE's exchange reuse misses
-    // the two canonically-identical repartitions (the q49 before-plan ran
-    // Exchange(93) AND Exchange(135), the same explode+shuffle twice;
-    // plans/r20/q49_jaccard_top_pairs_before.txt, zero ReusedExchange) —
-    // and InMemoryTableScan preserves the cached exchange's
+    // the two canonically-identical repartitions (an uncached plan runs
+    // the same explode+shuffle twice, with zero ReusedExchange) — and
+    // InMemoryTableScan preserves the cached exchange's
     // HashPartitioning(shingle), so neither side re-shuffles. Bounded by
     // Σ postings (the same class as the `arr` cache above it); the
     // session owner's clearCache() releases it.
     val keyed = keepN.repartition(parts, col("shingle"))
       .persistFilled() // sibling AQE stages must not race it cold
-    val a = keyed.select(Seq(col(idCol).as(aName), col("shingle"),
-      col("n_sh").as("n_a")) ++ weightCol.map(w => col(w).as("w_a")): _*)
-    val b = keyed.select(Seq(col(idCol).as(bName), col("shingle"),
-        col("n_sh").as("n_b")) ++ weightCol.map(w => col(w).as("w_b")): _*)
+    val a = keyed.select(col("rep").as("ra"), col("shingle"), col("n_sh").as("n_a"),
+      col("copies").as("w_a"))
+    val b = keyed.select(col("rep").as("rb"), col("shingle"), col("n_sh").as("n_b"),
+        col("copies").as("w_b"))
       .hint("merge")
-    val aggs = Seq(max(col("n_a")).as("n_a"), max(col("n_b")).as("n_b")) ++
-      // n_a/n_b (and w_a/w_b) are constant within a pair group — max()
+    a.join(b, Seq("shingle")).where(col("ra") < col("rb"))
+      .repartition(parts, col("ra"), col("rb"))
+      .groupBy(col("ra"), col("rb"))
+      // n_a/n_b and w_a/w_b are constant within a pair group — max()
       // reads them back without widening the 16-byte group key
-      weightCol.map(_ => max(col("w_a") * col("w_b")).as("mult"))
-    a.join(b, Seq("shingle")).where(col(aName) < col(bName))
-      .repartition(parts, col(aName), col(bName))
-      .groupBy(col(aName), col(bName))
-      .agg(count(lit(1)).as("common"), aggs: _*)
+      .agg(count(lit(1)).as("common"), max(col("n_a")).as("n_a"),
+        max(col("n_b")).as("n_b"), max(col("w_a") * col("w_b")).as("mult"))
       .withColumn("jaccard",
         col("common").cast("double") / (col("n_a") + col("n_b") - col("common")))
   }
@@ -666,18 +602,17 @@ object TextOps {
     */
   def qJaccardTopPairs(s: SparkSession, dir: String): DataFrame = {
     val (ids, reps) = contentLayer(t(s, dir, "documents"))
-    // per-content kept-shingle arrays + copy counts through the shared
-    // posting-pair core (keptShingleArrays/postingPairAgg); this site
-    // supplies the copy weights — df = sum(copies) ≡ the per-doc COUNT(*)
-    // in exact integers, mult = max(copies_a·copies_b) — at the
-    // library-default 0.5 df cap (inside jaccardPairs' [0.1, 1] bound).
+    // per-content kept-shingle arrays with their copy counts: df =
+    // sum(copies) ≡ the per-doc COUNT(*) in exact integers, so the hot
+    // set and every pair's jaccard are the per-doc ones, and mult =
+    // max(copies_a·copies_b) counts the doc pairs of a content pair
     val sizes = ids.select(col("rep"), size(col("ids")).cast("long").as("copies"))
     val units = reps.select(col("doc_id").as("rep"),
       WordShingles.column(col("text"), 3, dedup = true).as("arr"))
       .join(sizes, Seq("rep"))
     val nDocs = ids.select(sum(size(col("ids"))).as("n_docs"))
-    val (ka, pairRows) = keptShingleArrays(units, "rep", Some("copies"), nDocs, 0.5)
-    val cross = postingPairAgg(ka, pairRows, "rep", Some("copies"), "ra", "rb")
+    val (ka, pairRows) = keptShingleArrays(units, nDocs)
+    val cross = postingPairAgg(ka, pairRows)
       .select(col("ra"), col("rb"), col("common"), col("jaccard"), col("mult"))
     // ≥2-copy contents with a nonempty kept set: all-hot or <3-token
     // contents produced no posting rows per-doc either

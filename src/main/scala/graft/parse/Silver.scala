@@ -3,7 +3,7 @@ package graft.parse
 import java.net.URI
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -58,11 +58,16 @@ object Silver {
   /** The files a raw glob matches, listed on the driver, as decoded
     * paths (the listing itself is URI-encoded). A glob matching nothing is
     * "nothing new this run" (the weekly scrape may legitimately produce
-    * zero draws), not an error.
+    * zero draws), not an error. The glob is matched before the read, as
+    * [[processedKeys]] checks its path, so an empty match posts no failed
+    * read to the session's listeners.
     */
-  def listRaw(spark: SparkSession, rawPath: String): Seq[String] =
-    try spark.read.text(rawPath).inputFiles.toSeq.map(f => new Path(new URI(f)).toString)
-    catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => Nil }
+  def listRaw(spark: SparkSession, rawPath: String): Seq[String] = {
+    val glob = new Path(rawPath)
+    val matched = glob.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(glob)
+    if (matched == null || matched.isEmpty) Nil
+    else spark.read.text(rawPath).inputFiles.toSeq.map(f => new Path(new URI(f)).toString)
+  }
 
   /** A listed file path as a glob that matches only that file. */
   def literalGlob(path: String): String = path.replaceAll("""([{}\[\]*?\\])""", """\\$1""")
@@ -107,11 +112,17 @@ object Silver {
     * counts as processed: its draw is never reparsed and rewritten, and
     * the run fails when gold reads it. Only a missing path means "nothing
     * processed"; any other listing failure propagates.
+    *
+    * The path is checked before the read, not caught after it: a failed
+    * read is posted to the session's listeners even when caught, and once
+    * the session has used an `Observation` Spark logs it as an ERROR.
     */
-  def processedKeys(spark: SparkSession, silverSorteosPath: String): Set[Long] =
-    try spark.read.schema(SorteosSchema).parquet(silverSorteosPath)
+  def processedKeys(spark: SparkSession, silverSorteosPath: String): Set[Long] = {
+    val path = new Path(silverSorteosPath)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) Set.empty
+    else spark.read.schema(SorteosSchema).parquet(silverSorteosPath)
       .inputFiles.flatMap(sorteoKey).toSet
-    catch { case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" => Set.empty }
+  }
 
   /** [[processedKeys]] as a one-column `sorteo` frame. */
   def processedSorteos(spark: SparkSession, silverSorteosPath: String): DataFrame = {

@@ -85,7 +85,10 @@ class WordShinglesSpec extends AnyFunSuite {
   }
 
   test("n < 1 fails at analysis with a named error, not at execution") {
-    import spark.implicits._
+    // a fresh session: the shared one's Observation listener re-analyses
+    // every failed query and logs the expected error as a Spark ERROR
+    val session = spark.newSession()
+    import session.implicits._
     val df = Seq("a b c").toDF("t")
     val zeroN = intercept[org.apache.spark.sql.AnalysisException] {
       df.select(WordShingles.column(col("t"), 0, dedup = true)).queryExecution.analyzed

@@ -63,7 +63,7 @@ class ContentLayerSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .sortBy(t => (-t._4, t._1, t._2)).toSeq
     val got = rows(graft.SparkEntry.queries("q49_jaccard_top_pairs")(spark, dir))
-    val exp = rows(TextOps.jaccardPairs(docs)
+    val exp = rows(PerDocSpellings.filteredJaccard(docs)
       .orderBy(col("jaccard").desc, col("doc_a").asc, col("doc_b").asc).limit(20))
     spark.catalog.clearCache()
     assert(got.size == 20 && exp.size == 20)

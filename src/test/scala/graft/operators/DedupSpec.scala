@@ -45,7 +45,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("exact Jaccard ground truth: planted pairs score ≈ 0.9, exact dups 1.0") {
-    val pairs = TextOps.jaccardPairs(docs)
+    val pairs = PerDocSpellings.filteredJaccard(docs)
       .select("doc_a", "doc_b", "jaccard")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     plantedPairs.foreach { p =>
@@ -56,28 +56,48 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs((21L, 201L)) == 1.0)
   }
 
-  test("jaccard df cap drops planted hot shingles; denominators use the filtered universe") {
+  /** `texts` as (doc_id, text) rows written to `documents.parquet`. */
+  private def docsDirOf(texts: Seq[(Long, String)]): String = {
     import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_cap").toString
+    texts.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  /** q49's rows as (doc_a, doc_b, common, jaccard). */
+  private def q49Rows(dir: String): Seq[(Long, Long, Long, Double)] =
+    try graft.SparkEntry.queries("q49_jaccard_top_pairs")(spark, dir).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    finally spark.catalog.clearCache()
+
+  test("jaccard df cap drops planted hot shingles; denominators use the filtered universe") {
     // Every doc opens with the same 5 tokens → 3 shingles with df = 10
-    // (hot at maxDfFrac = 0.5). Docs 0 and 1 additionally share one rare
+    // (above the 0.5 cap). Docs 0 and 1 additionally share one rare
     // shingle "p q r"; the unique middle token u<i> isolates the boundary.
     val texts = (0 until 10).map { i =>
       val tail = if (i < 2) " p q r" else ""
       (i.toLong, s"x y z w v u$i$tail")
     }
-    val hotDocs = texts.toDF("doc_id", "text")
-    val capped = TextOps.jaccardPairs(hotDocs, maxDfFrac = 0.5)
-      .select("doc_a", "doc_b", "common", "jaccard").collect()
+    val capped = q49Rows(docsDirOf(texts))
     // Only (0,1) survives: all other pairs share nothing but hot shingles.
-    assert(capped.length == 1)
-    val r = capped.head
-    assert((r.getLong(0), r.getLong(1)) == (0L, 1L))
-    assert(r.getLong(2) == 1L) // common = {p q r}
-    // filtered universe: docs 0/1 keep 4 non-hot shingles each → 1/(4+4-1)
-    assert(r.getDouble(3) == 1.0 / 7)
-    // with the cap inert (df = 10 is not > 1.0 * 10) every pair shares the
-    // 3 hot shingles → all C(10,2) pairs appear
-    assert(TextOps.jaccardPairs(hotDocs, maxDfFrac = 1.0).count() == 45)
+    // Filtered universe: docs 0/1 keep 4 non-hot shingles each → 1/(4+4-1).
+    assert(capped == Seq((0L, 1L, 1L, 1.0 / 7)))
+  }
+
+  test("q49 df cap is strict: a shingle in exactly half the docs, counted by copies, stays") {
+    // 10 docs. "p q r" is in 3 copies of one text and 2 copies of
+    // another: 2 contents, copy-weighted df = 5 = n_docs/2, on the cap.
+    // The 5 filler docs share no shingle with anything.
+    val texts = (0 until 3).map(i => (i.toLong, "p q r s")) ++
+      (3 until 5).map(i => (i.toLong, "p q r t")) ++
+      (5 until 10).map(i => (i.toLong, s"f$i g$i h$i"))
+    val got = q49Rows(docsDirOf(texts))
+    // kept: both texts keep "p q r" (df 5 is not > 5) and their own tail
+    // shingle, so every cross-text pair shares 1 of 2+2-1 = 3 shingles.
+    // A >= cap would drop "p q r" and leave only the 4 same-text pairs.
+    val same = Seq((0L, 1L), (0L, 2L), (1L, 2L), (3L, 4L)).map { case (a, b) => (a, b, 2L, 1.0) }
+    val cross = for (a <- 0L to 2L; b <- 3L to 4L) yield (a, b, 1L, 1.0 / 3)
+    assert(got == same ++ cross)
   }
 
   test("MinHash signature agreement estimates Jaccard for exact dups") {
@@ -96,7 +116,7 @@ class DedupSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     try {
       val shipped = pairs(TextOps.qMinhashCandidatePairs(spark, docsDir))
-      val perDoc = pairs(TextOps.minhashCandidates(TextOps.qMinhashBands(spark, docsDir)))
+      val perDoc = pairs(PerDocSpellings.bandedCandidates(TextOps.qMinhashBands(spark, docsDir)))
       assert(shipped == perDoc,
         s"only-shipped=${(shipped -- perDoc).take(5)} only-perdoc=${(perDoc -- shipped).take(5)}")
       assert(plantedPairs.count(shipped.contains) >= 8,

@@ -540,11 +540,6 @@ class PlanSpec extends AnyFunSuite {
       () => SparkEntry.queries("q49_jaccard_top_pairs")(spark, dir))
   }
 
-  test("minhashCandidates library core: banded self-join never broadcasts (cold + cached)") {
-    assertPairJoinPinned("minhashCandidates", Set("band", "key"))(
-      () => TextOps.minhashCandidates(TextOps.qMinhashBands(spark, dir)))
-  }
-
   test("q53 LSH bucket pairs: banded self-join never broadcasts (cold + cached)") {
     assertPairJoinPinned("q53", Set("band", "key"))(
       () => SparkEntry.queries("q53_ann_lsh")(spark, dir))

@@ -131,13 +131,13 @@ class ScaleSpec extends AnyFunSuite {
       // because no skew survives; skew=true must NOT be required of a
       // plan whose join input is deduplicated. The AQE skew-split
       // assertion stays alive on the per-doc md5 reference (qMinhashBands →
-      // minhashCandidates, the per-doc spelling q56 is checked against),
-      // which still takes the 300-identical-doc band into its banded
-      // self-join.
+      // PerDocSpellings.bandedCandidates, the per-doc spelling q56 is
+      // checked against), which still takes the 300-identical-doc band
+      // into its banded self-join.
       val subjects: Seq[(String, () => org.apache.spark.sql.DataFrame, Boolean)] =
         Seq(
-          ("minhashCandidates_perdoc_md5",
-            () => TextOps.minhashCandidates(TextOps.qMinhashBands(spark, docsDir)),
+          ("perdoc_md5_banded_selfjoin",
+            () => PerDocSpellings.bandedCandidates(TextOps.qMinhashBands(spark, docsDir)),
             true),
           ("q55_simhash_near_dups",
             () => graft.SparkEntry.queries("q55_simhash_near_dups")(spark, docsDir),

@@ -58,7 +58,7 @@ class TemporalSpec extends AnyFunSuite {
     assert(got == "Y") // lexicographic history → max attr wins the tie
   }
 
-  test("asofLatest and asofLatestStreamed are row-for-row equivalent") {
+  test("asofLatest returns the hand-computed rows on every branch of the as-of rule") {
     import spark.implicits._
     // crafted to hit every branch: same-instant build+probe, equal-time
     // build ties, probe-before-first, keys missing from either side,
@@ -71,16 +71,18 @@ class TemporalSpec extends AnyFunSuite {
     val probe = Seq(
       (1L, 5L), (1L, 10L), (1L, 15L), (1L, 20L), (1L, 99L),
       (2L, 99L), (2L, 100L), (3L, 50L), (5L, 2L)).toDF("k", "t_ns")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    val got = Temporal.asofLatest(build, probe).collect()
       .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)))).sorted.toSeq
-    assert(rows(Temporal.asofLatest(build, probe)) ==
-      rows(Temporal.asofLatestStreamed(build, probe)))
-    // and the fixed points, independent of either implementation
-    val got = rows(Temporal.asofLatest(build, probe))
-    assert(got.contains((1L, 10L, Some("B")))) // same instant, tie → max attr
-    assert(got.contains((1L, 5L, None)))
-    assert(got.contains((1L, 99L, Some("C")))) // null-attr t=30 row skipped
-    assert(got.contains((5L, 2L, None)))       // only build attr is null → none
+    assert(got == Seq(
+      (1L, 5L, None),       // before the key's first build row
+      (1L, 10L, Some("B")), // same instant, equal-time tie → max attr
+      (1L, 15L, Some("B")),
+      (1L, 20L, Some("C")),
+      (1L, 99L, Some("C")), // the null-attr t=30 row is skipped
+      (2L, 99L, None),
+      (2L, 100L, Some("D")),
+      (3L, 50L, None),      // key with no build rows
+      (5L, 2L, None)))      // the key's only build attr is null
   }
 
   test("merge upsert resolves carry/update/insert/delete to the hand-computed rollup") {

@@ -136,8 +136,13 @@ class SilverPipelineSpec extends AnyFunSuite {
       SecondSilverCommitFails.disarm()
       spark.conf.unset(committer)
     }
-    def hasRows(t: String): Boolean =
-      scala.util.Try(spark.read.parquet(s"$out/silver/$t").count() > 0).getOrElse(false)
+    // declared schemas, and no read of a missing path: a failed read would
+    // be posted to the session's listeners even though it is expected
+    def hasRows(t: String): Boolean = {
+      val schema = if (t == "sorteos") Silver.SorteosSchema else Silver.PremiosSchema
+      Files.exists(java.nio.file.Paths.get(s"$out/silver/$t")) &&
+        spark.read.schema(schema).parquet(s"$out/silver/$t").count() > 0
+    }
     assert(Seq("sorteos", "premios").count(hasRows) == 1,
       "the injected failure must strike between the two silver writes")
 
@@ -329,6 +334,43 @@ class SilverPipelineSpec extends AnyFunSuite {
     Files.createDirectory(java.nio.file.Paths.get(s"$out/empty_raw"))
     val counts = Pipeline.run(spark, s"$out/empty_raw/*.txt", s"$out/out")
     assert(counts.isEmpty)
+  }
+
+  /** The queries `body` ran that failed, as the session's listeners see
+    * them: a failed read posts its failure even when the caller catches
+    * the exception, and an `Observation` the session used before logs it
+    * as an ERROR with a stack trace.
+    */
+  private def failedQueries(body: => Unit): List[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // gold is built first, so the session has used an Observation
+    Pipeline.run(spark, s"$rawPath/year=*/sorteo=*/*.txt", freshDir())
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = ()
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        failures.add(s"$funcName: ${e.getMessage.take(200)}")
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      ListenerBus.flush(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    failures.asScala.toList
+  }
+
+  test("a run into an empty root posts no failed read to the session's listeners") {
+    val failed = failedQueries(Pipeline.run(spark, s"$rawPath/year=*/sorteo=*/*.txt", freshDir()))
+    assert(failed.isEmpty, s"failed queries: $failed")
+  }
+
+  test("a raw glob matching nothing posts no failed read to the session's listeners") {
+    val out = freshDir()
+    Files.createDirectory(java.nio.file.Paths.get(s"$out/empty_raw"))
+    val failed = failedQueries(assert(Silver.listRaw(spark, s"$out/empty_raw/*.txt").isEmpty))
+    assert(failed.isEmpty, s"failed queries: $failed")
   }
 
   test("a malformed draw file fails the batch and the error names the file") {
